@@ -50,13 +50,12 @@ final class RagServer(
     */
   def processQuery(question: String): QueryResponse =
     try {
-      val qv = TextEmbed.embedScala(question, dim)
-      val hits = collection.search(qv, k).select("id", "text").collect()
+      val hits = retrieve(question)
       if (hits.isEmpty)
         QueryResponse("No relevant information found.", Nil, Nil, success = false)
       else {
-        val context = hits.map(r => Option(r.getString(1)).getOrElse("")).toSeq
-        val ids = hits.map(_.getLong(0).toString).toSeq
+        val context = hits.map(_._2)
+        val ids = hits.map(_._1.toString)
         // sentinel form: success reads what the client DID (null ⇔ fell
         // back), never answer-text equality — the same hostile-corpus
         // discipline as answerBatch (r19 advice)
@@ -68,6 +67,12 @@ final class RagServer(
       case e: Exception =>
         QueryResponse(s"Error: ${e.getMessage}", Nil, Nil, success = false)
     }
+
+  /** Embed `text` and return the collection's top-k (id, text) hits, a
+    * null text scrubbed to "". Shared by /query and /query/stream. */
+  private def retrieve(text: String): Seq[(Long, String)] =
+    collection.search(TextEmbed.embedScala(text, dim), k).select("id", "text").collect()
+      .map(r => (r.getLong(0), Option(r.getString(1)).getOrElse(""))).toSeq
 
   private var pool: Option[java.util.concurrent.ExecutorService] = None
 
@@ -124,14 +129,12 @@ final class RagServer(
               // CoT stage 1 (L3): salient-token retrieval thoughts widen
               // the embedded query, exactly as Agents.answerWithCot does
               val thoughts = RagServer.retrievalThoughts(q)
-              val qv = TextEmbed.embedScala(
-                if (thoughts.isEmpty) q else s"$q $thoughts", dim)
-              val hits = collection.search(qv, k).select("id", "text").collect()
+              val hits = retrieve(if (thoughts.isEmpty) q else s"$q $thoughts")
               if (hits.isEmpty)
                 RagServer.reply(x, 404,
                   """{"detail":"No relevant information found."}""")
               else {
-                val context = hits.map(r => Option(r.getString(1)).getOrElse("")).toSeq
+                val context = hits.map(_._2)
                 // Producer/consumer split: answerStream's deltas must stay
                 // sequential for stateful clients (same contract as
                 // answer), but the lock needs to cover only delta

@@ -35,6 +35,7 @@ class Collection private (
     val root: String,
     val name: String,
     val metric: String) {
+  import Collection.{readMarker, rmTree, writeMarker}
 
   private def path = s"$root/$name"
 
@@ -57,18 +58,6 @@ class Collection private (
   def dataDir: String = currentVersion.map(v => s"$path/v$v").getOrElse(path)
 
   def df: DataFrame = spark.read.parquet(dataDir)
-
-  /** Delete by predicate (the Milvus client's `delete(expr)`): parquet is
-    * immutable, so this is copy-on-write — survivors rewrite to a fresh
-    * directory which then replaces the old one (the Delta/Iceberg shape
-    * minus the transaction log; at cluster scale the rewrite touches only
-    * partitions containing matches when the predicate prunes). Returns
-    * the number of rows removed.
-    */
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rmTree)
-    f.delete(); ()
-  }
 
   /** A directory fed by a streaming file sink carries a _spark_metadata
     * commit log, and batch readers then trust ONLY the log: files appended
@@ -166,24 +155,14 @@ class Collection private (
               "install. Collections are single-writer: serialize " +
               "mutations, or re-open and retry.", e)
       }
-      commitPointer(next)
+      // the commit: the pointer flip is the only mutation readers race with
+      writeMarker(s"$path/_current", s"v$next")
       installed = true
       autoVacuum(next)
     } finally {
       // a failed write or install must not accrete orphan building dirs
       if (!installed) rmTree(new java.io.File(tmp))
     }
-  }
-
-  /** The commit: write the pointer beside its target and rename it over
-    * `_current` — POSIX-atomic, and the only mutation readers race with. */
-  private def commitPointer(v: Int): Unit = {
-    val tmp = java.nio.file.Paths.get(s"$path/._current.tmp")
-    java.nio.file.Files.write(tmp,
-      s"v$v".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(s"$path/_current"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** How many snapshots each commit retains (the newest `retention`
@@ -263,6 +242,13 @@ class Collection private (
       }.toSeq
   }
 
+  /** Delete by predicate (the Milvus client's `delete(expr)`): parquet is
+    * immutable, so this is copy-on-write — survivors rewrite to a fresh
+    * directory which then replaces the old one (the Delta/Iceberg shape
+    * minus the transaction log; at cluster scale the rewrite touches only
+    * partitions containing matches when the predicate prunes). Returns
+    * the number of rows removed.
+    */
   def delete(filter: String): Long = {
     val pred = expr(filter)
     val before = df.count()
@@ -536,6 +522,41 @@ class Collection private (
     }
   }
 
+  /** Build `dst` as `src` with its `affected` cells replaced by `stage`'s:
+    * untouched `cell=` dirs ride along as hard links (no data rewrite),
+    * rewritten ones move in from the stage. A cell ALL of whose rows were
+    * removed has no stage partition and simply does not exist in `dst` —
+    * no stale-dir cleanup race. Keeps upsertIvf and its PQ-codes twin at
+    * O(touched cells) write IO. */
+  private def mergeCells(src: String, stage: String, dst: String,
+                         affected: Seq[Long]): Unit = {
+    val dstDir = new java.io.File(dst); dstDir.mkdirs()
+    val affectedNames = affected.map(c => s"cell=$c").toSet
+    def cellDirs(d: String): Array[java.io.File] =
+      Option(new java.io.File(d).listFiles()).getOrElse(Array.empty[java.io.File])
+        .filter(f => f.isDirectory && f.getName.startsWith("cell="))
+    cellDirs(src).filterNot(f => affectedNames(f.getName))
+      .foreach(f => linkTree(f, new java.io.File(dstDir, f.getName)))
+    cellDirs(stage).foreach(f =>
+      require(f.renameTo(new java.io.File(dstDir, f.getName)),
+        s"$name: could not install ${f.getName}"))
+  }
+
+  /** Install a fully staged index sidecar over `live`: move the old dir
+    * aside, rename the staged dir in, then delete the aside copy — the
+    * order with the shortest window without a live dir. A dead JVM's
+    * aside dir is cleared first; callers stamp the staged dir with the
+    * build id before installing it. */
+  private def installDir(staged: String, live: String): Unit = {
+    val liveF = new java.io.File(live)
+    val aside = new java.io.File(s"$live.__old")
+    rmTree(aside)
+    require((!liveF.exists || liveF.renameTo(aside)) &&
+        new java.io.File(staged).renameTo(liveF),
+      s"$name: could not install $live")
+    rmTree(aside)
+  }
+
   /** Incremental IVF maintenance (Milvus's actual behavior for inserts
     * into an IVF collection): batch rows are assigned to the nearest
     * EXISTING centroid — no retrain, quantizer and cell layout untouched
@@ -568,9 +589,8 @@ class Collection private (
     require(df.columns.contains("cell"),
       s"upsertIvf: $name is not cell-partitioned — buildIvf first")
     val model = loadIvfModel()
-    val cents = model.cells.zip(model.centroids.map(_.toSeq)).toSeq
     val batch = graft.vector.IvfKMeans
-      .assignCells(Collection.conformVector(rows), "vector", cents, scale = 1.0)
+      .assignCells(Collection.conformVector(rows), "vector", model.centroidTable, scale = 1.0)
       .drop("dist6").persist()
     try {
       val nNew = batch.count()
@@ -600,7 +620,6 @@ class Collection private (
       val stage = s"$path.__upsert"
       rmTree(new java.io.File(stage))
       val src = dataDir // capture: dataDir advances at the pointer flip
-      val affectedNames = affected.map(c => s"cell=$c").toSet
       val prior = readMarker(s"$src/_ivf_drift").map(_.toLong).getOrElse(0L)
       val pqStampPath = s"$path.__pq/_build_id"
       val pqStamp = readMarker(pqStampPath)
@@ -612,23 +631,7 @@ class Collection private (
         // longer describe the rows
         if (pqStamp.isDefined) { new java.io.File(pqStampPath).delete(); () }
         rewriteSwap("upsertIvf") { tmp =>
-          val tmpDir = new java.io.File(tmp); tmpDir.mkdirs()
-          // untouched cells ride along as hard links (no data rewrite)
-          Option(new java.io.File(src).listFiles())
-            .getOrElse(Array.empty[java.io.File]).foreach { f =>
-              if (f.isDirectory && f.getName.startsWith("cell=") &&
-                  !affectedNames(f.getName))
-                linkTree(f, new java.io.File(tmpDir, f.getName))
-            }
-          // rewritten cells move in from the stage; a cell ALL of whose
-          // rows were replaced away has no stage partition and simply
-          // does not exist in the new version — no stale-dir cleanup race
-          Option(new java.io.File(stage).listFiles())
-            .getOrElse(Array.empty[java.io.File]).foreach { f =>
-              if (f.isDirectory && f.getName.startsWith("cell="))
-                require(f.renameTo(new java.io.File(tmpDir, f.getName)),
-                  s"upsertIvf: could not install ${f.getName}")
-            }
+          mergeCells(src, stage, tmp, affected)
           readMarker(s"$src/_ivf_build")
             .foreach(b => writeMarker(s"$tmp/_ivf_build", b))
           writeMarker(s"$tmp/_ivf_drift",
@@ -655,8 +658,8 @@ class Collection private (
         // new quantizer contentId and leave searchIvfPq refusing until a
         // manual rebuild — the opposite of the self-enforcing contract
         // this knob exists for (r11 review)
-        readMarker(s"$path.__pq/_meta").map(_.split(" ")) match {
-          case Some(meta) => buildIvfPq(nl, meta(0).toInt, meta(1).toInt, rd); ()
+        pqMeta match {
+          case Some((m, pqK, _)) => buildIvfPq(nl, m, pqK, rd); ()
           case None => buildIvf(nl, rd); ()
         }
       }
@@ -697,7 +700,7 @@ class Collection private (
     // only after the swap left a crash window pairing new cell layout
     // with a stale model — silently wrong recall). Both dirs carry the
     // model's content hash; loadIvfModel refuses a mismatched pair, so
-    // even the one-rename promote window below fails LOUDLY.
+    // even the installDir promote window below fails LOUDLY.
     val modelTmp = s"$path.__ivf.__new"
     rmTree(new java.io.File(modelTmp))
     model.save(spark, modelTmp)
@@ -707,16 +710,12 @@ class Collection private (
     writeMarker(s"$modelTmp/_build_params", s"$nlist $rounds")
     rewriteSwap("buildIvf") { tmp =>
       graft.vector.IvfKMeans.assignCells(
-          Collection.conformVector(df), "vector",
-          model.cells.zip(model.centroids.map(_.toSeq)).toSeq, scale = 1.0)
+          Collection.conformVector(df), "vector", model.centroidTable, scale = 1.0)
         .drop("dist6") // assignCells names the partition column "cell"
         .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(tmp)
       writeMarker(s"$tmp/_ivf_build", buildId) // underscore file: invisible to scans
     }
-    val live = new java.io.File(s"$path.__ivf")
-    rmTree(live)
-    require(new java.io.File(modelTmp).renameTo(live),
-      "buildIvf: could not install quantizer")
+    installDir(modelTmp, s"$path.__ivf")
     model
   }
 
@@ -742,13 +741,8 @@ class Collection private (
     require(dim > 0 && dim % m == 0, s"buildIvfPq: dim $dim not divisible by m=$m")
     val subDim = dim / m
     import spark.implicits._
-    val centDf = model.cells.zip(model.centroids.map(_.toSeq)).toSeq.toDF("cell", "__cv")
-    val resid = df.select(col("id"), col("cell").cast("long").as("cell"), col("vector"))
-      .join(broadcast(centDf), Seq("cell"))
-      .withColumn("__r", zip_with(col("vector").cast("array<double>"), col("__cv"),
-        (x, y) => x - y))
-      .select(col("id"), col("cell"), col("__r"))
-      .persist() // M subspace trainings share one materialization
+    // M subspace trainings and the encode share one materialization
+    val resid = residuals(df, model).persist()
     try {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
@@ -761,9 +755,7 @@ class Collection private (
           graft.vector.IvfKMeans.trainCents(sub, "id", "sv", pqK, pqRounds)
             .zipWithIndex.map { case ((_, v), j) => (j.toLong, v) }
         } }, Duration.Inf)
-      val wide = pqEncode(
-        df.select(col("id"), col("cell").cast("long").as("cell"), col("vector")),
-        centDf, cbs, m, subDim)
+      val wide = pqEncode(resid, cbs, subDim)
       val cbRows = cbs.zipWithIndex.flatMap { case (cb, sub) =>
         cb.map { case (code, v) => (sub, code, v) }
       }
@@ -786,28 +778,35 @@ class Collection private (
       // searchIvfPq would silently mix them. The stamp returns with the
       // pqTmp install below.
       new java.io.File(s"$path.__pq/_build_id").delete()
-      for ((tmp, live) <- Seq(codesTmp -> s"$path.__pqcodes", pqTmp -> s"$path.__pq")) {
-        val liveF = new java.io.File(live)
-        rmTree(liveF)
-        require(new java.io.File(tmp).renameTo(liveF),
-          s"buildIvfPq: could not install $live")
-      }
+      installDir(codesTmp, s"$path.__pqcodes")
+      installDir(pqTmp, s"$path.__pq")
       model
     } finally { resid.unpersist(); () }
   }
 
-  /** PQ-encode rows against EXISTING codebooks: residual vs the row's
-    * cell centroid, sliced per subspace, argmin over the codebook.
-    * `rows` needs (id, cell BIGINT, vector); emits (id, cell, codes).
-    * Shared by buildIvfPq (all rows) and upsertIvf's incremental code
-    * maintenance (batch rows only). */
-  private def pqEncode(rows: DataFrame, centDf: DataFrame,
-                       cbs: Seq[Seq[(Long, Seq[Double])]],
-                       m: Int, subDim: Int): DataFrame = {
-    val resid = rows.join(broadcast(centDf), Seq("cell"))
+  /** The coarse centroid table as a (cell BIGINT, __cv) frame, for
+    * broadcast joins against cell-assigned rows. */
+  private def centroidFrame(model: graft.vector.IvfKMeans.Model): DataFrame = {
+    import spark.implicits._
+    model.centroidTable.toDF("cell", "__cv")
+  }
+
+  /** The PQ training/encoding frame: each row's residual v − centroid(cell).
+    * `rows` needs (id, cell, vector); emits (id, cell BIGINT, __r). */
+  private def residuals(rows: DataFrame, model: graft.vector.IvfKMeans.Model): DataFrame =
+    rows.select(col("id"), col("cell").cast("long").as("cell"), col("vector"))
+      .join(broadcast(centroidFrame(model)), Seq("cell"))
       .withColumn("__r", zip_with(col("vector").cast("array<double>"), col("__cv"),
         (x, y) => x - y))
       .select(col("id"), col("cell"), col("__r"))
+
+  /** PQ-encode residuals against EXISTING codebooks: each subspace slice
+    * takes the argmin over its codebook. `resid` is a `residuals` frame;
+    * emits (id, cell, codes). Shared by buildIvfPq (all rows) and
+    * upsertIvf's incremental code maintenance (batch rows only). */
+  private def pqEncode(resid: DataFrame, cbs: Seq[Seq[(Long, Seq[Double])]],
+                       subDim: Int): DataFrame = {
+    val m = cbs.length
     (0 until m).map { i =>
       val sub = resid.select(col("id"), col("cell").as("__c"),
         expr(s"slice(__r, ${i * subDim + 1}, $subDim)").as("sv"))
@@ -831,55 +830,44 @@ class Collection private (
   private def maintainPqCodes(model: graft.vector.IvfKMeans.Model,
                               batch: DataFrame, batchIds: DataFrame,
                               affected: Seq[Long]): Unit = {
-    import spark.implicits._
-    val pqDir = s"$path.__pq"
     val codesDir = s"$path.__pqcodes"
-    val Array(m, pqK, subDim) =
-      readMarker(s"$pqDir/_meta").get.split(" ").map(_.toInt)
-    val cbRows = spark.read.parquet(pqDir).collect()
-    val cbs: Seq[Seq[(Long, Seq[Double])]] = (0 until m).map(s =>
-      cbRows.filter(_.getInt(0) == s)
-        .map(r => (r.getLong(1), r.getSeq[Double](2).toSeq)).sortBy(_._1).toSeq)
+    val (_, subDim, cbs) = loadPq()
     require(cbs.forall(_.nonEmpty), "maintainPqCodes: empty codebook")
-    val centDf = model.cells.zip(model.centroids.map(_.toSeq)).toSeq.toDF("cell", "__cv")
     val old = spark.read.parquet(codesDir)
     val cellIn: Column = cellPredicate(old.schema("cell").dataType, "cell", affected)
     val survivors = old.filter(cellIn)
       .withColumn("cell", col("cell").cast("long"))
       .join(batchIds, Seq("id"), "left_anti")
-    val fresh = pqEncode(
-      batch.select(col("id"), col("cell").cast("long").as("cell"), col("vector")),
-      centDf, cbs, m, subDim)
+    val fresh = pqEncode(residuals(batch, model), cbs, subDim)
     val stage = s"$codesDir.__stage"
     val next = s"$codesDir.__next"
     rmTree(new java.io.File(stage)); rmTree(new java.io.File(next))
     try {
       survivors.unionByName(fresh)
         .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(stage)
-      val nextDir = new java.io.File(next); nextDir.mkdirs()
-      val affectedNames = affected.map(c => s"cell=$c").toSet
-      Option(new java.io.File(codesDir).listFiles())
-        .getOrElse(Array.empty[java.io.File]).foreach { f =>
-          if (f.isDirectory && f.getName.startsWith("cell=") &&
-              !affectedNames(f.getName))
-            linkTree(f, new java.io.File(nextDir, f.getName))
-        }
-      Option(new java.io.File(stage).listFiles())
-        .getOrElse(Array.empty[java.io.File]).foreach { f =>
-          if (f.isDirectory && f.getName.startsWith("cell="))
-            require(f.renameTo(new java.io.File(nextDir, f.getName)),
-              s"maintainPqCodes: could not install ${f.getName}")
-        }
+      mergeCells(codesDir, stage, next, affected)
       writeMarker(s"$next/_build_id", model.contentId)
-      val trash = new java.io.File(s"$codesDir.__old")
-      rmTree(trash)
-      require(new java.io.File(codesDir).renameTo(trash) && nextDir.renameTo(new java.io.File(codesDir)),
-        "maintainPqCodes: could not swap codes dir")
-      rmTree(trash)
+      installDir(next, codesDir)
       // the new codes tree is live and consistent: restore the stamp
-      writeMarker(s"$pqDir/_build_id", model.contentId)
+      writeMarker(s"$path.__pq/_build_id", model.contentId)
     } finally { rmTree(new java.io.File(stage)); rmTree(new java.io.File(next)) }
   }
+
+  /** The PQ sidecar's codebooks as (pqK, subDim, cbs), one `cbs` entry per
+    * subspace listing its (code, centroid) pairs sorted by code. */
+  private def loadPq(): (Int, Int, Seq[Seq[(Long, Seq[Double])]]) = {
+    val (m, pqK, subDim) = pqMeta.get
+    val rows = spark.read.parquet(s"$path.__pq").collect()
+    (pqK, subDim, (0 until m).map(s =>
+      rows.filter(_.getInt(0) == s)
+        .map(r => (r.getLong(1), r.getSeq[Double](2).toIndexedSeq)).sortBy(_._1).toSeq))
+  }
+
+  /** The PQ build's (m, pqK, subDim), when a PQ sidecar exists. */
+  private def pqMeta: Option[(Int, Int, Int)] =
+    readMarker(s"$path.__pq/_meta").map(_.split(" ").map(_.toInt)).map {
+      case Array(m, pqK, subDim) => (m, pqK, subDim)
+    }
 
   /** ANN search over a buildIvfPq'd collection: probe the nprobe nearest
     * cells (coarse centroids, driver-side — tiny by construction), build
@@ -895,8 +883,7 @@ class Collection private (
   def searchIvfPq(queryVec: Array[Double], k: Int = 5, nprobe: Int = 2,
                   rerank: Int = 0): DataFrame = {
     val model = loadIvfModel()
-    val pqDir = s"$path.__pq"
-    val buildId = readMarker(s"$pqDir/_build_id")
+    val buildId = readMarker(s"$path.__pq/_build_id")
     require(buildId.contains(model.contentId),
       s"searchIvfPq: PQ index for $name was built for quantizer " +
         s"${buildId.getOrElse("(missing)")} but the live coarse model is " +
@@ -907,14 +894,13 @@ class Collection private (
     require(readMarker(s"$dataDir/_ivf_build").contains(model.contentId),
       s"searchIvfPq: $name was rewritten since buildIvfPq — the codes " +
         "sidecar no longer describes the data; re-run buildIvfPq")
-    val Array(m, pqK, subDim) =
-      readMarker(s"$pqDir/_meta").get.split(" ").map(_.toInt)
+    val (pqK, subDim, cbs) = loadPq()
+    val m = cbs.length
     require(queryVec.length == m * subDim,
       s"searchIvfPq: query dim ${queryVec.length} != ${m * subDim}")
-    val cbs = spark.read.parquet(pqDir).collect()
-      .map(r => (r.getInt(0), r.getLong(1)) -> r.getSeq[Double](2).toArray).toMap
+    val cbByCode = cbs.map(_.toMap)
     val cells = model.probe(queryVec, nprobe)
-    val centByCell = model.cells.zip(model.centroids).toMap
+    val centByCell = model.centroidTable.toMap
     // per probed cell: flatten the M×k table as [sub*k + code] → distance
     val tables: Map[Long, Seq[Double]] = cells.map { c =>
       val cent = centByCell(c)
@@ -924,7 +910,7 @@ class Collection private (
         // (trainCents drops emptied clusters on degenerate subspaces);
         // codes never reference the absent slots, so the distance is
         // unreachable — fill +Inf rather than crash (r11 review)
-        cbs.get((s, code.toLong)) match {
+        cbByCode(s).get(code.toLong) match {
           case None => Double.PositiveInfinity
           case Some(cv) =>
             var d = 0.0; var i = 0
@@ -983,28 +969,6 @@ class Collection private (
       case _           => col(cellCol).isin(cells.map(_.toString): _*)
     }
 
-  /** Marker commit = tmp + ATOMIC_MOVE, like `commitPointer`: a crash
-    * mid-write can never leave a truncated/empty marker (which readers
-    * would then fail to parse forever), and because every write lands on
-    * a NEW inode, markers hard-link-shared with a shallow clone are never
-    * truncated through the shared inode — each side's writes stay its own. */
-  private def writeMarker(file: String, content: String): Unit = {
-    val tmp = java.nio.file.Paths.get(file + ".__tmp")
-    java.nio.file.Files.write(tmp,
-      content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(file),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  private def readMarker(file: String): Option[String] = {
-    val p = java.nio.file.Paths.get(file)
-    if (java.nio.file.Files.exists(p))
-      Some(new String(java.nio.file.Files.readAllBytes(p),
-        java.nio.charset.StandardCharsets.UTF_8).trim)
-    else None
-  }
-
   /** Loads the coarse quantizer, validating the data/model build stamps
     * written by `buildIvf` — a data dir stamped with a build the model
     * dir does not match (interrupted build, manual copy) must not be
@@ -1027,10 +991,9 @@ class Collection private (
     * prunes at the DIRECTORY level via searchCells. Scan cost shrinks by
     * ~nprobe/nlist — the IVF contract.
     */
-  def searchIvf(queryVec: Array[Double], k: Int = 5, nprobe: Int = 2,
-                cellCol: String = "cell"): DataFrame = {
+  def searchIvf(queryVec: Array[Double], k: Int = 5, nprobe: Int = 2): DataFrame = {
     val model = loadIvfModel()
-    searchCells(queryVec, cellCol, model.probe(queryVec, nprobe), k)
+    searchCells(queryVec, "cell", model.probe(queryVec, nprobe), k)
   }
 
   /** Batch IVF search: many query vectors in ONE plan (the q73 shape).
@@ -1040,39 +1003,27 @@ class Collection private (
     * key, never a full cross product; scoring touches ~nprobe/nlist of
     * the rows. `queries` needs (qid BIGINT, qv ARRAY<DOUBLE>).
     */
-  def searchIvfBatch(queries: DataFrame, k: Int = 5, nprobe: Int = 2,
-                     cellCol: String = "cell"): DataFrame = {
-    import graft.vector.IvfKMeans
+  def searchIvfBatch(queries: DataFrame, k: Int = 5, nprobe: Int = 2): DataFrame = {
     val model = loadIvfModel()
-    import spark.implicits._
-    val centDf = model.cells.zip(model.centroids.map(_.toSeq)).toSeq.toDF(cellCol, "__cv")
     // __cdist rounds to 6 dp so batch ranking shares the same total order
     // as Model.probe and assignCells on near-tie cells (ADVICE r3: the
     // three probe paths previously ranked raw doubles computed in
     // different evaluation orders and could probe different cells)
-    val wc = Window.partitionBy(col("qid")).orderBy(col("__cdist").asc, col(cellCol).asc)
-    val probed = queries.join(broadcast(centDf), lit(true))
+    val wc = Window.partitionBy(col("qid")).orderBy(col("__cdist").asc, col("cell").asc)
+    val probed = queries.join(broadcast(centroidFrame(model)), lit(true))
       .withColumn("__cdist", round(aggregate(
         zip_with(col("qv").cast("array<double>"), col("__cv"), (x, y) => (x - y) * (x - y)),
         lit(0.0), (acc, t) => acc + t), 6))
       .withColumn("__crnk", row_number().over(wc))
       .filter(col("__crnk") <= nprobe)
-      .select(col("qid"), col("qv"), col(cellCol))
-    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("id").asc)
-    probed.join(df, Seq(cellCol))
-      .withColumn("score", VectorKernels.cosineFast(col("vector"), col("qv")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .drop("qv")
+      .select(col("qid"), col("qv"), col("cell"))
+    rankPerQuery(probed.join(df, Seq("cell")), k)
   }
 
   /** Cosine top-k over only the given cells; the cell predicate becomes a
     * PartitionFilter (directory pruning), not a row filter. */
   def searchCells(queryVec: Array[Double], cellCol: String, cells: Seq[Long], k: Int = 5): DataFrame =
-    df.filter(cellPredicate(df.schema(cellCol).dataType, cellCol, cells))
-      .withColumn("score", VectorKernels.cosineFast(col("vector"), lit(queryVec).cast("array<double>")))
-      .orderBy(col("score").desc, col("id").asc)
-      .limit(k)
+    topK(df.filter(cellPredicate(df.schema(cellCol).dataType, cellCol, cells)), queryVec, k)
 
   /** S6: describe — entityCount, dimension, metric. Row-free on an empty
     * collection: head() on a zero-row projection would throw, so the
@@ -1110,20 +1061,26 @@ class Collection private (
     * hard-codes k=1 (`scripts/milvus_db.py:112`) against its own default
     * of 5; we honor the parameter (strict-compat callers pass 1).
     */
-  def search(queryVec: Array[Double], k: Int = 5): DataFrame = {
-    val qv = lit(queryVec)
-    df.withColumn("score", VectorKernels.cosineFast(col("vector"), qv.cast("array<double>")))
-      .orderBy(col("score").desc, col("id").asc)
-      .limit(k)
-  }
+  def search(queryVec: Array[Double], k: Int = 5): DataFrame = topK(df, queryVec, k)
 
   /** Batch search: one plan for many query vectors (queries broadcast,
     * rank window per query) — the vectorized form of looping `search`.
     */
-  def searchBatch(queries: DataFrame, k: Int = 5): DataFrame = {
+  def searchBatch(queries: DataFrame, k: Int = 5): DataFrame =
+    rankPerQuery(df.join(broadcast(queries), lit(true)), k)
+
+  /** The single-query tail: cosine score, (score desc, id asc), limit k —
+    * plans as TakeOrderedAndProject, no shuffle. */
+  private def topK(rows: DataFrame, queryVec: Array[Double], k: Int): DataFrame =
+    rows.withColumn("score", VectorKernels.cosineFast(col("vector"), lit(queryVec).cast("array<double>")))
+      .orderBy(col("score").desc, col("id").asc)
+      .limit(k)
+
+  /** The batch tail over (query, row) pairs carrying `qid`/`qv`: cosine
+    * score and a per-query rank window keeping the top k. */
+  private def rankPerQuery(pairs: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("id").asc)
-    df.join(broadcast(queries), lit(true))
-      .withColumn("score", VectorKernels.cosineFast(col("vector"), col("qv")))
+    pairs.withColumn("score", VectorKernels.cosineFast(col("vector"), col("qv")))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .drop("qv")
@@ -1157,24 +1114,47 @@ object Collection {
     val c = new Collection(spark, root, name, metric)
     val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], entitySchema(dim))
     empty.write.mode(if (overwrite) SaveMode.Overwrite else SaveMode.Ignore).parquet(s"$root/$name")
-    val marker = java.nio.file.Paths.get(s"$root/$name/_metric")
-    if (!java.nio.file.Files.exists(marker)) writeMarkerStatic(marker.toString, metric)
+    val marker = s"$root/$name/_metric"
+    if (!new java.io.File(marker).exists) writeMarker(marker, metric)
     c
   }
 
   def open(spark: SparkSession, root: String, name: String): Collection = {
-    val metric = try {
-      val p = java.nio.file.Paths.get(s"$root/$name/_metric")
-      if (java.nio.file.Files.exists(p))
-        new String(java.nio.file.Files.readAllBytes(p),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-      else "COSINE"
-    } catch { case _: java.io.IOException => "COSINE" }
+    val metric = try readMarker(s"$root/$name/_metric").getOrElse("COSINE")
+      catch { case _: java.io.IOException => "COSINE" }
     new Collection(spark, root, name, metric)
   }
 
-  /** Static twin of the instance marker commit (tmp + ATOMIC_MOVE). */
-  private def writeMarkerStatic(file: String, content: String): Unit = {
+  /** S6: list collections under a root. */
+  def list(spark: SparkSession, root: String): Seq[String] = {
+    val dir = new java.io.File(root)
+    if (!dir.exists) Nil
+    else dir.listFiles.filter(_.isDirectory).map(_.getName)
+      // `<name>.__*` dirs are index sidecars (.__ivf/.__pq/.__pqcodes)
+      // and their stage/aside dirs, not collections
+      .filterNot(_.contains(".__"))
+      .sorted.toSeq
+  }
+
+  def drop(root: String, name: String): Unit = {
+    rmTree(new java.io.File(s"$root/$name"))
+    // index sidecars (.__ivf/.__pq/.__pqcodes) and crashed stage dirs
+    // live BESIDE the collection dir — orphaning them leaks disk and
+    // traps a recreated collection into probing a dead quantizer via
+    // the unchecked legacy-compat path (r11 review)
+    Option(new java.io.File(root).listFiles())
+      .getOrElse(Array.empty[java.io.File])
+      .filter(_.getName.startsWith(s"$name.__"))
+      .foreach(rmTree)
+  }
+
+  /** Marker commit = tmp + ATOMIC_MOVE — the one way every marker and
+    * the `_current` pointer are written: a crash mid-write can never
+    * leave a truncated/empty marker (which readers would then fail to
+    * parse forever), and because every write lands on a NEW inode,
+    * markers hard-link-shared with a shallow clone are never truncated
+    * through the shared inode — each side's writes stay its own. */
+  private def writeMarker(file: String, content: String): Unit = {
     val tmp = java.nio.file.Paths.get(file + ".__tmp")
     java.nio.file.Files.write(tmp,
       content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -1184,29 +1164,16 @@ object Collection {
     ()
   }
 
-  /** S6: list collections under a root. */
-  def list(spark: SparkSession, root: String): Seq[String] = {
-    val dir = new java.io.File(root)
-    if (!dir.exists) Nil
-    else dir.listFiles.filter(_.isDirectory).map(_.getName)
-      .filterNot(_.contains(".__")) // delete()'s transient rewrite/trash dirs
-      .sorted.toSeq
+  private def readMarker(file: String): Option[String] = {
+    val p = java.nio.file.Paths.get(file)
+    if (java.nio.file.Files.exists(p))
+      Some(new String(java.nio.file.Files.readAllBytes(p),
+        java.nio.charset.StandardCharsets.UTF_8).trim)
+    else None
   }
 
-  def drop(root: String, name: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete()
-    }
-    val f = new java.io.File(s"$root/$name")
-    if (f.exists) rm(f)
-    // index sidecars (.__ivf/.__pq/.__pqcodes) and crashed stage dirs
-    // live BESIDE the collection dir — orphaning them leaks disk and
-    // traps a recreated collection into probing a dead quantizer via
-    // the unchecked legacy-compat path (r11 review)
-    Option(new java.io.File(root).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(_.getName.startsWith(s"$name.__"))
-      .foreach(rm)
+  private def rmTree(f: java.io.File): Unit = {
+    if (f.isDirectory) f.listFiles().foreach(rmTree)
+    f.delete(); ()
   }
 }

@@ -57,10 +57,14 @@ object IvfKMeans {
         .take(nprobe).map(_._1).toSeq
     }
 
+    /** The centroid table as (cell, centroid) pairs in cell order — the
+      * shape `assignCells` takes. */
+    def centroidTable: Seq[(Long, Seq[Double])] =
+      cells.toSeq.zip(centroids.map(_.toSeq))
+
     def save(spark: SparkSession, dir: String): Unit = {
       import spark.implicits._
-      cells.zip(centroids).toSeq.map { case (c, v) => (c, v.toSeq) }
-        .toDF("cell", "centroid")
+      centroidTable.toDF("cell", "centroid")
         .coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir)
     }
 

@@ -139,6 +139,37 @@ class StoreHardeningSpec extends SparkSpec {
     assert(re.df.count() === 2)
   }
 
+  test("leftovers of a crashed sidecar install: rebuild succeeds, list hides them, drop removes them") {
+    val c = Collection.create(spark, root, "crashSide", dim = 8, overwrite = true)
+    c.insert(vecs(60))
+    // what a JVM killed mid-install leaves beside the collection: staged
+    // quantizer and codes dirs, and installDir's aside copy of `.__ivf`
+    val planted = Seq(".__ivf.__new", ".__ivf.__old", ".__pqcodes.__new")
+    def plant(): Unit = planted.foreach { side =>
+      spark.range(2).toDF("junk").write.mode("overwrite").parquet(s"$root/crashSide$side")
+    }
+    def beside(): Set[String] = new java.io.File(root).listFiles()
+      .map(_.getName).filter(_.startsWith("crashSide.__")).toSet
+    plant()
+    assert(Collection.list(spark, root).contains("crashSide"))
+    assert(Collection.list(spark, root).forall(n => !n.startsWith("crashSide.")),
+      "stage/aside dirs are not collections")
+    c.buildIvfPq(nlist = 3, m = 2, pqK = 4, rounds = 2, pqRounds = 2)
+    val qv = Array.tabulate(8)(d => if (d < 4) 5.0 else 1.0)
+    assert(c.searchIvf(qv, k = 3).count() === 3)
+    assert(c.searchIvfPq(qv, k = 3).count() === 3)
+    val sidecars = Set("crashSide.__ivf", "crashSide.__pq", "crashSide.__pqcodes")
+    assert(beside() === sidecars, "a successful install leaves no stage or aside dir")
+    // upsertIvf maintains the PQ codes through the same stage + install
+    c.upsertIvf(vecs(5).withColumn("id", col("id") + 1000))
+    assert(c.searchIvfPq(qv, k = 3).count() === 3)
+    assert(beside() === sidecars, "a successful upsertIvf leaves no stage or aside dir")
+    plant()
+    Collection.drop(root, "crashSide")
+    assert(beside().isEmpty, "drop must remove sidecars and crash leftovers")
+    assert(!Collection.list(spark, root).contains("crashSide"))
+  }
+
   test("searchIvfPq survives a degenerate subspace whose codebook has fewer than pqK entries") {
     val c = Collection.create(spark, root, "pq1", dim = 8, overwrite = true)
     c.insert(vecs(60)) // dims 4-7 constant → subspace 2 residuals collapse
