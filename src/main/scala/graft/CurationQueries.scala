@@ -476,13 +476,6 @@ object CurationQueries {
     val merges = Seq.newBuilder[(Long, String, String, Long, Long)]
     var trained = 0
     var exhausted = false
-    val dbg = sys.env.contains("GRAFT_BPE_DEBUG")
-    def tick[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (dbg) println(f"[bpe] $name: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
     // ONE definition shared by the stats job's .limit and the floorC
     // completeness test below: `floorC = MinValue when top.length <
     // statsLimitK` is only sound because top.length < limit PROVES the
@@ -547,7 +540,7 @@ object CurationQueries {
       // computed, but the exploded subtree evaluates ONCE and the join
       // disappears (the two branches' exchanges had different keys, so
       // ReuseExchange could never fire and the explode ran twice).
-      val stats = tick("stats")(
+      val stats =
         t.select(explode(expr(
           "transform(slice(toks, 1, size(toks) - 1)," +
             " (t, i) -> struct(t AS x, toks[i + 1] AS y," +
@@ -567,7 +560,7 @@ object CurationQueries {
           .limit(statsLimitK)
           .collect()
           .map(r => (r.getString(0), r.getString(1), r.getLong(2),
-            if (r.isNullAt(3)) 0L else r.getLong(3))))
+            if (r.isNullAt(3)) 0L else r.getLong(3)))
       val top = stats.map { case (x, y, c, _) => (x, y, c) }
       val newBound: Map[(String, String), Long] =
         stats.map { case (x, y, _, m) => (x, y) -> m }.toMap
@@ -575,7 +568,7 @@ object CurationQueries {
       // (for the toks_after telescoping) — computed lazily after
       // selection, so the run-length job runs only on the rare superstep
       // that actually selects an x==x pair
-      def selfApplied(selfSel: Seq[String]): Map[String, Long] = tick("self")(
+      def selfApplied(selfSel: Seq[String]): Map[String, Long] =
         if (selfSel.isEmpty) Map.empty
         else t.select(col("doc_id"), explode(expr(
           "transform(slice(toks, 1, size(toks) - 1)," +
@@ -589,7 +582,7 @@ object CurationQueries {
           .agg(count(lit(1)).as("len"))
           .groupBy(col("x"))
           .agg(sum(expr("CAST(ceil(len / 2.0) AS BIGINT)")).as("applied"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       if (top.isEmpty) exhausted = true
       else {
         // ── batch selection: DRIVER-SIDE SEQUENTIAL SIMULATION with exact
@@ -659,7 +652,7 @@ object CurationQueries {
         val decreased = scala.collection.mutable.Set.empty[(String, String)]
         val dirty = scala.collection.mutable.Set.empty[String]
         var fine: Map[(String, String, String, String), Long] = null
-        def fetchFine(): Unit = if (fine == null) fine = tick("fine") {
+        def fetchFine(): Unit = if (fine == null) fine = {
           val pairKeys = top.map { case (x, y, _) => x + "\u0001" + y }
           val toks = top.flatMap { case (x, y, _) => Seq(x, y) }.distinct
           t.select(explode(expr(
@@ -682,13 +675,10 @@ object CurationQueries {
         val picked = scala.collection.mutable.ListBuffer.empty[(String, String, Long)]
         var mintMax = -1L // upper bound on any pair minted so far
         var stop = false
-        var why = "cap"
         while (!stop && picked.size < capacity && cur.nonEmpty) {
           val (p, cP) = cur.foldLeft(cur.head) { (b, e) => if (before(e, b)) e else b }
-          if (picked.nonEmpty && cP <= mintMax) { stop = true; why = "mint" }
-          else if (picked.nonEmpty && cP <= floorC) { stop = true; why = "floor" }
-          else if (poisoned(p)) { stop = true; why = "poisoned" }
-          else if (p._1 == p._2 && dirty(p._1)) { stop = true; why = "self-dirty" }
+          if ((picked.nonEmpty && (cP <= mintMax || cP <= floorC)) || poisoned(p) ||
+              (p._1 == p._2 && dirty(p._1))) stop = true
           else {
             picked += ((p._1, p._2, cP))
             cur.remove(p)
@@ -738,7 +728,6 @@ object CurationQueries {
             }
           }
         }
-        if (dbg) println(s"[bpe] batch=${picked.size} stop=$why mintMax=$mintMax floorC=$floorC")
         val selfA = selfApplied(picked.collect { case (x, y, _) if x == y => x }.toSeq)
         val sel = picked.map { case (x, y, c) =>
           (x, y, c, if (x == y) selfA(x) else c) }
@@ -748,10 +737,10 @@ object CurationQueries {
         // optimizer cost goes superlinear (measured: 32-merge training
         // ran minutes instead of seconds). The eager checkpoint cuts the
         // plan at each generation and doubles as the superstep barrier.
-        val next = tick("ckpt")(t.select(col("doc_id"),
+        val next = t.select(col("doc_id"),
           applyBatch(col("toks"), typedlit(sel.map(_._1).toSeq),
             typedlit(sel.map(_._2).toSeq)).as("toks"))
-          .localCheckpoint()) // eager: the superstep barrier
+          .localCheckpoint() // eager: the superstep barrier
         // per-merge toks_after telescopes from the exact applied counts;
         // the END-OF-TRAINING measurement below cross-checks the whole
         // telescope (equivalent invariant to a per-batch count, minus
@@ -779,8 +768,8 @@ object CurationQueries {
         t = next
       }
     }
-    val measured = tick("audit")(t.agg(sum(size(col("toks"))).cast("long"))
-      .collect()(0).getLong(0))
+    val measured = t.agg(sum(size(col("toks"))).cast("long"))
+      .collect()(0).getLong(0)
     require(measured == total,
       s"BPE training audit: telescoped token count $total != measured " +
         s"$measured — an applied-occurrence count is wrong somewhere in ${merges.result().size} merges")

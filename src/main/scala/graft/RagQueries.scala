@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{TextEmbed, VectorKernels}
 import graft.rag.RagPipeline
@@ -18,18 +18,24 @@ object RagQueries {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Par(s.read.parquet(s"$dir/documents.parquet"))
 
-  val QueryText = "spark batch window join customer value"
+  /** The documents as a persisted (id, text, vector) collection, `_q` =
+    * `tag` its per-caller cache identity. The retrievers read the
+    * collection through four static branches (cosine leg, BM25 stats,
+    * BM25 tf, context join-back) whose exchanges all key differently, so
+    * AQE stage reuse never dedupes them — unpersisted, the scan + embed
+    * ran four deep (r19 verdict #2). StageReuseSpec pins the single
+    * runtime scan. Callers unpersist once their result materializes. */
+  private def ragCollection(s: SparkSession, dir: String, tag: String): DataFrame =
+    TextEmbed.withEmbed(docs(s, dir), "text", "vector")
+      .select(col("doc_id").as("id"), col("text"), col("vector"))
+      .withColumn("_q", lit(tag))
+      .persist()
 
-  /** q99's query set (q87's five, for cross-retriever comparability) —
-    * declared before `defs` (eager Seq evaluates the oracle string). */
-  private val MaxSimQueries: Seq[(Long, String)] = Seq(
-    (0L, "spark window join"), (1L, "vector hash group"),
-    (2L, "customer order value"), (3L, "stream batch filter"),
-    (4L, "scan slow table"))
+  val QueryText = "spark batch window join customer value"
 
   /** q154's question set — q41's three questions, shared so the Spark
     * side and the oracle VALUES list cannot drift (declared before
-    * `defs` for the same eager-evaluation reason as MaxSimQueries). */
+    * `defs`: the eager Seq evaluates the oracle strings). */
   private val AnswerAuditQuestions: Seq[(Long, String)] = Seq(
     (0L, "spark batch window join customer value"),
     (1L, "hash agg row scan slow fast table"),
@@ -37,25 +43,10 @@ object RagQueries {
 
   val defs: Seq[QueryDef] = Seq(
 
-    // ── q40: deterministic-embed retrieval, oracle-checked end to end.
-    //    The query string embeds ONCE on the driver (TextEmbed.embedScala,
-    //    bit-identical to the column pipeline) — like a real serving path:
-    //    query vector broadcast, collection scanned once, top-k. ──
+    // ── q40: deterministic-embed retrieval, oracle-checked end to end
+    //    (`queryTextTop5`, shared with SparkEntry.entry). ──
     QueryDef("q40_rag_retrieval",
-      (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        val qv = TextEmbed.embedScala(QueryText)
-        // TakeOrderedAndProject does the top-k (parallel, no global sort);
-        // the rank window then runs over only k rows.
-        val top = TextEmbed.withEmbed(docs(s, dir), "text", "vector")
-          .withColumn("score", round(VectorKernels.dotFast(col("vector"), typedLit(qv)), 6))
-          .select(col("doc_id"), col("score"))
-          .orderBy(col("score").desc, col("doc_id").asc).limit(5)
-        top.withColumn("rnk",
-            row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-          .select(col("rnk").cast("long").as("rnk"), col("doc_id"), col("score"))
-          .orderBy(col("rnk"))
-      },
+      (s, dir) => queryTextTop5(docs(s, dir)),
       Some {
         val qv = TextEmbed.embedScala(QueryText).mkString("[", ", ", "]")
         val stages = TextEmbed.embedSqlStages("documents", "doc_id", "text")
@@ -74,12 +65,7 @@ object RagQueries {
     // ── q41: batch RAG answering through the LlmClient boundary ──
     QueryDef("q41_rag_answer",
       (s, dir) => {
-        // same persist discipline as q154: answerBatch's four collection
-        // branches read ONE cached scan+embed (r19 verdict #2)
-        val collection = TextEmbed.withEmbed(docs(s, dir), "text", "vector")
-          .select(col("doc_id").as("id"), col("text"), col("vector"))
-          .withColumn("_q", lit("q41")) // per-caller cache identity
-          .persist()
+        val collection = ragCollection(s, dir, "q41")
         // the question set is shared with q154, whose oracle re-derives
         // this query's retrieval/context/flag envelope cross-engine
         val questions = s.createDataFrame(AnswerAuditQuestions)
@@ -141,15 +127,8 @@ object RagQueries {
     // ── q42: eval harness — QA pairs, judge grades, mean grade ──
     QueryDef("q42_rag_eval",
       (s, dir) => {
-        // evalBatch reads the collection through four static branches
-        // (cosine leg, BM25 stats, BM25 tf, context join-back) whose
-        // exchanges all key differently — persist computes the scan +
-        // embed ONCE (r19 verdict #2, the q154 discipline); the QA
-        // frame derives from the SAME cache instead of a fifth scan
-        val collection = TextEmbed.withEmbed(docs(s, dir), "text", "vector")
-          .select(col("doc_id").as("id"), col("text"), col("vector"))
-          .withColumn("_q", lit("q42")) // per-caller cache identity
-          .persist()
+        // the QA frame derives from the SAME cache instead of a fifth scan
+        val collection = ragCollection(s, dir, "q42")
         // QA pairs built from the corpus itself: the question is a snippet
         // of the doc, the expected answer is the doc's opening — retrieval
         // should find the source doc (a self-retrieval sanity corpus).
@@ -183,12 +162,7 @@ object RagQueries {
     //   the JVM computes. ──
     QueryDef("q148_rag_eval_audit",
       (s, dir) => {
-        // same persist discipline as q42/q154: one scan+embed behind the
-        // retriever's four collection branches; QA derives from the cache
-        val collection = TextEmbed.withEmbed(docs(s, dir), "text", "vector")
-          .select(col("doc_id").as("id"), col("text"), col("vector"))
-          .withColumn("_q", lit("q148")) // per-caller cache identity
-          .persist()
+        val collection = ragCollection(s, dir, "q148") // QA derives from the cache
         val qa = collection.filter(col("id") < 8)
           .select(col("id").as("qid"),
             concat_ws(" ", slice(split(col("text"), " "), 3, 8)).as("question"),
@@ -211,116 +185,44 @@ object RagQueries {
     //   tokens} sim(qt, dt) — token-level interaction instead of one
     //   pooled vector, recovering the term-level precision single-vector
     //   retrieval blurs (the third retriever family beside cosine q40
-    //   and BM25 q87). Engine shape for 100 TB: doc tokens are embedded
-    //   VOCABULARY-first (distinct tokens ≪ corpus by Heaps' law, then
-    //   joined back to the (doc, token) incidence list), query token
-    //   vectors are driver-embedded literals broadcast with the query
-    //   set; the wide edges carry (doc, token) pairs and two map-side-
-    //   combinable aggs — never documents. Determinism: dots rounded to
-    //   6dp before the max; each max integer-lifted before the per-doc
-    //   sum; id tiebreaks. ──
+    //   and BM25 q87). Runs `RagPipeline.maxSimAll` (the retriever
+    //   `retrieveHybrid(withMaxSim)` fuses) over q87's query set, so the
+    //   oracle checks the engine's own arithmetic and vocabulary-first
+    //   shape; score = the integer per-doc sum back at 6dp. ──
     QueryDef("q99_maxsim",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        import s.implicits._
-        val qt = broadcast(MaxSimQueries.flatMap { case (qid, qtext) =>
-          qtext.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty).distinct.toSeq
-            .map(t => (qid, t, TextEmbed.embedScala(t).toSeq))
-            .filter(_._3.exists(_ != 0.0)) // stopword tokens embed to zero
-        }.toDF("qid", "qtok", "qv"))
-        val dt = docs(s, dir)
-          .select(col("doc_id"), explode(graft.functions.TextOps.tokens(col("text"))).as("token"))
-          .distinct()
-        val vocab = TextEmbed.withEmbed(
-          dt.select(col("token")).distinct(), "token", "tvec")
-        // dot(qv, tvec) depends only on (query token, vocab token) — score
-        // the VOCABULARY cross the query tokens (|vocab|·|qtoks| dots, a
-        // Heaps'-law-sized table), then join the scalar back to the
-        // (doc, token) incidence list. The pre-r10 shape computed the
-        // 384-dim dot per INCIDENCE×qtok row — ~25× the flops at sf1 for
-        // identical arithmetic (same operands, same 6dp round, so the
-        // output is bit-equal; gate hashes unchanged).
-        // SCALE BOUND (ADVICE r10): the scored table is |vocab|·|qtoks|
-        // rows of (token, qid, qtok, m) — vocabulary grows ~n^0.5 (Heaps)
-        // with the corpus, so at some corpus size this broadcast hits the
-        // driver/broadcast ceiling where the old shuffle-join degraded
-        // gracefully. sf1 vocab ≈ 30k × 17 qtoks ≈ 0.5M skinny rows
-        // (~20 MB serialized), orders of magnitude under the 8 GB
-        // broadcast limit; a 100×-vocab corpus is ~10× that (√100) and
-        // still fits. For corpora beyond it, SPARK_GRAFT_MAXSIM_NO_BCAST
-        // drops the hint and lets AQE pick the join strategy from runtime
-        // stats (identical output — only the exchange shape changes).
-        val scoredRaw = vocab.join(qt, lit(true))
-          .withColumn("m", round(VectorKernels.dotFast(col("qv"), col("tvec")), 6))
-          .select(col("token"), col("qid"), col("qtok"), col("m"))
-        val scored =
-          if (sys.env.contains("SPARK_GRAFT_MAXSIM_NO_BCAST")) scoredRaw
-          else broadcast(scoredRaw)
-        val w = Window.partitionBy(col("qid")).orderBy(col("s_int").desc, col("doc_id").asc)
-        dt.join(scored, Seq("token"))
-          .groupBy(col("qid"), col("qtok"), col("doc_id"))
-          .agg(max(col("m")).as("mx"))
-          .withColumn("mx_int", floor(col("mx") * lit(1e6) + lit(0.5)).cast("long"))
-          .groupBy(col("qid"), col("doc_id"))
-          .agg(sum(col("mx_int")).as("s_int"))
-          .withColumn("rnk", row_number().over(w).cast("long"))
-          .filter(col("rnk") <= 5)
-          .withColumn("score", round(col("s_int") / lit(1e6), 6))
-          .select(col("qid"), col("rnk"), col("doc_id"), col("score"))
+        val questions = s.createDataFrame(TextQueries.Bm25QuerySet).toDF("qid", "question")
+        val collection = docs(s, dir).select(col("doc_id").as("id"), col("text"))
+        RagPipeline.maxSimAll(questions, collection, 5)
+          .select(col("qid"), col("rnk").cast("long").as("rnk"), col("id").as("doc_id"),
+            round(col("ms") / lit(1e6), 6).as("score"))
           .orderBy(col("qid"), col("rnk"))
       },
       Some(maxSimSql)),
 
     // ── q113: hybrid retrieval fused by reciprocal rank fusion, oracle-
-    //   checked end to end — the EXACT arithmetic `RagPipeline
-    //   .retrieveHybrid` runs for the 0.4515 eval headline (cosine top-5
-    //   + BM25 top-5, rrf = Σ 1/(60 + rank)), previously pinned only by
-    //   ScalaTest. Both legs re-derive from first principles in DuckDB:
-    //   the embedding through the shared SQL stages, BM25 by embedding
-    //   q87's complete oracle as a derived table. Scale shape: both
-    //   candidate pools are per-query top-k before fusion, so the fusion
-    //   join touches |queries|·k rows — never a corpus; and both legs
-    //   derive from ONE persisted tokenized corpus frame (the BM25 leg's
-    //   tf/stats and the cosine leg's embedding — pre-fix the plan held
-    //   5 independent parquet scans / 34 exchanges / 0 reuse, VERDICT
-    //   r7 #3; `PlanSpec` pins the single-scan shape). ──
+    //   checked end to end — runs `RagPipeline.retrieveHybrid` (k=5:
+    //   cosine top-5 + BM25 top-5, rrf = Σ 1/(60 + rank)) over q87's
+    //   query set, the retriever behind the q42 eval headline. The
+    //   DuckDB twin re-derives both legs and the fusion through the
+    //   shared `hybridSql`. Scale shape: both candidate pools are
+    //   per-query top-k before fusion, so the fusion join touches
+    //   |queries|·k rows — never a corpus; `ragCollection` is one
+    //   persisted scan + embed behind every leg (`PlanSpec` pins the
+    //   single-scan shape). ──
     QueryDef("q113_hybrid_rrf",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        // one corpus scan + tokenization, shared by both retrieval legs
-        val toksF = docs(s, dir)
-          .select(col("doc_id"),
-            graft.functions.TextOps.tokens(col("text")).as("toks"))
-          .withColumn("dl", size(col("toks")).cast("double"))
-          .persist()
-        val d = TextEmbed.withEmbedFromTokens(toksF, "toks", "vector")
-          .select(col("doc_id"), col("vector"))
-        val qv = MaxSimQueries.map { case (qid, t) =>
-          (qid, TextEmbed.embedScala(t).toSeq)
-        }
-        import s.implicits._
-        val qdf = broadcast(qv.toDF("qid", "qv"))
-        val wCos = Window.partitionBy(col("qid"))
-          .orderBy(col("score").desc, col("doc_id").asc)
-        val cos = d.join(qdf, lit(true))
-          .withColumn("score", round(VectorKernels.dotFast(col("qv"), col("vector")), 6))
-          .withColumn("cos_rnk", row_number().over(wCos).cast("long"))
-          .filter(col("cos_rnk") <= 5)
-          .select(col("qid"), col("doc_id"), col("cos_rnk"))
-        val bm = TextQueries.bm25Leg(toksF)
-          .select(col("qid"), col("doc_id"), col("rnk").as("bm_rnk"))
-        val wR = Window.partitionBy(col("qid"))
-          .orderBy(col("score").desc, col("doc_id").asc)
-        cos.join(bm, Seq("qid", "doc_id"), "full_outer")
-          .withColumn("score",
-            coalesce(lit(1.0) / (lit(60) + col("cos_rnk")), lit(0.0)) +
-              coalesce(lit(1.0) / (lit(60) + col("bm_rnk")), lit(0.0)))
-          .withColumn("rnk", row_number().over(wR).cast("long"))
-          .filter(col("rnk") <= 5)
-          .withColumn("rrf",
-            floor(col("score") * lit(1e6) + lit(0.5)) / lit(1e6))
-          .select(col("qid"), col("rnk"), col("doc_id"), col("rrf"))
+        val collection = ragCollection(s, dir, "q113")
+        val questions = TextEmbed.withEmbed(
+          s.createDataFrame(TextQueries.Bm25QuerySet).toDF("qid", "question"),
+          "question", "qv")
+        try RagPipeline.retrieveHybrid(questions, collection, k = 5)
+          .select(col("qid"), col("rnk").cast("long").as("rnk"), col("id").as("doc_id"),
+            (floor(col("score") * lit(1e6) + lit(0.5)) / lit(1e6)).as("rrf"))
           .orderBy(col("qid"), col("rnk"))
+          .transform(PlanProbe.probe("q113_hybrid_rrf", _))
+          .localCheckpoint() // eager |queries|·k rows; collection freed below
+        finally collection.unpersist()
       },
       Some(hybridRrfSql)),
 
@@ -342,17 +244,7 @@ object RagQueries {
     //   the cross-engine hash is byte-stable. ──
     QueryDef("q154_rag_answer_audit",
       (s, dir) => {
-        // answerBatch reads the collection through FOUR static branches
-        // (cosine leg, BM25 stats, BM25 tf, the context join-back) whose
-        // exchanges all differ — AQE stage reuse never dedupes them, so
-        // unpersisted the scan + 64-dim embed ran four deep (r19 verdict
-        // #2). Persist computes both ONCE; the release-thunk frees the
-        // blocks after the |questions|-row result materializes.
-        // StageReuseSpec pins the single runtime scan.
-        val collection = TextEmbed.withEmbed(docs(s, dir), "text", "vector")
-          .select(col("doc_id").as("id"), col("text"), col("vector"))
-          .withColumn("_q", lit("q154")) // per-caller cache identity
-          .persist()
+        val collection = ragCollection(s, dir, "q154")
         val questions = s.createDataFrame(AnswerAuditQuestions)
           .toDF("qid", "question")
         try RagPipeline.answerBatch(questions, collection, k = 3)
@@ -369,24 +261,37 @@ object RagQueries {
       Some(ragAnswerAuditSql))
   )
 
-  /** q154 oracle: answerBatch's SQL-expressible envelope from first
-    * principles — the q148 retrieval machinery at k=3 (cosine leg with
-    * CosineSim's NULL-on-zero-denominator contract, the shared BM25 pass,
-    * RRF fusion), then rank-ordered source ids, context count, and the
-    * fallback flag: success ⇔ some retrieved doc's token set intersects
-    * the effective question-term set (`ExtractiveLlm.answer`'s q — content
-    * terms after the shared Stop list, all terms when that empties).
-    * Tokenizers are the shared TextOps.tokensSql on both sides; the Stop
-    * list inlines from the ONE `ExtractiveLlm.Stop` definition. */
-  private def ragAnswerAuditSql: String = {
+  /** q40's retrieval, shared with `SparkEntry.entry`: the top 5 docs of
+    * `docs` for [[QueryText]] by 6dp dot score (doc_id tiebreak) as
+    * (rnk, doc_id, score, extra…) in rank order. The query string embeds
+    * ONCE on the driver (TextEmbed.embedScala, bit-identical to the
+    * column pipeline) — like a real serving path: query vector broadcast,
+    * collection scanned once. TakeOrderedAndProject does the top-k
+    * (parallel, no global sort); the rank window runs over only k rows. */
+  private[graft] def queryTextTop5(docs: DataFrame, extra: Column*): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val qv = TextEmbed.embedScala(QueryText)
+    val byScore = Seq(col("score").desc, col("doc_id").asc)
+    val top = TextEmbed.withEmbed(docs, "text", "vector")
+      .withColumn("score", round(VectorKernels.dotFast(col("vector"), typedLit(qv)), 6))
+      .select(col("doc_id") +: col("score") +: extra: _*)
+      .orderBy(byScore: _*).limit(5)
+    top.withColumn("rnk", row_number().over(Window.orderBy(byScore: _*)).cast("long"))
+      .select("rnk", top.columns: _*)
+      .orderBy(col("rnk"))
+  }
+
+  /** DuckDB twin of `RagPipeline.retrieveHybrid` (cosine + BM25 legs) for
+    * the questions in `qs(qid, question)` over `documents`: the cosine leg
+    * (CosineSim's dot/(|a||b|) with its NULL-on-zero-denominator contract,
+    * NULLS LAST) over both sides' shared embedding stages, the BM25 leg
+    * through `Bm25.scoreTopKSql` on null-scrubbed tokens (bm25All's), each
+    * cut to its top k, RRF-fused (C = 60) into `hybrid(qid, doc_id, score,
+    * rnk)` with rnk ≤ k. */
+  private def hybridSql(qs: String, k: Int): String = {
     val toks = graft.functions.TextOps.tokensSql _
-    val stop = graft.rag.ExtractiveLlm.Stop.toSeq.sorted
-      .map(w => s"'$w'").mkString("[", ", ", "]")
-    val qVals = AnswerAuditQuestions
-      .map { case (qid, t) => s"($qid, '$t')" }.mkString(", ")
     s"""
-      WITH qs AS (SELECT * FROM (VALUES $qVals) AS v(qid, question)),
-      ${TextEmbed.embedSqlStages("qs", "qid", "question", prefix = "qe")},
+      ${TextEmbed.embedSqlStages(qs, "qid", "question", prefix = "qe")},
       ${TextEmbed.embedSqlStages("documents", "doc_id", "text", prefix = "de")},
       cosscored AS (
         SELECT q.qid AS qid, d.doc_id AS doc_id,
@@ -402,45 +307,40 @@ object RagQueries {
         SELECT qid, doc_id,
                row_number() OVER (PARTITION BY qid
                  ORDER BY score DESC NULLS LAST, doc_id ASC) AS cos_rnk
-        FROM cosscored),
+        FROM cosscored QUALIFY cos_rnk <= $k),
       tk AS (SELECT doc_id, coalesce(${toks("text")}, []::VARCHAR[]) AS toks
              FROM documents),
-      stats AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-                       CAST(sum(len(toks)) AS DOUBLE) / count(*) AS avgdl FROM tk),
-      qt AS (SELECT DISTINCT qid, unnest(${toks("question")}) AS term FROM qs),
-      dls AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl,
-                     unnest(toks) AS term FROM tk),
-      tf AS (SELECT doc_id, dl, term, CAST(count(*) AS DOUBLE) AS tf
-             FROM dls GROUP BY doc_id, dl, term
-             HAVING term IN (SELECT term FROM qt)),
-      dfc AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY term),
-      sc AS (
-        SELECT q.qid AS qid, t.doc_id AS doc_id,
-               CAST(floor(round(
-                 ln((s.n - d.df + 0.5) / (d.df + 0.5) + 1.0) *
-                   (t.tf * 2.2 /
-                     (t.tf + 1.2 * (1.0 - 0.75 + 0.75 * (t.dl / s.avgdl)))),
-                 6) * 1000000.0 + 0.5) AS BIGINT) AS sterm
-        FROM tf t JOIN dfc d USING (term) JOIN qt q USING (term)
-        CROSS JOIN stats s),
-      agg AS (SELECT qid, doc_id, CAST(sum(sterm) AS BIGINT) AS s_int
-              FROM sc GROUP BY qid, doc_id),
-      bmleg AS (SELECT qid, doc_id, row_number() OVER (PARTITION BY qid
-                  ORDER BY s_int DESC, doc_id ASC) AS bm_rnk
-                FROM agg),
+      qt AS (SELECT DISTINCT qid, unnest(${toks("question")}) AS term FROM $qs),
+      ${graft.functions.Bm25.scoreTopKSql("tk", "qt", k)},
       fused AS (
         SELECT coalesce(c.qid, b.qid) AS qid,
                coalesce(c.doc_id, b.doc_id) AS doc_id,
                coalesce(1.0 / (60 + c.cos_rnk), 0.0) +
-                 coalesce(1.0 / (60 + b.bm_rnk), 0.0) AS score
-        FROM (SELECT * FROM cosleg WHERE cos_rnk <= 3) c
-        FULL OUTER JOIN (SELECT * FROM bmleg WHERE bm_rnk <= 3) b
+                 coalesce(1.0 / (60 + b.rnk), 0.0) AS score
+        FROM cosleg c FULL OUTER JOIN bm_top b
           ON c.qid = b.qid AND c.doc_id = b.doc_id),
-      hits AS (
-        SELECT qid, doc_id,
+      hybrid AS (
+        SELECT qid, doc_id, score,
                row_number() OVER (PARTITION BY qid
                  ORDER BY score DESC, doc_id ASC) AS rnk
-        FROM fused QUALIFY rnk <= 3),
+        FROM fused QUALIFY rnk <= $k)"""
+  }
+
+  /** q154 oracle: answerBatch's SQL-expressible envelope from first
+    * principles — the q148 retrieval (`hybridSql`, k=3), then
+    * rank-ordered source ids, context count, and the fallback flag:
+    * success ⇔ some retrieved doc's token set intersects the effective
+    * question-term set (`ExtractiveLlm.answer`'s q — content terms after
+    * the shared Stop list, all terms when that empties). Tokenizers are
+    * the shared TextOps.tokensSql on both sides; the Stop list inlines
+    * from the ONE `ExtractiveLlm.Stop` definition. */
+  private def ragAnswerAuditSql: String = {
+    val toks = graft.functions.TextOps.tokensSql _
+    val stop = graft.rag.ExtractiveLlm.Stop.toSeq.sorted
+      .map(w => s"'$w'").mkString("[", ", ", "]")
+    s"""
+      WITH qs AS ${TextQueries.queriesSql(AnswerAuditQuestions)},
+      ${hybridSql("qs", 3)},
       qeff AS (
         SELECT qid,
                CASE WHEN len(list_filter(alltoks,
@@ -457,7 +357,7 @@ object RagQueries {
                max(CASE WHEN len(list_intersect(
                       list_distinct(${toks("coalesce(d.text, '')")}), q.qset)) > 0
                     THEN 1 ELSE 0 END) AS ov
-        FROM hits h JOIN documents d ON h.doc_id = d.doc_id
+        FROM hybrid h JOIN documents d ON h.doc_id = d.doc_id
         JOIN qeff q ON h.qid = q.qid
         GROUP BY h.qid)
       SELECT CAST(s.qid AS BIGINT) AS qid,
@@ -469,12 +369,11 @@ object RagQueries {
       ORDER BY qid"""
   }
 
-  /** q148 oracle: the q42 subset with SQL twins — QA derivation, cosine
-    * leg (CosineSim's dot/(|a||b|) with its NULL-on-zero-denominator
-    * contract), the q87/q146 BM25 pass, RRF fusion, and the judge's
-    * token-F1 (sets via list_distinct, rint via roundbankers — half to
-    * even, what math.rint computes). Tokenizers are the shared
-    * TextOps.tokensSql on both sides. */
+  /** q148 oracle: the q42 subset with SQL twins — QA derivation, the
+    * hybrid retrieval (`hybridSql`, k=3), and the judge's token-F1 (sets
+    * via list_distinct, rint via roundbankers — half to even, what
+    * math.rint computes). Tokenizers are the shared TextOps.tokensSql on
+    * both sides. */
   private def ragEvalAuditSql: String = {
     val toks = graft.functions.TextOps.tokensSql _
     s"""
@@ -483,68 +382,13 @@ object RagQueries {
                array_to_string(list_slice(string_split(text, ' '), 3, 10), ' ') AS question,
                substr(text, 1, 120) AS expected_answer
         FROM documents WHERE doc_id < 8),
-      ${TextEmbed.embedSqlStages("qa", "qid", "question", prefix = "qe")},
-      ${TextEmbed.embedSqlStages("documents", "doc_id", "text", prefix = "de")},
-      cosscored AS (
-        SELECT q.qid AS qid, d.doc_id AS doc_id,
-               CASE WHEN sqrt(list_sum(list_transform(q.vec, x -> x*x))) *
-                         sqrt(list_sum(list_transform(d.vec, x -> x*x))) = 0
-                    THEN NULL
-                    ELSE round(
-                      list_sum(list_transform(range(1, 65), i -> q.vec[i] * d.vec[i])) /
-                      (sqrt(list_sum(list_transform(q.vec, x -> x*x))) *
-                       sqrt(list_sum(list_transform(d.vec, x -> x*x)))), 6) END AS score
-        FROM qe_vec q CROSS JOIN de_vec d),
-      cosleg AS (
-        SELECT qid, doc_id,
-               row_number() OVER (PARTITION BY qid
-                 ORDER BY score DESC NULLS LAST, doc_id ASC) AS cos_rnk
-        FROM cosscored),
-      tk AS (SELECT doc_id, coalesce(${toks("text")}, []::VARCHAR[]) AS toks
-             FROM documents),
-      stats AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-                       CAST(sum(len(toks)) AS DOUBLE) / count(*) AS avgdl FROM tk),
-      qt AS (SELECT DISTINCT qid, unnest(${toks("question")}) AS term FROM qa),
-      dls AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl,
-                     unnest(toks) AS term FROM tk),
-      tf AS (SELECT doc_id, dl, term, CAST(count(*) AS DOUBLE) AS tf
-             FROM dls GROUP BY doc_id, dl, term
-             HAVING term IN (SELECT term FROM qt)),
-      dfc AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY term),
-      sc AS (
-        SELECT q.qid AS qid, t.doc_id AS doc_id,
-               CAST(floor(round(
-                 ln((s.n - d.df + 0.5) / (d.df + 0.5) + 1.0) *
-                   (t.tf * 2.2 /
-                     (t.tf + 1.2 * (1.0 - 0.75 + 0.75 * (t.dl / s.avgdl)))),
-                 6) * 1000000.0 + 0.5) AS BIGINT) AS sterm
-        FROM tf t JOIN dfc d USING (term) JOIN qt q USING (term)
-        CROSS JOIN stats s),
-      agg AS (SELECT qid, doc_id, CAST(sum(sterm) AS BIGINT) AS s_int
-              FROM sc GROUP BY qid, doc_id),
-      bmleg AS (SELECT qid, doc_id, row_number() OVER (PARTITION BY qid
-                  ORDER BY s_int DESC, doc_id ASC) AS bm_rnk
-                FROM agg),
-      fused AS (
-        SELECT coalesce(c.qid, b.qid) AS qid,
-               coalesce(c.doc_id, b.doc_id) AS doc_id,
-               coalesce(1.0 / (60 + c.cos_rnk), 0.0) +
-                 coalesce(1.0 / (60 + b.bm_rnk), 0.0) AS score
-        FROM (SELECT * FROM cosleg WHERE cos_rnk <= 3) c
-        FULL OUTER JOIN (SELECT * FROM bmleg WHERE bm_rnk <= 3) b
-          ON c.qid = b.qid AND c.doc_id = b.doc_id),
-      ranked AS (
-        SELECT qid, doc_id,
-               row_number() OVER (PARTITION BY qid
-                 ORDER BY score DESC, doc_id ASC) AS rnk
-        FROM fused),
+      ${hybridSql("qa", 3)},
       hits AS (
         SELECT r.qid AS qid, r.rnk AS rnk, r.doc_id AS doc_id,
                coalesce(d.text, '') AS predicted,
                coalesce(a.expected_answer, '') AS expected_answer
-        FROM ranked r JOIN documents d ON r.doc_id = d.doc_id
-        JOIN qa a ON r.qid = a.qid
-        WHERE r.rnk <= 3),
+        FROM hybrid r JOIN documents d ON r.doc_id = d.doc_id
+        JOIN qa a ON r.qid = a.qid),
       graded AS (
         SELECT qid, rnk, doc_id,
                list_distinct(${toks("expected_answer")}) AS e,
@@ -563,12 +407,12 @@ object RagQueries {
       FROM graded ORDER BY qid, rnk"""
   }
 
-  /** q99 oracle: query-token vectors inlined as literals (driver-embedded,
-    * same embedScala the Spark side broadcasts — the q40 precedent), doc
-    * vocabulary embedded by the shared SQL stages, MaxSim arithmetic
-    * mirrored op for op. */
+  /** q99 oracle: query-token vectors inlined as literals (driver-embedded
+    * by embedScala, bit-identical to the column embedding maxSimAll runs —
+    * the q40 precedent), doc vocabulary embedded by the shared SQL stages,
+    * MaxSim arithmetic mirrored op for op. */
   private def maxSimSql: String = {
-    val qtRows = MaxSimQueries.flatMap { case (qid, qtext) =>
+    val qtRows = TextQueries.Bm25QuerySet.flatMap { case (qid, qtext) =>
       qtext.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty).distinct.toSeq
         .map(t => (qid, t, TextEmbed.embedScala(t).toSeq))
         .filter(_._3.exists(_ != 0.0))
@@ -600,44 +444,11 @@ object RagQueries {
       FROM ranked WHERE rnk <= 5 ORDER BY qid, rnk"""
   }
 
-  /** q113 oracle: the cosine leg re-derives the deterministic embedding
-    * for both the query set and the corpus through the shared SQL
-    * stages; the BM25 leg embeds q87's complete oracle as a derived
-    * table (nested WITH — same arithmetic, zero drift); fusion is the
-    * RRF sum over both rank columns with the explicit half-up output. */
-  private def hybridRrfSql: String = {
-    val bm = TextQueries.defs.find(_.name == "q87_bm25").get.oracle.get
-    val qVals = MaxSimQueries
-      .map { case (qid, t) => s"($qid, '$t')" }.mkString(", ")
-    s"""
-      WITH qr AS (SELECT * FROM (VALUES $qVals) AS v(qid, qtext)),
-      ${TextEmbed.embedSqlStages("qr", "qid", "qtext", prefix = "qe")},
-      ${TextEmbed.embedSqlStages("documents", "doc_id", "text", prefix = "de")},
-      cosscored AS (
-        SELECT q.qid AS qid, d.doc_id AS doc_id,
-               round(list_sum(list_transform(range(1, 65),
-                 i -> q.vec[i] * d.vec[i])), 6) AS score
-        FROM qe_vec q CROSS JOIN de_vec d),
-      cosleg AS (
-        SELECT qid, doc_id,
-               row_number() OVER (PARTITION BY qid
-                 ORDER BY score DESC, doc_id ASC) AS cos_rnk
-        FROM cosscored),
-      bm AS (SELECT qid, doc_id, rnk AS bm_rnk FROM ($bm)),
-      fused AS (
-        SELECT coalesce(c.qid, b.qid) AS qid,
-               coalesce(c.doc_id, b.doc_id) AS doc_id,
-               coalesce(1.0 / (60 + c.cos_rnk), 0.0) +
-                 coalesce(1.0 / (60 + b.bm_rnk), 0.0) AS score
-        FROM (SELECT * FROM cosleg WHERE cos_rnk <= 5) c
-        FULL OUTER JOIN bm b ON c.qid = b.qid AND c.doc_id = b.doc_id),
-      ranked AS (
-        SELECT qid, doc_id, score,
-               row_number() OVER (PARTITION BY qid
-                 ORDER BY score DESC, doc_id ASC) AS rnk
-        FROM fused)
+  /** q113 oracle: `hybridSql` at k=5 with the explicit half-up rrf. */
+  private def hybridRrfSql: String = s"""
+      WITH qs AS ${TextQueries.queriesSql()},
+      ${hybridSql("qs", 5)}
       SELECT CAST(qid AS BIGINT) AS qid, CAST(rnk AS BIGINT) AS rnk, doc_id,
              floor(score * 1000000.0 + 0.5) / 1000000.0 AS rrf
-      FROM ranked WHERE rnk <= 5 ORDER BY qid, rnk"""
-  }
+      FROM hybrid ORDER BY qid, rnk"""
 }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.{TextEmbed, VectorKernels}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -14,18 +13,10 @@ object SparkEntry {
   /** Flagship: end-to-end RAG retrieval (embed → cosine top-k → fetch text)
     * on sf0.001; the driver smoke-checks rows > 0.
     */
-  def entry(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val docs = Par(spark.read.parquet("/root/testdata/sf0.001/documents.parquet"))
-    val qv = TextEmbed.embedScala("spark batch window join customer value")
-    val top = TextEmbed.withEmbed(docs, "text", "vector")
-      .withColumn("score", round(VectorKernels.dotFast(col("vector"), typedLit(qv)), 6))
-      .select(col("doc_id"), col("score"), substring(col("text"), 1, 80).as("snippet"))
-      .orderBy(col("score").desc, col("doc_id").asc).limit(5)
-    top.withColumn("rnk",
-        row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-      .select(col("rnk").cast("long").as("rnk"), col("doc_id"), col("score"), col("snippet"))
-  }
+  def entry(spark: SparkSession): DataFrame =
+    RagQueries.queryTextTop5(
+      Par(spark.read.parquet("/root/testdata/sf0.001/documents.parquet")),
+      substring(col("text"), 1, 80).as("snippet"))
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

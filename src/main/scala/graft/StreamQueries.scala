@@ -135,7 +135,7 @@ object StreamQueries {
     QueryDef("q60_multimodal",
       (s, dir) => {
         val media = Multimodal.fakeMediaFromDocs(s, dir)
-        Multimodal.decodeStub(media, "payload", "media_type")
+        Multimodal.decode(media, "payload", "media_type")
           .groupBy(col("media_type"))
           .agg(count(lit(1)).as("n"),
                round(avg(col("meta.width")), 4).as("avg_width"),

@@ -273,14 +273,20 @@ object TextQueries {
           SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
         lbl AS (SELECT a AS id, min(b) AS lbl FROM reach GROUP BY a)"""
 
-  /** The fixed retrieval query set shared by q87/q113 (direct BM25) and
-    * q146 (PRF-expanded BM25) — ONE owner so the oracles' VALUES lists
-    * can never drift from the Spark side. Declared BEFORE `defs` (q146's
-    * oracle string interpolates it at object init). */
+  /** The fixed retrieval query set shared by q87 (BM25), q99 (MaxSim),
+    * q113 (hybrid RRF) and q146 (PRF-expanded BM25) — ONE owner so the
+    * oracles' VALUES lists can never drift from the Spark side. Declared
+    * BEFORE `defs` (the oracle strings interpolate it at object init). */
   private[graft] val Bm25QuerySet: Seq[(Long, String)] = Seq(
     (0L, "spark window join"), (1L, "vector hash group"),
     (2L, "customer order value"), (3L, "stream batch filter"),
     (4L, "scan slow table"))
+
+  /** A (qid, text) query set as an oracle's DuckDB VALUES table with
+    * columns (qid, question). */
+  private[graft] def queriesSql(qs: Seq[(Long, String)] = Bm25QuerySet): String =
+    qs.map { case (qid, q) => s"($qid, '$q')" }
+      .mkString("(SELECT * FROM (VALUES ", ", ", ") AS v(qid, question))")
 
   /** Driver-side (qid, term) pairs for [[Bm25QuerySet]] — tokenized by the
     * kernel's OWN driver-side twin (TextKernels.tokensLocal), never a
@@ -1360,41 +1366,19 @@ object TextQueries {
         val toks = docs(s, dir)
           .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
           .withColumn("dl", size(col("toks")).cast("double"))
-        bm25Leg(toks)
+        graft.functions.Bm25.scoreTopK(toks, "doc_id", bm25QueryTerms, 5)
+          .withColumn("score", round(col("s_int") / lit(1e6), 6))
+          .select(col("qid"), col("rnk"), col("doc_id"), col("score"))
+          .orderBy(col("qid"), col("rnk"))
       },
       Some(s"""
-        WITH qr AS (SELECT * FROM (VALUES
-            (0, 'spark window join'), (1, 'vector hash group'),
-            (2, 'customer order value'), (3, 'stream batch filter'),
-            (4, 'scan slow table')) AS v(qid, qtext)),
-        qt AS (SELECT DISTINCT qid, unnest(${TextOps.tokensSql("qtext")}) AS term FROM qr),
+        WITH qr AS ${queriesSql()},
+        qt AS (SELECT DISTINCT qid, unnest(${TextOps.tokensSql("question")}) AS term FROM qr),
         tk AS (SELECT doc_id, ${TextOps.tokensSql("text")} AS toks FROM documents),
-        stats AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-                         CAST(sum(len(toks)) AS DOUBLE) / count(*) AS avgdl FROM tk),
-        dls AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl,
-                       unnest(toks) AS term FROM tk),
-        tf AS (SELECT doc_id, dl, term, CAST(count(*) AS DOUBLE) AS tf
-               FROM dls GROUP BY doc_id, dl, term
-               HAVING term IN (SELECT term FROM qt)),
-        dfreq AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY term),
-        scored AS (
-          SELECT q.qid AS qid, t.doc_id AS doc_id,
-                 CAST(floor(round(
-                   ln((s.n - d.df + 0.5) / (d.df + 0.5) + 1.0) *
-                     (t.tf * 2.2 /
-                       (t.tf + 1.2 * (1.0 - 0.75 + 0.75 * (t.dl / s.avgdl)))),
-                   6) * 1000000.0 + 0.5) AS BIGINT) AS sterm
-          FROM tf t JOIN dfreq d USING (term) JOIN qt q USING (term)
-          CROSS JOIN stats s),
-        agg AS (SELECT qid, doc_id, CAST(sum(sterm) AS BIGINT) AS s_int
-                FROM scored GROUP BY qid, doc_id),
-        ranked AS (SELECT qid, doc_id, s_int,
-                          row_number() OVER (PARTITION BY qid
-                            ORDER BY s_int DESC, doc_id ASC) AS rnk
-                   FROM agg)
+        ${graft.functions.Bm25.scoreTopKSql("tk", "qt", 5)}
         SELECT CAST(qid AS BIGINT) AS qid, CAST(rnk AS BIGINT) AS rnk,
                doc_id, round(s_int / 1000000.0, 6) AS score
-        FROM ranked WHERE rnk <= 5 ORDER BY qid, rnk""")),
+        FROM bm_top ORDER BY qid, rnk""")),
 
     // ── q140: near-dup-cluster-coherent train/val/test split — q139's
     //   exact-duplicate leak guard upgraded to LSH-cluster granularity
@@ -1858,50 +1842,20 @@ object TextQueries {
         } finally exptf.unpersist()
         } finally toks.unpersist()
       },
-      Some {
-        val toks = TextOps.tokensSql("text")
-        val qtoks = TextOps.tokensSql("qtext")
-        val values = Bm25QuerySet
-          .map { case (qid, q) => s"($qid, '$q')" }.mkString(", ")
-        def pass(tf: String, df: String, qt: String, sc: String,
-                 agg: String): String = s"""
-        $tf AS (SELECT doc_id, dl, term, CAST(count(*) AS DOUBLE) AS tf
-               FROM dls GROUP BY doc_id, dl, term
-               HAVING term IN (SELECT term FROM $qt)),
-        $df AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM $tf GROUP BY term),
-        $sc AS (
-          SELECT q.qid AS qid, t.doc_id AS doc_id,
-                 CAST(floor(round(
-                   ln((s.n - d.df + 0.5) / (d.df + 0.5) + 1.0) *
-                     (t.tf * 2.2 /
-                       (t.tf + 1.2 * (1.0 - 0.75 + 0.75 * (t.dl / s.avgdl)))),
-                   6) * 1000000.0 + 0.5) AS BIGINT) AS sterm
-          FROM $tf t JOIN $df d USING (term) JOIN $qt q USING (term)
-          CROSS JOIN stats s),
-        $agg AS (SELECT qid, doc_id, CAST(sum(sterm) AS BIGINT) AS s_int
-                FROM $sc GROUP BY qid, doc_id)"""
-        s"""
-        WITH qr AS (SELECT * FROM (VALUES $values) AS v(qid, qtext)),
-        qt AS (SELECT DISTINCT qid, unnest($qtoks) AS term FROM qr),
-        tk AS (SELECT doc_id, $toks AS toks FROM documents),
-        stats AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-                         CAST(sum(len(toks)) AS DOUBLE) / count(*) AS avgdl FROM tk),
-        dls AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl,
-                       unnest(toks) AS term FROM tk),
-        ${pass("tf1", "df1", "qt", "sc1", "agg1")},
-        top1 AS (SELECT qid, doc_id FROM (
-                  SELECT qid, doc_id, row_number() OVER (PARTITION BY qid
-                    ORDER BY s_int DESC, doc_id ASC) AS rnk
-                  FROM agg1) WHERE rnk <= 5),
+      Some(s"""
+        WITH qr AS ${queriesSql()},
+        qt AS (SELECT DISTINCT qid, unnest(${TextOps.tokensSql("question")}) AS term FROM qr),
+        tk AS (SELECT doc_id, ${TextOps.tokensSql("text")} AS toks FROM documents),
+        ${graft.functions.Bm25.scoreTopKSql("tk", "qt", 5, "p1")},
         exptf AS (SELECT t1.qid AS qid, d2.term AS term,
                          CAST(count(*) AS BIGINT) AS tf
-                  FROM top1 t1 JOIN dls d2 USING (doc_id) GROUP BY 1, 2),
+                  FROM p1_top t1 JOIN p1_dls d2 USING (doc_id) GROUP BY 1, 2),
         dfall AS (SELECT term, CAST(count(*) AS DOUBLE) AS df
-                  FROM (SELECT DISTINCT doc_id, term FROM dls) GROUP BY term),
+                  FROM (SELECT DISTINCT doc_id, term FROM p1_dls) GROUP BY term),
         expcand AS (
           SELECT e.qid AS qid, e.term AS term,
                  round(e.tf * ln(s.n / d.df), 6) AS score
-          FROM exptf e JOIN dfall d USING (term) CROSS JOIN stats s
+          FROM exptf e JOIN dfall d USING (term) CROSS JOIN p1_stats s
           WHERE NOT EXISTS (SELECT 1 FROM qt q
                             WHERE q.qid = e.qid AND q.term = e.term)),
         exp2 AS (SELECT qid, term FROM (
@@ -1909,15 +1863,10 @@ object TextQueries {
                     ORDER BY score DESC, term ASC) AS rk FROM expcand)
                  WHERE rk <= 2),
         qt2 AS (SELECT qid, term FROM qt UNION SELECT qid, term FROM exp2),
-        ${pass("tf2", "df2", "qt2", "sc2", "agg2")},
-        r2 AS (SELECT qid, doc_id, s_int,
-                      row_number() OVER (PARTITION BY qid
-                        ORDER BY s_int DESC, doc_id ASC) AS rnk
-               FROM agg2)
+        ${graft.functions.Bm25.scoreTopKSql("tk", "qt2", 5, "p2")}
         SELECT CAST(qid AS BIGINT) AS qid, CAST(rnk AS BIGINT) AS rnk,
                doc_id, round(s_int / 1000000.0, 6) AS score
-        FROM r2 WHERE rnk <= 5 ORDER BY qid, rnk"""
-      }),
+        FROM p2_top ORDER BY qid, rnk""")),
 
     // ── q147: vocabulary-DRIFT attribution — q101 reports a slice's JSD
     //   as one number; when the drift alarm fires, the operator's next
@@ -2570,22 +2519,4 @@ object TextQueries {
         ORDER BY stage_no"""
       })
   )
-
-  /** BM25 top-5 per query over a pre-tokenized corpus frame
-    * `(doc_id, toks: array<string>, dl: double)` — the scoring body of
-    * q87, extracted so q113's hybrid fusion can feed it the SAME
-    * persisted tokenized frame its cosine leg embeds from (one corpus
-    * scan for both legs, VERDICT r7 #3). Callers own persistence. The
-    * scoring arithmetic lives in `functions.Bm25.scoreTopK` — ONE
-    * kernel shared with q42's `RagPipeline.bm25All` (r14 verdict #1);
-    * this wrapper owns only the fixed query set and q87's output
-    * projection (qid, rnk, doc_id, 6dp score).
-    */
-  def bm25Leg(toks: DataFrame): DataFrame = {
-    val qterms = bm25QueryTerms
-    graft.functions.Bm25.scoreTopK(toks, "doc_id", qterms, 5)
-      .withColumn("score", round(col("s_int") / lit(1e6), 6))
-      .select(col("qid"), col("rnk"), col("doc_id"), col("score"))
-      .orderBy(col("qid"), col("rnk"))
-  }
 }

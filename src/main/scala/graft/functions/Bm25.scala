@@ -5,9 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** THE BM25 scoring kernel — the one owner of the inverted-index
-  * arithmetic that q42's hybrid retriever (`rag/RagPipeline.bm25All`)
-  * and q87/q113's lexical leg (`TextQueries.bm25Leg`) both route
-  * through (r14 verdict: the two parallel copies meant the
+  * arithmetic that the hybrid retriever (`rag/RagPipeline.bm25All`,
+  * behind q42/q113/q148) and q87/q146 all route through (r14 verdict:
+  * the two parallel copies meant the
   * InSet-inside-array optimization had to be discovered twice — r12 in
   * RagPipeline, r14 in TextQueries — and the term-list tokenizer
   * drifted into a hand-rolled `split` in one of them).
@@ -100,4 +100,36 @@ object Bm25 {
       .filter(col("rnk") <= k)
       .select(col("qid"), col(idCol), col("s_int"), col("rnk"))
   }
+
+  /** DuckDB twin of [[scoreTopK]] (default k1/b) for the oracles: the
+    * CTE chain `<p>_stats` → `<p>_dls` → `<p>_tf` → `<p>_df` → `<p>_sc`
+    * (integer per-term score) → `<p>_top(qid, doc_id, s_int, rnk)`, the
+    * per-(qid, doc) sum ranked with rnk ≤ k. `tk(doc_id, toks)` is the
+    * caller's token table (null scrubbing is the caller's, as in
+    * scoreTopK) and `qt(qid, term)` its distinct query-term table. */
+  private[graft] def scoreTopKSql(tk: String, qt: String, k: Int, p: String = "bm"): String = s"""
+      ${p}_stats AS (SELECT CAST(count(*) AS DOUBLE) AS n,
+                       CAST(sum(len(toks)) AS DOUBLE) / count(*) AS avgdl FROM $tk),
+      ${p}_dls AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl,
+                     unnest(toks) AS term FROM $tk),
+      ${p}_tf AS (SELECT doc_id, dl, term, CAST(count(*) AS DOUBLE) AS tf
+             FROM ${p}_dls GROUP BY doc_id, dl, term
+             HAVING term IN (SELECT term FROM $qt)),
+      ${p}_df AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM ${p}_tf GROUP BY term),
+      ${p}_sc AS (
+        SELECT q.qid AS qid, t.doc_id AS doc_id,
+               CAST(floor(round(
+                 ln((s.n - d.df + 0.5) / (d.df + 0.5) + 1.0) *
+                   (t.tf * 2.2 /
+                     (t.tf + 1.2 * (1.0 - 0.75 + 0.75 * (t.dl / s.avgdl)))),
+                 6) * 1000000.0 + 0.5) AS BIGINT) AS sterm
+        FROM ${p}_tf t JOIN ${p}_df d USING (term) JOIN $qt q USING (term)
+        CROSS JOIN ${p}_stats s),
+      ${p}_top AS (
+        SELECT qid, doc_id, s_int,
+               row_number() OVER (PARTITION BY qid
+                 ORDER BY s_int DESC, doc_id ASC) AS rnk
+        FROM (SELECT qid, doc_id, CAST(sum(sterm) AS BIGINT) AS s_int
+              FROM ${p}_sc GROUP BY qid, doc_id)
+        QUALIFY rnk <= $k)"""
 }

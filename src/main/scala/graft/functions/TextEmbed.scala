@@ -60,10 +60,9 @@ object TextEmbed {
   /** Same pipeline, but starting from an ALREADY-TOKENIZED array column
     * (`TextOps.tokens` output). Lets a caller that needs both raw tokens
     * (BM25) and embeddings (cosine) derive both from ONE persisted
-    * tokenized frame instead of scanning + tokenizing the corpus per leg
-    * — the q113 hybrid-retrieval shape. Bit-identical to `withEmbed`
-    * (which now delegates here): the stopword filter and prefix features
-    * apply to the same token array either way.
+    * tokenized frame instead of scanning + tokenizing the corpus per leg.
+    * Bit-identical to `withEmbed` (which delegates here): the stopword
+    * filter and prefix features apply to the same token array either way.
     */
   def withEmbedFromTokens(df: DataFrame, toksCol: String, outCol: String,
                           dim: Int = DefaultDim): DataFrame =

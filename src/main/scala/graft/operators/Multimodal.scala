@@ -167,11 +167,6 @@ object Multimodal {
     }(RowEncoder.encoderFor(outSchema))
   }
 
-  /** Former name of [[decode]], kept while the only real branch was the
-    * stub; audio/video still stub (documented above). */
-  def decodeStub(df: DataFrame, payloadCol: String, mediaTypeCol: String): DataFrame =
-    decode(df, payloadCol, mediaTypeCol)
-
   /** Resize: payload → fixed-budget payload + updated meta dims. The STUB
     * resamples bytes at a uniform stride down to targetW×targetH bytes (a
     * real implementation decodes, bilinear-resamples pixels, re-encodes —

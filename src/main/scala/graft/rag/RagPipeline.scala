@@ -120,13 +120,14 @@ object RagPipeline {
       .join(broadcast(questions.drop("qv")), Seq("qid"))
   }
 
-  /** Per-question MaxSim top-k (ColBERT late interaction, the q99_maxsim
-    * recipe): Σ over query tokens of the max dot against the document's
-    * token embeddings. Vocabulary-first: distinct corpus tokens embed
-    * once (Heaps' law keeps that table ≪ corpus) and join back to the
-    * (id, token) incidence list; per-term maxes integer-lift before the
-    * per-doc sum so ranking is accumulation-order independent. Emits
-    * (qid, id, rnk). */
+  /** Per-question MaxSim top-k (ColBERT late interaction; q99_maxsim runs
+    * it oracle-checked): Σ over query tokens of the max dot against the
+    * document's token embeddings. Vocabulary-first: distinct corpus
+    * tokens embed once (Heaps' law keeps that table ≪ corpus) and join
+    * back to the (id, token) incidence list; each dot rounds to 6dp and
+    * integer-lifts before the max and the per-doc sum, so ranking is
+    * accumulation-order independent. Emits (qid, id, ms, rnk), `ms` the
+    * integer score (×1e6). */
   def maxSimAll(questions: DataFrame, collection: DataFrame, k: Int): DataFrame = {
     val qt = TextEmbed.withEmbed(
       questions.select(col("qid"),
@@ -143,6 +144,10 @@ object RagPipeline {
     // list — the pre-fix plan carried both vectors through the widest
     // frame and re-ran the O(dim) kernel once per incidence row.
     // Identical arithmetic (same operands, same 6dp lift) → same output.
+    // SCALE BOUND: the broadcast table is |vocab|·|qtoks| skinny rows and
+    // vocabulary grows ~n^0.5 (Heaps) — sf1 ≈ 30k × 17 ≈ 0.5M rows
+    // (~20 MB), and a 100×-vocab corpus is still far under the 8 GB
+    // broadcast limit.
     val scored = broadcast(
       vocab.join(qt, lit(true))
         .withColumn("m", floor(round(VectorKernels.dotFast(col("qv"), col("tvec")), 6) *
@@ -155,7 +160,7 @@ object RagPipeline {
       .agg(sum(col("mx")).as("ms"))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
-      .select(col("qid"), col("id"), col("rnk"))
+      .select(col("qid"), col("id"), col("ms"), col("rnk"))
   }
 
   /** The external-service boundary: appends `out` = f(client, row) via
@@ -244,22 +249,16 @@ object RagPipeline {
       dim: Int = TextEmbed.DefaultDim,
       llm: LlmClient = ExtractiveLlm,
       withMaxSim: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.types.DoubleType
     val answered = answerBatch(qa.select(col("qid"), col("question")), collection, k, dim, llm,
         withMaxSim = withMaxSim)
       .join(qa.select(col("qid"), col("expected_answer")), Seq("qid"))
-    val qIdx = answered.schema.fieldIndex("question")
-    val pIdx = answered.schema.fieldIndex("answer")
-    val eIdx = answered.schema.fieldIndex("expected_answer")
-    withLlmColumn(answered, llm, "grade", DoubleType) { (client, r) =>
-      client.judge(r.getString(qIdx), r.getString(eIdx), r.getString(pIdx))
-    }
+    judgeBatch(answered, "question", "expected_answer", "answer", llm)
   }
 
   /** Judge-only harness: appends `grade` = llm.judge(question, expected,
-    * predicted) over arbitrary columns, through the SAME mapPartitions
-    * LlmClient boundary evalBatch grades through. Exists so the judge's
-    * token-F1 arithmetic can be oracle-checked cross-engine (q148): the
+    * predicted) over arbitrary columns through the mapPartitions
+    * LlmClient boundary — evalBatch's grader. Callable on its own so the
+    * judge's token-F1 arithmetic can be oracle-checked cross-engine (q148): the
     * generative step has no SQL twin, but grading a DETERMINISTIC
     * predicted column (e.g. the retrieved doc text) does. */
   def judgeBatch(df: DataFrame, questionCol: String, expectedCol: String,

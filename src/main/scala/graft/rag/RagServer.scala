@@ -83,25 +83,11 @@ final class RagServer(
   def start(port: Int = 0): Int = {
     require(server.isEmpty, "start: server already running — stop() it first")
     val s = HttpServer.create(new InetSocketAddress(port), 0)
-    s.createContext("/query", new HttpHandler {
-      override def handle(x: HttpExchange): Unit = RagServer.guard(x) {
-        if (x.getRequestMethod != "POST")
-          RagServer.reply(x, 405, """{"detail":"Method Not Allowed"}""")
-        else {
-          val body = new String(x.getRequestBody.readAllBytes(), UTF_8)
-          RagServer.parseQuestion(body) match {
-            case None =>
-              // FastAPI's 422 on a body failing the QueryRequest model
-              RagServer.reply(x, 422, """{"detail":"question field required"}""")
-            case Some(q) =>
-              val r = processQuery(q)
-              if (!r.success) // app.py:131-136: failure → 404 + detail
-                RagServer.reply(x, 404,
-                  s"""{"detail":${RagServer.jstr(r.response)}}""")
-              else RagServer.reply(x, 200, RagServer.toJson(r))
-          }
-        }
-      }
+    s.createContext("/query", RagServer.questionHandler { (x, q) =>
+      val r = processQuery(q)
+      if (!r.success) // app.py:131-136: failure → 404 + detail
+        RagServer.reply(x, 404, s"""{"detail":${RagServer.jstr(r.response)}}""")
+      else RagServer.reply(x, 200, RagServer.toJson(r))
     })
     // The reference's CoT path can STREAM the final answer as SSE
     // (`src/groq_cot_batch_agents.ipynb` cell 5: `answer_with_cot(...,
@@ -116,80 +102,68 @@ final class RagServer(
     // says), so unlike /query this endpoint streams a fallback answer
     // rather than 404ing — the whole-answer inspection /query does is
     // exactly what streaming gives up.
-    s.createContext("/query/stream", new HttpHandler {
-      override def handle(x: HttpExchange): Unit = RagServer.guard(x) {
-        if (x.getRequestMethod != "POST")
-          RagServer.reply(x, 405, """{"detail":"Method Not Allowed"}""")
-        else {
-          val body = new String(x.getRequestBody.readAllBytes(), UTF_8)
-          RagServer.parseQuestion(body) match {
-            case None =>
-              RagServer.reply(x, 422, """{"detail":"question field required"}""")
-            case Some(q) =>
-              // CoT stage 1 (L3): salient-token retrieval thoughts widen
-              // the embedded query, exactly as Agents.answerWithCot does
-              val thoughts = RagServer.retrievalThoughts(q)
-              val hits = retrieve(if (thoughts.isEmpty) q else s"$q $thoughts")
-              if (hits.isEmpty)
-                RagServer.reply(x, 404,
-                  """{"detail":"No relevant information found."}""")
-              else {
-                val context = hits.map(_._2)
-                // Producer/consumer split: answerStream's deltas must stay
-                // sequential for stateful clients (same contract as
-                // answer), but the lock needs to cover only delta
-                // PRODUCTION — holding it across the socket writes let one
-                // stalled client (TCP backpressure blocking out.write)
-                // wedge every other /query and /query/stream request. The
-                // producer drains the iterator under llmLock into a queue;
-                // the handler thread writes SSE outside it. The queue is
-                // deliberately UNbounded: a bounded queue would block the
-                // producer (lock in hand) on a slow client again, and the
-                // memory ceiling is one answer's deltas either way.
-                val queue = new java.util.concurrent.LinkedBlockingQueue[Option[String]]()
-                // A client that disconnects mid-stream makes sse() throw;
-                // without a stop signal the producer would keep generating
-                // the whole answer under llmLock for a dead socket. The
-                // flag is checked per delta — the producer stops within
-                // one delta of the consumer failing.
-                @volatile var cancelled = false
-                val producer = new Thread(() => {
-                  try llmLock.synchronized {
-                    llm.answerStream(q, context)
-                      .takeWhile(_ => !cancelled)
-                      .foreach(d => queue.put(Some(
-                        s"""{"choices":[{"delta":{"content":${RagServer.jstr(d)}}}]}""")))
-                  } catch { case scala.util.control.NonFatal(e) =>
-                    // a swallowed LLM failure used to produce a clean 200
-                    // with just [DONE] — indistinguishable from an empty
-                    // answer (r11 review). Surface it as a terminal error
-                    // payload in the stream (the 200 headers are already
-                    // on the wire; an SSE client sees the error object
-                    // where the next delta would be).
-                    queue.put(Some(
-                      s"""{"error":{"message":${RagServer.jstr(
-                        Option(e.getMessage).getOrElse(e.getClass.getName))}}}"""))
-                  } finally queue.put(None) // end-of-stream even on failure
-                }, "rag-sse-producer")
-                producer.setDaemon(true) // a wedged producer must never pin JVM exit
-                producer.start()
-                try RagServer.sse(x,
-                  Iterator.continually(queue.take()).takeWhile(_.isDefined).map(_.get))
-                finally {
-                  cancelled = true
-                  // bounded join + interrupt: cancellation is only checked
-                  // BETWEEN deltas, so a producer blocked inside a stalled
-                  // answerStream would wedge this handler thread forever —
-                  // four wedges and the fixed 4-thread pool stops serving
-                  // /health too (r11 review). Interrupt targets the
-                  // blocking call; the last join is a bounded best-effort
-                  // (the daemon flag keeps a truly stuck thread from
-                  // pinning shutdown).
-                  producer.join(5000)
-                  if (producer.isAlive) { producer.interrupt(); producer.join(1000) }
-                }
-              }
-          }
+    s.createContext("/query/stream", RagServer.questionHandler { (x, q) =>
+      // CoT stage 1 (L3): salient-token retrieval thoughts widen
+      // the embedded query, exactly as Agents.answerWithCot does
+      val thoughts = RagServer.retrievalThoughts(q)
+      val hits = retrieve(if (thoughts.isEmpty) q else s"$q $thoughts")
+      if (hits.isEmpty)
+        RagServer.reply(x, 404,
+          """{"detail":"No relevant information found."}""")
+      else {
+        val context = hits.map(_._2)
+        // Producer/consumer split: answerStream's deltas must stay
+        // sequential for stateful clients (same contract as
+        // answer), but the lock needs to cover only delta
+        // PRODUCTION — holding it across the socket writes let one
+        // stalled client (TCP backpressure blocking out.write)
+        // wedge every other /query and /query/stream request. The
+        // producer drains the iterator under llmLock into a queue;
+        // the handler thread writes SSE outside it. The queue is
+        // deliberately UNbounded: a bounded queue would block the
+        // producer (lock in hand) on a slow client again, and the
+        // memory ceiling is one answer's deltas either way.
+        val queue = new java.util.concurrent.LinkedBlockingQueue[Option[String]]()
+        // A client that disconnects mid-stream makes sse() throw;
+        // without a stop signal the producer would keep generating
+        // the whole answer under llmLock for a dead socket. The
+        // flag is checked per delta — the producer stops within
+        // one delta of the consumer failing.
+        @volatile var cancelled = false
+        val producer = new Thread(() => {
+          try llmLock.synchronized {
+            llm.answerStream(q, context)
+              .takeWhile(_ => !cancelled)
+              .foreach(d => queue.put(Some(
+                s"""{"choices":[{"delta":{"content":${RagServer.jstr(d)}}}]}""")))
+          } catch { case scala.util.control.NonFatal(e) =>
+            // a swallowed LLM failure used to produce a clean 200
+            // with just [DONE] — indistinguishable from an empty
+            // answer (r11 review). Surface it as a terminal error
+            // payload in the stream (the 200 headers are already
+            // on the wire; an SSE client sees the error object
+            // where the next delta would be).
+            queue.put(Some(
+              s"""{"error":{"message":${RagServer.jstr(
+                Option(e.getMessage).getOrElse(e.getClass.getName))}}}"""))
+          } finally queue.put(None) // end-of-stream even on failure
+        }, "rag-sse-producer")
+        producer.setDaemon(true) // a wedged producer must never pin JVM exit
+        producer.start()
+        try RagServer.sse(x,
+          Iterator.continually(queue.take()).takeWhile(_.isDefined).map(_.get))
+        finally {
+          cancelled = true
+          // bounded join + interrupt: cancellation is only checked
+          // BETWEEN deltas, so a producer blocked inside a stalled
+          // answerStream would wedge this handler thread forever —
+          // four wedges and the fixed 4-thread pool stops serving
+          // /health too (r11 review). Interrupt targets the
+          // blocking call; the last join is a bounded best-effort
+          // (the daemon flag keeps a truly stuck thread from
+          // pinning shutdown).
+          producer.join(5000)
+          if (producer.isAlive) { producer.interrupt(); producer.join(1000) }
         }
       }
     })
@@ -216,6 +190,19 @@ final class RagServer(
 }
 
 object RagServer {
+
+  /** A POST endpoint taking a QueryRequest body: 405 on any other method,
+    * FastAPI's 422 on a body failing the QueryRequest model, otherwise
+    * `handle(exchange, question)` — all under `guard`. */
+  private def questionHandler(handle: (HttpExchange, String) => Unit): HttpHandler =
+    x => guard(x) {
+      if (x.getRequestMethod != "POST")
+        reply(x, 405, """{"detail":"Method Not Allowed"}""")
+      else parseQuestion(new String(x.getRequestBody.readAllBytes(), UTF_8)) match {
+        case None => reply(x, 422, """{"detail":"question field required"}""")
+        case Some(q) => handle(x, q)
+      }
+    }
 
   private def guard(x: HttpExchange)(body: => Unit): Unit =
     try body

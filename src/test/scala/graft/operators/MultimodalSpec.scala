@@ -13,7 +13,7 @@ class MultimodalSpec extends SparkSpec {
   ).toDF("id", "payload", "media_type")
 
   test("decode stub: schema plumbing, typed metadata, normalized features") {
-    val out = Multimodal.decodeStub(media, "payload", "media_type")
+    val out = Multimodal.decode(media, "payload", "media_type")
     assert(out.schema.fieldNames.toSeq === Seq("id", "payload", "media_type", "meta", "features"))
     val rows = out.orderBy("id").collect()
     val img = rows(0)
@@ -274,9 +274,9 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("decode is deterministic") {
-    val a = Multimodal.decodeStub(media, "payload", "media_type")
+    val a = Multimodal.decode(media, "payload", "media_type")
       .drop("payload").collect().map(_.toString).sorted
-    val b = Multimodal.decodeStub(media, "payload", "media_type")
+    val b = Multimodal.decode(media, "payload", "media_type")
       .drop("payload").collect().map(_.toString).sorted
     assert(a.toSeq === b.toSeq)
   }
@@ -299,7 +299,7 @@ class MultimodalSpec extends SparkSpec {
     assert((meta.getInt(1), meta.getInt(2)) === ((16, 16)))
     // the composition that used to produce AMBIGUOUS_REFERENCE
     val composed = Multimodal.resizeStub(
-      Multimodal.decodeStub(media, "payload", "media_type"),
+      Multimodal.decode(media, "payload", "media_type"),
       "payload", "media_type", 8, 8)
     assert(composed.select(org.apache.spark.sql.functions.col("meta"),
       org.apache.spark.sql.functions.col("resize_meta")).count() === 3)
