@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{VectorKernels, VectorOps}
+import graft.vector.IvfKMeans
 
 /** Vector search + embedding-space dedup (SURVEY.md T1/J4/V2-V5 plus the
   * scale extensions: ANN, near-duplicate detection).
@@ -31,6 +33,41 @@ object VectorQueries {
 
   private def score6(a: Column, b: Column): Column =
     round(VectorKernels.cosineFast(a, b), 6)
+
+  /** The per-query top-5 tail over scored (qid, nid, score) pairs: rank
+    * by (score DESC, nid ASC), keep 5 — q11/q15/q45/q73. SQL twin:
+    * `topKTailSql`. */
+  private def top5(scored: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("nid").asc)
+    scored.withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= 5)
+      .select(col("qid"), col("rnk").cast("long").as("rnk"), col("nid"), col("score"))
+      .orderBy(col("qid"), col("rnk"))
+  }
+
+  /** DuckDB twin of `top5` (and of q12's 1-NN at k = 1): ranks a
+    * `scored` (qid, nid, score) CTE by (score DESC, nid ASC) per query
+    * and selects `cols` of the first k. */
+  private def topKTailSql(k: Int, cols: String = "qid, rnk, nid, score"): String =
+    s"""
+      ranked AS (SELECT qid, nid, score,
+                        row_number() OVER (PARTITION BY qid
+                          ORDER BY score DESC, nid ASC) AS rnk
+                 FROM scored)
+      SELECT $cols FROM ranked WHERE rnk <= $k ORDER BY qid, rnk"""
+
+  /** ×1e6 round-half-up quantization to integer-valued doubles — the
+    * domain in which the k-means, PQ and PCA sums are exact in both
+    * engines (IvfKMeans object doc). SQL twin: `qCte`. */
+  private def quantized(e: Column): Column =
+    transform(e.cast("array<double>"), v => floor(v * 1e6 + 0.5).cast("double"))
+
+  /** The quantized corpus (vec_id, qv), checkpointed because every
+    * consumer (Lloyd's rounds, PQ subspace trainings, PCA moments)
+    * re-reads it. */
+  private def quantizedEmb(s: SparkSession, dir: String): DataFrame =
+    emb(s, dir).select(col("vec_id"), quantized(col("embedding")).as("qv"))
+      .localCheckpoint()
 
   /** Corpus-validity seam (r12 hostile-content finding): a NULL vector,
     * a NaN/±Inf cell, or a cell past the 1e6 magnitude domain is corrupt
@@ -103,6 +140,13 @@ object VectorQueries {
     * units before the 6dp round. */
   private[graft] val KmScale = 1e12 // ClusterSampleSpec re-derives assignments
 
+  /** DuckDB twin of `quantizedEmb`: the `q` CTE of (vec_id, qv). */
+  private val qCte: String =
+    """q AS (SELECT vec_id,
+                   list_transform(embedding,
+                     v -> floor(CAST(v AS DOUBLE) * 1000000 + 0.5)) AS qv
+                 FROM embeddings)"""
+
   /** DuckDB twin of IvfKMeans's squared distance: same sequential
     * index-order fold as Spark's aggregate(zip_with(...)). */
   private def sqdistSql(a: String, b: String, dim: Int = 64): String =
@@ -116,12 +160,13 @@ object VectorQueries {
   /** Unrolled Lloyd's CTE chain: q = quantized vectors, c0 = seed
     * centroids, then per round an assignment CTE (argmin via row_number
     * over (dist6, cell)) and an update CTE (per-cell per-dim mean over
-    * the EXACT integer-valued sums). Final assignment = a{rounds+1},
-    * final centroids = c{rounds}. Shared by q67 (training output) and
-    * q73 (probe search over the trained index).
+    * the EXACT integer-valued sums), KmRounds rounds from KmK-floored
+    * seeds. Final assignment = a{KmRounds+1}, final centroids =
+    * c{KmRounds}. Shared by q67 (training output), q85, q136 and the IVF
+    * oracles of q12/q73/q88 (`ivfCandSql`).
     */
-  private def kmeansCtes(k: Int, rounds: Int): String = {
-    val stages = (1 to rounds + 1).map { i =>
+  private def kmeansCtes: String = {
+    val stages = (1 to KmRounds + 1).map { i =>
       val assign = s"""
         a$i AS (SELECT vec_id, qv, cell, dist6 FROM (
           SELECT q.vec_id AS vec_id, q.qv AS qv, c.cell AS cell,
@@ -134,22 +179,19 @@ object VectorQueries {
           SELECT a.cell AS cell, r.pos AS pos, sum(a.qv[r.pos]) AS sx, count(*) AS n
           FROM a$i a CROSS JOIN (SELECT CAST(range AS INT) AS pos FROM range(1, 65)) r
           GROUP BY a.cell, r.pos) GROUP BY cell)"""
-      if (i <= rounds) s"$assign,$update" else assign
+      if (i <= KmRounds) s"$assign,$update" else assign
     }.mkString(",")
-    s"""q AS (SELECT vec_id,
-                   list_transform(embedding,
-                     v -> floor(CAST(v AS DOUBLE) * 1000000 + 0.5)) AS qv
-                 FROM embeddings),
-           kk AS (SELECT greatest($k, count(*) // $KmCell) AS k FROM q),
+    s"""$qCte,
+           kk AS (SELECT greatest($KmK, count(*) // $KmCell) AS k FROM q),
            c0 AS (SELECT vec_id AS cell, qv AS cv FROM q
                   WHERE vec_id < (SELECT k FROM kk)),
            $stages"""
   }
 
-  private def kmeansSql(k: Int, rounds: Int): String =
+  private def kmeansSql: String =
     s"""
-      WITH ${kmeansCtes(k, rounds)}
-      SELECT vec_id, cell, dist6 FROM a${rounds + 1} ORDER BY vec_id"""
+      WITH $kmeansCtes
+      SELECT vec_id, cell, dist6 FROM a${KmRounds + 1} ORDER BY vec_id"""
 
   // ── q86 constants + oracle: M subspaces × k codes, same quantize→
   //    Lloyd's→6dp-argmin recipe as q67 applied per 16-dim slice ──
@@ -203,11 +245,10 @@ object VectorQueries {
 
   /** The shared ADC + rank tail: table lookups per subspace joined in
     * FIXED order, 6dp-rounded fixed-order sum, rank ascending with nid
-    * tiebreak. `candFrom` supplies the (qid, nid) candidate pairs —
-    * q86 scans everything (flat PQ), q88 only probed cells' members. */
-  private def adcRankSql(candSql: String): String =
+    * tiebreak. Expects a `cand` CTE of (qid, nid) candidate pairs — q86
+    * scans everything (flat PQ), q88 only probed cells' members. */
+  private def adcRankSql: String =
     s"""
-      cand AS ($candSql),
       adc AS (SELECT c.qid AS qid, c.nid AS nid,
                      round(((d0.d + d1.d) + d2.d) + d3.d, 6) AS adist
               FROM cand c
@@ -225,59 +266,52 @@ object VectorQueries {
 
   private def pqAdcSql: String =
     s"""
-      WITH q AS (SELECT vec_id,
-             list_transform(embedding,
-               v -> floor(CAST(v AS DOUBLE) * 1000000 + 0.5)) AS qv
-           FROM embeddings),
+      WITH $qCte,
       $pqCtes,
-      ${adcRankSql(
-        s"""SELECT qs.vec_id AS qid, n.vec_id AS nid
-            FROM q qs CROSS JOIN q n
-            WHERE qs.vec_id < 10 AND qs.vec_id <> n.vec_id""")}"""
+      cand AS (SELECT qs.vec_id AS qid, n.vec_id AS nid
+               FROM q qs CROSS JOIN q n
+               WHERE qs.vec_id < 10 AND qs.vec_id <> n.vec_id),
+      $adcRankSql"""
 
-  /** q88 oracle: coarse k-means (shared q67 CTEs) + per-query nprobe=2
-    * probe (shared q73 shape) + PQ codebooks and ADC tables (shared q86
-    * CTEs) — candidates are ONLY the probed cells' members. */
-  private def ivfPqSql(k: Int, rounds: Int): String =
+  /** q88 oracle: coarse k-means (shared q67 CTEs) + the shared IVF
+    * candidate CTEs at nprobe=2 + PQ codebooks and ADC tables (shared
+    * q86 CTEs) — candidates are ONLY the probed cells' members. */
+  private def ivfPqSql: String =
     s"""
-      WITH ${kmeansCtes(k, rounds)},
-      members AS (SELECT vec_id AS nid, cell FROM a${rounds + 1}),
-      qq AS (SELECT vec_id AS qid, qv FROM q WHERE vec_id < 10),
+      WITH $kmeansCtes,
+      ${ivfCandSql("vec_id < 10", 2)},
+      $pqCtes,
+      $adcRankSql"""
+
+  /** The IVF candidate CTEs over the trained index (`kmeansCtes` in
+    * scope) — SQL twin of `knnJoinCandidates`: `qq` = the queries
+    * matching `queries`, `probe` = each query's nprobe nearest cells by
+    * (dist6, cell id), `members` = the final assignment, `cand` = (qid,
+    * nid) over the probed cells' members, self excluded. */
+  private def ivfCandSql(queries: String, nprobe: Int): String =
+    s"""
+      qq AS (SELECT vec_id AS qid, qv FROM q WHERE $queries),
       probe AS (SELECT qid, cell FROM (
         SELECT qq.qid, c.cell,
                row_number() OVER (PARTITION BY qq.qid
                  ORDER BY ${kmDist6Sql("qq.qv", "c.cv")} ASC, c.cell ASC) AS crnk
-        FROM qq CROSS JOIN c$rounds c) WHERE crnk <= 2),
-      $pqCtes,
-      ${adcRankSql(
-        """SELECT p.qid, m.nid FROM probe p JOIN members m USING (cell)
-           WHERE p.qid <> m.nid""")}"""
-
-  /** q73 oracle: train (shared CTEs) → per-query nprobe=2 nearest cells
-    * by centroid distance → exact cosine top-5 among the probed cells'
-    * members only.
-    */
-  private def ivfProbeSql(k: Int, rounds: Int): String =
-    s"""
-      WITH ${kmeansCtes(k, rounds)},
-      qq AS (SELECT vec_id AS qid, qv FROM q WHERE vec_id < 10),
-      probe AS (SELECT qid, cell FROM (
-        SELECT qq.qid, c.cell,
-               row_number() OVER (PARTITION BY qq.qid
-                 ORDER BY ${kmDist6Sql("qq.qv", "c.cv")} ASC, c.cell ASC) AS crnk
-        FROM qq CROSS JOIN c$rounds c) WHERE crnk <= 2),
-      members AS (SELECT vec_id AS nid, cell FROM a${rounds + 1}),
+        FROM qq CROSS JOIN c$KmRounds c) WHERE crnk <= $nprobe),
+      members AS (SELECT vec_id AS nid, cell FROM a${KmRounds + 1}),
       cand AS (SELECT p.qid, m.nid FROM probe p JOIN members m USING (cell)
-               WHERE p.qid <> m.nid),
+               WHERE p.qid <> m.nid)"""
+
+  /** q12/q73 oracle: train (shared q67 CTEs) → the shared IVF candidate
+    * CTEs → exact cosine top-k among the probed cells' members only,
+    * selecting `cols`. */
+  private def ivfCosineSql(queries: String, nprobe: Int, k: Int, cols: String): String =
+    s"""
+      WITH $kmeansCtes,
+      ${ivfCandSql(queries, nprobe)},
       scored AS (SELECT cand.qid, cand.nid,
                         round(${cosSql("eq.embedding", "en.embedding")}, 6) AS score
                  FROM cand JOIN embeddings eq ON eq.vec_id = cand.qid
                            JOIN embeddings en ON en.vec_id = cand.nid),
-      ranked AS (SELECT qid, nid, score,
-                        row_number() OVER (PARTITION BY qid
-                          ORDER BY score DESC, nid ASC) AS rnk
-                 FROM scored)
-      SELECT qid, rnk, nid, score FROM ranked WHERE rnk <= 5 ORDER BY qid, rnk"""
+      ${topKTailSql(k, cols)}"""
 
   // ── q46 constants: up to 48 sign-bit hyperplanes over the 64-dim
   //    space, 4 bands × adaptive 4..12 bits. ±1 entries come from a fixed
@@ -338,60 +372,28 @@ object VectorQueries {
   //    query set remains q11. ──
   private val KnnNprobe = 2
 
-  /** q12 oracle: train (shared q67 CTEs) → per-query KnnNprobe nearest
-    * cells by centroid distance → exact cosine 1-NN among the probed
-    * cells' members only (shared q73 probe shape, rnk = 1 tail). */
-  private def knnJoinSql(k: Int, rounds: Int, nprobe: Int): String =
-    s"""
-      WITH ${kmeansCtes(k, rounds)},
-      qq AS (SELECT vec_id AS qid, qv FROM q WHERE vec_id % 5 = 0),
-      probe AS (SELECT qid, cell FROM (
-        SELECT qq.qid, c.cell,
-               row_number() OVER (PARTITION BY qq.qid
-                 ORDER BY ${kmDist6Sql("qq.qv", "c.cv")} ASC, c.cell ASC) AS crnk
-        FROM qq CROSS JOIN c$rounds c) WHERE crnk <= $nprobe),
-      members AS (SELECT vec_id AS nid, cell FROM a${rounds + 1}),
-      cand AS (SELECT p.qid, m.nid FROM probe p JOIN members m USING (cell)
-               WHERE p.qid <> m.nid),
-      scored AS (SELECT cand.qid, cand.nid,
-                        round(${cosSql("eq.embedding", "en.embedding")}, 6) AS score
-                 FROM cand JOIN embeddings eq ON eq.vec_id = cand.qid
-                           JOIN embeddings en ON en.vec_id = cand.nid),
-      ranked AS (SELECT qid, nid, score,
-                        row_number() OVER (PARTITION BY qid
-                          ORDER BY score DESC, nid ASC) AS rnk
-                 FROM scored)
-      SELECT qid, nid, score FROM ranked WHERE rnk = 1 ORDER BY qid"""
-
-  /** q12's bounded candidate set — (cell, nid, nv, qid, qv_orig) for the
-    * probed cells' members only. Package-visible so Q12BoundSpec can
-    * assert the blocking directly (unprobed-cell members never become
+  /** The IVF candidate frame over the trained index — (cell, nid, nv,
+    * qid, qv_orig) for each query matching `queries` (a predicate on
+    * `vec_id`) and the members of its nprobe probed cells
+    * (`IvfKMeans.probeCells`), self excluded. Shared by q12, q73 and q88;
+    * SQL twin `ivfCandSql`. Package-visible so Q12BoundSpec can assert
+    * the blocking directly (unprobed-cell members never become
     * candidates). The quantized view is recomputed alongside the
     * original embedding column (a map-only transform) instead of joining
     * back to trainedKMeans's frame — no shuffle to re-attach vectors.
     * The probed side (qid, cell, qv_orig) is the broadcast: the query
     * sample times nprobe rows, small by construction, so the member scan
     * joins map-side and the corpus never shuffles for the join. */
-  private[graft] def knnJoinCandidates(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import s.implicits._
+  private[graft] def knnJoinCandidates(s: SparkSession, dir: String,
+                                       queries: Column, nprobe: Int): DataFrame = {
     val (_, cents) = trainedKMeans(s, dir)
     val withQv = emb(s, dir).select(col("vec_id"), col("embedding"),
-      transform(col("embedding").cast("array<double>"),
-        v => floor(v * 1e6 + 0.5).cast("double")).as("qv"))
-    val members = graft.vector.IvfKMeans.assignCells(withQv, "qv", cents, KmScale)
+      quantized(col("embedding")).as("qv"))
+    val members = IvfKMeans.assignCells(withQv, "qv", cents, KmScale)
       .select(col("vec_id").as("nid"), col("cell"), col("embedding").as("nv"))
-    val centDf = cents.toDF("cell", "cv")
-    val wq = Window.partitionBy(col("qid")).orderBy(col("cdist").asc, col("cell").asc)
-    val probed = withQv.filter(col("vec_id") % 5 === 0)
-      .select(col("vec_id").as("qid"), col("qv"), col("embedding").as("qv_orig"))
-      .join(broadcast(centDf), lit(true))
-      // sqdist_f32: identical index-order fold to the zip_with+aggregate
-      // HOF it replaced, one codegen'd loop per (query, centroid) row
-      .withColumn("cdist", round(
-        VectorKernels.sqDistFast(col("qv"), col("cv")) / lit(KmScale), 6))
-      .withColumn("crnk", row_number().over(wq))
-      .filter(col("crnk") <= KnnNprobe)
+    val probed = IvfKMeans.probeCells(withQv.filter(queries)
+        .select(col("vec_id").as("qid"), col("qv"), col("embedding").as("qv_orig")),
+        "qv", cents, KmScale, nprobe)
       .select(col("qid"), col("cell"), col("qv_orig"))
     members.join(broadcast(probed), Seq("cell"))
       .filter(col("qid") =!= col("nid"))
@@ -402,30 +404,19 @@ object VectorQueries {
     // ── q11: brute-force cosine top-k for a small query set (T1) ──
     QueryDef("q11_ann_topk",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val e = emb(s, dir)
         val q = e.filter(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-        val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("nid").asc)
-        e.select(col("vec_id").as("nid"), col("embedding").as("nv"))
+        top5(e.select(col("vec_id").as("nid"), col("embedding").as("nv"))
           .join(broadcast(q), col("qid") =!= col("nid"))
-          .withColumn("score", score6(col("qv"), col("nv")))
-          .withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= 5)
-          .select(col("qid"), col("rnk").cast("long").as("rnk"), col("nid"), col("score"))
-          .orderBy(col("qid"), col("rnk"))
+          .withColumn("score", score6(col("qv"), col("nv"))))
       },
       Some(s"""
         WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 10),
              c AS (SELECT vec_id AS nid, embedding AS nv FROM embeddings),
              scored AS (
                SELECT qid, nid, round(${cosSql("qv", "nv")}, 6) AS score
-               FROM q JOIN c ON qid <> nid),
-             ranked AS (
-               SELECT qid, nid, score,
-                      row_number() OVER (PARTITION BY qid ORDER BY score DESC, nid ASC) AS rnk
-               FROM scored)
-        SELECT qid, rnk, nid, score FROM ranked WHERE rnk <= 5 ORDER BY qid, rnk""")),
+               FROM q JOIN c ON qid <> nid),${topKTailSql(5)}""")),
 
     // ── q12: k-NN join (1-nn for a sampled left side; J4 at scale).
     //   BOUNDED since round 10: candidates come from the trained IVF
@@ -438,7 +429,7 @@ object VectorQueries {
     //   exchange. ──
     QueryDef("q12_knn_join",
       (s, dir) => {
-        knnJoinCandidates(s, dir)
+        knnJoinCandidates(s, dir, col("vec_id") % 5 === 0, KnnNprobe)
           .withColumn("score", score6(col("qv_orig"), col("nv")))
           .select(col("qid"), col("nid"), col("score"))
           .groupBy(col("qid"))
@@ -447,7 +438,7 @@ object VectorQueries {
           .select(col("qid"), col("t.id").as("nid"), col("t.v").as("score"))
           .orderBy(col("qid"))
       },
-      Some(knnJoinSql(KmK, KmRounds, KnnNprobe))),
+      Some(ivfCosineSql("vec_id % 5 = 0", KnnNprobe, 1, "qid, nid, score"))),
 
     // ── q13: blocked near-duplicate pairs in embedding space ──
     QueryDef("q13_neardup_cosine",
@@ -479,7 +470,6 @@ object VectorQueries {
     //   point at 100 TB (cells = partition keys → partition pruning). ──
     QueryDef("q15_ivf_ann",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val e = emb(s, dir)
         // centroids: per-label, per-position mean over ×1e6-QUANTIZED
         // elements — the q67 discipline applied here (r11 review): a raw
@@ -506,14 +496,9 @@ object VectorQueries {
           .filter(col("crnk") <= 2)
           .select(col("qid"), col("qv"), col("label"))
         // search only within probed cells
-        val wTop = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("nid").asc)
-        probed.join(e.select(col("label"), col("vec_id").as("nid"), col("embedding").as("nv")), Seq("label"))
+        top5(probed.join(e.select(col("label"), col("vec_id").as("nid"), col("embedding").as("nv")), Seq("label"))
           .filter(col("qid") =!= col("nid"))
-          .withColumn("score", score6(col("qv"), col("nv")))
-          .withColumn("rnk", row_number().over(wTop))
-          .filter(col("rnk") <= 5)
-          .select(col("qid"), col("rnk").cast("long").as("rnk"), col("nid"), col("score"))
-          .orderBy(col("qid"), col("rnk"))
+          .withColumn("score", score6(col("qv"), col("nv"))))
       },
       Some(s"""
         WITH elems AS (
@@ -534,12 +519,7 @@ object VectorQueries {
             FROM q CROSS JOIN centv) WHERE crnk <= 2),
         scored AS (
           SELECT p.qid, e.vec_id AS nid, round(${cosSql("p.qv", "e.embedding")}, 6) AS score
-          FROM probed p JOIN embeddings e ON p.label = e.label AND p.qid <> e.vec_id),
-        ranked AS (
-          SELECT qid, nid, score,
-                 row_number() OVER (PARTITION BY qid ORDER BY score DESC, nid ASC) AS rnk
-          FROM scored)
-        SELECT qid, rnk, nid, score FROM ranked WHERE rnk <= 5 ORDER BY qid, rnk""")),
+          FROM probed p JOIN embeddings e ON p.label = e.label AND p.qid <> e.vec_id),${topKTailSql(5)}""")),
 
     // ── q45: scalar-quantized (SQ8) similarity — the memory-side scale
     //   path IVF_FLAT pairs with in real ANN systems: each stored vector
@@ -552,7 +532,6 @@ object VectorQueries {
     //   separate projections — Catalyst does no CSE inside lambdas. ──
     QueryDef("q45_sq8_ann",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val e = emb(s, dir)
         val coded = e
           .withColumn("mn", array_min(col("embedding")).cast("double"))
@@ -569,13 +548,8 @@ object VectorQueries {
           .select(col("vec_id").as("nid"), col("recon"))
         val q = e.filter(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-        val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("nid").asc)
-        coded.join(broadcast(q), col("qid") =!= col("nid"))
-          .withColumn("score", round(VectorOps.cosine(col("qv"), col("recon")), 6))
-          .withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= 5)
-          .select(col("qid"), col("rnk").cast("long").as("rnk"), col("nid"), col("score"))
-          .orderBy(col("qid"), col("rnk"))
+        top5(coded.join(broadcast(q), col("qid") =!= col("nid"))
+          .withColumn("score", round(VectorOps.cosine(col("qv"), col("recon")), 6)))
       },
       Some(s"""
         WITH base AS (
@@ -593,12 +567,7 @@ object VectorQueries {
         q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 10),
         scored AS (
           SELECT qid, nid, round(${cosSql("qv", "recon")}, 6) AS score
-          FROM q JOIN coded ON qid <> nid),
-        ranked AS (
-          SELECT qid, nid, score,
-                 row_number() OVER (PARTITION BY qid ORDER BY score DESC, nid ASC) AS rnk
-          FROM scored)
-        SELECT qid, rnk, nid, score FROM ranked WHERE rnk <= 5 ORDER BY qid, rnk""")),
+          FROM q JOIN coded ON qid <> nid),${topKTailSql(5)}""")),
 
     // ── q46: random-hyperplane LSH near-dup over embeddings — the
     //   UNBLOCKED scale path q13's label-blocking can't give you (labels
@@ -741,11 +710,11 @@ object VectorQueries {
     QueryDef("q67_ivf_kmeans",
       (s, dir) => {
         val (q, cents) = trainedKMeans(s, dir)
-        graft.vector.IvfKMeans.assignCells(q, "qv", cents, KmScale)
+        IvfKMeans.assignCells(q, "qv", cents, KmScale)
           .select(col("vec_id"), col("cell"), col("dist6"))
           .orderBy(col("vec_id"))
       },
-      Some(kmeansSql(KmK, KmRounds))),
+      Some(kmeansSql)),
 
     // ── q73: IVF probe search over the q67-trained index — the complete
     //   nlist/nprobe ANN the reference configures (IVF_FLAT, nprobe
@@ -756,38 +725,10 @@ object VectorQueries {
     //   cells are hive partitions (Collection.buildIvf/searchIvf is that
     //   production path, partition-pruning spec-asserted). ──
     QueryDef("q73_ivf_probe",
-      (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        import s.implicits._
-        val (q, cents) = trainedKMeans(s, dir)
-        val assigned = graft.vector.IvfKMeans.assignCells(q, "qv", cents, KmScale)
-          .select(col("vec_id").as("nid"), col("cell"))
-        val centDf = cents.toDF("cell", "cv")
-        val queries = q.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("qv"))
-        val wq = Window.partitionBy(col("qid")).orderBy(col("cdist").asc, col("cell").asc)
-        val probed = queries.join(broadcast(centDf), lit(true))
-          .withColumn("cdist", round(
-            VectorKernels.sqDistFast(col("qv"), col("cv")) / lit(KmScale), 6))
-          .withColumn("crnk", row_number().over(wq))
-          .filter(col("crnk") <= 2)
-          .select(col("qid"), col("cell"))
-        val e = emb(s, dir)
-        val qe = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("embedding").as("qv_orig"))
-        val ne = e.select(col("vec_id").as("nid"), col("embedding").as("nv"))
-        val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("nid").asc)
-        probed.join(assigned, Seq("cell"))
-          .filter(col("qid") =!= col("nid"))
-          .join(broadcast(qe), Seq("qid"))
-          .join(ne, Seq("nid"))
-          .withColumn("score", score6(col("qv_orig"), col("nv")))
-          .withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= 5)
-          .select(col("qid"), col("rnk").cast("long").as("rnk"), col("nid"), col("score"))
-          .orderBy(col("qid"), col("rnk"))
-      },
-      Some(ivfProbeSql(KmK, KmRounds))),
+      (s, dir) =>
+        top5(knnJoinCandidates(s, dir, col("vec_id") < 10, 2)
+          .withColumn("score", score6(col("qv_orig"), col("nv")))),
+      Some(ivfCosineSql("vec_id < 10", 2, 5, "qid, rnk, nid, score"))),
 
     // ── q85: SemDeDup — semantic deduplication by k-means clustering +
     //   intra-cluster cosine pruning (Abbas et al., "SemDeDup: Data-
@@ -804,9 +745,8 @@ object VectorQueries {
     //   on cell for the self-join; no global pair enumeration. ──
     QueryDef("q85_semdedup",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val (q, cents) = trainedKMeans(s, dir)
-        val assigned = graft.vector.IvfKMeans.assignCells(q, "qv", cents, KmScale)
+        val assigned = IvfKMeans.assignCells(q, "qv", cents, KmScale)
           .select(col("vec_id"), col("cell"))
         val m = assigned.join(emb(s, dir).select(col("vec_id"), col("embedding")), Seq("vec_id"))
         val a = m.select(col("cell"), col("vec_id").as("keeper_id"), col("embedding").as("av"))
@@ -821,7 +761,7 @@ object VectorQueries {
           .orderBy(col("removed_id"))
       },
       Some(s"""
-        WITH ${kmeansCtes(KmK, KmRounds)},
+        WITH $kmeansCtes,
         m AS (SELECT a.vec_id AS vid, a.cell AS cell, e.embedding AS v
               FROM a${KmRounds + 1} a JOIN embeddings e ON e.vec_id = a.vec_id),
         pairs AS (
@@ -854,12 +794,7 @@ object VectorQueries {
     //   broadcasts 10 rows of tables and never shuffles the big side. ──
     QueryDef("q86_pq_adc",
       (s, dir) => {
-        import s.implicits._
-        val q = emb(s, dir)
-          .select(col("vec_id"),
-            transform(col("embedding").cast("array<double>"),
-              v => floor(v * 1e6 + 0.5).cast("double")).as("qv"))
-          .localCheckpoint() // 4 subspace trainings each re-collect
+        val q = quantizedEmb(s, dir)
         val (wide, dts) = pqTrained(s, q)
         val qids = q.filter(col("vec_id") < 10).select(col("vec_id").as("qid"))
         val cand = wide.crossJoin(broadcast(qids))
@@ -885,28 +820,12 @@ object VectorQueries {
     //   broadcast. ──
     QueryDef("q88_ivfpq",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        import s.implicits._
-        val (q, cents) = trainedKMeans(s, dir)
-        val members = graft.vector.IvfKMeans.assignCells(q, "qv", cents, KmScale)
-          .select(col("vec_id").as("nid"), col("cell"))
-        val centDf = cents.toDF("cell", "cv")
-        val queries = q.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("qv"))
-        val wq = Window.partitionBy(col("qid")).orderBy(col("cdist").asc, col("cell").asc)
-        val probed = queries.join(broadcast(centDf), lit(true))
-          .withColumn("cdist", round(
-            VectorKernels.sqDistFast(col("qv"), col("cv")) / lit(KmScale), 6))
-          .withColumn("crnk", row_number().over(wq))
-          .filter(col("crnk") <= 2)
-          .select(col("qid"), col("cell"))
-        val (wide, dts) = pqTrained(s, q)
-        val cand = probed.join(members, Seq("cell"))
-          .filter(col("qid") =!= col("nid"))
+        val cand = knnJoinCandidates(s, dir, col("vec_id") < 10, 2)
           .select(col("qid"), col("nid"))
+        val (wide, dts) = pqTrained(s, quantizedEmb(s, dir))
         adcRank(s, cand.join(wide, Seq("nid")), dts)
       },
-      Some(ivfPqSql(KmK, KmRounds))),
+      Some(ivfPqSql)),
 
     // ── q94: binary quantization ANN (1-bit-per-dim sign codes +
     //   Hamming-distance candidate scan + exact cosine rerank) — the
@@ -1021,11 +940,7 @@ object VectorQueries {
     //   and v0 is fixed. ──
     QueryDef("q93_pca_power",
       (s, dir) => {
-        val q = emb(s, dir)
-          .select(col("vec_id"),
-            transform(col("embedding").cast("array<double>"),
-              v => floor(v * 1e6 + 0.5).cast("double")).as("qv"))
-          .localCheckpoint()
+        val q = quantizedEmb(s, dir)
         val dim = 64
         // moment sums accumulate as DECIMAL(38,0), not double: each pair
         // product reaches ~1e12 for ×1e6-quantized unit vectors, so a
@@ -1092,7 +1007,6 @@ object VectorQueries {
     //   up front. The audit reporting that honestly is the point.) ──
     QueryDef("q120_matryoshka_recall",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val e = emb(s, dir)
         val q = e.filter(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("embedding").as("qv"))
@@ -1170,7 +1084,6 @@ object VectorQueries {
     //   and the rand leg from per-partition reservoirs. ──
     QueryDef("q135_hard_negatives",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val e = emb(s, dir)
         val anchors = broadcast(e.filter(col("vec_id") < 16)
           .select(col("vec_id").as("anchor_id"), col("label").as("alabel"),
@@ -1251,11 +1164,11 @@ object VectorQueries {
     QueryDef("q136_cluster_sample",
       (s, dir) => {
         val (q, cents) = trainedKMeans(s, dir)
-        clusterDraw(graft.vector.IvfKMeans.assignCells(q, "qv", cents, KmScale), 5)
+        clusterDraw(IvfKMeans.assignCells(q, "qv", cents, KmScale), 5)
           .orderBy(col("cell"), col("rnk"))
       },
       Some(s"""
-        WITH ${kmeansCtes(KmK, KmRounds)},
+        WITH $kmeansCtes,
         drawn AS (
           SELECT cell, vec_id, dist6,
                  CAST(row_number() OVER (PARTITION BY cell
@@ -1282,7 +1195,6 @@ object VectorQueries {
     //   window prunes map-side (WindowGroupLimit). No pairwise anything. ──
     QueryDef("q151_embed_outliers",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         import org.apache.spark.sql.types.DecimalType
         val D = DecimalType(38, 0)
         val lifted = emb(s, dir)
@@ -1374,10 +1286,7 @@ object VectorQueries {
                   * 1000000.0 + 0.5) / 1000000.0) AS v FROM wl$t)"""
     }.mkString(",")
     s"""
-      WITH q AS (SELECT vec_id,
-                   list_transform(embedding,
-                     v -> floor(CAST(v AS DOUBLE) * 1000000 + 0.5)) AS qv
-                 FROM embeddings),
+      WITH $qCte,
       st AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM q),
       sx AS (SELECT t.i AS i, CAST(sum(CAST(qv[t.i] AS HUGEINT)) AS DOUBLE) AS s
              FROM q, unnest(range(1, 65)) AS t(i) GROUP BY t.i),
@@ -1400,33 +1309,25 @@ object VectorQueries {
       FROM q CROSS JOIN mu CROSS JOIN v$PcaIters ORDER BY vec_id"""
   }
 
-  /** PQ subspace training shared by q86 and q88: trains the PqM
-    * codebooks CONCURRENTLY from the driver (independent Spark jobs; the
-    * caller localCheckpoints `q` so they share one materialization) and
-    * returns (`wide`: nid, code0..code{M-1}; per-subspace ADC distance
+  /** PQ subspace training shared by q86 and q88 (`IvfKMeans`'s
+    * subspace trainer and encoder over the ×1e6-quantized `q`, which the
+    * caller checkpoints so the PqM trainings share one materialization).
+    * Returns (`wide`: nid, code0..code{M-1}; per-subspace ADC distance
     * tables for query ids < 10: qid, codeM, dM). */
   private[graft] def pqTrained(s: SparkSession, q: DataFrame): (DataFrame, Seq[DataFrame]) = {
     import s.implicits._
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val (subs, dts) = Await.result(Future.traverse((0 until PqM).toList) { m => Future {
-      val sub = q.select(col("vec_id"), expr(s"slice(qv, ${m * PqSubDim + 1}, $PqSubDim)").as("sv"))
-      val cb = graft.vector.IvfKMeans.trainCents(sub, "vec_id", "sv", PqK, PqRounds, KmScale)
-      val codes = graft.vector.IvfKMeans.assignCells(sub, "sv", cb, KmScale)
-        .select(col("vec_id"), col("cell").as(s"code$m"))
-      val dt = sub.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("sv"))
+    val cbs = IvfKMeans.trainSubspaces(q, "vec_id", "qv", PqM, PqSubDim, PqK, PqRounds, KmScale)
+    val wide = IvfKMeans.encodeSubspaces(q.select(col("vec_id"), col("qv")), "qv", cbs,
+        PqSubDim, KmScale)
+      .select(col("vec_id").as("nid") +: cbs.indices.map(m => col(s"code$m")): _*)
+    val queries = q.filter(col("vec_id") < 10).select(col("vec_id").as("qid"), col("qv"))
+    val dts = cbs.zipWithIndex.map { case (cb, m) =>
+      queries.select(col("qid"), slice(col("qv"), m * PqSubDim + 1, PqSubDim).as("sv"))
         .join(broadcast(cb.toDF(s"code$m", "cv")), lit(true))
         .withColumn(s"d$m", round(
-          aggregate(zip_with(col("sv").cast("array<double>"), col("cv"),
-            (x, y) => (x - y) * (x - y)),
-            lit(0.0), (acc, t) => acc + t) / lit(KmScale), 6))
+          VectorKernels.sqDistFast(col("sv"), col("cv")) / lit(KmScale), 6))
         .select(col("qid"), col(s"code$m"), col(s"d$m"))
-      (codes, dt)
-    } }, Duration.Inf).unzip
-    val wide = subs.reduce((a, b) => a.join(b, Seq("vec_id")))
-      .withColumnRenamed("vec_id", "nid")
+    }
     (wide, dts)
   }
 
@@ -1461,15 +1362,6 @@ object VectorQueries {
       .orderBy(col("qid"), col("rnk"))
   }
 
-  /** Shared by q67/q73: ×1e6 round-half-up quantized embeddings +
-    * centroids after KmRounds Lloyd's rounds of `IvfKMeans.trainCents`
-    * (same loop the engine API uses — no drift; seeding by smallest ids
-    * ≡ the oracle's `vec_id < k` on these dense ids). Deliberately NOT
-    * memoized: each query pays its own training so the bench reports the
-    * true cost of both (a cache would make min-of-reps report the
-    * assignment-only path). localCheckpoint because every round
-    * re-collects.
-    */
   /** q136's per-cluster draw, factored so the gate query and the
     * sample-trained production twin (ClusterSampleSpec) execute the SAME
     * shape: a seeded-hash order within each cell (deterministic, no RNG
@@ -1478,7 +1370,6 @@ object VectorQueries {
     * O(cells · perCell · tasks) rows, never the corpus. `assigned` must
     * carry (vec_id, cell, dist6) — the IvfKMeans.assignCells output. */
   private[graft] def clusterDraw(assigned: DataFrame, perCell: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("cell")).orderBy(col("h").asc, col("vec_id").asc)
     assigned
       .select(col("vec_id"), col("cell"), col("dist6"))
@@ -1489,14 +1380,19 @@ object VectorQueries {
       .select(col("cell"), col("rnk"), col("vec_id"), col("dist6"))
   }
 
+  /** ×1e6 round-half-up quantized embeddings (`quantizedEmb`) +
+    * centroids after KmRounds Lloyd's rounds of `IvfKMeans.trainCents`
+    * (same loop the engine API uses — no drift; seeding by smallest ids
+    * ≡ the oracle's `vec_id < k` on these dense ids). Called by q67,
+    * q85 and q136, by q12, q73 and q88 through `knnJoinCandidates`, and
+    * by ClusterSampleSpec. Deliberately NOT memoized: each query pays
+    * its own training so the bench reports the true cost of each (a
+    * cache would make min-of-reps report the assignment-only path).
+    */
   private[graft] def trainedKMeans(s: SparkSession, dir: String,
       trainFrac: Double = 1.0, seed: Long = 0L)
       : (DataFrame, Seq[(Long, Seq[Double])]) = {
-    val q = emb(s, dir)
-      .select(col("vec_id"),
-        transform(col("embedding").cast("array<double>"),
-          v => floor(v * 1e6 + 0.5).cast("double")).as("qv"))
-      .localCheckpoint()
+    val q = quantizedEmb(s, dir)
     // Production mode (r16 verdict #4): trainFrac < 1 trains Lloyd's on
     // a seeded Bernoulli sample — at 100 TB the trainer is ALWAYS a
     // sample (each Lloyd's round is a driver-synchronized pass over the
@@ -1513,7 +1409,7 @@ object VectorQueries {
       else q.sample(withReplacement = false, trainFrac, seed)
     // one count() probe sizes nlist (the q48 one-pass regime); q is
     // checkpointed so the count costs a cached-partition sweep, not a scan
-    (q, graft.vector.IvfKMeans.trainCents(trainers, "vec_id", "qv",
+    (q, IvfKMeans.trainCents(trainers, "vec_id", "qv",
       kmNlist(q.count()), KmRounds, KmScale))
   }
 }

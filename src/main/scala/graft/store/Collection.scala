@@ -588,7 +588,7 @@ class Collection private (
     requireNotStreamManaged("upsertIvf")
     require(df.columns.contains("cell"),
       s"upsertIvf: $name is not cell-partitioned — buildIvf first")
-    val model = loadIvfModel()
+    val model = loadIvfModel("upsertIvf")
     val batch = graft.vector.IvfKMeans
       .assignCells(Collection.conformVector(rows), "vector", model.centroidTable, scale = 1.0)
       .drop("dist6").persist()
@@ -744,17 +744,9 @@ class Collection private (
     // M subspace trainings and the encode share one materialization
     val resid = residuals(df, model).persist()
     try {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val cbs: Seq[Seq[(Long, Seq[Double])]] =
-        Await.result(Future.traverse((0 until m).toList) { i => Future {
-          val sub = resid.select(col("id"),
-            expr(s"slice(__r, ${i * subDim + 1}, $subDim)").as("sv"))
-          // codes re-keyed to dense 0..k-1 (trainCents keys by seed id)
-          graft.vector.IvfKMeans.trainCents(sub, "id", "sv", pqK, pqRounds)
-            .zipWithIndex.map { case ((_, v), j) => (j.toLong, v) }
-        } }, Duration.Inf)
+      // codes re-keyed to dense 0..k-1 (the trainer keys by seed id)
+      val cbs = graft.vector.IvfKMeans.trainSubspaces(resid, "id", "__r", m, subDim, pqK, pqRounds)
+        .map(_.zipWithIndex.map { case ((_, v), j) => (j.toLong, v) })
       val wide = pqEncode(resid, cbs, subDim)
       val cbRows = cbs.zipWithIndex.flatMap { case (cb, sub) =>
         cb.map { case (code, v) => (sub, code, v) }
@@ -800,22 +792,15 @@ class Collection private (
         (x, y) => x - y))
       .select(col("id"), col("cell"), col("__r"))
 
-  /** PQ-encode residuals against EXISTING codebooks: each subspace slice
-    * takes the argmin over its codebook. `resid` is a `residuals` frame;
+  /** PQ-encode residuals against EXISTING codebooks (each subspace slice
+    * takes the argmin over its codebook). `resid` is a `residuals` frame;
     * emits (id, cell, codes). Shared by buildIvfPq (all rows) and
     * upsertIvf's incremental code maintenance (batch rows only). */
   private def pqEncode(resid: DataFrame, cbs: Seq[Seq[(Long, Seq[Double])]],
-                       subDim: Int): DataFrame = {
-    val m = cbs.length
-    (0 until m).map { i =>
-      val sub = resid.select(col("id"), col("cell").as("__c"),
-        expr(s"slice(__r, ${i * subDim + 1}, $subDim)").as("sv"))
-      graft.vector.IvfKMeans.assignCells(sub, "sv", cbs(i), 1.0)
-        .select(col("id"), col("__c"), col("cell").cast("int").as(s"code$i"))
-    }.reduce((a, b) => a.join(b, Seq("id", "__c")))
-      .select(col("id"), col("__c").as("cell"),
-        array((0 until m).map(i => col(s"code$i")): _*).as("codes"))
-  }
+                       subDim: Int): DataFrame =
+    graft.vector.IvfKMeans.encodeSubspaces(resid, "__r", cbs, subDim)
+      .select(col("id"), col("cell"),
+        array(cbs.indices.map(i => col(s"code$i").cast("int")): _*).as("codes"))
 
   /** Incremental PQ-codes maintenance for upsertIvf: the codebooks do
     * not depend on row membership (only on the training distribution),
@@ -832,7 +817,6 @@ class Collection private (
                               affected: Seq[Long]): Unit = {
     val codesDir = s"$path.__pqcodes"
     val (_, subDim, cbs) = loadPq()
-    require(cbs.forall(_.nonEmpty), "maintainPqCodes: empty codebook")
     val old = spark.read.parquet(codesDir)
     val cellIn: Column = cellPredicate(old.schema("cell").dataType, "cell", affected)
     val survivors = old.filter(cellIn)
@@ -882,7 +866,7 @@ class Collection private (
     */
   def searchIvfPq(queryVec: Array[Double], k: Int = 5, nprobe: Int = 2,
                   rerank: Int = 0): DataFrame = {
-    val model = loadIvfModel()
+    val model = loadIvfModel("searchIvfPq")
     val buildId = readMarker(s"$path.__pq/_build_id")
     require(buildId.contains(model.contentId),
       s"searchIvfPq: PQ index for $name was built for quantizer " +
@@ -945,10 +929,7 @@ class Collection private (
       val cellPick: Column =
         cellPredicate(df.schema("cell").dataType, "cell", cellVals.toSeq)
       df.filter(cellPick && col("id").isin(ids: _*))
-        .withColumn("adist", aggregate(
-          zip_with(col("vector").cast("array<double>"), typedLit(queryVec.toSeq),
-            (a, b) => (a - b) * (a - b)),
-          lit(0.0), (acc, x) => acc + x))
+        .withColumn("adist", VectorKernels.sqDistFast(col("vector"), lit(queryVec)))
         .select(col("id"), col("cell").cast("long").as("cell"), col("adist"))
         .orderBy(col("adist").asc, col("id").asc)
         .limit(k)
@@ -973,12 +954,13 @@ class Collection private (
     * written by `buildIvf` — a data dir stamped with a build the model
     * dir does not match (interrupted build, manual copy) must not be
     * probed: assignments and centroids would disagree. Pre-stamp layouts
-    * (no `_ivf_build` in the data dir) load unchecked for compatibility. */
-  private def loadIvfModel(): graft.vector.IvfKMeans.Model = {
+    * (no `_ivf_build` in the data dir) load unchecked for compatibility.
+    * `op` names the caller in the mismatch error. */
+  private def loadIvfModel(op: String): graft.vector.IvfKMeans.Model = {
     readMarker(s"$dataDir/_ivf_build").foreach { dataBuild =>
       val modelBuild = readMarker(s"$path.__ivf/_build_id")
       require(modelBuild.contains(dataBuild),
-        s"searchIvf: quantizer/layout mismatch for $name — data is from " +
+        s"$op: quantizer/layout mismatch for $name — data is from " +
           s"build $dataBuild but model dir has ${modelBuild.getOrElse("no stamp")}; " +
           "re-run buildIvf (an interrupted build can leave this state)")
     }
@@ -992,30 +974,21 @@ class Collection private (
     * ~nprobe/nlist — the IVF contract.
     */
   def searchIvf(queryVec: Array[Double], k: Int = 5, nprobe: Int = 2): DataFrame = {
-    val model = loadIvfModel()
+    val model = loadIvfModel("searchIvf")
     searchCells(queryVec, "cell", model.probe(queryVec, nprobe), k)
   }
 
   /** Batch IVF search: many query vectors in ONE plan (the q73 shape).
     * The centroid table broadcasts; each query ranks its nprobe nearest
-    * cells in-plan; candidates come from joining the cell-partitioned
+    * cells in-plan (`IvfKMeans.probeCells`, the same cell order as
+    * `Model.probe`); candidates come from joining the cell-partitioned
     * collection on the probed cells — at scale a hash join on the cell
     * key, never a full cross product; scoring touches ~nprobe/nlist of
     * the rows. `queries` needs (qid BIGINT, qv ARRAY<DOUBLE>).
     */
   def searchIvfBatch(queries: DataFrame, k: Int = 5, nprobe: Int = 2): DataFrame = {
-    val model = loadIvfModel()
-    // __cdist rounds to 6 dp so batch ranking shares the same total order
-    // as Model.probe and assignCells on near-tie cells (ADVICE r3: the
-    // three probe paths previously ranked raw doubles computed in
-    // different evaluation orders and could probe different cells)
-    val wc = Window.partitionBy(col("qid")).orderBy(col("__cdist").asc, col("cell").asc)
-    val probed = queries.join(broadcast(centroidFrame(model)), lit(true))
-      .withColumn("__cdist", round(aggregate(
-        zip_with(col("qv").cast("array<double>"), col("__cv"), (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, t) => acc + t), 6))
-      .withColumn("__crnk", row_number().over(wc))
-      .filter(col("__crnk") <= nprobe)
+    val model = loadIvfModel("searchIvfBatch")
+    val probed = graft.vector.IvfKMeans.probeCells(queries, "qv", model.centroidTable, 1.0, nprobe)
       .select(col("qid"), col("qv"), col("cell"))
     rankPerQuery(probed.join(df, Seq("cell")), k)
   }

@@ -1,7 +1,9 @@
 package graft.vector
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.VectorKernels
 
 /** IVF coarse-quantizer training: Lloyd's k-means over a vector column
   * (reference S11 trains IVF_FLAT with nlist k-means centroids,
@@ -35,12 +37,13 @@ object IvfKMeans {
   final case class Model(cells: Array[Long], centroids: Array[Array[Double]]) {
     require(cells.length == centroids.length, "cells/centroids must align")
 
-    /** The nprobe cells nearest to `qv` (driver-side — the centroid table
-      * is the small side by construction). Distances round to 6 dp
-      * (HALF_UP, matching `assignCells`/`searchIvfBatch`) before ranking
-      * so every probe path shares ONE total order on near-tie cells;
-      * ties break on cell id. A wrong-dimension query fails loudly
-      * instead of ranking on a silently truncated partial distance. */
+    /** The nprobe cells nearest to `qv` — the driver-side twin of
+      * `probeCells` (the centroid table is the small side by
+      * construction). Distances round to 6 dp (HALF_UP, matching
+      * `assignCells`/`probeCells`) before ranking so every probe path
+      * shares ONE total order on near-tie cells; ties break on cell id.
+      * A wrong-dimension query fails loudly instead of ranking on a
+      * silently truncated partial distance. */
     def probe(qv: Array[Double], nprobe: Int): Seq[Long] = {
       require(centroids.isEmpty || qv.length == centroids.head.length,
         s"probe: query dim ${qv.length} != centroid dim ${centroids.head.length}")
@@ -97,22 +100,48 @@ object IvfKMeans {
   def assignCells(df: DataFrame, vecCol: String,
                   cents: Seq[(Long, Seq[Double])], scale: Double): DataFrame = {
     require(cents.nonEmpty, "assignCells: no centroids")
-    // One codegen'd CellArgMin pass. The HOF formulation it replaced —
-    // transform(typedLit(matrix), cv → round(aggregate(zip_with(…))/scale, 6))
-    // + array_min + array_position — evaluated k·(2·dim) interpreted lambda
-    // calls per row, which the adaptive nlist turned into the dominant
-    // trainer cost; the kernel keeps the identical index-order fold, Spark
-    // Round semantics, and first-min tiebreak (KmeansKernelSpec).
-    val matrix: Array[Array[Double]] = cents.map(_._2.toArray).toArray
-    val cells: Array[Long] = cents.map(_._1).toArray
-    df.withColumn("__cam",
-        org.apache.spark.sql.graftbridge.ColumnBridge.column(
-          graft.functions.CellArgMin(
-            org.apache.spark.sql.graftbridge.ColumnBridge.expression(
-              col(vecCol).cast("array<double>")), matrix, cells, scale)))
+    df.withColumn("__cam", cellArgMin(col(vecCol), cents, scale))
       .withColumn("dist6", col("__cam.dist6"))
       .withColumn("cell", col("__cam.cell"))
       .drop("__cam")
+  }
+
+  /** The (dist6, cell) argmin struct of `vec` over `cents` — one
+    * codegen'd CellArgMin pass. The HOF formulation it replaced —
+    * transform(typedLit(matrix), cv → round(aggregate(zip_with(…))/scale, 6))
+    * + array_min + array_position — evaluated k·(2·dim) interpreted
+    * lambda calls per row, which the adaptive nlist turned into the
+    * dominant trainer cost; the kernel keeps the identical index-order
+    * fold, Spark Round semantics, and first-min tiebreak
+    * (KmeansKernelSpec). */
+  private def cellArgMin(vec: Column, cents: Seq[(Long, Seq[Double])],
+                         scale: Double): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    ColumnBridge.column(graft.functions.CellArgMin(
+      ColumnBridge.expression(vec.cast("array<double>")),
+      cents.map(_._2.toArray).toArray, cents.map(_._1).toArray, scale))
+  }
+
+  /** The in-plan probe: each query's nprobe nearest cells, ranked by
+    * (squared L2 to the centroid / `scale`, rounded 6 dp HALF_UP; cell
+    * id) — the order `Model.probe` applies driver-side and `assignCells`
+    * applies at nprobe 1. `queries` needs `qid` and the vector column
+    * `qvCol`; emits every query column plus `cell`, one row per probed
+    * cell. The centroid table is the broadcast side (small by
+    * construction), so no query-side shuffle feeds the rank window
+    * beyond its own qid partitioning. */
+  def probeCells(queries: DataFrame, qvCol: String, cents: Seq[(Long, Seq[Double])],
+                 scale: Double, nprobe: Int): DataFrame = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val w = Window.partitionBy(col("qid")).orderBy(col("cdist").asc, col("cell").asc)
+    queries.join(broadcast(cents.toDF("cell", "__cv")), lit(true))
+      // sqdist_f32: the same index-order fold as aggregate(zip_with(…))
+      .withColumn("cdist", round(
+        VectorKernels.sqDistFast(col(qvCol).cast("array<double>"), col("__cv")) / lit(scale), 6))
+      .withColumn("__crnk", row_number().over(w))
+      .filter(col("__crnk") <= nprobe)
+      .drop("__cv", "cdist", "__crnk")
   }
 
   /** One Lloyd's update: per-cell per-dimension mean, collected to the
@@ -172,6 +201,40 @@ object IvfKMeans {
       cents
     } finally { q.unpersist(); () }
   }
+
+  /** Product-quantizer training: one Lloyd's codebook of `k` codes per
+    * `subDim`-wide slice of `vecCol`, the `m` slices trained
+    * CONCURRENTLY from the driver (independent Spark jobs — the caller
+    * persists or checkpoints `vectors` so they share one
+    * materialization). Codebooks are keyed like `trainCents` (by seed
+    * id); a codebook can carry fewer than k codes when clusters empty. */
+  def trainSubspaces(vectors: DataFrame, idCol: String, vecCol: String, m: Int,
+                     subDim: Int, k: Int, rounds: Int,
+                     scale: Double = 1.0): Seq[Seq[(Long, Seq[Double])]] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
+    Await.result(Future.traverse((0 until m).toList) { i => Future {
+      trainCents(vectors.select(col(idCol), subspace(col(vecCol), i, subDim).as("__sv")),
+        idCol, "__sv", k, rounds, scale)
+    } }, Duration.Inf)
+  }
+
+  /** Product-quantizer encoding: adds `code0..code{m-1}` (one per
+    * codebook in `cbs`), each the `assignCells` argmin of its
+    * `subDim`-wide slice of `vecCol` — one map-only projection. */
+  def encodeSubspaces(rows: DataFrame, vecCol: String,
+                      cbs: Seq[Seq[(Long, Seq[Double])]], subDim: Int,
+                      scale: Double = 1.0): DataFrame = {
+    require(cbs.forall(_.nonEmpty), "encodeSubspaces: empty codebook")
+    rows.select(col("*") +: cbs.zipWithIndex.map { case (cb, i) =>
+      cellArgMin(subspace(col(vecCol), i, subDim), cb, scale).getField("cell").as(s"code$i")
+    }: _*)
+  }
+
+  /** Slice `i` (0-based, `subDim` wide) of a vector column. */
+  private def subspace(vec: Column, i: Int, subDim: Int): Column =
+    slice(vec, i * subDim + 1, subDim)
 
   /** Train a coarse quantizer over raw vectors. The returned model may
     * have fewer than nlist cells if some emptied out.

@@ -75,7 +75,7 @@ class Q12BoundSpec extends SparkSpec {
   test("q12: per-query candidates are capped at KnnNprobe cells' members — all-pairs unreachable") {
     val n = 200
     val dir = writeClusteredCorpus(n)
-    val cand = VectorQueries.knnJoinCandidates(spark, dir)
+    val cand = VectorQueries.knnJoinCandidates(spark, dir, col("vec_id") % 5 === 0, 2)
       .select(col("qid"), col("cell"), col("nid")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(cand.nonEmpty, "crafted corpus must produce candidates")

@@ -100,6 +100,32 @@ class IvfKMeansSpec extends SparkSpec {
     assert(e.getMessage.contains("dim"))
   }
 
+  test("probeCells ≡ Model.probe on 6 dp distance ties: the lower cell id probes first") {
+    // cell 2 sits at raw squared distance 1.0000001² = 1.00000020000001
+    // from the origin, cell 5 at exactly 1.0: raw doubles rank cell 5
+    // first, but both round to 1.000000, so the cell-id tiebreak must
+    // put cell 2 first. Queries 1 and 2 tie the same pair at 13.0 and
+    // 0.5; query 3 ranks them by distance (5 before 2).
+    val model = IvfKMeans.Model(Array(2L, 5L, 9L),
+      Array(Array(0.0, 1.0000001), Array(1.0, 0.0), Array(3.0, 3.0)))
+    val qs = Seq(0L -> Seq(0.0, 0.0), 1L -> Seq(3.0, 3.0),
+      2L -> Seq(0.5, 0.5), 3L -> Seq(2.0, -1.0))
+    val queries = qs.toDF("qid", "qv")
+    assert(model.probe(Array(0.0, 0.0), 2) === Seq(2L, 5L))
+    assert(model.probe(Array(2.0, -1.0), 2) === Seq(5L, 2L))
+    for (nprobe <- 1 to 3) {
+      val inPlan = IvfKMeans.probeCells(queries, "qv", model.centroidTable, 1.0, nprobe)
+        .select(col("qid"), col("cell")).as[(Long, Long)].collect()
+        .groupBy(_._1).map { case (q, rows) => q -> rows.map(_._2).toSet }
+      val driver = qs.map { case (q, v) => q -> model.probe(v.toArray, nprobe).toSet }.toMap
+      assert(inPlan === driver, s"nprobe=$nprobe")
+    }
+    // at nprobe 1 the probe is the assignment argmin
+    val assigned = IvfKMeans.assignCells(queries, "qv", model.centroidTable, 1.0)
+      .select(col("qid"), col("cell")).as[(Long, Long)].collect().toMap
+    assert(assigned === Map(0L -> 2L, 1L -> 9L, 2L -> 2L, 3L -> 5L))
+  }
+
   test("buildIvf stamps data+model with one build id; a mismatched pair fails loudly at search") {
     Collection.drop(root, "civf_stamp")
     val c = Collection.create(spark, root, "civf_stamp", dim, overwrite = true)
