@@ -17,14 +17,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class QueryDef(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
-    benchExclude: Option[String] = None) {
-  /** In the sf-scaled bench suite unless an exclusion reason is declared.
-    * The reason is not prose-only: Bench emits it in the artifact's
-    * `excluded` field, so a bench JSON is self-describing about which
-    * gate queries it does NOT time and why (r15 verdict #5). */
-  def benchmark: Boolean = benchExclude.isEmpty
-}
+    oracle: Option[String])
 
 /** Spread a small-file scan across the cluster before compute-heavy
   * per-row work (embedding, hashing, shingling, cosine). A single parquet
@@ -168,7 +161,7 @@ object Events {
 object GraftSession {
   /** SPARK_GRAFT_EXTRA_CONF="k=v;k=v" → ad-hoc session confs (e.g.
     * spark.sql.codegen.factoryMode=NO_CODEGEN to gate interpreted paths,
-    * or cluster-tuning knobs). One owner so Bench and Verify can't drift.
+    * or cluster-tuning knobs) for Verify.
     */
   def applyExtraConf(b: org.apache.spark.sql.SparkSession.Builder)
       : org.apache.spark.sql.SparkSession.Builder = {

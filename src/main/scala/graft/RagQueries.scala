@@ -116,13 +116,7 @@ object RagQueries {
           .localCheckpoint() // eager 55 rows; chunk embeddings freed below
         finally collection.unpersist()
       },
-      None,
-      // still in the verify gate; the reason lands in the bench JSON's
-      // `excluded` field so the artifact is self-describing
-      // ASCII only: the bench JSON line goes through stdout, whose JVM
-      // platform encoding can mangle non-ASCII into '?'
-      benchExclude = Some("fixture-constant: reads the reference corpus, " +
-        "not sfDir, so its time cannot scale with sf")),
+      None),
 
     // ── q42: eval harness — QA pairs, judge grades, mean grade ──
     QueryDef("q42_rag_eval",

@@ -75,7 +75,7 @@ object SchemaGuard {
     // RENDERS a timestamp (date_format, window/session buckets, SCD2
     // validity strings) produces wall-clock text in the session zone,
     // and the DuckDB oracle is timezone-naive — correctness holds only
-    // under UTC, which Verify/Bench/SparkSpec all pin. A new entrypoint
+    // under UTC, which Verify and SparkSpec both pin. A new entrypoint
     // that forgets the pin must fail HERE, not as a silently shifted
     // q121/q50 string 90 queries in (r11 review).
     val tz = spark.conf.get("spark.sql.session.timeZone",

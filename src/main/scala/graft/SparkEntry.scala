@@ -22,10 +22,6 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     QueryRegistry.all.map(d => d.name -> d.fn).toMap
 
-  /** The sf-scaled subset Bench times (fixture-constant queries excluded). */
-  def benchQueries: Map[String, (SparkSession, String) => DataFrame] =
-    QueryRegistry.all.filter(_.benchmark).map(d => d.name -> d.fn).toMap
-
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops
     * (LlmClient-boundary queries) → driver records a rows-only check.

@@ -505,7 +505,7 @@ object TextQueries {
     * `.tmp-*` directory behind. Vacuum-on-open, age-gated: a SIBLING
     * fingerprint is deleted only once it is older than
     * `NpairsVacuumAgeMs` (24 h — concurrent processes on this box run
-    * DIFFERENT corpora, e.g. Verify at sf0.01 while Bench runs sf0.1,
+    * DIFFERENT corpora, e.g. one Verify at sf0.01 and one at sf0.1,
     * so a freshly-written non-current fingerprint is usually another
     * process's LIVE artifact, not garbage); a crashed writer's `.tmp-*`
     * goes after `NpairsTmpAgeMs` (1 h — far beyond any real derivation,

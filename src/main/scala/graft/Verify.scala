@@ -5,12 +5,12 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated name prefixes — dump (and emit
-    // oracle SQL for) only matching queries. Local iteration aid; the
-    // driver passes exactly two args and gets the full dump.
+    // optional 3rd arg: comma-separated query names — dump (and emit
+    // oracle SQL for) only those. `q12` selects the query named `q12` or
+    // `q12_<suffix>`, never q120-q129. Without it, everything is dumped.
     val (sfDir, outDir) = (args(0), args(1))
     val only: String => Boolean =
-      if (args.length > 2) { n => args(2).split(",").exists(n.startsWith) }
+      if (args.length > 2) { n => args(2).split(",").exists(q => n == q || n.startsWith(q + "_")) }
       else _ => true
     // default to every core: an unset env must not quietly run local[4]
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -33,8 +33,8 @@ object Verify {
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     // Periodic cache hygiene (r11 review): several queries persist()
-    // intermediates whose lifecycle ends with their dump, and unlike
-    // Bench this harness has no between-queries clear — a full run
+    // intermediates whose lifecycle ends with their dump, and the
+    // thread pool has no between-queries clear — a full run
     // accumulated every query's blocks for the session's lifetime,
     // thrashing late queries' caches under LRU pressure. Clearing every
     // 16 completions is CORRECTNESS-safe (all cached frames here are

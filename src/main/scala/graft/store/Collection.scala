@@ -54,10 +54,65 @@ class Collection private (
   private def currentVersion: Option[Int] =
     readMarker(s"$path/_current").map(_.stripPrefix("v").trim.toInt)
 
-  /** The live data directory — root (legacy) or the committed `v<N>`. */
-  def dataDir: String = currentVersion.map(v => s"$path/v$v").getOrElse(path)
+  /** One committed version as a single call reads it: `_current` is
+    * resolved once, `df` lists the files once (on first use), and the
+    * IVF/PQ sidecars are checked against THIS `dir`'s build stamp. Every
+    * engine method takes one `snapshot()` before it commits anything and
+    * reads only through it, so a call never mixes two versions. */
+  private[store] final class Snapshot(val version: Option[Int], val dir: String) {
+    lazy val df: DataFrame = spark.read.parquet(dir)
 
-  def df: DataFrame = spark.read.parquet(dataDir)
+    /** The `buildIvf` id this version's data was assigned under. */
+    lazy val build: Option[String] = readMarker(s"$dir/_ivf_build")
+
+    /** The coarse quantizer, refused when this version's stamp does not
+      * match the model dir's (interrupted build, manual copy). Pre-stamp
+      * layouts load unchecked. `op` names the caller in the error. */
+    def ivf(op: String): graft.vector.IvfKMeans.Model = {
+      build.foreach { dataBuild =>
+        val modelBuild = readMarker(s"$path.__ivf/_build_id")
+        require(modelBuild.contains(dataBuild),
+          s"$op: quantizer/layout mismatch for $name — data is from " +
+            s"build $dataBuild but model dir has ${modelBuild.getOrElse("no stamp")}; " +
+            "re-run buildIvf (an interrupted build can leave this state)")
+      }
+      graft.vector.IvfKMeans.load(spark, s"$path.__ivf")
+    }
+
+    /** The PQ codebooks as (pqK, subDim, cbs), one `cbs` entry per
+      * subspace with its (code, centroid) pairs sorted by code — refused
+      * unless both the sidecar and this version were built for `model`. */
+    def pq(op: String, model: graft.vector.IvfKMeans.Model)
+        : (Int, Int, Seq[Seq[(Long, Seq[Double])]]) = {
+      val pqBuild = readMarker(s"$path.__pq/_build_id")
+      require(pqBuild.contains(model.contentId),
+        s"$op: PQ index for $name was built for quantizer " +
+          s"${pqBuild.getOrElse("(missing)")} but the live coarse model is " +
+          s"${model.contentId} — re-run buildIvfPq")
+      // codes reference rows by id: a rewrite since the build (delete/
+      // compact/upsert drop the _ivf_build stamp) would leave removed ids
+      // resurfacing from the sidecar — refuse rather than answer stale
+      require(build.contains(model.contentId),
+        s"$op: $name was rewritten since buildIvfPq — the codes " +
+          "sidecar no longer describes the data; re-run buildIvfPq")
+      val Array(m, pqK, subDim) = readMarker(s"$path.__pq/_meta").get.split(" ").map(_.toInt)
+      val rows = spark.read.parquet(s"$path.__pq").collect()
+      (pqK, subDim, (0 until m).map(s =>
+        rows.filter(_.getInt(0) == s)
+          .map(r => (r.getLong(1), r.getSeq[Double](2).toIndexedSeq)).sortBy(_._1).toSeq))
+    }
+  }
+
+  /** Resolves `_current` once: the version this call reads. */
+  private[store] def snapshot(): Snapshot =
+    currentVersion.fold(new Snapshot(None, path))(v => new Snapshot(Some(v), s"$path/v$v"))
+
+  /** The live data directory (root for the legacy layout, else `v<N>`)
+    * and its rows. For outside callers: each call resolves the pointer
+    * and `df` lists the files again, while engine methods take one
+    * `Snapshot` per call. */
+  def dataDir: String = snapshot().dir
+  def df: DataFrame = snapshot().df
 
   /** A directory fed by a streaming file sink carries a _spark_metadata
     * commit log, and batch readers then trust ONLY the log: files appended
@@ -91,59 +146,37 @@ class Collection private (
       write(tmp)
       val nextDir = new java.io.File(s"$path/v$next")
       // A leftover v<next> is EITHER a dead JVM's uncommitted install
-      // (crash between rename and pointer flip — garbage, cleared below)
-      // OR the COMMITTED snapshot of a concurrent writer that read the
-      // same base version and won the race. Deleting the latter is
-      // catastrophic: `_current` already resolves to it, so readers race
-      // a missing directory and a failed re-install bricks the
-      // collection. Collections are SINGLE-WRITER by contract — the
-      // pointer re-read turns a violated contract into a loud error
-      // instead of a silently destroyed commit (r12 review).
+      // (garbage, cleared below) OR a concurrent writer's COMMITTED
+      // snapshot, which `_current` already resolves to and which must
+      // never be deleted. Collections are SINGLE-WRITER by contract: the
+      // pointer re-read turns a violated contract into a loud error.
       if (currentVersion.exists(_ >= next))
         throw new IllegalStateException(
           s"$op: concurrent writer detected — v$next was committed after " +
             "this rewrite read its base version. Collections are " +
             "single-writer: serialize mutations, or re-open and retry.")
       rmTree(nextDir) // now provably a dead JVM's uncommitted install
-      // Install via Files.move WITHOUT replace-existing: if a concurrent
-      // writer installed v<next> between the orphan sweep above and this
-      // rename, the move throws instead of clobbering — shrinking the
-      // check-then-act window from [pointer re-read .. rename] to the
-      // rename itself (r12-advice; full closure needs a lock the
-      // single-writer contract doesn't require).
-      // Best-effort loud pre-check (r14-advice): ATOMIC_MOVE maps to
-      // rename(2), which on Linux silently REPLACES an existing EMPTY
-      // target directory — the one slice of the writer-race window the
-      // evidence-based catch below can never see (the move SUCCEEDS, so
-      // there is no exception to classify). A v<next> that reappeared
-      // since the orphan sweep above is a concurrent writer's install in
-      // progress; refuse before the rename can clobber it. Non-empty
-      // targets still fail inside the move and classify there — this
-      // check only restores the loud detection the old non-atomic path
-      // had for the empty-target case.
+      // The move below never replaces a non-empty v<next>, but rename(2)
+      // silently REPLACES an EMPTY target dir, so a v<next> that
+      // reappeared since the sweep (a concurrent writer's install in
+      // progress) is refused here, before the rename can clobber it.
       if (nextDir.exists())
         throw new IllegalStateException(
           s"$op: concurrent writer detected — v$next appeared between " +
             "the orphan sweep and install. Collections are " +
             "single-writer: serialize mutations, or re-open and retry.")
-      // ATOMIC_MOVE (r13-advice): without it, Files.move silently falls
-      // back to copy+delete if tmp and the version dir ever land on
-      // different stores, and that fallback's DirectoryNotEmptyException
-      // would masquerade as a writer race below. The commit protocol
-      // RELIES on rename atomicity — make a cross-store layout fail
-      // loudly as AtomicMoveNotSupportedException instead.
+      // ATOMIC_MOVE: the protocol relies on rename atomicity, so a
+      // cross-store layout fails loudly instead of falling back to a
+      // copy + delete whose errors would masquerade as a writer race.
       try java.nio.file.Files.move(
         java.nio.file.Paths.get(tmp), nextDir.toPath,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       catch {
-        // order matters: AtomicMoveNotSupported FIRST (it subclasses
-        // FileSystemException). The atomic branch calls rename(2)
-        // directly, and Linux reports dir-over-nonempty-dir as ENOTEMPTY,
-        // which the JDK surfaces as a GENERIC FileSystemException — not
-        // the FileAlreadyExists/DirectoryNotEmpty the pre-check-based
-        // non-atomic path threw (r14 review). So classify by EVIDENCE:
-        // any rename failure with v<next> now existing is the writer
-        // race; anything else (tmp vanished, EIO) rethrows unclassified.
+        // AtomicMoveNotSupported FIRST (it subclasses FileSystemException).
+        // rename(2) over a non-empty dir surfaces as a GENERIC
+        // FileSystemException, so classify by evidence: a failure with
+        // v<next> now existing is the writer race; anything else (tmp
+        // vanished, EIO) rethrows unclassified.
         case e: java.nio.file.AtomicMoveNotSupportedException =>
           throw new IllegalStateException(
             s"$op: snapshot install requires an atomic rename, but " +
@@ -251,14 +284,15 @@ class Collection private (
     */
   def delete(filter: String): Long = {
     val pred = expr(filter)
-    val before = df.count()
+    val s = snapshot()
+    val before = s.df.count()
     // NULL-predicate rows are NOT matches and must survive: plain
     // !pred would drop them (three-valued logic makes NOT NULL = NULL,
     // which filter discards)
     rewriteSwap("delete") { tmp =>
-      df.filter(!coalesce(pred, lit(false))).write.mode(SaveMode.Overwrite).parquet(tmp)
+      s.df.filter(!coalesce(pred, lit(false))).write.mode(SaveMode.Overwrite).parquet(tmp)
     }
-    before - df.count()
+    before - snapshot().df.count() // fresh snapshot: the committed survivors
   }
 
   /** Compaction: N small append files → ceil(bytes / targetFileBytes)
@@ -269,18 +303,22 @@ class Collection private (
     * Returns (filesBefore, filesAfter).
     */
   def compact(targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    def parquetFiles(d: java.io.File): Seq[java.io.File] = {
-      val fs = Option(d.listFiles()).map(_.toSeq).getOrElse(Nil)
-      fs.filter(_.isFile).filter(_.getName.endsWith(".parquet")) ++
-        fs.filter(_.isDirectory).flatMap(parquetFiles)
-    }
-    val before = parquetFiles(new java.io.File(dataDir))
+    val s = snapshot()
+    val before = parquetFiles(new java.io.File(s.dir))
     val bytes = before.map(_.length()).sum
     val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
     rewriteSwap("compact") { tmp =>
-      df.repartition(nOut).write.mode(SaveMode.Overwrite).parquet(tmp)
+      s.df.repartition(nOut).write.mode(SaveMode.Overwrite).parquet(tmp)
     }
-    (before.size, parquetFiles(new java.io.File(dataDir)).size)
+    // fresh snapshot: count the files of the version just committed
+    (before.size, parquetFiles(new java.io.File(snapshot().dir)).size)
+  }
+
+  /** Every parquet file under `d`, partition dirs included. */
+  private def parquetFiles(d: java.io.File): Seq[java.io.File] = {
+    val fs = Option(d.listFiles()).map(_.toSeq).getOrElse(Nil)
+    fs.filter(_.isFile).filter(_.getName.endsWith(".parquet")) ++
+      fs.filter(_.isDirectory).flatMap(parquetFiles)
   }
 
   /** Data-layout clustering: rewrite the collection range-partitioned and
@@ -293,13 +331,13 @@ class Collection private (
     */
   def clusterBy(nFiles: Int, cols: String*): Int = {
     require(cols.nonEmpty, "clusterBy: at least one column")
+    val s = snapshot()
     rewriteSwap("clusterBy") { tmp =>
-      df.repartitionByRange(nFiles, cols.map(col): _*)
+      s.df.repartitionByRange(nFiles, cols.map(col): _*)
         .sortWithinPartitions(cols.map(col): _*)
         .write.mode(SaveMode.Overwrite).parquet(tmp)
     }
-    Option(new java.io.File(dataDir).listFiles()).map(_.count(f =>
-      f.isFile && f.getName.endsWith(".parquet"))).getOrElse(0)
+    parquetFiles(new java.io.File(snapshot().dir)).size // fresh snapshot: the new version
   }
 
   /** Multi-dimensional layout clustering (Delta/Iceberg OPTIMIZE ZORDER):
@@ -309,12 +347,12 @@ class Collection private (
     * zone-map skipping. Use when scans filter on more than one metadata
     * column. Same copy-on-write swap; returns the file count. */
   def zorderBy(nFiles: Int, buckets: Int, cols: String*): Int = {
+    val s = snapshot()
     rewriteSwap("zorderBy") { tmp =>
-      graft.operators.ZOrder.layout(df, nFiles, buckets, cols: _*)
+      graft.operators.ZOrder.layout(s.df, nFiles, buckets, cols: _*)
         .write.mode(SaveMode.Overwrite).parquet(tmp)
     }
-    Option(new java.io.File(dataDir).listFiles()).map(_.count(f =>
-      f.isFile && f.getName.endsWith(".parquet"))).getOrElse(0)
+    parquetFiles(new java.io.File(snapshot().dir)).size // fresh snapshot: the new version
   }
 
   /** S7/S8: append entity rows. Expects id/vector/text(+metadata) columns.
@@ -336,9 +374,10 @@ class Collection private (
     // (a direct Overwrite of a legacy-layout root would delete the
     // `_retain`/`_stream_batch` markers living beside the data, and a
     // concurrent reader could catch the directory half-written).
+    val s = snapshot()
     val batchCols = conformed.schema.fieldNames.toSet
-    val declared = df.schema.fieldNames.toSet
-    if (batchCols != declared && df.isEmpty) {
+    val declared = s.df.schema.fieldNames.toSet
+    if (batchCols != declared && s.df.isEmpty) {
       val narrows = declared -- batchCols
       require(narrows.isEmpty,
         s"insert: first batch is missing declared column(s) [${narrows.mkString(",")}] " +
@@ -353,9 +392,9 @@ class Collection private (
       // whichever footer Spark samples) — refuse loudly (r11 review)
       require(batchCols == declared,
         s"insert: batch schema [${conformed.schema.fieldNames.mkString(",")}] does not " +
-          s"match $name's declared [${df.schema.fieldNames.mkString(",")}] — " +
+          s"match $name's declared [${s.df.schema.fieldNames.mkString(",")}] — " +
           "conform the batch (or rebuild the collection) before appending")
-      conformed.write.mode(SaveMode.Append).parquet(dataDir)
+      conformed.write.mode(SaveMode.Append).parquet(s.dir)
     }
   }
 
@@ -373,9 +412,10 @@ class Collection private (
     * (replacedOldRows, insertedNewRows).
     */
   def upsert(rows: DataFrame): (Long, Long) = {
+    val s = snapshot()
     val newRows = Collection.conformVector(rows).persist()
     try {
-      val extra = df.columns.toSet -- newRows.columns.toSet
+      val extra = s.df.columns.toSet -- newRows.columns.toSet
       require(extra.isEmpty,
         s"upsert: collection carries columns [${extra.mkString(",")}] absent from the " +
           "batch — upsert a cell-partitioned layout with upsertIvf (or rebuild via buildIvf)")
@@ -383,10 +423,10 @@ class Collection private (
       val batchIds = newRows.select("id").distinct()
       require(batchIds.count() == nNew,
         "upsert: duplicate ids within the batch — compact the batch per key first")
-      val replaced = df.join(batchIds, Seq("id"), "left_semi").count()
-      val matched = df.select("id").distinct().join(batchIds, Seq("id"), "left_semi").count()
+      val replaced = s.df.join(batchIds, Seq("id"), "left_semi").count()
+      val matched = s.df.select("id").distinct().join(batchIds, Seq("id"), "left_semi").count()
       rewriteSwap("upsert") { tmp =>
-        df.join(batchIds, Seq("id"), "left_anti")
+        s.df.join(batchIds, Seq("id"), "left_anti")
           .unionByName(newRows)
           .write.mode(SaveMode.Overwrite).parquet(tmp)
       }
@@ -409,7 +449,7 @@ class Collection private (
     val dstRoot = s"$root/$newName"
     require(!new java.io.File(dstRoot).exists,
       s"shallowClone: collection $newName already exists")
-    linkTree(new java.io.File(dataDir), new java.io.File(s"$dstRoot/v1"))
+    linkTree(new java.io.File(snapshot().dir), new java.io.File(s"$dstRoot/v1"))
     // index sidecars clone too: the v1 data carries `_ivf_build` stamps,
     // so a clone WITHOUT the matching `.__ivf`/`.__pq`/`.__pqcodes` dirs
     // would refuse searchIvf with a misleading "interrupted build" error.
@@ -563,32 +603,26 @@ class Collection private (
     * — and only the AFFECTED cell partitions rewrite (replaced ids
     * removed, new assignments added). Partition pruning bounds IO at
     * O(touched cells), not O(collection) — the property that makes churn
-    * affordable at 100 TB. Commits ATOMICALLY like every other rewrite
-    * (ADVICE r4: the previous dynamic-partition overwrite + stale-cell
-    * cleanup mutated the live snapshot in place, so a crash between the
-    * two steps could leave a moved id duplicated in its old cell): the
-    * next version dir hard-links every untouched cell and takes the
+    * affordable at 100 TB. Commits ATOMICALLY like every other rewrite:
+    * the next version dir hard-links every untouched cell and takes the
     * rewritten cells from the stage, then the `_current` pointer flips —
-    * readers see the old snapshot or the new one, never a half-replaced
-    * cell, and the write IO stays O(touched cells). Returns
-    * (replacedIds, insertedIds, movedIds):
-    * `moved` counts replaced ids whose updated vector landed in a
-    * different cell — per-call reassignment drift. The cumulative
-    * drifted-row count persists in `_ivf_drift`; when `ivfDrift` grows
-    * past ~0.2-0.3 the centroids no longer describe the data and recall
-    * silently degrades. `maxDrift` makes that policy self-enforcing:
-    * when the cumulative drift fraction crosses it, the commit is
-    * followed by an automatic `buildIvf` retrain with the original build
-    * parameters (persisted in the model dir), which re-learns centroids
-    * and resets the counter — repeated ingestion can't silently degrade
-    * recall. The default (infinity) keeps retraining caller-driven.
+    * readers never see a half-replaced cell. Returns (replacedIds,
+    * insertedIds, movedIds): `moved` counts replaced ids whose updated
+    * vector landed in a different cell. The cumulative drifted-row count
+    * persists in `_ivf_drift`; past ~0.2-0.3 `ivfDrift` the centroids no
+    * longer describe the data and recall silently degrades. When the
+    * drift crosses `maxDrift`, the commit is followed by a retrain with
+    * the original build parameters (persisted in the model dir), which
+    * resets the counter. The default (infinity) leaves retraining to the
+    * caller.
     */
   def upsertIvf(rows: DataFrame,
                 maxDrift: Double = Double.PositiveInfinity): (Long, Long, Long) = {
     requireNotStreamManaged("upsertIvf")
-    require(df.columns.contains("cell"),
+    val s = snapshot()
+    require(s.df.columns.contains("cell"),
       s"upsertIvf: $name is not cell-partitioned — buildIvf first")
-    val model = loadIvfModel("upsertIvf")
+    val model = s.ivf("upsertIvf")
     val batch = graft.vector.IvfKMeans
       .assignCells(Collection.conformVector(rows), "vector", model.centroidTable, scale = 1.0)
       .drop("dist6").persist()
@@ -597,7 +631,7 @@ class Collection private (
       val batchIds = batch.select("id").distinct()
       require(batchIds.count() == nNew,
         "upsertIvf: duplicate ids within the batch — compact the batch per key first")
-      val oldMatched = df.join(batchIds, Seq("id"), "left_semi")
+      val oldMatched = s.df.join(batchIds, Seq("id"), "left_semi")
         .select(col("id"), col("cell").cast("long").as("old_cell")).persist()
       val replaced = oldMatched.count()
       val matched = oldMatched.select("id").distinct().count()
@@ -609,58 +643,53 @@ class Collection private (
         .distinct().collect().map(_.getLong(0)).toSeq
       oldMatched.unpersist()
       // partition-pruning predicate typed to the INFERRED partition column
-      val cellIn: Column = cellPredicate(df.schema("cell").dataType, "cell", affected)
+      val cellIn: Column = cellPredicate(s.df.schema("cell").dataType, "cell", affected)
       // survivors of the affected cells + the whole batch; staged to a
       // sibling dir because Spark (correctly) refuses a write that reads
       // from its own destination
-      val content = df.filter(cellIn)
+      val content = s.df.filter(cellIn)
         .withColumn("cell", col("cell").cast("long"))
         .join(batchIds, Seq("id"), "left_anti")
         .unionByName(batch)
       val stage = s"$path.__upsert"
       rmTree(new java.io.File(stage))
-      val src = dataDir // capture: dataDir advances at the pointer flip
-      val prior = readMarker(s"$src/_ivf_drift").map(_.toLong).getOrElse(0L)
+      val prior = readMarker(s"${s.dir}/_ivf_drift").map(_.toLong).getOrElse(0L)
       val pqStampPath = s"$path.__pq/_build_id"
-      val pqStamp = readMarker(pqStampPath)
+      // codebooks do not depend on row membership, so a PQ sidecar that
+      // describes this snapshot is MAINTAINED below (codebooks loaded
+      // before the stamp is invalidated). Any other sidecar was already
+      // unusable: its stamp stays deleted and searchIvfPq keeps refusing.
+      val pq = if (readMarker(pqStampPath).contains(model.contentId) &&
+          s.build.contains(model.contentId)) Some(s.pq("upsertIvf", model)) else None
       try {
         content.write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(stage)
         // pessimistic PQ invalidation BEFORE the data commit: if anything
         // between here and the end of code maintenance crashes,
         // searchIvfPq refuses loudly instead of serving codes that no
         // longer describe the rows
-        if (pqStamp.isDefined) { new java.io.File(pqStampPath).delete(); () }
+        new java.io.File(pqStampPath).delete()
         rewriteSwap("upsertIvf") { tmp =>
-          mergeCells(src, stage, tmp, affected)
-          readMarker(s"$src/_ivf_build")
-            .foreach(b => writeMarker(s"$tmp/_ivf_build", b))
+          mergeCells(s.dir, stage, tmp, affected)
+          s.build.foreach(b => writeMarker(s"$tmp/_ivf_build", b))
           writeMarker(s"$tmp/_ivf_drift",
             (prior + moved + (nNew - matched)).toString)
         }
-        // the quantizer AND the codebooks survive an upsert (neither
-        // depends on row membership), so a consistent PQ sidecar is
-        // MAINTAINED: re-encode just the batch with the existing
-        // codebooks and rewrite only the affected cells' code
-        // partitions, then restore the stamp. A sidecar stamped for a
-        // DIFFERENT quantizer was already unusable — its stamp stays
-        // deleted and searchIvfPq keeps refusing.
-        if (pqStamp.contains(model.contentId))
-          maintainPqCodes(model, batch, batchIds, affected)
+        pq.foreach { case (_, subDim, cbs) =>
+          maintainPqCodes(model, subDim, cbs, batch, batchIds, affected)
+        }
       } finally rmTree(new java.io.File(stage))
-      // the drift probe costs a full df.count() — skip it entirely under
-      // the default no-retrain policy instead of comparing to +Inf
+      // skip the drift probe's full count under the default policy;
+      // ivfDrift reads a fresh snapshot: the version just committed
       if (maxDrift != Double.PositiveInfinity && ivfDrift > maxDrift) {
         val (nl, rd) = readMarker(s"$path.__ivf/_build_params")
           .map(_.split(" "))
           .map(a => (a(0).toInt, a(1).toInt))
           .getOrElse((model.cells.length, 3))
         // a PQ'd collection retrains PQ TOO: buildIvf alone would mint a
-        // new quantizer contentId and leave searchIvfPq refusing until a
-        // manual rebuild — the opposite of the self-enforcing contract
-        // this knob exists for (r11 review)
-        pqMeta match {
-          case Some((m, pqK, _)) => buildIvfPq(nl, m, pqK, rd); ()
-          case None => buildIvf(nl, rd); ()
+        // new quantizer contentId and leave searchIvfPq refusing
+        readMarker(s"$path.__pq/_meta").map(_.split(" ").map(_.toInt)) match {
+          case Some(Array(m, pqK, _)) => buildIvfPq(nl, m, pqK, rd); ()
+          case _ => buildIvf(nl, rd); ()
         }
       }
       (replaced, nNew - matched, moved)
@@ -670,8 +699,9 @@ class Collection private (
   /** Fraction of the collection that entered or changed cells since the
     * last buildIvf — upsertIvf's cumulative retrain signal. */
   def ivfDrift: Double = {
-    val drifted = readMarker(s"$dataDir/_ivf_drift").map(_.toLong).getOrElse(0L)
-    val n = df.count()
+    val s = snapshot()
+    val drifted = readMarker(s"${s.dir}/_ivf_drift").map(_.toLong).getOrElse(0L)
+    val n = s.df.count()
     if (n == 0) 0.0 else drifted.toDouble / n
   }
 
@@ -682,7 +712,7 @@ class Collection private (
   def insertPartitioned(rows: DataFrame, cellCol: String): Unit = {
     requireNotStreamManaged("insertPartitioned")
     Collection.conformVector(rows)
-      .write.mode(SaveMode.Append).partitionBy(cellCol).parquet(dataDir)
+      .write.mode(SaveMode.Append).partitionBy(cellCol).parquet(snapshot().dir)
   }
 
   /** Trained IVF index build (reference S11: IVF_FLAT with nlist k-means
@@ -694,12 +724,13 @@ class Collection private (
     * every rewrite, this drops any previous partition layout.
     */
   def buildIvf(nlist: Int, rounds: Int = 3): graft.vector.IvfKMeans.Model = {
-    val model = graft.vector.IvfKMeans.train(df, "id", "vector", nlist, rounds)
+    val s = snapshot()
+    val model = graft.vector.IvfKMeans.train(s.df, "id", "vector", nlist, rounds)
     val buildId = model.contentId
     // Stage the quantizer BEFORE touching the data (ADVICE r3: saving it
     // only after the swap left a crash window pairing new cell layout
     // with a stale model — silently wrong recall). Both dirs carry the
-    // model's content hash; loadIvfModel refuses a mismatched pair, so
+    // model's content hash; Snapshot.ivf refuses a mismatched pair, so
     // even the installDir promote window below fails LOUDLY.
     val modelTmp = s"$path.__ivf.__new"
     rmTree(new java.io.File(modelTmp))
@@ -710,7 +741,7 @@ class Collection private (
     writeMarker(s"$modelTmp/_build_params", s"$nlist $rounds")
     rewriteSwap("buildIvf") { tmp =>
       graft.vector.IvfKMeans.assignCells(
-          Collection.conformVector(df), "vector", model.centroidTable, scale = 1.0)
+          Collection.conformVector(s.df), "vector", model.centroidTable, scale = 1.0)
         .drop("dist6") // assignCells names the partition column "cell"
         .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(tmp)
       writeMarker(s"$tmp/_ivf_build", buildId) // underscore file: invisible to scans
@@ -741,8 +772,9 @@ class Collection private (
     require(dim > 0 && dim % m == 0, s"buildIvfPq: dim $dim not divisible by m=$m")
     val subDim = dim / m
     import spark.implicits._
-    // M subspace trainings and the encode share one materialization
-    val resid = residuals(df, model).persist()
+    // M subspace trainings and the encode share one materialization;
+    // fresh snapshot: the cell layout buildIvf just committed
+    val resid = residuals(snapshot().df, model).persist()
     try {
       // codes re-keyed to dense 0..k-1 (the trainer keys by seed id)
       val cbs = graft.vector.IvfKMeans.trainSubspaces(resid, "id", "__r", m, subDim, pqK, pqRounds)
@@ -813,10 +845,10 @@ class Collection private (
     * is restored here only after the new codes tree is fully installed.
     */
   private def maintainPqCodes(model: graft.vector.IvfKMeans.Model,
+                              subDim: Int, cbs: Seq[Seq[(Long, Seq[Double])]],
                               batch: DataFrame, batchIds: DataFrame,
                               affected: Seq[Long]): Unit = {
     val codesDir = s"$path.__pqcodes"
-    val (_, subDim, cbs) = loadPq()
     val old = spark.read.parquet(codesDir)
     val cellIn: Column = cellPredicate(old.schema("cell").dataType, "cell", affected)
     val survivors = old.filter(cellIn)
@@ -837,22 +869,6 @@ class Collection private (
     } finally { rmTree(new java.io.File(stage)); rmTree(new java.io.File(next)) }
   }
 
-  /** The PQ sidecar's codebooks as (pqK, subDim, cbs), one `cbs` entry per
-    * subspace listing its (code, centroid) pairs sorted by code. */
-  private def loadPq(): (Int, Int, Seq[Seq[(Long, Seq[Double])]]) = {
-    val (m, pqK, subDim) = pqMeta.get
-    val rows = spark.read.parquet(s"$path.__pq").collect()
-    (pqK, subDim, (0 until m).map(s =>
-      rows.filter(_.getInt(0) == s)
-        .map(r => (r.getLong(1), r.getSeq[Double](2).toIndexedSeq)).sortBy(_._1).toSeq))
-  }
-
-  /** The PQ build's (m, pqK, subDim), when a PQ sidecar exists. */
-  private def pqMeta: Option[(Int, Int, Int)] =
-    readMarker(s"$path.__pq/_meta").map(_.split(" ").map(_.toInt)).map {
-      case Array(m, pqK, subDim) => (m, pqK, subDim)
-    }
-
   /** ANN search over a buildIvfPq'd collection: probe the nprobe nearest
     * cells (coarse centroids, driver-side — tiny by construction), build
     * the per-cell ADC distance tables there (nprobe × M × k doubles:
@@ -866,19 +882,9 @@ class Collection private (
     */
   def searchIvfPq(queryVec: Array[Double], k: Int = 5, nprobe: Int = 2,
                   rerank: Int = 0): DataFrame = {
-    val model = loadIvfModel("searchIvfPq")
-    val buildId = readMarker(s"$path.__pq/_build_id")
-    require(buildId.contains(model.contentId),
-      s"searchIvfPq: PQ index for $name was built for quantizer " +
-        s"${buildId.getOrElse("(missing)")} but the live coarse model is " +
-        s"${model.contentId} — re-run buildIvfPq")
-    // codes reference rows by id: a rewrite since the build (delete/
-    // compact/upsert drop the _ivf_build stamp) would leave removed ids
-    // resurfacing from the sidecar — refuse rather than answer stale
-    require(readMarker(s"$dataDir/_ivf_build").contains(model.contentId),
-      s"searchIvfPq: $name was rewritten since buildIvfPq — the codes " +
-        "sidecar no longer describes the data; re-run buildIvfPq")
-    val (pqK, subDim, cbs) = loadPq()
+    val s = snapshot()
+    val model = s.ivf("searchIvfPq")
+    val (pqK, subDim, cbs) = s.pq("searchIvfPq", model)
     val m = cbs.length
     require(queryVec.length == m * subDim,
       s"searchIvfPq: query dim ${queryVec.length} != ${m * subDim}")
@@ -889,16 +895,16 @@ class Collection private (
     val tables: Map[Long, Seq[Double]] = cells.map { c =>
       val cent = centByCell(c)
       val rq = Array.tabulate(queryVec.length)(i => queryVec(i) - cent(i))
-      c -> (for (s <- 0 until m; code <- 0 until pqK) yield {
+      c -> (for (sub <- 0 until m; code <- 0 until pqK) yield {
         // a codebook can legitimately carry FEWER than pqK entries
         // (trainCents drops emptied clusters on degenerate subspaces);
         // codes never reference the absent slots, so the distance is
         // unreachable — fill +Inf rather than crash (r11 review)
-        cbByCode(s).get(code.toLong) match {
+        cbByCode(sub).get(code.toLong) match {
           case None => Double.PositiveInfinity
           case Some(cv) =>
             var d = 0.0; var i = 0
-            while (i < subDim) { val t = rq(s * subDim + i) - cv(i); d += t * t; i += 1 }
+            while (i < subDim) { val t = rq(sub * subDim + i) - cv(i); d += t * t; i += 1 }
             d
         }
       })
@@ -906,8 +912,8 @@ class Collection private (
     val codes = spark.read.parquet(s"$path.__pqcodes")
     val cellIn: Column = cellPredicate(codes.schema("cell").dataType, "cell", cells)
     val tbl = element_at(typedLit(tables), col("cell").cast("long"))
-    val adist = (0 until m).map(s =>
-        element_at(col("__tbl"), lit(s * pqK + 1) + element_at(col("codes"), s + 1)))
+    val adist = (0 until m).map(sub =>
+        element_at(col("__tbl"), lit(sub * pqK + 1) + element_at(col("codes"), sub + 1)))
       .reduce(_ + _)
     val adcTop = codes.filter(cellIn)
       .withColumn("__tbl", tbl)
@@ -927,8 +933,8 @@ class Collection private (
       val ids = cand.map(_.getLong(0))
       val cellVals = cand.map(_.getLong(1)).distinct
       val cellPick: Column =
-        cellPredicate(df.schema("cell").dataType, "cell", cellVals.toSeq)
-      df.filter(cellPick && col("id").isin(ids: _*))
+        cellPredicate(s.df.schema("cell").dataType, "cell", cellVals.toSeq)
+      s.df.filter(cellPick && col("id").isin(ids: _*))
         .withColumn("adist", VectorKernels.sqDistFast(col("vector"), lit(queryVec)))
         .select(col("id"), col("cell").cast("long").as("cell"), col("adist"))
         .orderBy(col("adist").asc, col("id").asc)
@@ -941,7 +947,7 @@ class Collection private (
     * layout history, and a cast on the COLUMN side would defeat partition
     * pruning — so the literal side always adopts the column's type.
     * Shared by every pruned path (upsertIvf, maintainPqCodes,
-    * searchIvfPq rerank, searchCells); the copy-pasted blocks this
+    * searchIvfPq rerank, cellsTopK); the copy-pasted blocks this
     * replaces had already omitted the hot search path (r11 review). */
   private def cellPredicate(dt: DataType, cellCol: String, cells: Seq[Long]): Column =
     dt match {
@@ -950,23 +956,6 @@ class Collection private (
       case _           => col(cellCol).isin(cells.map(_.toString): _*)
     }
 
-  /** Loads the coarse quantizer, validating the data/model build stamps
-    * written by `buildIvf` — a data dir stamped with a build the model
-    * dir does not match (interrupted build, manual copy) must not be
-    * probed: assignments and centroids would disagree. Pre-stamp layouts
-    * (no `_ivf_build` in the data dir) load unchecked for compatibility.
-    * `op` names the caller in the mismatch error. */
-  private def loadIvfModel(op: String): graft.vector.IvfKMeans.Model = {
-    readMarker(s"$dataDir/_ivf_build").foreach { dataBuild =>
-      val modelBuild = readMarker(s"$path.__ivf/_build_id")
-      require(modelBuild.contains(dataBuild),
-        s"$op: quantizer/layout mismatch for $name — data is from " +
-          s"build $dataBuild but model dir has ${modelBuild.getOrElse("no stamp")}; " +
-          "re-run buildIvf (an interrupted build can leave this state)")
-    }
-    graft.vector.IvfKMeans.load(spark, s"$path.__ivf")
-  }
-
   /** ANN search over a buildIvf'd collection: the query probes only the
     * nprobe nearest cells (centroid table read from `.__ivf`, argmin on
     * the driver — it is tiny by construction), and the cell predicate
@@ -974,8 +963,8 @@ class Collection private (
     * ~nprobe/nlist — the IVF contract.
     */
   def searchIvf(queryVec: Array[Double], k: Int = 5, nprobe: Int = 2): DataFrame = {
-    val model = loadIvfModel("searchIvf")
-    searchCells(queryVec, "cell", model.probe(queryVec, nprobe), k)
+    val s = snapshot()
+    cellsTopK(s, queryVec, "cell", s.ivf("searchIvf").probe(queryVec, nprobe), k)
   }
 
   /** Batch IVF search: many query vectors in ONE plan (the q73 shape).
@@ -987,35 +976,44 @@ class Collection private (
     * the rows. `queries` needs (qid BIGINT, qv ARRAY<DOUBLE>).
     */
   def searchIvfBatch(queries: DataFrame, k: Int = 5, nprobe: Int = 2): DataFrame = {
-    val model = loadIvfModel("searchIvfBatch")
+    val s = snapshot()
+    val model = s.ivf("searchIvfBatch")
     val probed = graft.vector.IvfKMeans.probeCells(queries, "qv", model.centroidTable, 1.0, nprobe)
       .select(col("qid"), col("qv"), col("cell"))
-    rankPerQuery(probed.join(df, Seq("cell")), k)
+    rankPerQuery(probed.join(s.df, Seq("cell")), k)
   }
 
   /** Cosine top-k over only the given cells; the cell predicate becomes a
     * PartitionFilter (directory pruning), not a row filter. */
   def searchCells(queryVec: Array[Double], cellCol: String, cells: Seq[Long], k: Int = 5): DataFrame =
-    topK(df.filter(cellPredicate(df.schema(cellCol).dataType, cellCol, cells)), queryVec, k)
+    cellsTopK(snapshot(), queryVec, cellCol, cells, k)
+
+  /** The searchIvf/searchCells body: one snapshot's listing serves both
+    * the partition column's type and the pruned scan. */
+  private def cellsTopK(s: Snapshot, queryVec: Array[Double], cellCol: String,
+                        cells: Seq[Long], k: Int): DataFrame =
+    topK(s.df.filter(cellPredicate(s.df.schema(cellCol).dataType, cellCol, cells)), queryVec, k)
 
   /** S6: describe — entityCount, dimension, metric. Row-free on an empty
     * collection: head() on a zero-row projection would throw, so the
     * dimension reports 0 until the first insert defines it (the schema
     * carries the element type but not the length). */
   def describe(): CollectionInfo = {
-    val d = df
+    val d = snapshot().df
     val dimRow = d.select(size(col("vector"))).limit(1).collect()
     CollectionInfo(name, d.count(),
       if (dimRow.isEmpty) 0 else dimRow(0).getInt(0), metric)
   }
 
   /** S9: full scan (pagination dropped by design). */
-  def getAll(outputFields: Seq[String] = Nil): DataFrame =
-    if (outputFields.isEmpty) df else df.select(outputFields.map(col): _*)
+  def getAll(outputFields: Seq[String] = Nil): DataFrame = {
+    val d = snapshot().df
+    if (outputFields.isEmpty) d else d.select(outputFields.map(col): _*)
+  }
 
   /** P4/J1: point lookup by primary keys (broadcast semi-join shape). */
   def getByIds(ids: Seq[Long]): DataFrame =
-    df.filter(col("id").isin(ids: _*))
+    snapshot().df.filter(col("id").isin(ids: _*))
 
   /** P1-P3: filter expression + projection + limit, like
     * `query_entities(name, filter, outputFields, limit)`
@@ -1023,7 +1021,7 @@ class Collection private (
     * parser — same `field == value && ...` surface Milvus accepts.
     */
   def query(filter: String = "", outputFields: Seq[String] = Nil, limit: Int = 100): DataFrame = {
-    var d = df
+    var d = snapshot().df
     if (filter.nonEmpty) d = d.filter(expr(filter))
     if (outputFields.nonEmpty && outputFields != Seq("*")) d = d.select(outputFields.map(col): _*)
     d.limit(limit)
@@ -1034,13 +1032,13 @@ class Collection private (
     * hard-codes k=1 (`scripts/milvus_db.py:112`) against its own default
     * of 5; we honor the parameter (strict-compat callers pass 1).
     */
-  def search(queryVec: Array[Double], k: Int = 5): DataFrame = topK(df, queryVec, k)
+  def search(queryVec: Array[Double], k: Int = 5): DataFrame = topK(snapshot().df, queryVec, k)
 
   /** Batch search: one plan for many query vectors (queries broadcast,
     * rank window per query) — the vectorized form of looping `search`.
     */
   def searchBatch(queries: DataFrame, k: Int = 5): DataFrame =
-    rankPerQuery(df.join(broadcast(queries), lit(true)), k)
+    rankPerQuery(snapshot().df.join(broadcast(queries), lit(true)), k)
 
   /** The single-query tail: cosine score, (score desc, id asc), limit k —
     * plans as TakeOrderedAndProject, no shuffle. */

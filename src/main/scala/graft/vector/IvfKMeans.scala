@@ -86,7 +86,8 @@ object IvfKMeans {
   }
 
   def load(spark: SparkSession, dir: String): Model = {
-    val rows = spark.read.parquet(dir).orderBy("cell").collect()
+    // at most nlist rows: sort on the driver, not with a Spark sort job
+    val rows = spark.read.parquet(dir).collect().sortBy(_.getLong(0))
     Model(rows.map(_.getLong(0)),
       rows.map(_.getSeq[Double](1).toArray))
   }

@@ -433,4 +433,51 @@ class CollectionSpec extends SparkSpec {
     assert(c.df.filter(col("id") === 99L).count() === 1)
     assert(c.describe().rows === 4)
   }
+
+  test("each read call lists its snapshot once") {
+    // 40 one-hot rows, each its own k-means seed: 40 non-empty cell dirs,
+    // above Spark's parallel-discovery threshold (32), so every listing
+    // of the data dir runs as a visible "Listing leaf files" job
+    val n = 40
+    Collection.drop(root, "clist")
+    val c = Collection.create(spark, root, "clist", n, overwrite = true)
+    c.insert((0 until n).map(i => (i.toLong, Seq.tabulate(n)(d => if (d == i) 1.0 else 0.0),
+      s"row $i")).toDF("id", "vector", "text"))
+    c.buildIvf(nlist = n, rounds = 1)
+    val cellDirs = new java.io.File(c.dataDir).listFiles().count(_.getName.startsWith("cell="))
+    assert(cellDirs >= 33, s"only $cellDirs cell dirs: no listing job would run")
+
+    // job descriptions by group; FIFO sentinels drain the async listener
+    // bus (the PlanSpec pattern)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(js.properties).flatMap(p => Option(p.getProperty(k)))
+        jobs.add((prop("spark.jobGroup.id").getOrElse("<none>"),
+          prop("spark.job.description").getOrElse(""))); ()
+      }
+    }
+    def sentinel(name: String): Unit = {
+      spark.sparkContext.setJobGroup(name, name)
+      try spark.range(1).count()
+      finally spark.sparkContext.clearJobGroup()
+      val deadline = System.currentTimeMillis + 60000
+      while (!jobs.stream().anyMatch(_._1 == name) && System.currentTimeMillis < deadline)
+        Thread.sleep(10)
+      assert(jobs.stream().anyMatch(_._1 == name), s"sentinel $name never observed")
+    }
+    def listings(call: String)(body: => Unit): Long = {
+      sentinel(s"$call-flush")
+      jobs.clear()
+      body
+      sentinel(s"$call-close")
+      jobs.stream().filter(_._2.startsWith("Listing leaf files")).count()
+    }
+    val qv = Array.tabulate(n)(d => if (d == 3) 1.0 else 0.0)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(listings("searchIvf")(c.searchIvf(qv, k = 2, nprobe = 2).collect()) === 1)
+      assert(listings("searchCells")(c.searchCells(qv, "cell", Seq(0L, 3L), k = 2).collect()) === 1)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
