@@ -23,6 +23,12 @@ import graft.functions.{VectorKernels, VectorOps}
   * (e.g. IVF centroid id or date); `search` is a scan + TakeOrdered (no
   * shuffle of the collection); `getByIds` is an IN-filter pushed to
   * parquet. On a cluster the same layout bucket-prunes.
+  *
+  * Everything a collection stores lives under `<root>/<name>`. An IVF or
+  * IVF_PQ index lives inside the snapshot version it describes, under
+  * `v<N>/_index/` (`ivf/`, `pq/`, `pqcodes/`), like Milvus keeping each
+  * index with the segments it indexes: one pointer flip commits data and
+  * index together, and a version without `_index/` has no index.
   */
 final case class CollectionInfo(name: String, rows: Long, dim: Int, metric: String)
 
@@ -56,47 +62,38 @@ class Collection private (
 
   /** One committed version as a single call reads it: `_current` is
     * resolved once, `df` lists the files once (on first use), and the
-    * IVF/PQ sidecars are checked against THIS `dir`'s build stamp. Every
-    * engine method takes one `snapshot()` before it commits anything and
-    * reads only through it, so a call never mixes two versions. */
+    * IVF/PQ index is the one inside THIS `dir`. Every engine method takes
+    * one `snapshot()` before it commits anything and reads only through
+    * it, so a call never mixes two versions. */
   private[store] final class Snapshot(val version: Option[Int], val dir: String) {
     lazy val df: DataFrame = spark.read.parquet(dir)
 
-    /** The `buildIvf` id this version's data was assigned under. */
-    lazy val build: Option[String] = readMarker(s"$dir/_ivf_build")
+    /** The hive partition columns of this version, from the names of its
+      * `k=v` child dirs: one directory listing, no Spark job. */
+    lazy val partitionCols: Set[String] =
+      Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty[java.io.File])
+        .filter(f => f.isDirectory && f.getName.contains("="))
+        .map(_.getName.takeWhile(_ != '=')).toSet
 
-    /** The coarse quantizer, refused when this version's stamp does not
-      * match the model dir's (interrupted build, manual copy). Pre-stamp
-      * layouts load unchecked. `op` names the caller in the error. */
-    def ivf(op: String): graft.vector.IvfKMeans.Model = {
-      build.foreach { dataBuild =>
-        val modelBuild = readMarker(s"$path.__ivf/_build_id")
-        require(modelBuild.contains(dataBuild),
-          s"$op: quantizer/layout mismatch for $name — data is from " +
-            s"build $dataBuild but model dir has ${modelBuild.getOrElse("no stamp")}; " +
-            "re-run buildIvf (an interrupted build can leave this state)")
-      }
-      graft.vector.IvfKMeans.load(spark, s"$path.__ivf")
-    }
+    /** `dir/_index/<part>` when this version carries that index. */
+    def index(part: String): Option[String] =
+      Some(s"$dir/_index/$part").filter(new java.io.File(_).isDirectory)
+
+    /** `index(part)`, or a refusal naming `op` and the build to run. */
+    private def indexOrRefuse(part: String, kind: String, op: String, build: String): String =
+      index(part).getOrElse(throw new IllegalArgumentException(
+        s"$op: $name v${version.getOrElse(0)} has no $kind index — run $build"))
+
+    /** The coarse quantizer this version was built with. */
+    def ivf(op: String): graft.vector.IvfKMeans.Model =
+      graft.vector.IvfKMeans.load(spark, indexOrRefuse("ivf", "IVF", op, "buildIvf"))
 
     /** The PQ codebooks as (pqK, subDim, cbs), one `cbs` entry per
-      * subspace with its (code, centroid) pairs sorted by code — refused
-      * unless both the sidecar and this version were built for `model`. */
-    def pq(op: String, model: graft.vector.IvfKMeans.Model)
-        : (Int, Int, Seq[Seq[(Long, Seq[Double])]]) = {
-      val pqBuild = readMarker(s"$path.__pq/_build_id")
-      require(pqBuild.contains(model.contentId),
-        s"$op: PQ index for $name was built for quantizer " +
-          s"${pqBuild.getOrElse("(missing)")} but the live coarse model is " +
-          s"${model.contentId} — re-run buildIvfPq")
-      // codes reference rows by id: a rewrite since the build (delete/
-      // compact/upsert drop the _ivf_build stamp) would leave removed ids
-      // resurfacing from the sidecar — refuse rather than answer stale
-      require(build.contains(model.contentId),
-        s"$op: $name was rewritten since buildIvfPq — the codes " +
-          "sidecar no longer describes the data; re-run buildIvfPq")
-      val Array(m, pqK, subDim) = readMarker(s"$path.__pq/_meta").get.split(" ").map(_.toInt)
-      val rows = spark.read.parquet(s"$path.__pq").collect()
+      * subspace with its (code, centroid) pairs sorted by code. */
+    def pq(op: String): (Int, Int, Seq[Seq[(Long, Seq[Double])]]) = {
+      val d = indexOrRefuse("pq", "PQ", op, "buildIvfPq")
+      val Array(m, pqK, subDim) = readMarker(s"$d/_meta").get.split(" ").map(_.toInt)
+      val rows = spark.read.parquet(d).collect()
       (pqK, subDim, (0 until m).map(s =>
         rows.filter(_.getInt(0) == s)
           .map(r => (r.getLong(1), r.getSeq[Double](2).toIndexedSeq)).sortBy(_._1).toSeq))
@@ -132,9 +129,11 @@ class Collection private (
     * scans), which is renamed to `v<N>` and then committed by the atomic
     * `_current` pointer flip. A crash before the flip leaves the old
     * snapshot live and intact; a concurrent reader sees old-or-new,
-    * never neither. NOTE: rewrites do not preserve an insertPartitioned
-    * hive layout — re-partition afterwards if the collection was
-    * cell-partitioned (buildIvf's own rewrite of course does).
+    * never neither. NOTE: the new version holds only what `write` puts
+    * in it, so a rewrite that does not maintain an index drops it (and
+    * an insertPartitioned hive layout): only buildIvf, buildIvfPq and
+    * upsertIvf write `_index/`; the other rewrites commit an unindexed
+    * version that the IVF paths refuse until the next buildIvf.
     */
   private[store] def rewriteSwap(op: String)(write: String => Unit): Unit = {
     requireNotStreamManaged(op)
@@ -247,11 +246,12 @@ class Collection private (
   }
 
   /** The retained snapshot versions, oldest first: (version, isCurrent,
-    * sizeBytes, lastModifiedMillis). sizeBytes is PHYSICAL: snapshots
-    * share untouched cell files via hard links (upsertIvf), so each
-    * distinct on-disk file is counted once, at the oldest snapshot that
-    * retains it — per-version sizes sum to actual disk usage, and a
-    * newer snapshot's size is the bytes it newly introduced. */
+    * sizeBytes, lastModifiedMillis). sizeBytes is PHYSICAL and includes
+    * the version's `_index/`: snapshots share untouched cell and index
+    * files via hard links (upsertIvf), so each distinct on-disk file is
+    * counted once, at the oldest snapshot that retains it — per-version
+    * sizes sum to actual disk usage, and a newer snapshot's size is the
+    * bytes it newly introduced. */
   def history(): Seq[SnapshotInfo] = {
     val cur = currentVersion
     val seen = scala.collection.mutable.Set[AnyRef]()
@@ -314,11 +314,13 @@ class Collection private (
     (before.size, parquetFiles(new java.io.File(snapshot().dir)).size)
   }
 
-  /** Every parquet file under `d`, partition dirs included. */
+  /** Every data parquet file under `d`, partition dirs included; like
+    * Spark's own listing it skips `_`/`.`-prefixed dirs (`_index/`). */
   private def parquetFiles(d: java.io.File): Seq[java.io.File] = {
     val fs = Option(d.listFiles()).map(_.toSeq).getOrElse(Nil)
     fs.filter(_.isFile).filter(_.getName.endsWith(".parquet")) ++
-      fs.filter(_.isDirectory).flatMap(parquetFiles)
+      fs.filter(f => f.isDirectory && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+        .flatMap(parquetFiles)
   }
 
   /** Data-layout clustering: rewrite the collection range-partitioned and
@@ -375,6 +377,11 @@ class Collection private (
     // `_retain`/`_stream_batch` markers living beside the data, and a
     // concurrent reader could catch the directory half-written).
     val s = snapshot()
+    // a file appended beside `k=v` dirs is invisible to partition
+    // discovery: the rows would be written and never read
+    require(s.partitionCols.isEmpty,
+      s"insert: $name is partitioned by [${s.partitionCols.mkString(",")}] — " +
+        "append with upsertIvf (an IVF layout) or insertPartitioned")
     val batchCols = conformed.schema.fieldNames.toSet
     val declared = s.df.schema.fieldNames.toSet
     if (batchCols != declared && s.df.isEmpty) {
@@ -443,24 +450,14 @@ class Collection private (
     * modified in place by either side (vacuum unlinks, the inode
     * survives until the last reference drops). The experimentation
     * primitive at scale: branch a 100 TB collection in milliseconds,
-    * try a destructive pipeline, drop the clone. */
+    * try a destructive pipeline, drop the clone. The version's `_index/`
+    * links along with its data, so the clone is searchable as built. */
   def shallowClone(newName: String): Collection = {
     requireNotStreamManaged("shallowClone")
     val dstRoot = s"$root/$newName"
     require(!new java.io.File(dstRoot).exists,
       s"shallowClone: collection $newName already exists")
     linkTree(new java.io.File(snapshot().dir), new java.io.File(s"$dstRoot/v1"))
-    // index sidecars clone too: the v1 data carries `_ivf_build` stamps,
-    // so a clone WITHOUT the matching `.__ivf`/`.__pq`/`.__pqcodes` dirs
-    // would refuse searchIvf with a misleading "interrupted build" error.
-    // Hard links are safe here like the data files: parquet is immutable
-    // and marker writes always commit onto a NEW inode (writeMarker's
-    // tmp+atomic-move), so neither side can mutate the other's files.
-    for (side <- Seq(".__ivf", ".__pq", ".__pqcodes")) {
-      val src = new java.io.File(path + side)
-      if (src.isDirectory)
-        linkTree(src, new java.io.File(dstRoot + side))
-    }
     // the pointer commits through the same tmp+ATOMIC_MOVE discipline as
     // every other marker: a crash mid-write must never leave a truncated
     // _current that bricks the clone's currentVersion parse (r11 review)
@@ -562,39 +559,15 @@ class Collection private (
     }
   }
 
-  /** Build `dst` as `src` with its `affected` cells replaced by `stage`'s:
-    * untouched `cell=` dirs ride along as hard links (no data rewrite),
-    * rewritten ones move in from the stage. A cell ALL of whose rows were
-    * removed has no stage partition and simply does not exist in `dst` —
-    * no stale-dir cleanup race. Keeps upsertIvf and its PQ-codes twin at
-    * O(touched cells) write IO. */
-  private def mergeCells(src: String, stage: String, dst: String,
-                         affected: Seq[Long]): Unit = {
-    val dstDir = new java.io.File(dst); dstDir.mkdirs()
-    val affectedNames = affected.map(c => s"cell=$c").toSet
-    def cellDirs(d: String): Array[java.io.File] =
-      Option(new java.io.File(d).listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isDirectory && f.getName.startsWith("cell="))
-    cellDirs(src).filterNot(f => affectedNames(f.getName))
-      .foreach(f => linkTree(f, new java.io.File(dstDir, f.getName)))
-    cellDirs(stage).foreach(f =>
-      require(f.renameTo(new java.io.File(dstDir, f.getName)),
-        s"$name: could not install ${f.getName}"))
-  }
-
-  /** Install a fully staged index sidecar over `live`: move the old dir
-    * aside, rename the staged dir in, then delete the aside copy — the
-    * order with the shortest window without a live dir. A dead JVM's
-    * aside dir is cleared first; callers stamp the staged dir with the
-    * build id before installing it. */
-  private def installDir(staged: String, live: String): Unit = {
-    val liveF = new java.io.File(live)
-    val aside = new java.io.File(s"$live.__old")
-    rmTree(aside)
-    require((!liveF.exists || liveF.renameTo(aside)) &&
-        new java.io.File(staged).renameTo(liveF),
-      s"$name: could not install $live")
-    rmTree(aside)
+  /** Hard-link `src`'s `cell=` dirs other than the `affected` ones into
+    * `dst`, beside the affected cells just written there; a cell all of
+    * whose rows were removed has no dir in `dst` at all. Keeps upsertIvf
+    * (data and PQ codes alike) at O(touched cells) write IO. */
+  private def linkCells(src: String, dst: String, affected: Seq[Long]): Unit = {
+    val rewritten = affected.map(c => s"cell=$c").toSet
+    Option(new java.io.File(src).listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(f => f.isDirectory && f.getName.startsWith("cell=") && !rewritten(f.getName))
+      .foreach(f => linkTree(f, new java.io.File(dst, f.getName)))
   }
 
   /** Incremental IVF maintenance (Milvus's actual behavior for inserts
@@ -604,25 +577,30 @@ class Collection private (
     * removed, new assignments added). Partition pruning bounds IO at
     * O(touched cells), not O(collection) — the property that makes churn
     * affordable at 100 TB. Commits ATOMICALLY like every other rewrite:
-    * the next version dir hard-links every untouched cell and takes the
-    * rewritten cells from the stage, then the `_current` pointer flips —
-    * readers never see a half-replaced cell. Returns (replacedIds,
-    * insertedIds, movedIds): `moved` counts replaced ids whose updated
-    * vector landed in a different cell. The cumulative drifted-row count
-    * persists in `_ivf_drift`; past ~0.2-0.3 `ivfDrift` the centroids no
-    * longer describe the data and recall silently degrades. When the
-    * drift crosses `maxDrift`, the commit is followed by a retrain with
-    * the original build parameters (persisted in the model dir), which
-    * resets the counter. The default (infinity) leaves retraining to the
-    * caller.
+    * the next version takes the rewritten cells, hard-links every
+    * untouched cell and the `_index/ivf` (and `_index/pq`) of the version
+    * it read, and — when that version has PQ — re-encodes just the batch
+    * with the existing codebooks (they depend on the training
+    * distribution, not on row membership) into the affected cells of its
+    * `_index/pqcodes`; then the `_current` pointer flips, so readers never
+    * see a half-replaced cell or codes that do not describe the rows.
+    * A version without an index (any other rewrite since the last build)
+    * is refused: run buildIvf. Returns (replacedIds, insertedIds,
+    * movedIds): `moved` counts replaced ids whose updated vector landed
+    * in a different cell. The cumulative drifted-row count persists in
+    * `_ivf_drift`; past ~0.2-0.3 `ivfDrift` the centroids no longer
+    * describe the data and recall silently degrades. When the drift
+    * crosses `maxDrift`, the commit is followed by a retrain with the
+    * original build parameters (`_index/ivf/_build_params`, plus
+    * `_index/pq/_meta` for PQ), which resets the counter. The default
+    * (infinity) leaves retraining to the caller.
     */
   def upsertIvf(rows: DataFrame,
                 maxDrift: Double = Double.PositiveInfinity): (Long, Long, Long) = {
     requireNotStreamManaged("upsertIvf")
     val s = snapshot()
-    require(s.df.columns.contains("cell"),
-      s"upsertIvf: $name is not cell-partitioned — buildIvf first")
     val model = s.ivf("upsertIvf")
+    val pq = s.index("pq").map(_ => s.pq("upsertIvf"))
     val batch = graft.vector.IvfKMeans
       .assignCells(Collection.conformVector(rows), "vector", model.centroidTable, scale = 1.0)
       .drop("dist6").persist()
@@ -642,52 +620,35 @@ class Collection private (
         .union(batch.select(col("cell").as("c")))
         .distinct().collect().map(_.getLong(0)).toSeq
       oldMatched.unpersist()
-      // partition-pruning predicate typed to the INFERRED partition column
-      val cellIn: Column = cellPredicate(s.df.schema("cell").dataType, "cell", affected)
-      // survivors of the affected cells + the whole batch; staged to a
-      // sibling dir because Spark (correctly) refuses a write that reads
-      // from its own destination
-      val content = s.df.filter(cellIn)
-        .withColumn("cell", col("cell").cast("long"))
-        .join(batchIds, Seq("id"), "left_anti")
-        .unionByName(batch)
-      val stage = s"$path.__upsert"
-      rmTree(new java.io.File(stage))
+      // the survivors of `from`'s affected cells plus `fresh` (the batch,
+      // or its codes): exactly the affected cells of the next version
+      def affectedCells(from: DataFrame, fresh: DataFrame): DataFrame =
+        from.filter(cellPredicate(from.schema("cell").dataType, "cell", affected))
+          .withColumn("cell", col("cell").cast("long"))
+          .join(batchIds, Seq("id"), "left_anti")
+          .unionByName(fresh)
       val prior = readMarker(s"${s.dir}/_ivf_drift").map(_.toLong).getOrElse(0L)
-      val pqStampPath = s"$path.__pq/_build_id"
-      // codebooks do not depend on row membership, so a PQ sidecar that
-      // describes this snapshot is MAINTAINED below (codebooks loaded
-      // before the stamp is invalidated). Any other sidecar was already
-      // unusable: its stamp stays deleted and searchIvfPq keeps refusing.
-      val pq = if (readMarker(pqStampPath).contains(model.contentId) &&
-          s.build.contains(model.contentId)) Some(s.pq("upsertIvf", model)) else None
-      try {
-        content.write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(stage)
-        // pessimistic PQ invalidation BEFORE the data commit: if anything
-        // between here and the end of code maintenance crashes,
-        // searchIvfPq refuses loudly instead of serving codes that no
-        // longer describe the rows
-        new java.io.File(pqStampPath).delete()
-        rewriteSwap("upsertIvf") { tmp =>
-          mergeCells(s.dir, stage, tmp, affected)
-          s.build.foreach(b => writeMarker(s"$tmp/_ivf_build", b))
-          writeMarker(s"$tmp/_ivf_drift",
-            (prior + moved + (nNew - matched)).toString)
-        }
+      rewriteSwap("upsertIvf") { tmp =>
+        affectedCells(s.df, batch).write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(tmp)
+        linkCells(s.dir, tmp, affected)
+        linkTree(new java.io.File(s"${s.dir}/_index/ivf"), new java.io.File(s"$tmp/_index/ivf"))
         pq.foreach { case (_, subDim, cbs) =>
-          maintainPqCodes(model, subDim, cbs, batch, batchIds, affected)
+          linkTree(new java.io.File(s"${s.dir}/_index/pq"), new java.io.File(s"$tmp/_index/pq"))
+          val codes = s"${s.dir}/_index/pqcodes"
+          affectedCells(spark.read.parquet(codes), pqEncode(residuals(batch, model), cbs, subDim))
+            .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(s"$tmp/_index/pqcodes")
+          linkCells(codes, s"$tmp/_index/pqcodes", affected)
         }
-      } finally rmTree(new java.io.File(stage))
+        writeMarker(s"$tmp/_ivf_drift", (prior + moved + (nNew - matched)).toString)
+      }
       // skip the drift probe's full count under the default policy;
       // ivfDrift reads a fresh snapshot: the version just committed
       if (maxDrift != Double.PositiveInfinity && ivfDrift > maxDrift) {
-        val (nl, rd) = readMarker(s"$path.__ivf/_build_params")
-          .map(_.split(" "))
-          .map(a => (a(0).toInt, a(1).toInt))
-          .getOrElse((model.cells.length, 3))
-        // a PQ'd collection retrains PQ TOO: buildIvf alone would mint a
-        // new quantizer contentId and leave searchIvfPq refusing
-        readMarker(s"$path.__pq/_meta").map(_.split(" ").map(_.toInt)) match {
+        val index = s"${snapshot().dir}/_index"
+        val Array(nl, rd) = readMarker(s"$index/ivf/_build_params").get.split(" ").map(_.toInt)
+        // a PQ'd collection retrains PQ too: buildIvf alone would commit a
+        // version without `_index/pq`, and searchIvfPq would refuse
+        readMarker(s"$index/pq/_meta").map(_.split(" ").map(_.toInt)) match {
           case Some(Array(m, pqK, _)) => buildIvfPq(nl, m, pqK, rd); ()
           case _ => buildIvf(nl, rd); ()
         }
@@ -708,104 +669,91 @@ class Collection private (
   /** IVF-style layout: rows land in hive partitions keyed by `cellCol`
     * (e.g. a coarse-quantizer centroid id). `searchCells` then prunes to
     * the probed cells AT THE SCAN — the 100 TB shape where nprobe/nlist
-    * of the data is read. */
+    * of the data is read. The collection must already be partitioned by
+    * `cellCol`, or be empty. */
   def insertPartitioned(rows: DataFrame, cellCol: String): Unit = {
     requireNotStreamManaged("insertPartitioned")
+    val s = snapshot()
+    // `k=v` dirs appended beside flat files (or beside another column's
+    // dirs) hide the rows already there from partition discovery
+    require(s.partitionCols == Set(cellCol) || s.partitionCols.isEmpty &&
+        (!new java.io.File(s.dir).exists || s.df.isEmpty),
+      s"insertPartitioned: $name holds rows partitioned by " +
+        s"[${s.partitionCols.mkString(",")}], not [$cellCol] — a mixed layout would hide them")
     Collection.conformVector(rows)
-      .write.mode(SaveMode.Append).partitionBy(cellCol).parquet(snapshot().dir)
+      .write.mode(SaveMode.Append).partitionBy(cellCol).parquet(s.dir)
   }
 
   /** Trained IVF index build (reference S11: IVF_FLAT with nlist k-means
     * centroids, `src/archive/chunking_strategy_docker.py:161-171`): runs
-    * Lloyd's over the stored vectors, rewrites the collection into a
-    * hive-partitioned layout keyed by the learned cell, and persists the
-    * coarse quantizer in a `.__ivf` sibling directory (outside the data
-    * dir, so scans never see it). Returns the trained model. NOTE: like
-    * every rewrite, this drops any previous partition layout.
+    * Lloyd's over the stored vectors and commits ONE new version holding
+    * the collection rewritten hive-partitioned by the learned cell plus
+    * the coarse quantizer and its build parameters in `_index/ivf` (an
+    * `_`-prefixed dir, so scans never see it). Returns the trained model.
+    * NOTE: like every rewrite, this drops any previous partition layout
+    * and index.
     */
-  def buildIvf(nlist: Int, rounds: Int = 3): graft.vector.IvfKMeans.Model = {
-    val s = snapshot()
-    val model = graft.vector.IvfKMeans.train(s.df, "id", "vector", nlist, rounds)
-    val buildId = model.contentId
-    // Stage the quantizer BEFORE touching the data (ADVICE r3: saving it
-    // only after the swap left a crash window pairing new cell layout
-    // with a stale model — silently wrong recall). Both dirs carry the
-    // model's content hash; Snapshot.ivf refuses a mismatched pair, so
-    // even the installDir promote window below fails LOUDLY.
-    val modelTmp = s"$path.__ivf.__new"
-    rmTree(new java.io.File(modelTmp))
-    model.save(spark, modelTmp)
-    writeMarker(s"$modelTmp/_build_id", buildId)
-    // build params ride with the model so upsertIvf's auto-retrain
-    // (maxDrift) can rebuild with the same configuration
-    writeMarker(s"$modelTmp/_build_params", s"$nlist $rounds")
-    rewriteSwap("buildIvf") { tmp =>
-      graft.vector.IvfKMeans.assignCells(
-          Collection.conformVector(s.df), "vector", model.centroidTable, scale = 1.0)
-        .drop("dist6") // assignCells names the partition column "cell"
-        .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(tmp)
-      writeMarker(s"$tmp/_ivf_build", buildId) // underscore file: invisible to scans
-    }
-    installDir(modelTmp, s"$path.__ivf")
-    model
-  }
+  def buildIvf(nlist: Int, rounds: Int = 3): graft.vector.IvfKMeans.Model =
+    buildIndex("buildIvf", nlist, rounds, pq = None)
 
   /** IVF_PQ index build — the composition FAISS defaults to ("IVFADC",
     * Jégou et al. TPAMI 2011 §V.B) and Milvus ships as its scale index:
-    * `buildIvf` trains the coarse quantizer and rewrites the collection
-    * cell-partitioned, then M subspace codebooks are trained over the
+    * the `buildIvf` commit, plus M subspace codebooks trained over the
     * RESIDUALS v − centroid(cell) (FAISS by_residual=true; residuals
     * concentrate around 0 so the codebooks spend their k codes on the
-    * within-cell detail) and every row's M codes land in a `.__pqcodes`
-    * sidecar partitioned by the same cell key. The M trainings run
-    * concurrently from the driver over one persisted residual frame.
-    * Codebooks + codes are stamped with the coarse model's content id —
-    * `searchIvfPq` refuses a codes/quantizer mismatch loudly. At scale:
-    * codes are M small ints per row (~M bytes once dictionary-encoded)
-    * vs dim floats — a 16× scan-set compression; training shuffles are
-    * O(centroid table) per round like buildIvf.
+    * within-cell detail) in `_index/pq`, and every row's M codes in
+    * `_index/pqcodes`, partitioned by the same cell key — all in the same
+    * version, so `searchIvfPq` never sees codes that do not describe its
+    * rows. The M trainings run concurrently from the driver over one
+    * persisted residual frame. At scale: codes are M small ints per row
+    * (~M bytes once dictionary-encoded) vs dim floats — a 16× scan-set
+    * compression; training shuffles are O(centroid table) per round like
+    * buildIvf.
     */
   def buildIvfPq(nlist: Int, m: Int = 4, pqK: Int = 16,
-                 rounds: Int = 3, pqRounds: Int = 2): graft.vector.IvfKMeans.Model = {
-    val model = buildIvf(nlist, rounds)
-    val dim = model.centroids.headOption.map(_.length).getOrElse(0)
-    require(dim > 0 && dim % m == 0, s"buildIvfPq: dim $dim not divisible by m=$m")
-    val subDim = dim / m
+                 rounds: Int = 3, pqRounds: Int = 2): graft.vector.IvfKMeans.Model =
+    buildIndex("buildIvfPq", nlist, rounds, pq = Some((m, pqK, pqRounds)))
+
+  /** The buildIvf/buildIvfPq body: one commit carrying the cell-partitioned
+    * data, `_index/ivf` and, for `pq` = (m, pqK, pqRounds), `_index/pq`
+    * and `_index/pqcodes`. */
+  private def buildIndex(op: String, nlist: Int, rounds: Int,
+                         pq: Option[(Int, Int, Int)]): graft.vector.IvfKMeans.Model = {
     import spark.implicits._
-    // M subspace trainings and the encode share one materialization;
-    // fresh snapshot: the cell layout buildIvf just committed
-    val resid = residuals(snapshot().df, model).persist()
-    try {
-      // codes re-keyed to dense 0..k-1 (the trainer keys by seed id)
-      val cbs = graft.vector.IvfKMeans.trainSubspaces(resid, "id", "__r", m, subDim, pqK, pqRounds)
-        .map(_.zipWithIndex.map { case ((_, v), j) => (j.toLong, v) })
-      val wide = pqEncode(resid, cbs, subDim)
-      val cbRows = cbs.zipWithIndex.flatMap { case (cb, sub) =>
-        cb.map { case (code, v) => (sub, code, v) }
+    val s = snapshot()
+    val model = graft.vector.IvfKMeans.train(s.df, "id", "vector", nlist, rounds)
+    val dim = model.centroids.headOption.map(_.length).getOrElse(0)
+    pq.foreach { case (m, _, _) =>
+      require(dim > 0 && dim % m == 0, s"$op: dim $dim not divisible by m=$m")
+    }
+    val assigned = graft.vector.IvfKMeans.assignCells(
+        Collection.conformVector(s.df), "vector", model.centroidTable, scale = 1.0)
+      .drop("dist6") // assignCells names the partition column "cell"
+    rewriteSwap(op) { tmp =>
+      // the data first: its Overwrite clears whatever `tmp` held
+      assigned.write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(tmp)
+      model.save(spark, s"$tmp/_index/ivf")
+      // build params ride with the model so upsertIvf's auto-retrain
+      // (maxDrift) can rebuild with the same configuration
+      writeMarker(s"$tmp/_index/ivf/_build_params", s"$nlist $rounds")
+      pq.foreach { case (m, pqK, pqRounds) =>
+        val subDim = dim / m
+        // M subspace trainings and the encode share one materialization
+        val resid = residuals(assigned, model).persist()
+        try {
+          // codes re-keyed to dense 0..k-1 (the trainer keys by seed id)
+          val cbs = graft.vector.IvfKMeans.trainSubspaces(resid, "id", "__r", m, subDim, pqK, pqRounds)
+            .map(_.zipWithIndex.map { case ((_, v), j) => (j.toLong, v) })
+          pqEncode(resid, cbs, subDim)
+            .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(s"$tmp/_index/pqcodes")
+          cbs.zipWithIndex.flatMap { case (cb, sub) => cb.map { case (code, v) => (sub, code, v) } }
+            .toDF("sub", "code", "cv").coalesce(1)
+            .write.mode(SaveMode.Overwrite).parquet(s"$tmp/_index/pq")
+          writeMarker(s"$tmp/_index/pq/_meta", s"$m $pqK $subDim")
+        } finally { resid.unpersist(); () }
       }
-      // install codes + codebooks staged-then-renamed, both stamped with
-      // the coarse build id (same crash discipline as buildIvf's model dir)
-      val codesTmp = s"$path.__pqcodes.__new"
-      val pqTmp = s"$path.__pq.__new"
-      rmTree(new java.io.File(codesTmp)); rmTree(new java.io.File(pqTmp))
-      wide.write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(codesTmp)
-      writeMarker(s"$codesTmp/_build_id", model.contentId)
-      cbRows.toDF("sub", "code", "cv").coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(pqTmp)
-      writeMarker(s"$pqTmp/_build_id", model.contentId)
-      writeMarker(s"$pqTmp/_meta", s"$m $pqK $subDim")
-      // pessimistically invalidate the LIVE codebook stamp before any
-      // install (upsertIvf's discipline): a re-run with identical
-      // data/nlist/rounds but different m/pqK keeps the same coarse
-      // contentId, so a crash between the two installs would otherwise
-      // leave old codebooks validly stamped against the new codes —
-      // searchIvfPq would silently mix them. The stamp returns with the
-      // pqTmp install below.
-      new java.io.File(s"$path.__pq/_build_id").delete()
-      installDir(codesTmp, s"$path.__pqcodes")
-      installDir(pqTmp, s"$path.__pq")
-      model
-    } finally { resid.unpersist(); () }
+    }
+    model
   }
 
   /** The coarse centroid table as a (cell BIGINT, __cv) frame, for
@@ -834,57 +782,22 @@ class Collection private (
       .select(col("id"), col("cell"),
         array(cbs.indices.map(i => col(s"code$i").cast("int")): _*).as("codes"))
 
-  /** Incremental PQ-codes maintenance for upsertIvf: the codebooks do
-    * not depend on row membership (only on the training distribution),
-    * so an upsert can re-encode JUST the batch with the existing
-    * codebooks and rewrite only the affected cells' code partitions —
-    * the sidecar twin of upsertIvf's own O(touched cells) contract.
-    * Crash discipline: the `.__pq/_build_id` stamp was removed BEFORE
-    * the data commit (pessimistic invalidation — a crash anywhere
-    * leaves searchIvfPq refusing loudly, never serving stale codes) and
-    * is restored here only after the new codes tree is fully installed.
-    */
-  private def maintainPqCodes(model: graft.vector.IvfKMeans.Model,
-                              subDim: Int, cbs: Seq[Seq[(Long, Seq[Double])]],
-                              batch: DataFrame, batchIds: DataFrame,
-                              affected: Seq[Long]): Unit = {
-    val codesDir = s"$path.__pqcodes"
-    val old = spark.read.parquet(codesDir)
-    val cellIn: Column = cellPredicate(old.schema("cell").dataType, "cell", affected)
-    val survivors = old.filter(cellIn)
-      .withColumn("cell", col("cell").cast("long"))
-      .join(batchIds, Seq("id"), "left_anti")
-    val fresh = pqEncode(residuals(batch, model), cbs, subDim)
-    val stage = s"$codesDir.__stage"
-    val next = s"$codesDir.__next"
-    rmTree(new java.io.File(stage)); rmTree(new java.io.File(next))
-    try {
-      survivors.unionByName(fresh)
-        .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(stage)
-      mergeCells(codesDir, stage, next, affected)
-      writeMarker(s"$next/_build_id", model.contentId)
-      installDir(next, codesDir)
-      // the new codes tree is live and consistent: restore the stamp
-      writeMarker(s"$path.__pq/_build_id", model.contentId)
-    } finally { rmTree(new java.io.File(stage)); rmTree(new java.io.File(next)) }
-  }
-
   /** ANN search over a buildIvfPq'd collection: probe the nprobe nearest
     * cells (coarse centroids, driver-side — tiny by construction), build
     * the per-cell ADC distance tables there (nprobe × M × k doubles:
     * residual query vs each codebook entry), then scan ONLY the probed
-    * cells of the CODES sidecar — directory-pruned like searchIvf, but
-    * reading M-byte codes instead of full vectors — and score each row
-    * by M table lookups summed in fixed subspace order. Plans as scan →
-    * project → TakeOrdered: no shuffle, no vector reads. Returns
-    * (id, cell, adist) with adist = approximate squared L2 distance,
-    * ascending.
+    * cells of the version's `_index/pqcodes` — directory-pruned like
+    * searchIvf, but reading M-byte codes instead of full vectors — and
+    * score each row by M table lookups summed in fixed subspace order.
+    * Plans as scan → project → TakeOrdered: no shuffle, no vector reads.
+    * Returns (id, cell, adist) with adist = approximate squared L2
+    * distance, ascending.
     */
   def searchIvfPq(queryVec: Array[Double], k: Int = 5, nprobe: Int = 2,
                   rerank: Int = 0): DataFrame = {
     val s = snapshot()
     val model = s.ivf("searchIvfPq")
-    val (pqK, subDim, cbs) = s.pq("searchIvfPq", model)
+    val (pqK, subDim, cbs) = s.pq("searchIvfPq")
     val m = cbs.length
     require(queryVec.length == m * subDim,
       s"searchIvfPq: query dim ${queryVec.length} != ${m * subDim}")
@@ -909,7 +822,7 @@ class Collection private (
         }
       })
     }.toMap
-    val codes = spark.read.parquet(s"$path.__pqcodes")
+    val codes = spark.read.parquet(s"${s.dir}/_index/pqcodes")
     val cellIn: Column = cellPredicate(codes.schema("cell").dataType, "cell", cells)
     val tbl = element_at(typedLit(tables), col("cell").cast("long"))
     val adist = (0 until m).map(sub =>
@@ -946,7 +859,7 @@ class Collection private (
     * partition column may surface as INT, BIGINT, or STRING depending on
     * layout history, and a cast on the COLUMN side would defeat partition
     * pruning — so the literal side always adopts the column's type.
-    * Shared by every pruned path (upsertIvf, maintainPqCodes,
+    * Shared by every pruned path (upsertIvf data and codes,
     * searchIvfPq rerank, cellsTopK); the copy-pasted blocks this
     * replaces had already omitted the hot search path (r11 review). */
   private def cellPredicate(dt: DataType, cellCol: String, cells: Seq[Long]): Column =
@@ -957,7 +870,7 @@ class Collection private (
     }
 
   /** ANN search over a buildIvf'd collection: the query probes only the
-    * nprobe nearest cells (centroid table read from `.__ivf`, argmin on
+    * nprobe nearest cells (centroid table read from `_index/ivf`, argmin on
     * the driver — it is tiny by construction), and the cell predicate
     * prunes at the DIRECTORY level via searchCells. Scan cost shrinks by
     * ~nprobe/nlist — the IVF contract.
@@ -1074,10 +987,9 @@ object Collection {
     StructField("text", StringType, nullable = true)))
 
   /** S5: create (drop-then-create when overwrite, mirroring
-    * `chunking_strategy_docker.py:131-146`). Overwrite also clears the
-    * index sidecars a previous incarnation left beside the data dir —
-    * a recreated collection must never probe a dead quantizer. The
-    * declared metric persists in a `_metric` marker so `open` in
+    * `chunking_strategy_docker.py:131-146`). Overwrite drops the old
+    * collection dir, every version and index inside it — a recreated
+    * collection never probes a dead quantizer. The declared metric persists in a `_metric` marker so `open` in
     * another process reports the truth, not a hard-coded default. */
   def create(spark: SparkSession, root: String, name: String,
              dim: Int, metric: String = "COSINE", overwrite: Boolean = false): Collection = {
@@ -1100,24 +1012,11 @@ object Collection {
   def list(spark: SparkSession, root: String): Seq[String] = {
     val dir = new java.io.File(root)
     if (!dir.exists) Nil
-    else dir.listFiles.filter(_.isDirectory).map(_.getName)
-      // `<name>.__*` dirs are index sidecars (.__ivf/.__pq/.__pqcodes)
-      // and their stage/aside dirs, not collections
-      .filterNot(_.contains(".__"))
-      .sorted.toSeq
+    else dir.listFiles.filter(_.isDirectory).map(_.getName).sorted.toSeq
   }
 
-  def drop(root: String, name: String): Unit = {
-    rmTree(new java.io.File(s"$root/$name"))
-    // index sidecars (.__ivf/.__pq/.__pqcodes) and crashed stage dirs
-    // live BESIDE the collection dir — orphaning them leaks disk and
-    // traps a recreated collection into probing a dead quantizer via
-    // the unchecked legacy-compat path (r11 review)
-    Option(new java.io.File(root).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(_.getName.startsWith(s"$name.__"))
-      .foreach(rmTree)
-  }
+  /** Removes the collection: its dir holds every version and index. */
+  def drop(root: String, name: String): Unit = rmTree(new java.io.File(s"$root/$name"))
 
   /** Marker commit = tmp + ATOMIC_MOVE — the one way every marker and
     * the `_current` pointer are written: a crash mid-write can never

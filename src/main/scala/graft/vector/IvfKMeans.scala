@@ -70,19 +70,6 @@ object IvfKMeans {
       centroidTable.toDF("cell", "centroid")
         .coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir)
     }
-
-    /** Deterministic content hash of the quantizer — `Collection.buildIvf`
-      * stamps it into both the rewritten data dir and the model dir so a
-      * crash between the two installs is caught loudly at load time
-      * instead of silently probing cells with mismatched centroids. */
-    def contentId: String = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val bb = java.nio.ByteBuffer.allocate(8)
-      def put(l: Long): Unit = { bb.clear(); bb.putLong(l); md.update(bb.array()) }
-      cells.foreach(put)
-      centroids.foreach(_.foreach(x => put(java.lang.Double.doubleToLongBits(x))))
-      md.digest().map("%02x".format(_)).mkString
-    }
   }
 
   def load(spark: SparkSession, dir: String): Model = {

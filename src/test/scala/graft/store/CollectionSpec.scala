@@ -273,8 +273,8 @@ class CollectionSpec extends SparkSpec {
       .toDF("id", "text")
     c.insert(TextEmbed.withEmbed(rows, "text", "vector").select("id", "vector", "text"))
     c.buildIvf(nlist = 2, rounds = 2)
-    // the cloned v1 carries the _ivf_build stamp, so without the matching
-    // .__ivf sidecar searchIvf would refuse with "interrupted build"
+    // the clone's v1 links the source version's _index/ along with its
+    // data, so searchIvf answers from the clone without a rebuild
     val clone = c.shallowClone("civ2")
     val qv = TextEmbed.embedScala("document about topic number 7")
     val hits = clone.searchIvf(qv, k = 3, nprobe = 2)

@@ -11,8 +11,12 @@ import org.apache.spark.sql.functions._
   *   - applyStreamBatch with several events per key in one micro-batch
   *     (upsert's unique-id require used to kill the stream and wedge it
   *     on replay; now compacts deterministically)
-  *   - drop / create(overwrite) clearing index sidecars (a recreated
-  *     collection must never probe its predecessor's quantizer)
+  *   - drop / create(overwrite) clearing the in-version index (a
+  *     recreated collection must never probe its predecessor's quantizer)
+  *   - insert / insertPartitioned refusing a layout they would hide rows
+  *     in (a flat file beside `cell=` dirs, `cell=` dirs beside flat files)
+  *   - leftovers of a crashed index build (building dir, uncommitted
+  *     version) never read and swept by the next commit
   *   - metric persistence across open() (was hard-coded "COSINE")
   *   - searchIvfPq on a degenerate subspace whose codebook trains to
   *     fewer than pqK entries (the ADC table build crashed)
@@ -76,14 +80,14 @@ class StoreHardeningSpec extends SparkSpec {
     val c = Collection.create(spark, root, "ivf1", dim = 8, overwrite = true)
     c.insert(vecs(40))
     c.buildIvf(nlist = 4, rounds = 2)
-    assert(new java.io.File(s"$root/ivf1.__ivf").isDirectory)
+    val index = new java.io.File(s"${c.dataDir}/_index/ivf")
+    assert(index.isDirectory)
     Collection.drop(root, "ivf1")
-    assert(!new java.io.File(s"$root/ivf1.__ivf").exists,
-      "drop must remove the quantizer sidecar")
+    assert(!index.exists, "drop must remove the quantizer")
     val c2 = Collection.create(spark, root, "ivf1", dim = 8, overwrite = true)
     c2.insert(vecs(10))
     val e = intercept[Exception] { c2.searchIvf(Array.fill(8)(0.1), k = 2) }
-    assert(!new java.io.File(s"$root/ivf1.__ivf").exists &&
+    assert(!new java.io.File(s"${c2.dataDir}/_index/ivf").exists &&
       e.getMessage != null, "fresh collection must refuse IVF search, not probe stale centroids")
   }
 
@@ -139,35 +143,52 @@ class StoreHardeningSpec extends SparkSpec {
     assert(re.df.count() === 2)
   }
 
-  test("leftovers of a crashed sidecar install: rebuild succeeds, list hides them, drop removes them") {
-    val c = Collection.create(spark, root, "crashSide", dim = 8, overwrite = true)
-    c.insert(vecs(60))
-    // what a JVM killed mid-install leaves beside the collection: staged
-    // quantizer and codes dirs, and installDir's aside copy of `.__ivf`
-    val planted = Seq(".__ivf.__new", ".__ivf.__old", ".__pqcodes.__new")
-    def plant(): Unit = planted.foreach { side =>
-      spark.range(2).toDF("junk").write.mode("overwrite").parquet(s"$root/crashSide$side")
-    }
-    def beside(): Set[String] = new java.io.File(root).listFiles()
-      .map(_.getName).filter(_.startsWith("crashSide.__")).toSet
-    plant()
-    assert(Collection.list(spark, root).contains("crashSide"))
-    assert(Collection.list(spark, root).forall(n => !n.startsWith("crashSide.")),
-      "stage/aside dirs are not collections")
-    c.buildIvfPq(nlist = 3, m = 2, pqK = 4, rounds = 2, pqRounds = 2)
+  test("leftovers of a crashed index build: readers keep the committed index, the next build sweeps them, drop removes everything") {
+    val c = Collection.create(spark, root, "crashIdx", dim = 8, overwrite = true)
+    c.insert(vecs(40))
+    c.buildIvf(nlist = 3, rounds = 2)
+    val v = c.history().map(_.version).max
+    // what a JVM killed mid-build leaves: a building dir with part of an
+    // index, and an installed but uncommitted v<N+1> (data + index junk)
+    def junk(dir: String): Unit =
+      spark.range(2).toDF("junk").write.mode("overwrite").parquet(dir)
+    junk(s"$root/crashIdx/.v${v + 1}__building/_index/ivf")
+    junk(s"$root/crashIdx/v${v + 1}")
+    junk(s"$root/crashIdx/v${v + 1}/_index/ivf")
     val qv = Array.tabulate(8)(d => if (d < 4) 5.0 else 1.0)
+    assert(c.searchIvf(qv, k = 3).count() === 3, "the committed v<N> answers")
+    c.buildIvfPq(nlist = 3, m = 2, pqK = 4, rounds = 2, pqRounds = 2)
     assert(c.searchIvf(qv, k = 3).count() === 3)
     assert(c.searchIvfPq(qv, k = 3).count() === 3)
-    val sidecars = Set("crashSide.__ivf", "crashSide.__pq", "crashSide.__pqcodes")
-    assert(beside() === sidecars, "a successful install leaves no stage or aside dir")
-    // upsertIvf maintains the PQ codes through the same stage + install
     c.upsertIvf(vecs(5).withColumn("id", col("id") + 1000))
     assert(c.searchIvfPq(qv, k = 3).count() === 3)
-    assert(beside() === sidecars, "a successful upsertIvf leaves no stage or aside dir")
-    plant()
-    Collection.drop(root, "crashSide")
-    assert(beside().isEmpty, "drop must remove sidecars and crash leftovers")
-    assert(!Collection.list(spark, root).contains("crashSide"))
+    assert(c.df.count() === 45)
+    assert(new java.io.File(root).listFiles().forall(!_.getName.startsWith("crashIdx.")),
+      "nothing is written beside the collection")
+    Collection.drop(root, "crashIdx")
+    assert(!new java.io.File(s"$root/crashIdx").exists)
+    assert(!Collection.list(spark, root).contains("crashIdx"))
+  }
+
+  test("append paths refuse a layout they would hide rows in") {
+    val ivf = Collection.create(spark, root, "hideIvf", dim = 8, overwrite = true)
+    ivf.insert(vecs(30))
+    ivf.buildIvf(nlist = 3, rounds = 2)
+    // a flat file beside `cell=` dirs is invisible to partition discovery
+    val e1 = intercept[IllegalArgumentException] {
+      ivf.insert(vecs(2).withColumn("id", col("id") + 100).withColumn("cell", lit(0L)))
+    }
+    assert(e1.getMessage.contains("upsertIvf") && e1.getMessage.contains("insertPartitioned"),
+      e1.getMessage)
+    assert(ivf.df.count() === 30)
+    // `cell=` dirs beside flat files hide the flat rows
+    val flat = Collection.create(spark, root, "hideFlat", dim = 8, overwrite = true)
+    flat.insert(vecs(30))
+    intercept[IllegalArgumentException] {
+      flat.insertPartitioned(vecs(2).withColumn("id", col("id") + 100)
+        .withColumn("cell", lit(0L)), "cell")
+    }
+    assert(flat.df.count() === 30)
   }
 
   test("searchIvfPq survives a degenerate subspace whose codebook has fewer than pqK entries") {

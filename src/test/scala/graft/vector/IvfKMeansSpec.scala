@@ -126,26 +126,35 @@ class IvfKMeansSpec extends SparkSpec {
     assert(assigned === Map(0L -> 2L, 1L -> 9L, 2L -> 2L, 3L -> 5L))
   }
 
-  test("buildIvf stamps data+model with one build id; a mismatched pair fails loudly at search") {
-    Collection.drop(root, "civf_stamp")
-    val c = Collection.create(spark, root, "civf_stamp", dim, overwrite = true)
+  test("an index commits inside its snapshot") {
+    Collection.drop(root, "civf_snap")
+    val c = Collection.create(spark, root, "civf_snap", dim, overwrite = true)
     c.insert(clustered.withColumn("text", concat(lit("doc "), col("id"))))
     val model = c.buildIvf(nlist = 3, rounds = 2)
-    val dataStamp = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"${c.dataDir}/_ivf_build")), "UTF-8")
-    val modelStamp = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$root/civf_stamp.__ivf/_build_id")), "UTF-8")
-    assert(dataStamp === model.contentId && modelStamp === model.contentId)
+    val stored = IvfKMeans.load(spark, s"${c.dataDir}/_index/ivf")
+    assert(stored.cells.toSeq === model.cells.toSeq)
+    assert(stored.centroids.map(_.toSeq).toSeq === model.centroids.map(_.toSeq).toSeq)
     val qv = Array.fill(dim)(0.0); qv(1) = 10.0
-    assert(c.searchIvf(qv, k = 1).count() === 1) // consistent pair searches fine
+    assert(c.searchIvf(qv, k = 1).count() === 1)
 
-    // simulate the interrupted-build state: data stamped by a NEWER build
-    // than the installed model — search must refuse, not probe wrong cells
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"${c.dataDir}/_ivf_build"),
-      "deadbeef".getBytes("UTF-8"))
-    val e = intercept[IllegalArgumentException](c.searchIvf(qv, k = 1))
-    assert(e.getMessage.contains("mismatch"))
+    // a flat rewrite commits a version without `_index/`: every IVF path
+    // refuses it instead of probing (or merging into) a layout it no
+    // longer describes
+    c.delete("id = 0")
+    val one = Seq((100L, qv.toSeq, "new doc")).toDF("id", "vector", "text")
+    val qs = Seq((0L, qv.toSeq)).toDF("qid", "qv")
+    // (searchIvfPq names buildIvf too: its coarse quantizer is gone first)
+    for (call <- Seq(() => c.searchIvf(qv, k = 1).collect(),
+        () => c.searchIvfBatch(qs, k = 1).collect(),
+        () => c.searchIvfPq(qv, k = 1).collect(), () => c.upsertIvf(one))) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("has no IVF index — run buildIvf"), e.getMessage)
+    }
+    assert(c.df.count() === 29)
+
+    c.buildIvf(nlist = 3, rounds = 2)
+    c.upsertIvf(one)
+    assert(c.df.count() === 30)
   }
 
   test("upsertIvf: assigns to existing centroids, rewrites only touched cells, counts drift") {
@@ -258,8 +267,7 @@ class IvfKMeansSpec extends SparkSpec {
     val c = Collection.create(spark, root, "cdrift", dim, overwrite = true)
     c.insert(clustered.withColumn("text", concat(lit("doc "), col("id"))))
     c.buildIvf(nlist = 3, rounds = 3)
-    def stamp = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$root/cdrift.__ivf/_build_id")), "UTF-8")
+    def stamp = IvfKMeans.load(spark, s"${c.dataDir}/_index/ivf").centroids.map(_.toSeq).toSeq
     val stamp0 = stamp
 
     // below the threshold: one moved row over 30 (3.3%) — no retrain
