@@ -14,7 +14,7 @@ import graft.functions.{VectorKernels, VectorOps}
   *     `scripts/milvus_db.py:77-97`) is a REST workaround — a full scan
   *     is native here;
   *   - batched insert + flush (`chunking_strategy_cloud.py:139-153`,
-  *     batch_size=100) is what partitioned Parquet writes already do;
+  *     batch_size=100) is one atomic version commit per batch here;
   *   - the quadratic re-insert bug (`scripts/prepare_data.py:79-95`,
   *     growing list re-inserted every loop) is intentionally NOT
   *     reproduced — each row is written once.
@@ -24,8 +24,10 @@ import graft.functions.{VectorKernels, VectorOps}
   * shuffle of the collection); `getByIds` is an IN-filter pushed to
   * parquet. On a cluster the same layout bucket-prunes.
   *
-  * Everything a collection stores lives under `<root>/<name>`. An IVF or
-  * IVF_PQ index lives inside the snapshot version it describes, under
+  * Everything a collection stores lives under `<root>/<name>`. Every
+  * batch write, from `create`'s zero-row seed `v1` on, commits a new
+  * `v<N>` dir, so a committed version never changes. An IVF or IVF_PQ
+  * index lives inside the snapshot version it describes, under
   * `v<N>/_index/` (`ivf/`, `pq/`, `pqcodes/`), like Milvus keeping each
   * index with the segments it indexes: one pointer flip commits data and
   * index together, and a version without `_index/` has no index.
@@ -54,8 +56,8 @@ class Collection private (
     * and on an object store directory renames are not atomic at all).
     * One superseded snapshot is retained for readers planned against it
     * (vacuum horizon 1); older ones are removed at the next commit.
-    * A collection with no pointer reads the root dir itself — the legacy
-    * layout that `create`, plain `insert` and the streaming sink produce.
+    * A dir with no pointer is either absent (never created) or a
+    * `streamingInsert` sink dir, which is read at its root.
     */
   private def currentVersion: Option[Int] =
     readMarker(s"$path/_current").map(_.stripPrefix("v").trim.toInt)
@@ -104,7 +106,7 @@ class Collection private (
   private[store] def snapshot(): Snapshot =
     currentVersion.fold(new Snapshot(None, path))(v => new Snapshot(Some(v), s"$path/v$v"))
 
-  /** The live data directory (root for the legacy layout, else `v<N>`)
+  /** The live data directory (`v<N>`, or a stream sink's root)
     * and its rows. For outside callers: each call resolves the pointer
     * and `df` lists the files again, while engine methods take one
     * `Snapshot` per call. */
@@ -129,10 +131,11 @@ class Collection private (
     * scans), which is renamed to `v<N>` and then committed by the atomic
     * `_current` pointer flip. A crash before the flip leaves the old
     * snapshot live and intact; a concurrent reader sees old-or-new,
-    * never neither. NOTE: the new version holds only what `write` puts
-    * in it, so a rewrite that does not maintain an index drops it (and
-    * an insertPartitioned hive layout): only buildIvf, buildIvfPq and
-    * upsertIvf write `_index/`; the other rewrites commit an unindexed
+    * never neither. Every batch write commits through here, so no
+    * write but a marker ever lands in a committed `v<N>`. NOTE: the new
+    * version holds only what `write` puts in it, so a rewrite that does
+    * not maintain an index drops it: only buildIvf, buildIvfPq and
+    * upsertIvf write `_index/`; the other writes commit an unindexed
     * version that the IVF paths refuse until the next buildIvf.
     */
   private[store] def rewriteSwap(op: String)(write: String => Unit): Unit = {
@@ -213,21 +216,13 @@ class Collection private (
     writeMarker(s"$path/_retain", n.toString)
   }
 
-  /** Drop snapshots older than the newest `keep`, including the legacy
-    * root-file layout once `keep` newer versions exist. Called by every
+  /** Drop the `v<N>` dirs older than the newest `keep`. Called by every
     * commit with `keep = retention`; callable directly as
     * `vacuum(keepLast = k)` to trim history immediately. */
-  private def autoVacuum(committed: Int, keep: Int = retention): Unit = {
-    val dir = new java.io.File(path)
-    Option(dir.listFiles()).getOrElse(Array.empty[java.io.File]).foreach { f =>
-      val n = f.getName
-      if (n.matches("v\\d+") && n.stripPrefix("v").toInt <= committed - keep) rmTree(f)
-      // legacy v0 = loose files/cell dirs at the root: clear once `keep`
-      // real versions supersede it
-      else if (committed >= keep && !n.matches("v\\d+") &&
-        !n.startsWith("_") && !n.startsWith(".")) rmTree(f)
-    }
-  }
+  private def autoVacuum(committed: Int, keep: Int = retention): Unit =
+    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(f => f.getName.matches("v\\d+") && f.getName.stripPrefix("v").toInt <= committed - keep)
+      .foreach(rmTree)
 
   /** Trim snapshot history NOW to the newest `keepLast` versions (the
     * live snapshot is always retained; `keepLast` is floored at 1).
@@ -314,13 +309,16 @@ class Collection private (
     (before.size, parquetFiles(new java.io.File(snapshot().dir)).size)
   }
 
-  /** Every data parquet file under `d`, partition dirs included; like
-    * Spark's own listing it skips `_`/`.`-prefixed dirs (`_index/`). */
+  /** Spark's listing rule: a `_`/`.`-prefixed child (`_index/`, a
+    * marker, `_SUCCESS`, a checksum) is not data. */
+  private def isData(f: java.io.File): Boolean =
+    !f.getName.startsWith("_") && !f.getName.startsWith(".")
+
+  /** Every data parquet file under `d`, partition dirs included. */
   private def parquetFiles(d: java.io.File): Seq[java.io.File] = {
     val fs = Option(d.listFiles()).map(_.toSeq).getOrElse(Nil)
     fs.filter(_.isFile).filter(_.getName.endsWith(".parquet")) ++
-      fs.filter(f => f.isDirectory && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-        .flatMap(parquetFiles)
+      fs.filter(f => f.isDirectory && isData(f)).flatMap(parquetFiles)
   }
 
   /** Data-layout clustering: rewrite the collection range-partitioned and
@@ -357,51 +355,52 @@ class Collection private (
     parquetFiles(new java.io.File(snapshot().dir)).size // fresh snapshot: the new version
   }
 
-  /** S7/S8: append entity rows. Expects id/vector/text(+metadata) columns.
-    * Schema-on-write like the Milvus server (`scripts/milvus_db.py:61-68`
-    * inserts are validated server-side): vectors conform to the declared
-    * FLOAT_VECTOR element type so the parquet directory stays
-    * schema-consistent regardless of the caller's float/double arrays.
+  /** S7/S8: append entity rows as one new version. Expects
+    * id/vector/text(+metadata) columns. Schema-on-write like the Milvus
+    * server (`scripts/milvus_db.py:61-68` inserts are validated
+    * server-side): vectors conform to the declared FLOAT_VECTOR element
+    * type so every version stays schema-consistent regardless of the
+    * caller's float/double arrays.
     */
-  def insert(rows: DataFrame): Unit = {
-    requireNotStreamManaged("insert")
+  def insert(rows: DataFrame): Unit = append("insert", rows, cellCol = None)
+
+  /** The insert/insertPartitioned body: one commit of the batch plus hard
+    * links to the data of the version it read (O(batch) write IO). While
+    * the collection is empty or was never created, the batch DEFINES the
+    * schema, but only by WIDENING the declared columns, and links nothing;
+    * after that the schema is FIXED, since a mixed-schema version would
+    * read whichever footer Spark samples first. */
+  private def append(op: String, rows: DataFrame, cellCol: Option[String]): Unit = {
+    requireNotStreamManaged(op)
     val conformed = Collection.conformVector(rows)
-    // schema-on-first-insert: `create` seeds a zero-row file with the
-    // canonical (id, vector, text) schema; if the first real batch
-    // carries metadata columns, appending would leave a mixed-schema
-    // directory where reads surface whichever footer is sampled first.
-    // While the collection is still empty, the batch DEFINES the schema —
-    // but only by WIDENING the declared column set (a narrower batch
-    // would silently drop declared columns), and through rewriteSwap
-    // (a direct Overwrite of a legacy-layout root would delete the
-    // `_retain`/`_stream_batch` markers living beside the data, and a
-    // concurrent reader could catch the directory half-written).
     val s = snapshot()
-    // a file appended beside `k=v` dirs is invisible to partition
-    // discovery: the rows would be written and never read
-    require(s.partitionCols.isEmpty,
-      s"insert: $name is partitioned by [${s.partitionCols.mkString(",")}] — " +
-        "append with upsertIvf (an IVF layout) or insertPartitioned")
+    val exists = new java.io.File(s.dir).isDirectory
+    lazy val empty = !exists || s.df.isEmpty
+    // a flat file beside `k=v` dirs, or `k=v` dirs beside flat files (or
+    // beside another column's dirs), hides rows from partition discovery
+    cellCol match {
+      case None => require(s.partitionCols.isEmpty,
+        s"insert: $name is partitioned by [${s.partitionCols.mkString(",")}] — " +
+          "append with upsertIvf (an IVF layout) or insertPartitioned")
+      case Some(c) => require(s.partitionCols == Set(c) || s.partitionCols.isEmpty && empty,
+        s"insertPartitioned: $name holds rows partitioned by " +
+          s"[${s.partitionCols.mkString(",")}], not [$c] — a mixed layout would hide them")
+    }
     val batchCols = conformed.schema.fieldNames.toSet
-    val declared = s.df.schema.fieldNames.toSet
-    if (batchCols != declared && s.df.isEmpty) {
+    val declared = if (exists) s.df.schema.fieldNames.toSet else Set.empty[String]
+    val redefine = batchCols != declared && empty
+    if (redefine) {
       val narrows = declared -- batchCols
       require(narrows.isEmpty,
-        s"insert: first batch is missing declared column(s) [${narrows.mkString(",")}] " +
+        s"$op: first batch is missing declared column(s) [${narrows.mkString(",")}] " +
           s"of $name — schema redefinition on an empty collection may only widen")
-      rewriteSwap("insert") { tmp =>
-        conformed.write.mode(SaveMode.Overwrite).parquet(tmp)
-      }
-    } else {
-      // once the collection is non-empty its schema is FIXED: appending a
-      // batch with different columns would create the mixed-schema
-      // directory the comment above warns about (reads then surface
-      // whichever footer Spark samples) — refuse loudly (r11 review)
-      require(batchCols == declared,
-        s"insert: batch schema [${conformed.schema.fieldNames.mkString(",")}] does not " +
-          s"match $name's declared [${s.df.schema.fieldNames.mkString(",")}] — " +
-          "conform the batch (or rebuild the collection) before appending")
-      conformed.write.mode(SaveMode.Append).parquet(s.dir)
+    } else require(batchCols == declared,
+      s"$op: batch schema [${conformed.schema.fieldNames.mkString(",")}] does not " +
+        s"match $name's declared [${s.df.schema.fieldNames.mkString(",")}] — " +
+        "conform the batch (or rebuild the collection) before appending")
+    rewriteSwap(op) { tmp =>
+      conformed.write.mode(SaveMode.Overwrite).partitionBy(cellCol.toSeq: _*).parquet(tmp)
+      if (!redefine) linkCells(s.dir, tmp)
     }
   }
 
@@ -559,16 +558,13 @@ class Collection private (
     }
   }
 
-  /** Hard-link `src`'s `cell=` dirs other than the `affected` ones into
-    * `dst`, beside the affected cells just written there; a cell all of
-    * whose rows were removed has no dir in `dst` at all. Keeps upsertIvf
-    * (data and PQ codes alike) at O(touched cells) write IO. */
-  private def linkCells(src: String, dst: String, affected: Seq[Long]): Unit = {
-    val rewritten = affected.map(c => s"cell=$c").toSet
+  /** Hard-link `src`'s data children (`isData`) other than `except` into
+    * `dst`, beside what was just written there: `_index/`, `_ivf_drift`
+    * and `_SUCCESS` never carry. */
+  private def linkCells(src: String, dst: String, except: Set[String] = Set.empty): Unit =
     Option(new java.io.File(src).listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("cell=") && !rewritten(f.getName))
+      .filter(f => isData(f) && !except(f.getName))
       .foreach(f => linkTree(f, new java.io.File(dst, f.getName)))
-  }
 
   /** Incremental IVF maintenance (Milvus's actual behavior for inserts
     * into an IVF collection): batch rows are assigned to the nearest
@@ -619,6 +615,7 @@ class Collection private (
       val affected: Seq[Long] = oldMatched.select(col("old_cell").as("c"))
         .union(batch.select(col("cell").as("c")))
         .distinct().collect().map(_.getLong(0)).toSeq
+      val rewritten = affected.map(c => s"cell=$c").toSet
       oldMatched.unpersist()
       // the survivors of `from`'s affected cells plus `fresh` (the batch,
       // or its codes): exactly the affected cells of the next version
@@ -630,14 +627,14 @@ class Collection private (
       val prior = readMarker(s"${s.dir}/_ivf_drift").map(_.toLong).getOrElse(0L)
       rewriteSwap("upsertIvf") { tmp =>
         affectedCells(s.df, batch).write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(tmp)
-        linkCells(s.dir, tmp, affected)
+        linkCells(s.dir, tmp, rewritten)
         linkTree(new java.io.File(s"${s.dir}/_index/ivf"), new java.io.File(s"$tmp/_index/ivf"))
         pq.foreach { case (_, subDim, cbs) =>
           linkTree(new java.io.File(s"${s.dir}/_index/pq"), new java.io.File(s"$tmp/_index/pq"))
           val codes = s"${s.dir}/_index/pqcodes"
           affectedCells(spark.read.parquet(codes), pqEncode(residuals(batch, model), cbs, subDim))
             .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(s"$tmp/_index/pqcodes")
-          linkCells(codes, s"$tmp/_index/pqcodes", affected)
+          linkCells(codes, s"$tmp/_index/pqcodes", rewritten)
         }
         writeMarker(s"$tmp/_ivf_drift", (prior + moved + (nNew - matched)).toString)
       }
@@ -670,19 +667,10 @@ class Collection private (
     * (e.g. a coarse-quantizer centroid id). `searchCells` then prunes to
     * the probed cells AT THE SCAN — the 100 TB shape where nprobe/nlist
     * of the data is read. The collection must already be partitioned by
-    * `cellCol`, or be empty. */
-  def insertPartitioned(rows: DataFrame, cellCol: String): Unit = {
-    requireNotStreamManaged("insertPartitioned")
-    val s = snapshot()
-    // `k=v` dirs appended beside flat files (or beside another column's
-    // dirs) hide the rows already there from partition discovery
-    require(s.partitionCols == Set(cellCol) || s.partitionCols.isEmpty &&
-        (!new java.io.File(s.dir).exists || s.df.isEmpty),
-      s"insertPartitioned: $name holds rows partitioned by " +
-        s"[${s.partitionCols.mkString(",")}], not [$cellCol] — a mixed layout would hide them")
-    Collection.conformVector(rows)
-      .write.mode(SaveMode.Append).partitionBy(cellCol).parquet(s.dir)
-  }
+    * `cellCol`, or be empty. Like every non-index write, the committed
+    * version has no `_index/` (upsertIvf keeps the index). */
+  def insertPartitioned(rows: DataFrame, cellCol: String): Unit =
+    append("insertPartitioned", rows, Some(cellCol))
 
   /** Trained IVF index build (reference S11: IVF_FLAT with nlist k-means
     * centroids, `src/archive/chunking_strategy_docker.py:161-171`): runs
@@ -987,16 +975,20 @@ object Collection {
     StructField("text", StringType, nullable = true)))
 
   /** S5: create (drop-then-create when overwrite, mirroring
-    * `chunking_strategy_docker.py:131-146`). Overwrite drops the old
-    * collection dir, every version and index inside it — a recreated
-    * collection never probes a dead quantizer. The declared metric persists in a `_metric` marker so `open` in
+    * `chunking_strategy_docker.py:131-146`): a new collection commits the
+    * zero-row `entitySchema` seed as `v1`, an existing one is left alone.
+    * Overwrite drops the old collection dir, every version and index
+    * inside it — a recreated collection never probes a dead quantizer.
+    * The declared metric persists in a `_metric` marker so `open` in
     * another process reports the truth, not a hard-coded default. */
   def create(spark: SparkSession, root: String, name: String,
              dim: Int, metric: String = "COSINE", overwrite: Boolean = false): Collection = {
     if (overwrite) drop(root, name)
     val c = new Collection(spark, root, name, metric)
-    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], entitySchema(dim))
-    empty.write.mode(if (overwrite) SaveMode.Overwrite else SaveMode.Ignore).parquet(s"$root/$name")
+    if (!new java.io.File(s"$root/$name").exists) {
+      val seed = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], entitySchema(dim))
+      c.rewriteSwap("create")(tmp => seed.write.parquet(tmp))
+    }
     val marker = s"$root/$name/_metric"
     if (!new java.io.File(marker).exists) writeMarker(marker, metric)
     c

@@ -34,12 +34,14 @@ class CollectionSpec extends SparkSpec {
   test("single-writer guard: a raced committed snapshot refuses loudly, never deleted (r12)") {
     Collection.drop(root, "crace")
     val c = Collection.create(spark, root, "crace", TextEmbed.DefaultDim, overwrite = true)
-    c.insert(seeded) // appends, no version yet: the first rewrite targets v1
+    c.insert(seeded)
+    // both writers read the insert's version: each targets the one after it
+    val fast = c.history().map(_.version).max + 1
     val started = new java.util.concurrent.CountDownLatch(1)
     val release = new java.util.concurrent.CountDownLatch(1)
     @volatile var thrown: Option[Throwable] = None
-    // the "slow" writer: reads its base version (targets v1), then stalls
-    // inside its write callback while the fast writer commits v1
+    // the "slow" writer: reads its base version (targets v$fast), then
+    // stalls inside its write callback while the fast writer commits it
     val slow = new Thread(() => {
       try c.rewriteSwap("race-test") { tmp =>
         started.countDown()
@@ -50,7 +52,7 @@ class CollectionSpec extends SparkSpec {
     }, "race-slow-writer")
     slow.start()
     started.await()
-    c.delete("id = 0") // the fast writer: copy-on-write, commits v1
+    c.delete("id = 0") // the fast writer: copy-on-write, commits v$fast
     val fastRows = c.df.count()
     release.countDown()
     slow.join(30000)
@@ -60,7 +62,7 @@ class CollectionSpec extends SparkSpec {
       s"expected IllegalStateException, got $thrown")
     assert(thrown.get.getMessage.contains("concurrent writer"))
     // ...and the fast writer's committed snapshot must be intact
-    assert(new java.io.File(s"$root/crace/v1").exists, "committed v1 was deleted")
+    assert(new java.io.File(s"$root/crace/v$fast").exists, s"committed v$fast was deleted")
     assert(c.df.count() === fastRows)
   }
 
@@ -68,14 +70,15 @@ class CollectionSpec extends SparkSpec {
     Collection.drop(root, "crash")
     val c = Collection.create(spark, root, "crash", TextEmbed.DefaultDim, overwrite = true)
     c.insert(seeded)
-    // simulate a crash between rename and pointer flip: v1 exists with
-    // junk, but _current was never written
-    val orphan = new java.io.File(s"$root/crash/v1")
+    val next = c.history().map(_.version).max + 1
+    // simulate a crash between rename and pointer flip: v<next> exists
+    // with junk, but _current was never written
+    val orphan = new java.io.File(s"$root/crash/v$next")
     assert(orphan.mkdirs())
     java.nio.file.Files.write(orphan.toPath.resolve("junk"), Array[Byte](1, 2, 3))
-    c.delete("id = 0") // must clear the orphan and commit a real v1
+    c.delete("id = 0") // must clear the orphan and commit a real v<next>
     assert(c.df.count() === 3)
-    assert(!new java.io.File(s"$root/crash/v1/junk").exists, "orphan junk survived the install")
+    assert(!new java.io.File(s"$root/crash/v$next/junk").exists, "orphan junk survived the install")
   }
 
   test("getByIds is a point lookup") {
@@ -309,20 +312,49 @@ class CollectionSpec extends SparkSpec {
     c.setRetention(10)
     val rows = (0L until 10L).map(i => (i, s"doc number $i")).toDF("id", "text")
     c.insert(TextEmbed.withEmbed(rows, "text", "vector").select("id", "vector", "text"))
-    c.delete("id >= 100") // no-op delete just to mint snapshot v1 of the insert
-    // v2: remove 0-1, change 5, add 20
+    val v = c.history().map(_.version).max // the insert's snapshot
+    // later versions: remove 0-1, change 5, add 20
     c.delete("id < 2")
     val batch = TextEmbed.withEmbed(
       Seq((5L, "doc number five REVISED"), (20L, "a brand new doc"))
         .toDF("id", "text"), "text", "vector").select("id", "vector", "text")
     c.upsert(batch)
     val cur = c.history().map(_.version).max
-    val d = c.diffVersions(1, cur).collect()
+    val d = c.diffVersions(v, cur).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(d(0L) === "removed" && d(1L) === "removed")
     assert(d(5L) === "changed")
     assert(d(20L) === "added")
     assert(d.size === 4, s"unexpected diff rows: $d") // untouched keys absent
+  }
+
+  test("a committed snapshot never changes: insert commits a new version") {
+    Collection.drop(root, "cimm")
+    val c = Collection.create(spark, root, "cimm", TextEmbed.DefaultDim, overwrite = true)
+    c.setRetention(10)
+    val rows = (0L until 20L).map(i => (i, s"doc number $i")).toDF("id", "text")
+    c.insert(TextEmbed.withEmbed(rows, "text", "vector").select("id", "vector", "text"))
+    c.delete("id >= 10")
+    val v = c.history().map(_.version).max // 10 rows
+    def files(): Map[String, Seq[String]] = {
+      def walk(f: java.io.File, rel: String): Seq[String] =
+        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
+          .flatMap(x => walk(x, s"$rel/${x.getName}"))
+        else Seq(rel)
+      new java.io.File(s"$root/cimm").listFiles()
+        .filter(f => f.isDirectory && f.getName.matches("v\\d+"))
+        .map(f => f.getName -> walk(f, "").sorted).toMap
+    }
+    val before = files()
+    val extra = Seq((100L, "late doc one"), (101L, "late doc two")).toDF("id", "text")
+    c.insert(TextEmbed.withEmbed(extra, "text", "vector").select("id", "vector", "text"))
+    assert(c.readVersion(v).count() === 10, "the insert changed a committed version")
+    val after = files()
+    before.foreach { case (dir, fs) => assert(after.get(dir) === Some(fs), s"$dir changed") }
+    assert(c.df.count() === 12)
+    val cur = c.history().map(_.version).max
+    val d = c.diffVersions(v, cur).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(d === Map(100L -> "added", 101L -> "added"))
   }
 
   test("rewrites commit atomically: concurrent readers see old or new snapshot, never neither") {
@@ -332,6 +364,7 @@ class CollectionSpec extends SparkSpec {
     // row count identifies the snapshot: 40 → 30 → 20 → 10
     val rows = (0L until 40L).map(i => (i, s"doc number $i")).toDF("id", "text")
     c.insert(TextEmbed.withEmbed(rows, "text", "vector").select("id", "vector", "text"))
+    val finalVersion = c.history().map(_.version).max + 3 // three delete commits follow
     val legalCounts = Set(40L, 30L, 20L, 10L)
 
     import scala.concurrent.{Await, Future}
@@ -359,10 +392,10 @@ class CollectionSpec extends SparkSpec {
     // that surfaces as a FileNotFound-class error and is outside the
     // contract, not an atomicity violation. But the excuse is narrow:
     // the error must reference a snapshot vacuum actually removed (a
-    // version ≥ 2 commits behind the final pointer, or the legacy root
-    // layout) — a commit-ordering bug exposing a HALF-INSTALLED current
-    // version also surfaces as missing files and must still fail.
-    val finalVersion = 3 // three delete commits; insert is the legacy root layout
+    // version ≥ 2 commits behind the final pointer) — a commit-ordering
+    // bug exposing a HALF-INSTALLED current version also surfaces as
+    // missing files and must still fail, and so does an error that names
+    // no version at all.
     def isVacuumRace(e: Throwable): Boolean =
       Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists { t =>
         val fnf = t.isInstanceOf[java.io.FileNotFoundException] ||
@@ -371,8 +404,7 @@ class CollectionSpec extends SparkSpec {
               m.contains("PATH_NOT_FOUND"))
         fnf && Option(t.getMessage).exists { m =>
           val vs = "/v(\\d+)/".r.findAllMatchIn(m).map(_.group(1).toInt).toList
-          if (vs.nonEmpty) vs.forall(_ <= finalVersion - 2)
-          else m.contains("catomic") // legacy root files, no v<N> in path
+          vs.nonEmpty && vs.forall(_ <= finalVersion - 2)
         }
       }
     val hard = errors.filterNot(isVacuumRace)
@@ -388,7 +420,7 @@ class CollectionSpec extends SparkSpec {
     // vacuum horizon: exactly the superseded snapshot remains on disk
     val vdirs = new java.io.File(s"$root/catomic").listFiles()
       .filter(f => f.isDirectory && f.getName.matches("v\\d+")).map(_.getName).sorted
-    assert(vdirs.toSeq === Seq("v2", "v3"))
+    assert(vdirs.toSeq === Seq(s"v${finalVersion - 1}", s"v$finalVersion"))
   }
 
   test("time travel: readVersion reads snapshots within the retention horizon; vacuum(keepLast) trims unpinned history") {
@@ -397,25 +429,26 @@ class CollectionSpec extends SparkSpec {
     c.setRetention(10) // keep history deep enough to travel back through
     val rows = (0L until 30L).map(i => (i, s"doc number $i")).toDF("id", "text")
     c.insert(TextEmbed.withEmbed(rows, "text", "vector").select("id", "vector", "text"))
-    c.delete("id >= 20") // v1: 20 rows
-    c.delete("id >= 10") // v2: 10 rows
+    val v = c.history().map(_.version).max // the insert's snapshot: 30 rows
+    c.delete("id >= 20") // v+1: 20 rows
+    c.delete("id >= 10") // v+2: 10 rows
     assert(c.df.count() === 10)
-    // v1 is TWO commits old and still readable (default horizon would
+    // v+1 is TWO commits old and still readable (default horizon would
     // have vacuumed it — setRetention is what makes time travel real)
-    assert(c.readVersion(1).count() === 20)
-    assert(c.readVersion(2).count() === 10)
+    assert(c.readVersion(v + 1).count() === 20)
+    assert(c.readVersion(v + 2).count() === 10)
     val h = c.history()
-    assert(h.map(_.version) === Seq(1, 2))
-    assert(h.filter(_.current).map(_.version) === Seq(2))
+    assert(h.map(_.version) === (1 to v + 2)) // create's seed v1 on
+    assert(h.filter(_.current).map(_.version) === Seq(v + 2))
     assert(h.forall(_.sizeBytes > 0))
 
-    c.delete("id >= 5") // v3: 5 rows
-    assert(c.readVersion(1).count() === 20)
+    c.delete("id >= 5") // v+3: 5 rows
+    assert(c.readVersion(v + 1).count() === 20)
     // vacuum keeps only the live snapshot; older versions are gone and
     // readVersion refuses with the retained list
     c.vacuum(keepLast = 1)
-    assert(c.history().map(_.version) === Seq(3))
-    val e = intercept[IllegalArgumentException](c.readVersion(1))
+    assert(c.history().map(_.version) === Seq(v + 3))
+    val e = intercept[IllegalArgumentException](c.readVersion(v + 1))
     assert(e.getMessage.contains("no snapshot"))
     assert(c.df.count() === 5) // the live snapshot is never vacuumed
   }

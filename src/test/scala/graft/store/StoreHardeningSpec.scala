@@ -15,6 +15,9 @@ import org.apache.spark.sql.functions._
   *     recreated collection must never probe its predecessor's quantizer)
   *   - insert / insertPartitioned refusing a layout they would hide rows
   *     in (a flat file beside `cell=` dirs, `cell=` dirs beside flat files)
+  *   - insertPartitioned onto an IVF_PQ version committing a version the
+  *     IVF paths refuse until the next build (it used to append rows with
+  *     no codes that searchIvfPq never returned)
   *   - leftovers of a crashed index build (building dir, uncommitted
   *     version) never read and swept by the next commit
   *   - metric persistence across open() (was hard-coded "COSINE")
@@ -104,42 +107,44 @@ class StoreHardeningSpec extends SparkSpec {
   test("writer crash between snapshot install and pointer flip: readers keep the old snapshot, next rewrite heals") {
     val c = Collection.create(spark, root, "crashA", dim = 8, overwrite = true)
     c.insert(vecs(6))
-    c.delete("id = 0") // -> v1 committed, 5 rows
-    // simulate the crash: a writer installed v2 but died before commitPointer
+    val v = c.history().map(_.version).max // the insert's snapshot
+    c.delete("id = 0") // -> v+1 committed, 5 rows
+    // simulate the crash: a writer installed v+2 but died before the flip
     spark.range(3).toDF("junk")
-      .write.mode("overwrite").parquet(s"$root/crashA/v2")
-    // pointer still resolves v1 — the orphan is invisible to readers
+      .write.mode("overwrite").parquet(s"$root/crashA/v${v + 2}")
+    // pointer still resolves v+1 — the orphan is invisible to readers
     val re = Collection.open(spark, root, "crashA")
     assert(re.df.count() === 5, "uncommitted install must not be readable")
     assert(re.df.columns.toSeq === Seq("id", "vector", "text"))
-    // the next rewrite claims v2: sweeps the dead JVM's orphan, installs
+    // the next rewrite claims v+2: sweeps the dead JVM's orphan, installs
     // its own snapshot through the atomic move, and flips the pointer
     re.delete("id = 1")
     val healed = Collection.open(spark, root, "crashA")
     assert(healed.df.count() === 4)
     assert(healed.df.columns.toSeq === Seq("id", "vector", "text"),
       "healed snapshot must be the rewrite's data, not the orphan's")
-    assert(healed.history().map(_.version).contains(2))
+    assert(healed.history().map(_.version).contains(v + 2))
   }
 
   test("writer crash after pointer flip before vacuum: stale snapshots stay invisible and the next commit sweeps them") {
     val c = Collection.create(spark, root, "crashB", dim = 8, overwrite = true)
     c.insert(vecs(6))
-    c.delete("id = 0") // v1
-    c.delete("id = 1") // v2 (retention 2: v1 + v2 retained)
-    c.delete("id = 2") // v3; autoVacuum drops v1
-    assert(!new java.io.File(s"$root/crashB/v1").exists)
-    // simulate the crash: pointer flipped to v3 but the vacuum never ran,
-    // so the superseded v1 is still on disk
+    val v = c.history().map(_.version).max // the insert's snapshot
+    c.delete("id = 0") // v+1
+    c.delete("id = 1") // v+2 (retention 2: v+1 + v+2 retained)
+    c.delete("id = 2") // v+3; autoVacuum drops v+1
+    assert(!new java.io.File(s"$root/crashB/v${v + 1}").exists)
+    // simulate the crash: pointer flipped to v+3 but the vacuum never ran,
+    // so the superseded v+1 is still on disk
     spark.range(4).toDF("junk")
-      .write.mode("overwrite").parquet(s"$root/crashB/v1")
+      .write.mode("overwrite").parquet(s"$root/crashB/v${v + 1}")
     val re = Collection.open(spark, root, "crashB")
     assert(re.df.count() === 3, "pointer governs; the stale snapshot is unread")
     // next commit's autoVacuum treats the leftover like any other expired
-    // version: swept along with v2 once v4 commits (horizon 2)
-    re.delete("id = 3") // v4
-    assert(!new java.io.File(s"$root/crashB/v1").exists, "resurrected stale v1 must be vacuumed")
-    assert(!new java.io.File(s"$root/crashB/v2").exists)
+    // version: swept along with v+2 once v+4 commits (horizon 2)
+    re.delete("id = 3") // v+4
+    assert(!new java.io.File(s"$root/crashB/v${v + 1}").exists, "resurrected stale v+1 must be vacuumed")
+    assert(!new java.io.File(s"$root/crashB/v${v + 2}").exists)
     assert(re.df.count() === 2)
   }
 
@@ -189,6 +194,26 @@ class StoreHardeningSpec extends SparkSpec {
         .withColumn("cell", lit(0L)), "cell")
     }
     assert(flat.df.count() === 30)
+  }
+
+  test("insertPartitioned onto an IVF_PQ version commits an unindexed version until the next build") {
+    val c = Collection.create(spark, root, "pqAppend", dim = 8, overwrite = true)
+    c.insert(vecs(30))
+    val model = c.buildIvfPq(nlist = 3, m = 2, pqK = 4)
+    val row = vecs(31).filter(col("id") === 30L).withColumn("id", lit(500L))
+    val v = row.select("vector").as[Seq[Float]].head().map(_.toDouble).toArray
+    c.insertPartitioned(row.withColumn("cell", lit(model.probe(v, 1).head)), "cell")
+    assert(c.df.count() === 31)
+    // the appended version carries no `_index/`: both IVF paths refuse
+    // instead of answering from codes that miss the new row
+    val e1 = intercept[IllegalArgumentException](c.searchIvf(v, k = 40, nprobe = 3))
+    assert(e1.getMessage.contains("buildIvf"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException](c.searchIvfPq(v, k = 40, nprobe = 3))
+    assert(e2.getMessage.contains("buildIvf"), e2.getMessage)
+    c.buildIvfPq(nlist = 3, m = 2, pqK = 4)
+    val ids = c.searchIvfPq(v, k = 40, nprobe = 3).select("id").as[Long].collect()
+    assert(ids.length === 31)
+    assert(ids.contains(500L))
   }
 
   test("searchIvfPq survives a degenerate subspace whose codebook has fewer than pqK entries") {
