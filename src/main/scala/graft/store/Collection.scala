@@ -62,11 +62,13 @@ class Collection private (
   private def currentVersion: Option[Int] =
     readMarker(s"$path/_current").map(_.stripPrefix("v").trim.toInt)
 
-  /** One committed version as a single call reads it: `_current` is
-    * resolved once, `df` lists the files once (on first use), and the
-    * IVF/PQ index is the one inside THIS `dir`. Every engine method takes
-    * one `snapshot()` before it commits anything and reads only through
-    * it, so a call never mixes two versions. */
+  /** One committed version and everything derived from it. A committed
+    * `v<N>` never changes, so each of these is computed on first use and
+    * kept for as long as the version stays current: `df` (the file index
+    * and the inferred schema), `partitionCols`, the row count and vector
+    * dim, the IVF quantizer, the PQ codebooks and the PQ code frame. A
+    * call takes one Snapshot and reads only through it, so it never mixes
+    * two versions, even while another thread swaps a newer one in. */
   private[store] final class Snapshot(val version: Option[Int], val dir: String) {
     lazy val df: DataFrame = spark.read.parquet(dir)
 
@@ -77,39 +79,71 @@ class Collection private (
         .filter(f => f.isDirectory && f.getName.contains("="))
         .map(_.getName.takeWhile(_ != '=')).toSet
 
+    lazy val rows: Long = df.count()
+
+    /** 0 while empty: the schema carries the element type, not the length. */
+    lazy val dim: Int =
+      df.select(size(col("vector"))).limit(1).collect().headOption.fold(0)(_.getInt(0))
+
     /** `dir/_index/<part>` when this version carries that index. */
-    def index(part: String): Option[String] =
+    private def index(part: String): Option[String] =
       Some(s"$dir/_index/$part").filter(new java.io.File(_).isDirectory)
 
-    /** `index(part)`, or a refusal naming `op` and the build to run. */
-    private def indexOrRefuse(part: String, kind: String, op: String, build: String): String =
-      index(part).getOrElse(throw new IllegalArgumentException(
-        s"$op: $name v${version.getOrElse(0)} has no $kind index — run $build"))
+    private def refusal(op: String, kind: String, build: String) =
+      new IllegalArgumentException(
+        s"$op: $name v${version.getOrElse(0)} has no $kind index — run $build")
 
     /** The coarse quantizer this version was built with. */
+    lazy val ivfModel: Option[graft.vector.IvfKMeans.Model] =
+      index("ivf").map(graft.vector.IvfKMeans.load(spark, _))
+
     def ivf(op: String): graft.vector.IvfKMeans.Model =
-      graft.vector.IvfKMeans.load(spark, indexOrRefuse("ivf", "IVF", op, "buildIvf"))
+      ivfModel.getOrElse(throw refusal(op, "IVF", "buildIvf"))
 
     /** The PQ codebooks as (pqK, subDim, cbs), one `cbs` entry per
       * subspace with its (code, centroid) pairs sorted by code. */
-    def pq(op: String): (Int, Int, Seq[Seq[(Long, Seq[Double])]]) = {
-      val d = indexOrRefuse("pq", "PQ", op, "buildIvfPq")
+    lazy val pqBooks: Option[(Int, Int, Seq[Seq[(Long, Seq[Double])]])] = index("pq").map { d =>
       val Array(m, pqK, subDim) = readMarker(s"$d/_meta").get.split(" ").map(_.toInt)
       val rows = spark.read.parquet(d).collect()
       (pqK, subDim, (0 until m).map(s =>
         rows.filter(_.getInt(0) == s)
           .map(r => (r.getLong(1), r.getSeq[Double](2).toIndexedSeq)).sortBy(_._1).toSeq))
     }
+
+    def pq(op: String): (Int, Int, Seq[Seq[(Long, Seq[Double])]]) =
+      pqBooks.getOrElse(throw refusal(op, "PQ", "buildIvfPq"))
+
+    /** The (id, cell, codes) rows of `_index/pqcodes`; read only when
+      * `pqBooks` is defined. */
+    lazy val pqCodes: DataFrame = spark.read.parquet(s"$dir/_index/pqcodes")
   }
 
-  /** Resolves `_current` once: the version this call reads. */
-  private[store] def snapshot(): Snapshot =
-    currentVersion.fold(new Snapshot(None, path))(v => new Snapshot(Some(v), s"$path/v$v"))
+  /** The held Snapshot, keyed by its version and its `v<N>` dir's
+    * (fileKey, lastModifiedTime). */
+  private val held = new java.util.concurrent.atomic.AtomicReference[(Any, Snapshot)]((None, null))
 
-  /** The live data directory (`v<N>`, or a stream sink's root)
-    * and its rows. For outside callers: each call resolves the pointer
-    * and `df` lists the files again, while engine methods take one
-    * `Snapshot` per call. */
+  /** The current committed version. `_current` is read on every call, so
+    * a commit made through another handle or process is seen at once; the
+    * held Snapshot is reused only while its key matches, because after a
+    * drop and create the same version number can name other content. A
+    * warm call therefore lists no files, infers no schema and loads no
+    * index. A stream sink's root (no `_current`) grows under its log and
+    * is never held. */
+  private[store] def snapshot(): Snapshot = currentVersion match {
+    case None => new Snapshot(None, path)
+    case Some(v) =>
+      val dir = s"$path/v$v"
+      try {
+        val a = java.nio.file.Files.readAttributes(java.nio.file.Paths.get(dir),
+          classOf[java.nio.file.attribute.BasicFileAttributes])
+        val key = (v, a.fileKey(), a.lastModifiedTime())
+        held.updateAndGet(h => if (h._1 == key) h else (key, new Snapshot(Some(v), dir)))._2
+      } catch { case _: java.io.IOException => new Snapshot(Some(v), dir) }
+  }
+
+  /** The live data directory (`v<N>`, or a stream sink's root) and its
+    * rows, for outside callers: both come from the held Snapshot, so a
+    * repeated `df` on an unchanged collection lists nothing. */
   def dataDir: String = snapshot().dir
   def df: DataFrame = snapshot().df
 
@@ -280,14 +314,14 @@ class Collection private (
   def delete(filter: String): Long = {
     val pred = expr(filter)
     val s = snapshot()
-    val before = s.df.count()
+    val before = s.rows
     // NULL-predicate rows are NOT matches and must survive: plain
     // !pred would drop them (three-valued logic makes NOT NULL = NULL,
     // which filter discards)
     rewriteSwap("delete") { tmp =>
       s.df.filter(!coalesce(pred, lit(false))).write.mode(SaveMode.Overwrite).parquet(tmp)
     }
-    before - snapshot().df.count() // fresh snapshot: the committed survivors
+    before - snapshot().rows // fresh snapshot: the committed survivors
   }
 
   /** Compaction: N small append files → ceil(bytes / targetFileBytes)
@@ -596,7 +630,7 @@ class Collection private (
     requireNotStreamManaged("upsertIvf")
     val s = snapshot()
     val model = s.ivf("upsertIvf")
-    val pq = s.index("pq").map(_ => s.pq("upsertIvf"))
+    val pq = s.pqBooks
     val batch = graft.vector.IvfKMeans
       .assignCells(Collection.conformVector(rows), "vector", model.centroidTable, scale = 1.0)
       .drop("dist6").persist()
@@ -631,10 +665,9 @@ class Collection private (
         linkTree(new java.io.File(s"${s.dir}/_index/ivf"), new java.io.File(s"$tmp/_index/ivf"))
         pq.foreach { case (_, subDim, cbs) =>
           linkTree(new java.io.File(s"${s.dir}/_index/pq"), new java.io.File(s"$tmp/_index/pq"))
-          val codes = s"${s.dir}/_index/pqcodes"
-          affectedCells(spark.read.parquet(codes), pqEncode(residuals(batch, model), cbs, subDim))
+          affectedCells(s.pqCodes, pqEncode(residuals(batch, model), cbs, subDim))
             .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(s"$tmp/_index/pqcodes")
-          linkCells(codes, s"$tmp/_index/pqcodes", rewritten)
+          linkCells(s"${s.dir}/_index/pqcodes", s"$tmp/_index/pqcodes", rewritten)
         }
         writeMarker(s"$tmp/_ivf_drift", (prior + moved + (nNew - matched)).toString)
       }
@@ -659,8 +692,7 @@ class Collection private (
   def ivfDrift: Double = {
     val s = snapshot()
     val drifted = readMarker(s"${s.dir}/_ivf_drift").map(_.toLong).getOrElse(0L)
-    val n = s.df.count()
-    if (n == 0) 0.0 else drifted.toDouble / n
+    if (s.rows == 0) 0.0 else drifted.toDouble / s.rows
   }
 
   /** IVF-style layout: rows land in hive partitions keyed by `cellCol`
@@ -810,7 +842,7 @@ class Collection private (
         }
       })
     }.toMap
-    val codes = spark.read.parquet(s"${s.dir}/_index/pqcodes")
+    val codes = s.pqCodes
     val cellIn: Column = cellPredicate(codes.schema("cell").dataType, "cell", cells)
     val tbl = element_at(typedLit(tables), col("cell").cast("long"))
     val adist = (0 until m).map(sub =>
@@ -895,15 +927,13 @@ class Collection private (
                         cells: Seq[Long], k: Int): DataFrame =
     topK(s.df.filter(cellPredicate(s.df.schema(cellCol).dataType, cellCol, cells)), queryVec, k)
 
-  /** S6: describe — entityCount, dimension, metric. Row-free on an empty
-    * collection: head() on a zero-row projection would throw, so the
-    * dimension reports 0 until the first insert defines it (the schema
-    * carries the element type but not the length). */
+  /** S6: describe — entityCount, dimension, metric. The dimension reports
+    * 0 until the first insert defines it. Both are counted once per
+    * committed version: a repeated call on an unchanged collection runs
+    * no Spark job. */
   def describe(): CollectionInfo = {
-    val d = snapshot().df
-    val dimRow = d.select(size(col("vector"))).limit(1).collect()
-    CollectionInfo(name, d.count(),
-      if (dimRow.isEmpty) 0 else dimRow(0).getInt(0), metric)
+    val s = snapshot()
+    CollectionInfo(name, s.rows, s.dim, metric)
   }
 
   /** S9: full scan (pagination dropped by design). */

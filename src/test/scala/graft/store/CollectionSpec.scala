@@ -467,21 +467,10 @@ class CollectionSpec extends SparkSpec {
     assert(c.describe().rows === 4)
   }
 
-  test("each read call lists its snapshot once") {
-    // 40 one-hot rows, each its own k-means seed: 40 non-empty cell dirs,
-    // above Spark's parallel-discovery threshold (32), so every listing
-    // of the data dir runs as a visible "Listing leaf files" job
-    val n = 40
-    Collection.drop(root, "clist")
-    val c = Collection.create(spark, root, "clist", n, overwrite = true)
-    c.insert((0 until n).map(i => (i.toLong, Seq.tabulate(n)(d => if (d == i) 1.0 else 0.0),
-      s"row $i")).toDF("id", "vector", "text"))
-    c.buildIvf(nlist = n, rounds = 1)
-    val cellDirs = new java.io.File(c.dataDir).listFiles().count(_.getName.startsWith("cell="))
-    assert(cellDirs >= 33, s"only $cellDirs cell dirs: no listing job would run")
-
-    // job descriptions by group; FIFO sentinels drain the async listener
-    // bus (the PlanSpec pattern)
+  /** The descriptions of the Spark jobs `body` starts. A sentinel job in
+    * its own group before and after `body` drains the async listener bus
+    * (the PlanSpec pattern). */
+  private def jobsDuring(call: String)(body: => Unit): Seq[String] = {
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
@@ -499,18 +488,144 @@ class CollectionSpec extends SparkSpec {
         Thread.sleep(10)
       assert(jobs.stream().anyMatch(_._1 == name), s"sentinel $name never observed")
     }
-    def listings(call: String)(body: => Unit): Long = {
-      sentinel(s"$call-flush")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      sentinel(s"$call-open")
       jobs.clear()
       body
       sentinel(s"$call-close")
-      jobs.stream().filter(_._2.startsWith("Listing leaf files")).count()
-    }
-    val qv = Array.tabulate(n)(d => if (d == 3) 1.0 else 0.0)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      assert(listings("searchIvf")(c.searchIvf(qv, k = 2, nprobe = 2).collect()) === 1)
-      assert(listings("searchCells")(c.searchCells(qv, "cell", Seq(0L, 3L), k = 2).collect()) === 1)
+      jobs.toArray(Array.empty[(String, String)]).toSeq.collect {
+        case (g, d) if g != s"$call-close" => d
+      }
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def topId(c: Collection, qv: Array[Double]): Long =
+    c.search(qv, k = 1).select("id").as[Long].head()
+
+  test("each read call lists its snapshot once") {
+    // 40 one-hot rows, each its own k-means seed: 40 non-empty cell dirs,
+    // above Spark's parallel-discovery threshold (32), so every listing
+    // of the data dir runs as a visible "Listing leaf files" job. It runs
+    // once per committed version: the first searchIvf after the buildIvf
+    // commit lists the cells, later calls reuse the held listing.
+    val n = 40
+    Collection.drop(root, "clist")
+    val c = Collection.create(spark, root, "clist", n, overwrite = true)
+    c.insert((0 until n).map(i => (i.toLong, Seq.tabulate(n)(d => if (d == i) 1.0 else 0.0),
+      s"row $i")).toDF("id", "vector", "text"))
+    c.buildIvf(nlist = n, rounds = 1)
+    val cellDirs = new java.io.File(c.dataDir).listFiles().count(_.getName.startsWith("cell="))
+    assert(cellDirs >= 33, s"only $cellDirs cell dirs: no listing job would run")
+
+    def listings(call: String)(body: => Unit): Int =
+      jobsDuring(call)(body).count(_.startsWith("Listing leaf files"))
+    val qv = Array.tabulate(n)(d => if (d == 3) 1.0 else 0.0)
+    assert(listings("searchIvf")(c.searchIvf(qv, k = 2, nprobe = 2).collect()) === 1)
+    assert(listings("searchIvf-warm")(c.searchIvf(qv, k = 2, nprobe = 2).collect()) === 0)
+    assert(listings("searchCells")(c.searchCells(qv, "cell", Seq(0L, 3L), k = 2).collect()) === 0)
+  }
+
+  test("describe and ivfDrift count a committed version once") {
+    Collection.drop(root, "cdesc")
+    val c = Collection.create(spark, root, "cdesc", TextEmbed.DefaultDim, overwrite = true)
+    c.insert(seeded)
+    val info = CollectionInfo("cdesc", 4, TextEmbed.DefaultDim, "COSINE")
+    assert(c.describe() === info)
+    assert(c.ivfDrift === 0.0)
+    val warm = jobsDuring("describe-warm") {
+      assert(c.describe() === info)
+      assert(c.ivfDrift === 0.0)
+    }
+    assert(warm.isEmpty, s"a repeated describe ran jobs: $warm")
+    c.delete("id = 0")
+    assert(c.describe() === info.copy(rows = 3), "a new version is counted anew")
+  }
+
+  test("a held snapshot sees a commit made through another handle at the next call") {
+    Collection.drop(root, "chandle")
+    val a = Collection.create(spark, root, "chandle", TextEmbed.DefaultDim, overwrite = true)
+    a.insert(seeded)
+    val qv = TextEmbed.embedScala("vector search cosine similarity")
+    assert(topId(a, qv) === 2L)
+    assert(a.df.count() === 4)
+    Collection.open(spark, root, "chandle").delete("id = 2")
+    assert(a.df.count() === 3)
+    assert(topId(a, qv) !== 2L)
+  }
+
+  test("a held snapshot is not reused when a recreated collection reuses its version number") {
+    Collection.drop(root, "crecreate")
+    val a = Collection.create(spark, root, "crecreate", TextEmbed.DefaultDim, overwrite = true)
+    a.insert(seeded)
+    val v = a.history().map(_.version).max
+    val qv = TextEmbed.embedScala("vector search cosine similarity")
+    assert(topId(a, qv) === 2L)
+    assert(a.df.count() === 4)
+    // handle B: drop, create, insert — the same version numbers, other rows
+    Collection.drop(root, "crecreate")
+    val b = Collection.create(spark, root, "crecreate", TextEmbed.DefaultDim)
+    b.insert(TextEmbed.withEmbed(Seq((10L, "vector search cosine similarity"),
+      (11L, "a late arrival")).toDF("id", "text"), "text", "vector").select("id", "vector", "text"))
+    assert(b.history().map(_.version).max === v, "B must reuse A's version number")
+    assert(a.df.count() === 2)
+    assert(topId(a, qv) === 10L)
+  }
+
+  test("readers racing upserts: every search answers the exact top-k of one committed version") {
+    import java.util.concurrent.Executors
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val dim = 16
+    val rnd = new scala.util.Random(7)
+    def gauss(): Seq[Double] = Seq.fill(dim)(rnd.nextGaussian())
+    Collection.drop(root, "cread")
+    val c = Collection.create(spark, root, "cread", dim, overwrite = true)
+    c.setRetention(10) // every version stays readable for the expected lists
+    c.insert((0L until 200L).map(i => (i, gauss(), s"doc $i")).toDF("id", "vector", "text"))
+    val first = c.history().map(_.version).max
+    val qv = gauss().toArray
+    // upsert u moves 5 ids next to the query, each time closer than the
+    // last, so every version has its own top-5
+    val batches = (0 until 3).map { u =>
+      val eps = Seq(0.3, 0.1, 0.03)(u)
+      (0 until 5).map(j => (100L + u * 5 + j, qv.toSeq.map(_ + eps * rnd.nextGaussian()),
+        s"moved $u $j")).toDF("id", "vector", "text")
+    }
+
+    val pool = Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      def top5(): Seq[Long] = c.search(qv, k = 5).select("id").as[Long].collect().toSeq
+      @volatile var writing = true
+      val readers = (0 until 4).map(_ => Future {
+        val seen = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]
+        while (writing) seen += top5()
+        seen.toSeq
+      })
+      try batches.foreach(b => c.upsert(b))
+      finally writing = false
+      val seen = readers.flatMap(f => Await.result(f, 5.minutes))
+      val last = first + batches.length
+      assert(c.history().map(_.version).max === last)
+
+      // the exact top-5 of each committed version, scored on the driver
+      def exact(v: Int): Seq[Long] =
+        c.readVersion(v).select("id", "vector").as[(Long, Seq[Float])].collect().toSeq
+          .map { case (id, x) =>
+            val dot = x.indices.map(i => x(i) * qv(i)).sum
+            val nx = math.sqrt(x.map(f => f.toDouble * f).sum)
+            (id, dot / (nx * math.sqrt(qv.map(d => d * d).sum)))
+          }.sortBy { case (id, s) => (-s, id) }.take(5).map(_._1)
+      val legal = (first to last).map(exact)
+      assert(legal.distinct.length === legal.length, s"versions share a top-5: $legal")
+      val mixed = seen.filterNot(legal.contains)
+      assert(seen.nonEmpty && mixed.isEmpty,
+        s"${mixed.length} of ${seen.length} replies match no version: ${mixed.headOption}")
+      info(s"${seen.length} replies from ${seen.distinct.length} versions")
+      // a search that starts after the last commit answers from it, on every thread
+      val after = (0 until 4).map(_ => Future(top5()))
+      assert(after.map(f => Await.result(f, 2.minutes)).forall(_ == legal.last))
+    } finally pool.shutdown()
   }
 }

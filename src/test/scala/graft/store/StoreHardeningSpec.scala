@@ -21,6 +21,8 @@ import org.apache.spark.sql.functions._
   *   - leftovers of a crashed index build (building dir, uncommitted
   *     version) never read and swept by the next commit
   *   - metric persistence across open() (was hard-coded "COSINE")
+  *   - the IVF paths following the index of the CURRENT version through
+  *     the snapshot a handle holds across calls (refuse, answer, refuse)
   *   - searchIvfPq on a degenerate subspace whose codebook trains to
   *     fewer than pqK entries (the ADC table build crashed)
   */
@@ -214,6 +216,21 @@ class StoreHardeningSpec extends SparkSpec {
     val ids = c.searchIvfPq(v, k = 40, nprobe = 3).select("id").as[Long].collect()
     assert(ids.length === 31)
     assert(ids.contains(500L))
+  }
+
+  test("the IVF paths follow the current version's index: refuse, answer after buildIvf, refuse after delete") {
+    val c = Collection.create(spark, root, "ivfFollow", dim = 8, overwrite = true)
+    c.insert(vecs(30))
+    val qv = Array.tabulate(8)(d => if (d < 4) 5.0 else 1.0)
+    def refusal(): String = intercept[IllegalArgumentException](c.searchIvf(qv, k = 3)).getMessage
+    assert(refusal().contains("buildIvf"))
+    c.buildIvf(nlist = 3, rounds = 2)
+    assert(c.searchIvf(qv, k = 3).count() === 3)
+    assert(c.searchIvf(qv, k = 3).count() === 3)
+    c.delete("id = 0")
+    assert(refusal().contains("buildIvf"))
+    assert(refusal().contains("buildIvf"), "the refusal repeats on every call")
+    assert(c.df.count() === 29)
   }
 
   test("searchIvfPq survives a degenerate subspace whose codebook has fewer than pqK entries") {
