@@ -226,10 +226,21 @@ object IvfKMeans {
 
   /** Train a coarse quantizer over raw vectors. The returned model may
     * have fewer than nlist cells if some emptied out.
+    *
+    * All-zero vectors (what a chunk without a single token embeds to)
+    * have no direction and stay out of the training; assignment still
+    * gives them a cell. Seeded as a centroid at the origin, one sits at
+    * distance 1 from every unit vector, nearer than any unit-length seed
+    * whose cosine to the row is under 0.5, so its cell became a
+    * catch-all: on a 13.5k-chunk corpus, 4,810 rows in one cell and 1 in
+    * the median one, and every nprobe-10 probe read ~90% of the rows.
+    * Only when every vector is zero do they train (one cell).
     */
   def train(vectors: DataFrame, idCol: String, vecCol: String,
             nlist: Int, rounds: Int = 3): Model = {
-    val cents = trainCents(vectors, idCol, vecCol, nlist, rounds)
+    val directed = vectors.filter(exists(col(vecCol), _ =!= 0))
+    val cents = trainCents(if (directed.isEmpty) vectors else directed,
+      idCol, vecCol, nlist, rounds)
     Model(cents.map(_._1).toArray, cents.map(_._2.toArray).toArray)
   }
 }

@@ -38,6 +38,22 @@ class IvfKMeansSpec extends SparkSpec {
     }
   }
 
+  test("all-zero vectors stay out of training: no zero seed, same model, still assigned a cell") {
+    // a zero vector under the smallest id would be the first seed, and
+    // its cell's mean would absorb it on every round
+    val zero = Seq((-1L, Seq.fill(dim)(0.0))).toDF("id", "vector")
+    val m = IvfKMeans.train(clustered, "id", "vector", nlist = 3, rounds = 3)
+    val withZero = IvfKMeans.train(zero.union(clustered), "id", "vector", nlist = 3, rounds = 3)
+    assert(withZero.cells.toSeq === m.cells.toSeq)
+    assert(withZero.centroids.map(_.toSeq).toSeq === m.centroids.map(_.toSeq).toSeq)
+    val cell = IvfKMeans.assignCells(zero, "vector", withZero.centroidTable, 1.0)
+      .select("cell").as[Long].collect()
+    assert(cell.length === 1 && withZero.cells.contains(cell.head))
+    // only zero vectors: they train, into one cell
+    val allZero = (0L until 4L).map(i => (i, Seq.fill(dim)(0.0))).toDF("id", "vector")
+    assert(IvfKMeans.train(allZero, "id", "vector", nlist = 3, rounds = 2).cells.length === 1)
+  }
+
   test("assignCells ties break to the smallest cell id") {
     val df = Seq((0L, Seq(0.0, 0.0))).toDF("id", "vector")
     // two identical centroids → equal distance → cell 3 (smaller) wins
