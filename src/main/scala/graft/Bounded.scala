@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.Dataset
 
 /** The single owner of the house bounded-collect contract (r14 verdict:
   * the `limit(cap+1) + collect + require` idiom had grown three
@@ -20,14 +20,14 @@ import org.apache.spark.sql.{DataFrame, Row}
   */
 object Bounded {
 
-  /** Collect at most `cap` rows of `df`, failing loudly (with `what` and
+  /** Collect at most `cap` rows of `ds`, failing loudly (with `what` and
     * the optional `hint` in the message) when the frame exceeds the cap.
     * Every message contains "cardinality exceeds" — specs pin the loud
     * path on that substring.
     */
-  def collectBounded(df: DataFrame, cap: Int, what: String,
-                     hint: String = ""): Array[Row] = {
-    val rows = df.limit(cap + 1).collect()
+  def collectBounded[T](ds: Dataset[T], cap: Int, what: String,
+                        hint: String = ""): Array[T] = {
+    val rows = ds.limit(cap + 1).collect()
     require(rows.length <= cap,
       s"$what cardinality exceeds $cap — refusing the driver-side " +
         "materialization (bounded-collect contract: collected frames " +

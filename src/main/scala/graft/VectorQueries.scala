@@ -63,8 +63,8 @@ object VectorQueries {
     transform(e.cast("array<double>"), v => floor(v * 1e6 + 0.5).cast("double"))
 
   /** The quantized corpus (vec_id, qv), checkpointed because every
-    * consumer (Lloyd's rounds, PQ subspace trainings, PCA moments)
-    * re-reads it. */
+    * consumer (the k-means and PQ training collects, the assignment and
+    * encode passes after them, PCA moments) re-reads it. */
   private def quantizedEmb(s: SparkSession, dir: String): DataFrame =
     emb(s, dir).select(col("vec_id"), quantized(col("embedding")).as("qv"))
       .localCheckpoint()
@@ -704,9 +704,10 @@ object VectorQueries {
     //   doubles (round-half-up ×1e6) so every centroid sum is EXACT (and
     //   order-independent) below 2^53; seeds = the k smallest vec_ids;
     //   per-round argmin on 6dp-rounded unscaled distances with cell-id
-    //   tiebreak. Spark drives the rounds (centroids broadcast as plan
-    //   literals, assignment map-only, update one nlist×dim aggregation
-    //   shuffle — see IvfKMeans); the oracle unrolls them as CTEs. ──
+    //   tiebreak. The driver runs the rounds over one collect of the
+    //   training rows (every row at gate scale — see IvfKMeans), the
+    //   final assignment is one map-only CellArgMin pass in the plan;
+    //   the oracle unrolls the rounds as CTEs. ──
     QueryDef("q67_ivf_kmeans",
       (s, dir) => {
         val (q, cents) = trainedKMeans(s, dir)
@@ -741,7 +742,7 @@ object VectorQueries {
     //   given-label blocking: here the blocking is LEARNED). A doc is
     //   removed when a lower-id doc in its cluster is ≥ τ cosine-similar;
     //   the keeper is the smallest such id, so output is deterministic.
-    //   100 TB shape: one nlist×dim training shuffle + one hash-partition
+    //   100 TB shape: one bounded training collect + one hash-partition
     //   on cell for the self-join; no global pair enumeration. ──
     QueryDef("q85_semdedup",
       (s, dir) => {
@@ -780,9 +781,10 @@ object VectorQueries {
     //   (Jégou et al., "Product Quantization for Nearest Neighbor
     //   Search", TPAMI 2011) re-expressed. The 64-dim space splits into
     //   M=PqM (4) PqSubDim-dim subspaces; each trains its own k=PqK (16)
-    //   codebook (the SAME quantize→Lloyd's→6dp-argmin recipe as q67,
-    //   reusing IvfKMeans.trainCents verbatim), so every vector
-    //   compresses to PqM codes. A query builds one PqK-entry distance
+    //   codebook (the SAME quantize→Lloyd's→6dp-argmin recipe as q67:
+    //   IvfKMeans.trainSubspaces runs trainCents' loop per slice of one
+    //   collect), so every vector compresses to PqM codes. A query
+    //   builds one PqK-entry distance
     //   TABLE per subspace (PqM×PqK = 4×16 entries total) and
     //   scores all candidates by table lookups only — the asymmetric
     //   distance computation that makes PQ memory-bound instead of
@@ -808,10 +810,11 @@ object VectorQueries {
     //   quantizer narrows the search to nprobe probed cells, and within
     //   them candidates are scored by q86's PQ distance-table lookups
     //   instead of full vectors. Both trainings reuse the exact q67/q86
-    //   recipes (quantize→Lloyd's→6dp-argmin), so the oracle is the two
-    //   CTE chains composed; PQ here encodes RAW quantized vectors
-    //   (FAISS by_residual=false) because residuals v−centroid are not
-    //   integer-valued, so their sums would not be cross-engine exact —
+    //   recipes (quantize→Lloyd's→6dp-argmin, on the driver), so the
+    //   oracle is the two CTE chains composed; PQ here encodes RAW
+    //   quantized vectors (FAISS by_residual=false) because residuals
+    //   v−centroid are not integer-valued, so their sums would not be
+    //   cross-engine exact —
     //   the residual-encoding variant (FAISS's default) is the engine
     //   API, Collection.buildIvfPq/searchIvfPq, recall-pinned in
     //   IvfKMeansSpec. 100 TB shape: candidates shrink by ~nprobe/nlist
@@ -1311,7 +1314,8 @@ object VectorQueries {
 
   /** PQ subspace training shared by q86 and q88 (`IvfKMeans`'s
     * subspace trainer and encoder over the ×1e6-quantized `q`, which the
-    * caller checkpoints so the PqM trainings share one materialization).
+    * caller checkpoints so the training collect and the encode read one
+    * materialization; the PqM trainings share the one collect).
     * Returns (`wide`: nid, code0..code{M-1}; per-subspace ADC distance
     * tables for query ids < 10: qid, codeM, dM). */
   private[graft] def pqTrained(s: SparkSession, q: DataFrame): (DataFrame, Seq[DataFrame]) = {
@@ -1395,8 +1399,8 @@ object VectorQueries {
     val q = quantizedEmb(s, dir)
     // Production mode (r16 verdict #4): trainFrac < 1 trains Lloyd's on
     // a seeded Bernoulli sample — at 100 TB the trainer is ALWAYS a
-    // sample (each Lloyd's round is a driver-synchronized pass over the
-    // training set; a full-corpus train is a gate-scale luxury), while
+    // sample (the training rows are collected to the driver, at most
+    // 256 per cell; a full-corpus train is a gate-scale luxury), while
     // assignment stays the one map-only CellArgMin pass over the full
     // corpus against the broadcast centroids. nlist is still sized from
     // the FULL count — cell granularity is a property of the corpus the

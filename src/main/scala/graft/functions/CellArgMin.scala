@@ -12,56 +12,63 @@ import org.apache.spark.sql.types._
   * static forwarders callable from generated Java). */
 object CellArgMinImpl {
 
-  /** Spark's `round(x, 6)`: string-based BigDecimal (valueOf), HALF_UP —
-    * NOT scala.BigDecimal(d), which is the exact binary value and can
-    * round differently on ties. Non-finite passes through unchanged,
-    * exactly like Spark's Round (BigDecimal.valueOf THROWS on NaN/Inf —
-    * surfaced by the KmeansKernelSpec non-finite case, ADVICE r10). */
+  /** Spark's `round(x, 6)`: BigDecimal.valueOf (the shortest decimal that
+    * round-trips, as Scala 2.13's `BigDecimal(d)` reads it too; the exact
+    * binary value, `BigDecimal.exact`, can round differently on ties),
+    * HALF_UP. Non-finite passes through unchanged, exactly like Spark's
+    * Round (BigDecimal.valueOf THROWS on NaN/Inf — surfaced by the
+    * KmeansKernelSpec non-finite case, ADVICE r10). */
   @inline def round6(d: Double): Double =
     if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d)) d
     else java.math.BigDecimal.valueOf(d).setScale(6, java.math.RoundingMode.HALF_UP)
       .doubleValue()
 
-  /** Σ(a_i − b_i)² in index order — the exact fold of
+  /** Σ(a_i − b_i)² over b's indices, in index order — the exact fold of
     * aggregate(zip_with(a, b, (x,y) → (x−y)·(x−y)), 0.0, acc + t). */
-  def sqdist(a: ArrayData, b: Array[Double]): Double = {
+  def sqdist(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0
     var i = 0
-    while (i < b.length) { val t = a.getDouble(i) - b(i); s += t * t; i += 1 }
+    while (i < b.length) { val t = a(i) - b(i); s += t * t; i += 1 }
     s
   }
 
-  /** argmin over the centroid matrix with first-min tiebreak (the
-    * array_position contract): returns (dist6, cell) as an InternalRow.
-    * Per-centroid value = round6(sqdist / scale), matching the staged
-    * `dists` array the HOF formulation built. */
-  def assign(vec: ArrayData, matrix: Array[Array[Double]], cells: Array[Long],
-             scale: Double): InternalRow = {
-    var best = Double.PositiveInfinity
+  /** The distance every k-means path ranks: squared L2 / `scale`, 6 dp. */
+  def dist6(a: Array[Double], b: Array[Double], scale: Double): Double =
+    round6(sqdist(a, b) / scale)
+
+  /** The assignment rule of `cell_argmin` and the driver's Lloyd's loop:
+    * the index of the FIRST minimum `dist6` (matrix order is the
+    * tiebreak, the array_position contract) over the centroids of `vec`'s
+    * dimension (a mismatched one was a null dists entry in the HOF form,
+    * which array_min skipped), or −1 when no distance is finite. There
+    * the HOF form returned (NaN, first cell); no cell is the intended
+    * semantics, so bit identity is scoped to finite inputs
+    * (KmeansKernelSpec pins both). */
+  def nearest(vec: Array[Double], matrix: Array[Array[Double]], scale: Double): Int = {
+    var best, bestRaw = Double.PositiveInfinity
     var bestIdx = -1
     var k = 0
     while (k < matrix.length) {
-      // dim-mismatched centroid → null dists entry in the HOF form,
-      // which array_min skipped; skip it here too (unreachable when the
-      // V4 dim check holds).
-      // NaN edge (also unreachable — the trainer feeds ×1e6-quantized
-      // FINITE inputs): with all-NaN distances the HOF form returned
-      // (NaN, first cell) via array_min/array_position, whereas the
-      // strict `v < best` below never updates and yields a NULL struct.
-      // NULL-on-no-finite-min is the kernel's intended semantics — a row
-      // whose distances are all undefined has no assignment — so the
-      // bit-identity claim is scoped to finite inputs (KmeansKernelSpec
-      // pins the non-finite behavior; writing that spec also surfaced
-      // that the unguarded round6 THREW on NaN — now it passes
-      // non-finite through like Spark's Round).
-      if (vec.numElements() == matrix(k).length) {
-        val v = round6(sqdist(vec, matrix(k)) / scale)
-        if (v < best) { best = v; bestIdx = k } // strict: FIRST min wins
+      if (vec.length == matrix(k).length) {
+        // round6 is monotone, so a distance at or above the best one's
+        // cannot round below it: only a smaller one pays the rounding
+        val x = sqdist(vec, matrix(k)) / scale
+        if (x < bestRaw) {
+          val v = round6(x)
+          if (v < best) { best = v; bestRaw = x; bestIdx = k } // strict: FIRST min wins
+        }
       }
       k += 1
     }
-    if (bestIdx < 0) null
-    else new GenericInternalRow(Array[Any](best, cells(bestIdx)))
+    bestIdx
+  }
+
+  /** `nearest` as cell_argmin's (dist6, cell) row; null with no cell. */
+  def assign(vec: ArrayData, matrix: Array[Array[Double]], cells: Array[Long],
+             scale: Double): InternalRow = {
+    val v = vec.toDoubleArray()
+    val k = nearest(v, matrix, scale)
+    if (k < 0) null else new GenericInternalRow(Array[Any](dist6(v, matrix(k), scale), cells(k)))
   }
 }
 

@@ -724,11 +724,10 @@ class Collection private (
     * within-cell detail) in `_index/pq`, and every row's M codes in
     * `_index/pqcodes`, partitioned by the same cell key — all in the same
     * version, so `searchIvfPq` never sees codes that do not describe its
-    * rows. The M trainings run concurrently from the driver over one
-    * persisted residual frame. At scale: codes are M small ints per row
-    * (~M bytes once dictionary-encoded) vs dim floats — a 16× scan-set
-    * compression; training shuffles are O(centroid table) per round like
-    * buildIvf.
+    * rows. The M trainings share one collect of at most 256 × pqK
+    * residuals and run on the driver, like buildIvf's. At scale: codes
+    * are M small ints per row (~M bytes once dictionary-encoded) vs dim
+    * floats — a 16× scan-set compression.
     */
   def buildIvfPq(nlist: Int, m: Int = 4, pqK: Int = 16,
                  rounds: Int = 3, pqRounds: Int = 2): graft.vector.IvfKMeans.Model =
@@ -758,7 +757,9 @@ class Collection private (
       writeMarker(s"$tmp/_index/ivf/_build_params", s"$nlist $rounds")
       pq.foreach { case (m, pqK, pqRounds) =>
         val subDim = dim / m
-        // M subspace trainings and the encode share one materialization
+        // the training collect and the encode each read every residual
+        // row (the sample is a top-B over all of them): persisted, the
+        // corpus assignment behind the residuals runs once, not twice
         val resid = residuals(assigned, model).persist()
         try {
           // codes re-keyed to dense 0..k-1 (the trainer keys by seed id)

@@ -3,33 +3,26 @@ package graft.vector
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.VectorKernels
+import graft.functions.{CellArgMinImpl, VectorKernels}
 
-/** IVF coarse-quantizer training: Lloyd's k-means over a vector column
-  * (reference S11 trains IVF_FLAT with nlist k-means centroids,
-  * `src/archive/chunking_strategy_docker.py:161-171`; Milvus does the
-  * training server-side — here it is a Spark job).
-  *
-  * Scale shape (the part that matters at 100 TB):
-  *   - centroids are TINY (nlist × dim doubles) and live on the driver,
-  *     broadcast into the plan as literals each round — the data side is
-  *     never shuffled for assignment (map-only argmin per row);
-  *   - the update step is one aggregation shuffle of nlist × dim partial
-  *     sums per round (posexplode → groupBy(cell, pos) with map-side
-  *     combine), i.e. O(centroid-table), not O(data);
-  *   - rounds are driver-side control flow (like q49's label propagation)
-  *     and each round's plan starts from the base scan — no lineage growth.
+/** IVF coarse-quantizer and PQ codebook training: Lloyd's k-means over a
+  * vector column (reference S11 trains IVF_FLAT with nlist k-means
+  * centroids, `src/archive/chunking_strategy_docker.py:161-171`; Milvus
+  * trains server-side — here the driver does). A training is one Spark
+  * job that collects at most 256 rows per centroid (`trainingRows`) and
+  * one JVM loop over them (`lloyd`); assigning the corpus (`assignCells`,
+  * `encodeSubspaces`, `probeCells`) stays in the plan, under the same
+  * `CellArgMinImpl` rule.
   *
   * Determinism contract (what lets q67 oracle-check the SAME algorithm in
-  * DuckDB): seeds are the nlist smallest ids; distances are computed by a
-  * sequential fold in array-index order in both engines; centroid sums
-  * run over INTEGER-VALUED doubles (the caller quantizes, q67 uses
-  * round-half-up ×1e6), which double-sums represent EXACTLY below 2^53,
-  * so the sums — and therefore sums/n — are order-independent and
-  * bit-identical across engines; argmin distances are rounded (6 dp after
-  * un-scaling) with the cell id as tiebreak, giving a total order.
-  * Empty cells simply drop out of the centroid table (both engines:
-  * group-by produces no row), exactly like FAISS's empty-list case.
+  * DuckDB): seeds are the nlist smallest training ids; distances are a
+  * sequential index-order fold in both engines, rounded 6 dp after
+  * un-scaling, and the first minimum in cell order wins; a centroid is
+  * its members' sum, taken in id order, over their count. The q67
+  * family's vectors are integer-valued (×1e6 round-half-up), whose double
+  * sums are EXACT below 2^53, hence bit-identical across engines. Empty
+  * cells drop out (both engines: group-by produces no row), like FAISS's
+  * empty-list case. No result depends on partitioning or thread count.
   */
 object IvfKMeans {
 
@@ -39,25 +32,16 @@ object IvfKMeans {
 
     /** The nprobe cells nearest to `qv` — the driver-side twin of
       * `probeCells` (the centroid table is the small side by
-      * construction). Distances round to 6 dp (HALF_UP, matching
-      * `assignCells`/`probeCells`) before ranking so every probe path
-      * shares ONE total order on near-tie cells; ties break on cell id.
+      * construction). Distances are the assignment's own
+      * `CellArgMinImpl.dist6`, so every probe path shares ONE total order
+      * on near-tie cells; ties break on cell id.
       * A wrong-dimension query fails loudly instead of ranking on a
       * silently truncated partial distance. */
     def probe(qv: Array[Double], nprobe: Int): Seq[Long] = {
       require(centroids.isEmpty || qv.length == centroids.head.length,
         s"probe: query dim ${qv.length} != centroid dim ${centroids.head.length}")
-      cells.zip(centroids)
-        .map { case (c, cv) =>
-          var d = 0.0
-          var i = 0
-          while (i < cv.length) {
-            val t = cv(i) - qv(i); d += t * t; i += 1
-          }
-          (c, BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-        }
-        .sortBy { case (c, d) => (d, c) }
-        .take(nprobe).map(_._1).toSeq
+      cells.indices.sortBy(i => (CellArgMinImpl.dist6(qv, centroids(i), 1.0), cells(i)))
+        .take(nprobe).map(cells).toSeq
     }
 
     /** The centroid table as (cell, centroid) pairs in cell order — the
@@ -132,80 +116,76 @@ object IvfKMeans {
       .drop("__cv", "cdist", "__crnk")
   }
 
-  /** One Lloyd's update: per-cell per-dimension mean, collected to the
-    * driver (nlist × dim rows — the centroid table is small by design).
-    * Exact when the vector column is integer-valued (see object doc).
-    */
-  def updateCents(assigned: DataFrame, vecCol: String): Seq[(Long, Seq[Double])] =
-    assigned.select(col("cell"), posexplode(col(vecCol).cast("array<double>")).as(Seq("pos", "x")))
-      // a NULL cell (cell_argmin's no-finite-min row) must be DROPPED,
-      // not folded into cell 0 — Row.getLong on a null unboxes to 0L and
-      // silently corrupted that centroid (r11 review)
-      .filter(col("cell").isNotNull)
-      .groupBy("cell", "pos").agg(sum(col("x")).as("sx"), count(lit(1)).as("n"))
-      .collect()
-      .groupBy(_.getLong(0)).toSeq
-      .map { case (cell, rows) =>
-        cell -> rows.sortBy(_.getInt(1)).map(r => r.getDouble(2) / r.getLong(3)).toSeq
-      }
-      .sortBy(_._1)
+  /** Training rows per centroid: FAISS's `max_points_per_centroid`
+    * (Jégou et al., TPAMI 2011). */
+  private val PointsPerCentroid = 256
 
-  /** The Lloyd's loop shared by `train` (raw vectors, scale 1.0) and the
-    * q67/q73 oracle path (×1e6-quantized vectors, scale 1e12): seeds =
-    * the nlist smallest ids' vectors, then `rounds` assign→update
-    * sweeps. ONE implementation so a tie-break or seeding change cannot
-    * drift between the engine API and the oracle-checked queries.
+  /** The `cap` rows with the smallest (xxhash64(id), id) — every row when
+    * there are at most `cap`, and the same rows on any partitioning — in
+    * one TakeOrderedAndProject job, as primitive arrays sorted by id. Rows
+    * with a null id or vector do not train. */
+  private def trainingRows(vectors: DataFrame, idCol: String, vecCol: String,
+                           cap: Int): (Array[Long], Array[Array[Double]]) = {
+    import vectors.sparkSession.implicits._
+    val rows = graft.Bounded.collectBounded(vectors
+      .select(col(idCol).cast("long").as("id"), col(vecCol).cast("array<double>").as("v"))
+      .filter(col("id").isNotNull && col("v").isNotNull)
+      .orderBy(xxhash64(col("id")), col("id")).limit(cap).as[(Long, Array[Double])],
+      cap, "k-means training rows").sortBy(_._1)
+    (rows.map(_._1), rows.map(_._2))
+  }
+
+  /** Lloyd's k-means over `vecs` (sorted by `ids`): the `k` smallest ids
+    * seed, then each round assigns every row by `CellArgMinImpl.nearest`
+    * (in parallel; a row without a finite distance joins no cell) and
+    * moves each cell to its members' mean, summed in id order. */
+  private def lloyd(ids: Array[Long], vecs: Array[Array[Double]], k: Int,
+                    rounds: Int, scale: Double): Model =
+    (1 to rounds).foldLeft(Model(ids.take(k), vecs.take(k))) { (m, _) =>
+      val cellOf = java.util.stream.IntStream.range(0, vecs.length).parallel()
+        .map(i => CellArgMinImpl.nearest(vecs(i), m.centroids, scale)).toArray
+      val sums = m.centroids.map(c => new Array[Double](c.length))
+      val n = new Array[Long](sums.length)
+      for (i <- vecs.indices if cellOf(i) >= 0) {
+        val s = sums(cellOf(i))
+        for (j <- s.indices) s(j) += vecs(i)(j)
+        n(cellOf(i)) += 1
+      }
+      val kept = n.indices.filter(n(_) > 0).toArray
+      Model(kept.map(m.cells), kept.map(c => sums(c).map(_ / n(c))))
+    }
+
+  /** The k-means shared by `train` (raw vectors, scale 1.0), the
+    * q12/q67/q73/q85/q88/q136 oracle path (×1e6-quantized vectors, scale
+    * 1e12) and ClusterSampleSpec — ONE implementation, so a tie-break or
+    * seeding change cannot drift between the engine API and the
+    * oracle-checked queries. It trains on at most 256 × nlist rows. No
+    * gate corpus reaches that: sf0.01 and sf0.1 hold 500 and 2,000
+    * vectors at `kmNlist`'s 8 cells, a cap of 2,048 (4,096 for PQ's
+    * k = 16). The oracle's `kmeansCtes` trains on every row, so a gate
+    * corpus of 2,049–2,249 rows would sample here and that rule would
+    * have to change with it.
     */
   def trainCents(vectors: DataFrame, idCol: String, vecCol: String,
                  nlist: Int, rounds: Int, scale: Double = 1.0): Seq[(Long, Seq[Double])] = {
-    // Narrow TRAINING view (r13 AbConst attribution): the Lloyd's loop is
-    // rounds+1 driver-synchronized jobs, and when the training set is
-    // small (the query-side callers train over gate-scale corpora; real
-    // deployments sample their trainers) every seed/assign/update job
-    // paid 32 tasks of scheduling for KB-sized partitions. The target is
-    // CLUSTER-PROPORTIONAL, not a constant (r13 review): a quarter of
-    // defaultParallelism, floored at 8 — locally that is the measured-
-    // best 8 (back-to-back A/B: 8 → 3.3 s q88, 16 → 4.0 s, 32 → 4.0 s),
-    // on a 1000-executor cluster it scales to thousands of tasks so a
-    // full-collection buildIvf keeps a wide CellArgMin assignment. An
-    // input already at or below the target skips the exchange entirely
-    // (the Par probe — no job). The CALLER's corpus frame is untouched —
-    // only this internal view narrows. Persisted because every round
-    // re-scans it; results are partition-independent (integer-valued
-    // sums, per-row assignment, deterministic orderBy seed).
-    val q0 = vectors
-      .select(col(idCol).cast("long").as("__id"), col(vecCol).cast("array<double>").as("__v"))
-    val target = math.max(8, vectors.sparkSession.sparkContext.defaultParallelism / 4)
-    val q = (graft.Par.plannedPartitions(q0) match {
-      case Some(p) if p <= target => q0
-      case _ => q0.repartition(target)
-    }).persist()
-    try {
-      var cents: Seq[(Long, Seq[Double])] =
-        q.orderBy(col("__id")).limit(nlist).collect()
-          .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
-      for (_ <- 1 to rounds)
-        cents = updateCents(assignCells(q, "__v", cents, scale), "__v")
-      cents
-    } finally { q.unpersist(); () }
+    val (ids, vecs) = trainingRows(vectors, idCol, vecCol, PointsPerCentroid * nlist)
+    lloyd(ids, vecs, nlist, rounds, scale).centroidTable
   }
 
   /** Product-quantizer training: one Lloyd's codebook of `k` codes per
-    * `subDim`-wide slice of `vecCol`, the `m` slices trained
-    * CONCURRENTLY from the driver (independent Spark jobs — the caller
-    * persists or checkpoints `vectors` so they share one
-    * materialization). Codebooks are keyed like `trainCents` (by seed
-    * id); a codebook can carry fewer than k codes when clusters empty. */
+    * `subDim`-wide slice of `vecCol`. One collect of the training rows
+    * (at most 256 × k) serves all `m` slices, so codebook i is exactly
+    * `trainCents` over slice i. Codebooks are keyed like `trainCents` (by
+    * seed id); a codebook can carry fewer than k codes when clusters
+    * empty. */
   def trainSubspaces(vectors: DataFrame, idCol: String, vecCol: String, m: Int,
                      subDim: Int, k: Int, rounds: Int,
                      scale: Double = 1.0): Seq[Seq[(Long, Seq[Double])]] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    Await.result(Future.traverse((0 until m).toList) { i => Future {
-      trainCents(vectors.select(col(idCol), subspace(col(vecCol), i, subDim).as("__sv")),
-        idCol, "__sv", k, rounds, scale)
-    } }, Duration.Inf)
+    val (ids, vecs) = trainingRows(vectors, idCol, vecCol, PointsPerCentroid * k)
+    (0 until m).map { i =>
+      val sub = vecs.map(_.slice(i * subDim, (i + 1) * subDim))
+      lloyd(ids, sub, k, rounds, scale).centroidTable
+    }
   }
 
   /** Product-quantizer encoding: adds `code0..code{m-1}` (one per
@@ -234,13 +214,14 @@ object IvfKMeans {
     * whose cosine to the row is under 0.5, so its cell became a
     * catch-all: on a 13.5k-chunk corpus, 4,810 rows in one cell and 1 in
     * the median one, and every nprobe-10 probe read ~90% of the rows.
-    * Only when every vector is zero do they train (one cell).
+    * The filter runs inside the training collect; only when every vector
+    * is zero does a second collect train on them (one cell).
     */
   def train(vectors: DataFrame, idCol: String, vecCol: String,
             nlist: Int, rounds: Int = 3): Model = {
-    val directed = vectors.filter(exists(col(vecCol), _ =!= 0))
-    val cents = trainCents(if (directed.isEmpty) vectors else directed,
-      idCol, vecCol, nlist, rounds)
-    Model(cents.map(_._1).toArray, cents.map(_._2.toArray).toArray)
+    val cap = PointsPerCentroid * nlist
+    val directed = trainingRows(vectors.filter(exists(col(vecCol), _ =!= 0)), idCol, vecCol, cap)
+    val (ids, vecs) = if (directed._1.nonEmpty) directed else trainingRows(vectors, idCol, vecCol, cap)
+    lloyd(ids, vecs, nlist, rounds, 1.0)
   }
 }

@@ -62,20 +62,52 @@ class IvfKMeansSpec extends SparkSpec {
     assert(got.select("cell").as[Long].head() === 3L)
   }
 
+  /** A model as its raw bits, so equality is bit identity. */
+  private def bits(cents: Seq[(Long, Seq[Double])]) =
+    cents.map { case (c, v) => c -> v.map(java.lang.Double.doubleToRawLongBits) }
+
+  /** `n` non-integer-valued vectors with no ties. */
+  private def raw(n: Long) = (0L until n).map { i =>
+    (i, Seq.tabulate(dim)(d => math.sin(i * 0.7 + d * 1.3) / 3.0))
+  }.toDF("id", "vector")
+
   test("centroids are partitioning-invariant on integer-valued vectors (q67's exactness argument)") {
     // The cross-engine oracle for q67/q73 rests on: sums of integer-valued
     // doubles below 2^53 are EXACT, hence order- and partitioning-
     // independent. Pin it mechanically: training over 1, 7, and 32
-    // partitions must give bit-identical centroids.
-    val rows = (0L until 40L).map { i =>
+    // partitions must give bit-identical centroids. On raw doubles the
+    // sums are not exact, so they hold only because they run in id order.
+    val ints = (0L until 40L).map { i =>
       val v = Array.tabulate(dim)(d => ((i * 7 + d * 3) % 11).toDouble) // integer-valued
       (i, v.toSeq)
     }.toDF("id", "vector")
-    val models = Seq(1, 7, 32).map(p =>
-      IvfKMeans.train(rows.repartition(p), "id", "vector", nlist = 4, rounds = 3))
-    models.sliding(2).foreach { case Seq(a, b) =>
-      assert(a.cells.toSeq === b.cells.toSeq)
-      assert(a.centroids.map(_.toSeq).toSeq === b.centroids.map(_.toSeq).toSeq)
+    for (rows <- Seq(ints, raw(40))) {
+      val models = Seq(1, 7, 32).map(p =>
+        IvfKMeans.train(rows.repartition(p), "id", "vector", nlist = 4, rounds = 3))
+      models.sliding(2).foreach { case Seq(a, b) =>
+        assert(bits(a.centroidTable) === bits(b.centroidTable))
+      }
+    }
+  }
+
+  test("a training takes exactly 256·nlist rows, the smallest (xxhash64(id), id), on any partitioning") {
+    val rows = raw(600) // over the 512-row cap of nlist 2
+    def smallest(n: Int) = rows.orderBy(xxhash64(col("id").cast("long")), col("id")).limit(n)
+    val want = bits(IvfKMeans.trainCents(smallest(512), "id", "vector", 2, 2))
+    for (p <- Seq(1, 7, 32))
+      assert(bits(IvfKMeans.trainCents(rows.repartition(p), "id", "vector", 2, 2)) === want)
+    // the 512th row trains, and so does the rule's choice of rows
+    assert(bits(IvfKMeans.trainCents(smallest(511), "id", "vector", 2, 2)) !== want)
+    assert(bits(IvfKMeans.trainCents(rows.filter(col("id") < 512), "id", "vector", 2, 2)) !== want)
+  }
+
+  test("trainSubspaces codebook i ≡ trainCents over slice i") {
+    val rows = raw(600) // over PQ's 512-row cap at k 2: every slice trains on one sample
+    val cbs = IvfKMeans.trainSubspaces(rows, "id", "vector", m = 4, subDim = 2, k = 2, rounds = 2)
+    assert(cbs.length === 4)
+    cbs.zipWithIndex.foreach { case (cb, i) =>
+      val slice_i = rows.select(col("id"), slice(col("vector"), i * 2 + 1, 2).as("sv"))
+      assert(bits(cb) === bits(IvfKMeans.trainCents(slice_i, "id", "sv", 2, 2)), s"subspace $i")
     }
   }
 
