@@ -19,10 +19,12 @@ import graft.functions.{VectorKernels, VectorOps}
   *     growing list re-inserted every loop) is intentionally NOT
   *     reproduced — each row is written once.
   *
-  * Scale design: data lives partitioned by a caller-chosen bucket column
-  * (e.g. IVF centroid id or date); `search` is a scan + TakeOrdered (no
+  * Scale design: data lives flat until `buildIvf` partitions it by the
+  * IVF cell, a column only the index owns; `insert`, `upsert` and
+  * `delete` keep that index current, like Milvus maintaining an IVF_FLAT
+  * index under the same calls. `search` is a scan + TakeOrdered (no
   * shuffle of the collection); `getByIds` is an IN-filter pushed to
-  * parquet. On a cluster the same layout bucket-prunes.
+  * parquet. On a cluster the cell layout bucket-prunes.
   *
   * Everything a collection stores lives under `<root>/<name>`. Every
   * batch write, from `create`'s zero-row seed `v1` on, commits a new
@@ -43,7 +45,7 @@ class Collection private (
     val root: String,
     val name: String,
     val metric: String) {
-  import Collection.{readMarker, rmTree, writeMarker}
+  import Collection.{Removal, readMarker, rmTree, writeMarker}
 
   private def path = s"$root/$name"
 
@@ -65,19 +67,12 @@ class Collection private (
   /** One committed version and everything derived from it. A committed
     * `v<N>` never changes, so each of these is computed on first use and
     * kept for as long as the version stays current: `df` (the file index
-    * and the inferred schema), `partitionCols`, the row count and vector
-    * dim, the IVF quantizer, the PQ codebooks and the PQ code frame. A
-    * call takes one Snapshot and reads only through it, so it never mixes
-    * two versions, even while another thread swaps a newer one in. */
+    * and the inferred schema), the row count and vector dim, the IVF
+    * quantizer, the PQ codebooks and the PQ code frame. A call takes one
+    * Snapshot and reads only through it, so it never mixes two versions,
+    * even while another thread swaps a newer one in. */
   private[store] final class Snapshot(val version: Option[Int], val dir: String) {
     lazy val df: DataFrame = spark.read.parquet(dir)
-
-    /** The hive partition columns of this version, from the names of its
-      * `k=v` child dirs: one directory listing, no Spark job. */
-    lazy val partitionCols: Set[String] =
-      Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isDirectory && f.getName.contains("="))
-        .map(_.getName.takeWhile(_ != '=')).toSet
 
     lazy val rows: Long = df.count()
 
@@ -99,6 +94,10 @@ class Collection private (
 
     def ivf(op: String): graft.vector.IvfKMeans.Model =
       ivfModel.getOrElse(throw refusal(op, "IVF", "buildIvf"))
+
+    /** The stored rows without the index's `cell`: what a layout rewrite
+      * keeps. A version without an index keeps every column. */
+    def entities: DataFrame = if (index("ivf").isDefined) df.drop("cell") else df
 
     /** The PQ codebooks as (pqK, subDim, cbs), one `cbs` entry per
       * subspace with its (code, centroid) pairs sorted by code. */
@@ -166,11 +165,10 @@ class Collection private (
     * `_current` pointer flip. A crash before the flip leaves the old
     * snapshot live and intact; a concurrent reader sees old-or-new,
     * never neither. Every batch write commits through here, so no
-    * write but a marker ever lands in a committed `v<N>`. NOTE: the new
-    * version holds only what `write` puts in it, so a rewrite that does
-    * not maintain an index drops it: only buildIvf, buildIvfPq and
-    * upsertIvf write `_index/`; the other writes commit an unindexed
-    * version that the IVF paths refuse until the next buildIvf.
+    * write but a marker ever lands in a committed `v<N>`. The new version
+    * holds only what `write` puts in it: a row change (`changeRows`)
+    * carries the index along, a layout rewrite (compact, clusterBy,
+    * zorderBy) commits an unindexed version.
     */
   private[store] def rewriteSwap(op: String)(write: String => Unit): Unit = {
     requireNotStreamManaged(op)
@@ -276,11 +274,11 @@ class Collection private (
 
   /** The retained snapshot versions, oldest first: (version, isCurrent,
     * sizeBytes, lastModifiedMillis). sizeBytes is PHYSICAL and includes
-    * the version's `_index/`: snapshots share untouched cell and index
-    * files via hard links (upsertIvf), so each distinct on-disk file is
-    * counted once, at the oldest snapshot that retains it — per-version
-    * sizes sum to actual disk usage, and a newer snapshot's size is the
-    * bytes it newly introduced. */
+    * the version's `_index/`: snapshots share untouched data, cell and
+    * index files via hard links (`changeRows`), so each distinct on-disk
+    * file is counted once, at the oldest snapshot that retains it —
+    * per-version sizes sum to actual disk usage, and a newer snapshot's
+    * size is the bytes it newly introduced. */
   def history(): Seq[SnapshotInfo] = {
     val cur = currentVersion
     val seen = scala.collection.mutable.Set[AnyRef]()
@@ -305,31 +303,29 @@ class Collection private (
   }
 
   /** Delete by predicate (the Milvus client's `delete(expr)`): parquet is
-    * immutable, so this is copy-on-write — survivors rewrite to a fresh
-    * directory which then replaces the old one (the Delta/Iceberg shape
-    * minus the transaction log; at cluster scale the rewrite touches only
-    * partitions containing matches when the predicate prunes). Returns
-    * the number of rows removed.
+    * immutable, so this is copy-on-write through `changeRows` — a flat
+    * version rewrites its survivors, an indexed one only the cells that
+    * hold matches, and keeps its index (the Delta/Iceberg shape minus the
+    * transaction log). Returns the number of rows removed.
     */
   def delete(filter: String): Long = {
-    val pred = expr(filter)
-    val s = snapshot()
-    val before = s.rows
     // NULL-predicate rows are NOT matches and must survive: plain
     // !pred would drop them (three-valued logic makes NOT NULL = NULL,
     // which filter discards)
-    rewriteSwap("delete") { tmp =>
-      s.df.filter(!coalesce(pred, lit(false))).write.mode(SaveMode.Overwrite).parquet(tmp)
-    }
+    val matches = coalesce(expr(filter), lit(false))
+    val s = snapshot()
+    val before = s.rows
+    changeRows("delete", s, None, Some(Removal(_.filter(matches), _.filter(!matches))))
     before - snapshot().rows // fresh snapshot: the committed survivors
   }
 
   /** Compaction: N small append files → ceil(bytes / targetFileBytes)
     * right-sized files. Streaming ingest and per-batch inserts accrete
     * small files (the classic operational problem at scale: open-file
-    * overhead and scan-task explosion); compaction is the same
-    * copy-on-write swap as delete, sized from the actual on-disk bytes.
-    * Returns (filesBefore, filesAfter).
+    * overhead and scan-task explosion); compaction is a copy-on-write
+    * rewrite sized from the actual on-disk bytes. Like clusterBy and
+    * zorderBy it writes the rows without an index's `cell` and commits an
+    * unindexed version. Returns (filesBefore, filesAfter).
     */
   def compact(targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
     val s = snapshot()
@@ -337,7 +333,7 @@ class Collection private (
     val bytes = before.map(_.length()).sum
     val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
     rewriteSwap("compact") { tmp =>
-      s.df.repartition(nOut).write.mode(SaveMode.Overwrite).parquet(tmp)
+      s.entities.repartition(nOut).write.mode(SaveMode.Overwrite).parquet(tmp)
     }
     // fresh snapshot: count the files of the version just committed
     (before.size, parquetFiles(new java.io.File(snapshot().dir)).size)
@@ -367,7 +363,7 @@ class Collection private (
     require(cols.nonEmpty, "clusterBy: at least one column")
     val s = snapshot()
     rewriteSwap("clusterBy") { tmp =>
-      s.df.repartitionByRange(nFiles, cols.map(col): _*)
+      s.entities.repartitionByRange(nFiles, cols.map(col): _*)
         .sortWithinPartitions(cols.map(col): _*)
         .write.mode(SaveMode.Overwrite).parquet(tmp)
     }
@@ -383,95 +379,164 @@ class Collection private (
   def zorderBy(nFiles: Int, buckets: Int, cols: String*): Int = {
     val s = snapshot()
     rewriteSwap("zorderBy") { tmp =>
-      graft.operators.ZOrder.layout(s.df, nFiles, buckets, cols: _*)
+      graft.operators.ZOrder.layout(s.entities, nFiles, buckets, cols: _*)
         .write.mode(SaveMode.Overwrite).parquet(tmp)
     }
     parquetFiles(new java.io.File(snapshot().dir)).size // fresh snapshot: the new version
   }
 
-  /** S7/S8: append entity rows as one new version. Expects
-    * id/vector/text(+metadata) columns. Schema-on-write like the Milvus
-    * server (`scripts/milvus_db.py:61-68` inserts are validated
+  /** S7/S8: append entity rows as one new version (Milvus's `insert`).
+    * Expects id/vector/text(+metadata) columns. Schema-on-write like the
+    * Milvus server (`scripts/milvus_db.py:61-68` inserts are validated
     * server-side): vectors conform to the declared FLOAT_VECTOR element
     * type so every version stays schema-consistent regardless of the
-    * caller's float/double arrays.
+    * caller's float/double arrays. A flat version takes the batch beside
+    * hard links to its files (O(batch) write IO); an indexed one gives
+    * each row its cell and rewrites only the cells that gain rows
+    * (`changeRows`).
     */
-  def insert(rows: DataFrame): Unit = append("insert", rows, cellCol = None)
+  def insert(rows: DataFrame): Unit = {
+    val s = snapshot()
+    withBatch("insert", s, rows, persist = s.ivfModel.isDefined) { (batch, fresh) =>
+      changeRows("insert", s, Some(batch), None, fresh)
+    }
+  }
 
-  /** The insert/insertPartitioned body: one commit of the batch plus hard
-    * links to the data of the version it read (O(batch) write IO). While
-    * the collection is empty or was never created, the batch DEFINES the
-    * schema, but only by WIDENING the declared columns, and links nothing;
-    * after that the schema is FIXED, since a mixed-schema version would
-    * read whichever footer Spark samples first. */
-  private def append(op: String, rows: DataFrame, cellCol: Option[String]): Unit = {
+  /** Upsert by primary key (Milvus's `upsert`): incoming rows REPLACE
+    * same-id rows and append otherwise — the CDC-ingestion primitive.
+    * Copy-on-write through `changeRows`: survivors = old rows whose id is
+    * absent from the batch (left_anti join; Spark picks broadcast vs
+    * shuffle by its threshold — no forced hint, so backfill-sized batches
+    * don't OOM the driver), plus the batch. The batch is persisted so its
+    * plan (often an embedding computation) runs once, and the counts
+    * describe exactly what was written. Batch ids must be unique (a CDC
+    * reader compacts per key first). On an indexed version `ivfDrift`
+    * counts the rows that entered or changed cells; past ~0.2-0.3 the
+    * centroids no longer describe the data and recall silently degrades.
+    * When it crosses `maxDrift`, the commit is followed by a retrain with
+    * the original build parameters (`_index/ivf/_build_params`, plus
+    * `_index/pq/_meta` for PQ), which resets the counter; the default
+    * (infinity) leaves retraining to the caller. Returns
+    * (replacedOldRows, insertedNewRows).
+    */
+  def upsert(rows: DataFrame, maxDrift: Double = Double.PositiveInfinity): (Long, Long) = {
+    val s = snapshot()
+    val counts = withBatch("upsert", s, rows, persist = true) { (batch, fresh) =>
+      val nNew = batch.count()
+      val batchIds = batch.select("id").distinct()
+      require(batchIds.count() == nNew,
+        "upsert: duplicate ids within the batch — compact the batch per key first")
+      val replaced = s.df.join(batchIds, Seq("id"), "left_semi").count()
+      val matched = s.df.select("id").distinct().join(batchIds, Seq("id"), "left_semi").count()
+      changeRows("upsert", s, Some(batch), Some(Removal(
+        _.join(batchIds, Seq("id"), "left_semi"), _.join(batchIds, Seq("id"), "left_anti"))), fresh)
+      (replaced, nNew - matched)
+    }
+    // skip the drift probe's full count under the default policy;
+    // ivfDrift reads a fresh snapshot: the version just committed
+    if (maxDrift != Double.PositiveInfinity && ivfDrift > maxDrift) {
+      val index = s"${snapshot().dir}/_index"
+      val Array(nl, rd) = readMarker(s"$index/ivf/_build_params").get.split(" ").map(_.toInt)
+      // a PQ'd collection retrains PQ too: buildIvf alone would commit a
+      // version without `_index/pq`, and searchIvfPq would refuse
+      readMarker(s"$index/pq/_meta").map(_.split(" ").map(_.toInt)) match {
+        case Some(Array(m, pqK, _)) => buildIvfPq(nl, m, pqK, rd); ()
+        case _ => buildIvf(nl, rd); ()
+      }
+    }
+    counts
+  }
+
+  /** Runs `body` on `rows` conformed — with the `cell` of each row's
+    * nearest centroid when `s` is indexed, persisted when `persist` — and
+    * on whether the batch redefines the schema. While the collection is
+    * empty or was never created, a batch DEFINES the schema, but only by
+    * WIDENING the declared columns; after that the schema is FIXED, since a
+    * mixed-schema version would read whichever footer Spark samples first.
+    * `cell` belongs to the index and is never declared. */
+  private def withBatch[T](op: String, s: Snapshot, rows: DataFrame, persist: Boolean)
+                          (body: (DataFrame, Boolean) => T): T = {
     requireNotStreamManaged(op)
     val conformed = Collection.conformVector(rows)
-    val s = snapshot()
     val exists = new java.io.File(s.dir).isDirectory
     lazy val empty = !exists || s.df.isEmpty
-    // a flat file beside `k=v` dirs, or `k=v` dirs beside flat files (or
-    // beside another column's dirs), hides rows from partition discovery
-    cellCol match {
-      case None => require(s.partitionCols.isEmpty,
-        s"insert: $name is partitioned by [${s.partitionCols.mkString(",")}] — " +
-          "append with upsertIvf (an IVF layout) or insertPartitioned")
-      case Some(c) => require(s.partitionCols == Set(c) || s.partitionCols.isEmpty && empty,
-        s"insertPartitioned: $name holds rows partitioned by " +
-          s"[${s.partitionCols.mkString(",")}], not [$c] — a mixed layout would hide them")
-    }
     val batchCols = conformed.schema.fieldNames.toSet
-    val declared = if (exists) s.df.schema.fieldNames.toSet else Set.empty[String]
-    val redefine = batchCols != declared && empty
-    if (redefine) {
+    val declared = if (exists) s.entities.schema.fieldNames.toSet else Set.empty[String]
+    val fresh = batchCols != declared && empty
+    if (fresh) {
       val narrows = declared -- batchCols
       require(narrows.isEmpty,
         s"$op: first batch is missing declared column(s) [${narrows.mkString(",")}] " +
           s"of $name — schema redefinition on an empty collection may only widen")
     } else require(batchCols == declared,
       s"$op: batch schema [${conformed.schema.fieldNames.mkString(",")}] does not " +
-        s"match $name's declared [${s.df.schema.fieldNames.mkString(",")}] — " +
+        s"match $name's declared [${s.entities.schema.fieldNames.mkString(",")}] — " +
         "conform the batch (or rebuild the collection) before appending")
-    rewriteSwap(op) { tmp =>
-      conformed.write.mode(SaveMode.Overwrite).partitionBy(cellCol.toSeq: _*).parquet(tmp)
-      if (!redefine) linkCells(s.dir, tmp)
-    }
+    val batch = s.ivfModel.fold(conformed)(m => graft.vector.IvfKMeans
+      .assignCells(conformed, "vector", m.centroidTable, scale = 1.0).drop("dist6"))
+    if (persist) batch.persist()
+    try body(batch, fresh) finally { if (persist) batch.unpersist(); () }
   }
 
-  /** Upsert by primary key (Milvus's `upsert`): incoming rows REPLACE
-    * same-id rows and append otherwise — the CDC-ingestion primitive.
-    * Copy-on-write like delete: survivors = old rows whose id is absent
-    * from the batch (left_anti join; Spark picks broadcast vs shuffle by
-    * its threshold — no forced hint, so backfill-sized batches don't
-    * OOM the driver), then union the conformed new rows. The batch is
-    * persisted so its plan (often an embedding computation) runs once,
-    * and the counts describe exactly what was written. Batch ids must be
-    * unique (a CDC reader compacts per key first); a collection whose
-    * layout carries extra columns (cell-partitioned) refuses with a
-    * rebuild hint rather than failing inside the union. Returns
-    * (replacedOldRows, insertedNewRows).
-    */
-  def upsert(rows: DataFrame): (Long, Long) = {
-    val s = snapshot()
-    val newRows = Collection.conformVector(rows).persist()
-    try {
-      val extra = s.df.columns.toSet -- newRows.columns.toSet
-      require(extra.isEmpty,
-        s"upsert: collection carries columns [${extra.mkString(",")}] absent from the " +
-          "batch — upsert a cell-partitioned layout with upsertIvf (or rebuild via buildIvf)")
-      val nNew = newRows.count()
-      val batchIds = newRows.select("id").distinct()
-      require(batchIds.count() == nNew,
-        "upsert: duplicate ids within the batch — compact the batch per key first")
-      val replaced = s.df.join(batchIds, Seq("id"), "left_semi").count()
-      val matched = s.df.select("id").distinct().join(batchIds, Seq("id"), "left_semi").count()
-      rewriteSwap("upsert") { tmp =>
-        s.df.join(batchIds, Seq("id"), "left_anti")
-          .unionByName(newRows)
-          .write.mode(SaveMode.Overwrite).parquet(tmp)
-      }
-      (replaced, nNew - matched)
-    } finally { newRows.unpersist(); () }
+  /** The one row-change body behind insert, upsert and delete: commits the
+    * version `s` with the old rows `removal` selects taken out and `batch`
+    * (a `withBatch` frame) added; a `fresh` batch keeps no old row.
+    *   - A flat version: a removal rewrites every survivor beside the
+    *     batch; without one the batch is written beside hard links to the
+    *     old files (O(batch) write IO).
+    *   - An indexed version keeps its index, as Milvus does: the quantizer
+    *     and cell layout stay untouched and only the cells that lose or
+    *     gain rows are rewritten, so write IO is O(touched cells) — the
+    *     property that makes churn affordable at 100 TB. Every other cell,
+    *     `_index/ivf` and `_index/pq` are hard-linked, and the rewritten
+    *     cells of `_index/pqcodes` re-encode with the version's codebooks
+    *     (they depend on the training distribution, not on row
+    *     membership). `_ivf_drift` grows by the batch rows that did not
+    *     replace a row of the same id in the same cell: new and moved ids.
+    * One `_current` flip commits it all, so readers never see a
+    * half-replaced cell or codes that do not describe the rows. */
+  private def changeRows(op: String, s: Snapshot, batch: Option[DataFrame],
+                         removal: Option[Removal], fresh: Boolean = false): Unit =
+    s.ivfModel match {
+      case None =>
+        val survivors = removal.filter(_ => !fresh).map(_.kept(s.df))
+        rewriteSwap(op) { tmp =>
+          (survivors ++ batch).reduce(_ unionByName _).write.mode(SaveMode.Overwrite).parquet(tmp)
+          if (removal.isEmpty && !fresh) linkCells(s.dir, tmp)
+        }
+      case Some(model) =>
+        val gone = removal.map(_.gone(s.df).select(col("id"), col("cell").cast("long").as("cell")).persist())
+        try {
+          val cells = (gone ++ batch.map(_.select("id", "cell"))).reduce(_ union _)
+            .select("cell").distinct().collect().map(_.getLong(0)).toSeq
+          val old = s.df.filter(cellIn(s.df, cells)).withColumn("cell", col("cell").cast("long"))
+          val survivors = if (fresh) None else Some(removal.fold(old)(_.kept(old)))
+          val next = (survivors ++ batch).reduce(_ unionByName _)
+          val drift = batch.fold(0L)(b => gone.fold(b)(b.join(_, Seq("id", "cell"), "left_anti")).count())
+          val prior = readMarker(s"${s.dir}/_ivf_drift").fold(0L)(_.toLong)
+          val rewritten = cells.map(c => s"cell=$c").toSet
+          rewriteSwap(op) { tmp =>
+            writeCells(next, tmp)(if (!fresh) linkCells(s.dir, tmp, rewritten))
+            linkTree(new java.io.File(s"${s.dir}/_index/ivf"), new java.io.File(s"$tmp/_index/ivf"))
+            s.pqBooks.foreach { case (_, subDim, cbs) =>
+              linkTree(new java.io.File(s"${s.dir}/_index/pq"), new java.io.File(s"$tmp/_index/pq"))
+              writeCells(pqEncode(residuals(next, model), cbs, subDim), s"$tmp/_index/pqcodes")(
+                linkCells(s"${s.dir}/_index/pqcodes", s"$tmp/_index/pqcodes", rewritten))
+            }
+            writeMarker(s"$tmp/_ivf_drift", (prior + drift).toString)
+          }
+        } finally gone.foreach(_.unpersist())
+    }
+
+  /** Writes `rows` into `dir` hive-partitioned by cell, then `link`s the
+    * untouched cells beside them. A partitioned write of no rows leaves no
+    * file, and a version must keep one whose footer carries its schema, so
+    * a change that empties every cell leaves a zero-row file in `cell=0`. */
+  private def writeCells(rows: DataFrame, dir: String)(link: => Unit): Unit = {
+    rows.write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(dir)
+    link
+    if (parquetFiles(new java.io.File(dir)).isEmpty)
+      rows.drop("cell").limit(0).write.parquet(s"$dir/cell=0")
   }
 
   /** Zero-copy clone (Delta's SHALLOW CLONE): a NEW collection whose v1
@@ -574,10 +639,10 @@ class Collection private (
 
   /** Hard-link `src`'s files into `dst` (directories re-created, files
     * linked — O(metadata) not O(bytes)); copies when the filesystem
-    * refuses links. Lets a new snapshot version share untouched cell
-    * data with its predecessor, keeping upsertIvf's write IO at
-    * O(touched cells) while still committing through the atomic
-    * `_current` pointer like every other rewrite. */
+    * refuses links. Lets a new snapshot version share its predecessor's
+    * untouched files and index, keeping a row change's write IO at
+    * O(batch) on a flat version and O(touched cells) on an indexed one,
+    * while still committing through the atomic `_current` pointer. */
   private def linkTree(src: java.io.File, dst: java.io.File): Unit = {
     if (src.isDirectory) {
       dst.mkdirs()
@@ -600,109 +665,13 @@ class Collection private (
       .filter(f => isData(f) && !except(f.getName))
       .foreach(f => linkTree(f, new java.io.File(dst, f.getName)))
 
-  /** Incremental IVF maintenance (Milvus's actual behavior for inserts
-    * into an IVF collection): batch rows are assigned to the nearest
-    * EXISTING centroid — no retrain, quantizer and cell layout untouched
-    * — and only the AFFECTED cell partitions rewrite (replaced ids
-    * removed, new assignments added). Partition pruning bounds IO at
-    * O(touched cells), not O(collection) — the property that makes churn
-    * affordable at 100 TB. Commits ATOMICALLY like every other rewrite:
-    * the next version takes the rewritten cells, hard-links every
-    * untouched cell and the `_index/ivf` (and `_index/pq`) of the version
-    * it read, and — when that version has PQ — re-encodes just the batch
-    * with the existing codebooks (they depend on the training
-    * distribution, not on row membership) into the affected cells of its
-    * `_index/pqcodes`; then the `_current` pointer flips, so readers never
-    * see a half-replaced cell or codes that do not describe the rows.
-    * A version without an index (any other rewrite since the last build)
-    * is refused: run buildIvf. Returns (replacedIds, insertedIds,
-    * movedIds): `moved` counts replaced ids whose updated vector landed
-    * in a different cell. The cumulative drifted-row count persists in
-    * `_ivf_drift`; past ~0.2-0.3 `ivfDrift` the centroids no longer
-    * describe the data and recall silently degrades. When the drift
-    * crosses `maxDrift`, the commit is followed by a retrain with the
-    * original build parameters (`_index/ivf/_build_params`, plus
-    * `_index/pq/_meta` for PQ), which resets the counter. The default
-    * (infinity) leaves retraining to the caller.
-    */
-  def upsertIvf(rows: DataFrame,
-                maxDrift: Double = Double.PositiveInfinity): (Long, Long, Long) = {
-    requireNotStreamManaged("upsertIvf")
-    val s = snapshot()
-    val model = s.ivf("upsertIvf")
-    val pq = s.pqBooks
-    val batch = graft.vector.IvfKMeans
-      .assignCells(Collection.conformVector(rows), "vector", model.centroidTable, scale = 1.0)
-      .drop("dist6").persist()
-    try {
-      val nNew = batch.count()
-      val batchIds = batch.select("id").distinct()
-      require(batchIds.count() == nNew,
-        "upsertIvf: duplicate ids within the batch — compact the batch per key first")
-      val oldMatched = s.df.join(batchIds, Seq("id"), "left_semi")
-        .select(col("id"), col("cell").cast("long").as("old_cell")).persist()
-      val replaced = oldMatched.count()
-      val matched = oldMatched.select("id").distinct().count()
-      val moved = oldMatched
-        .join(batch.select(col("id"), col("cell")), Seq("id"))
-        .filter(col("old_cell") =!= col("cell")).select("id").distinct().count()
-      val affected: Seq[Long] = oldMatched.select(col("old_cell").as("c"))
-        .union(batch.select(col("cell").as("c")))
-        .distinct().collect().map(_.getLong(0)).toSeq
-      val rewritten = affected.map(c => s"cell=$c").toSet
-      oldMatched.unpersist()
-      // the survivors of `from`'s affected cells plus `fresh` (the batch,
-      // or its codes): exactly the affected cells of the next version
-      def affectedCells(from: DataFrame, fresh: DataFrame): DataFrame =
-        from.filter(cellPredicate(from.schema("cell").dataType, "cell", affected))
-          .withColumn("cell", col("cell").cast("long"))
-          .join(batchIds, Seq("id"), "left_anti")
-          .unionByName(fresh)
-      val prior = readMarker(s"${s.dir}/_ivf_drift").map(_.toLong).getOrElse(0L)
-      rewriteSwap("upsertIvf") { tmp =>
-        affectedCells(s.df, batch).write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(tmp)
-        linkCells(s.dir, tmp, rewritten)
-        linkTree(new java.io.File(s"${s.dir}/_index/ivf"), new java.io.File(s"$tmp/_index/ivf"))
-        pq.foreach { case (_, subDim, cbs) =>
-          linkTree(new java.io.File(s"${s.dir}/_index/pq"), new java.io.File(s"$tmp/_index/pq"))
-          affectedCells(s.pqCodes, pqEncode(residuals(batch, model), cbs, subDim))
-            .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(s"$tmp/_index/pqcodes")
-          linkCells(s"${s.dir}/_index/pqcodes", s"$tmp/_index/pqcodes", rewritten)
-        }
-        writeMarker(s"$tmp/_ivf_drift", (prior + moved + (nNew - matched)).toString)
-      }
-      // skip the drift probe's full count under the default policy;
-      // ivfDrift reads a fresh snapshot: the version just committed
-      if (maxDrift != Double.PositiveInfinity && ivfDrift > maxDrift) {
-        val index = s"${snapshot().dir}/_index"
-        val Array(nl, rd) = readMarker(s"$index/ivf/_build_params").get.split(" ").map(_.toInt)
-        // a PQ'd collection retrains PQ too: buildIvf alone would commit a
-        // version without `_index/pq`, and searchIvfPq would refuse
-        readMarker(s"$index/pq/_meta").map(_.split(" ").map(_.toInt)) match {
-          case Some(Array(m, pqK, _)) => buildIvfPq(nl, m, pqK, rd); ()
-          case _ => buildIvf(nl, rd); ()
-        }
-      }
-      (replaced, nNew - matched, moved)
-    } finally { batch.unpersist(); () }
-  }
-
   /** Fraction of the collection that entered or changed cells since the
-    * last buildIvf — upsertIvf's cumulative retrain signal. */
+    * last buildIvf — the retrain signal of `upsert`'s `maxDrift`. */
   def ivfDrift: Double = {
     val s = snapshot()
     val drifted = readMarker(s"${s.dir}/_ivf_drift").map(_.toLong).getOrElse(0L)
     if (s.rows == 0) 0.0 else drifted.toDouble / s.rows
   }
-
-  /** IVF-style layout: rows land in hive partitions keyed by `cellCol`
-    * (e.g. a coarse-quantizer centroid id). `searchCells` then prunes to
-    * the probed cells AT THE SCAN — the 100 TB shape where nprobe/nlist
-    * of the data is read. The collection must already be partitioned by
-    * `cellCol`, or be empty. Like every non-index write, the committed
-    * version has no `_index/` (upsertIvf keeps the index). */
-  def insertPartitioned(rows: DataFrame, cellCol: String): Unit =
-    append("insertPartitioned", rows, Some(cellCol))
 
   /** Trained IVF index build (reference S11: IVF_FLAT with nlist k-means
     * centroids, `src/archive/chunking_strategy_docker.py:161-171`): runs
@@ -750,9 +719,9 @@ class Collection private (
       .drop("dist6") // assignCells names the partition column "cell"
     rewriteSwap(op) { tmp =>
       // the data first: its Overwrite clears whatever `tmp` held
-      assigned.write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(tmp)
+      writeCells(assigned, tmp)(())
       model.save(spark, s"$tmp/_index/ivf")
-      // build params ride with the model so upsertIvf's auto-retrain
+      // build params ride with the model so upsert's auto-retrain
       // (maxDrift) can rebuild with the same configuration
       writeMarker(s"$tmp/_index/ivf/_build_params", s"$nlist $rounds")
       pq.foreach { case (m, pqK, pqRounds) =>
@@ -765,8 +734,7 @@ class Collection private (
           // codes re-keyed to dense 0..k-1 (the trainer keys by seed id)
           val cbs = graft.vector.IvfKMeans.trainSubspaces(resid, "id", "__r", m, subDim, pqK, pqRounds)
             .map(_.zipWithIndex.map { case ((_, v), j) => (j.toLong, v) })
-          pqEncode(resid, cbs, subDim)
-            .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(s"$tmp/_index/pqcodes")
+          writeCells(pqEncode(resid, cbs, subDim), s"$tmp/_index/pqcodes")(())
           cbs.zipWithIndex.flatMap { case (cb, sub) => cb.map { case (code, v) => (sub, code, v) } }
             .toDF("sub", "code", "cv").coalesce(1)
             .write.mode(SaveMode.Overwrite).parquet(s"$tmp/_index/pq")
@@ -796,7 +764,7 @@ class Collection private (
   /** PQ-encode residuals against EXISTING codebooks (each subspace slice
     * takes the argmin over its codebook). `resid` is a `residuals` frame;
     * emits (id, cell, codes). Shared by buildIvfPq (all rows) and
-    * upsertIvf's incremental code maintenance (batch rows only). */
+    * changeRows (the rewritten cells only). */
   private def pqEncode(resid: DataFrame, cbs: Seq[Seq[(Long, Seq[Double])]],
                        subDim: Int): DataFrame =
     graft.vector.IvfKMeans.encodeSubspaces(resid, "__r", cbs, subDim)
@@ -844,12 +812,11 @@ class Collection private (
       })
     }.toMap
     val codes = s.pqCodes
-    val cellIn: Column = cellPredicate(codes.schema("cell").dataType, "cell", cells)
     val tbl = element_at(typedLit(tables), col("cell").cast("long"))
     val adist = (0 until m).map(sub =>
         element_at(col("__tbl"), lit(sub * pqK + 1) + element_at(col("codes"), sub + 1)))
       .reduce(_ + _)
-    val adcTop = codes.filter(cellIn)
+    val adcTop = codes.filter(cellIn(codes, cells))
       .withColumn("__tbl", tbl)
       .withColumn("adist", adist)
       .select(col("id"), col("cell").cast("long").as("cell"), col("adist"))
@@ -866,9 +833,7 @@ class Collection private (
       val cand = adcTop.select(col("id"), col("cell")).collect()
       val ids = cand.map(_.getLong(0))
       val cellVals = cand.map(_.getLong(1)).distinct
-      val cellPick: Column =
-        cellPredicate(s.df.schema("cell").dataType, "cell", cellVals.toSeq)
-      s.df.filter(cellPick && col("id").isin(ids: _*))
+      s.df.filter(cellIn(s.df, cellVals.toSeq) && col("id").isin(ids: _*))
         .withColumn("adist", VectorKernels.sqDistFast(col("vector"), lit(queryVec)))
         .select(col("id"), col("cell").cast("long").as("cell"), col("adist"))
         .orderBy(col("adist").asc, col("id").asc)
@@ -876,29 +841,28 @@ class Collection private (
     }
   }
 
-  /** ONE owner for the typed cell-membership predicate: the hive-inferred
-    * partition column may surface as INT, BIGINT, or STRING depending on
-    * layout history, and a cast on the COLUMN side would defeat partition
-    * pruning — so the literal side always adopts the column's type.
-    * Shared by every pruned path (upsertIvf data and codes,
-    * searchIvfPq rerank, cellsTopK); the copy-pasted blocks this
-    * replaces had already omitted the hot search path (r11 review). */
-  private def cellPredicate(dt: DataType, cellCol: String, cells: Seq[Long]): Column =
-    dt match {
-      case IntegerType => col(cellCol).isin(cells.map(_.toInt): _*)
-      case LongType    => col(cellCol).isin(cells: _*)
-      case _           => col(cellCol).isin(cells.map(_.toString): _*)
+  /** ONE owner for the typed cell-membership predicate over `rows`: the
+    * hive-inferred partition column may surface as INT, BIGINT, or STRING
+    * depending on layout history, and a cast on the COLUMN side would
+    * defeat partition pruning — so the literal side always adopts the
+    * column's type. Shared by every pruned path (changeRows, searchIvf,
+    * searchIvfPq and its rerank). */
+  private def cellIn(rows: DataFrame, cells: Seq[Long]): Column =
+    rows.schema("cell").dataType match {
+      case IntegerType => col("cell").isin(cells.map(_.toInt): _*)
+      case LongType    => col("cell").isin(cells: _*)
+      case _           => col("cell").isin(cells.map(_.toString): _*)
     }
 
   /** ANN search over a buildIvf'd collection: the query probes only the
     * nprobe nearest cells (centroid table read from `_index/ivf`, argmin on
     * the driver — it is tiny by construction), and the cell predicate
-    * prunes at the DIRECTORY level via searchCells. Scan cost shrinks by
-    * ~nprobe/nlist — the IVF contract.
+    * becomes a PartitionFilter: it prunes at the DIRECTORY level, not per
+    * row. Scan cost shrinks by ~nprobe/nlist — the IVF contract.
     */
   def searchIvf(queryVec: Array[Double], k: Int = 5, nprobe: Int = 2): DataFrame = {
     val s = snapshot()
-    cellsTopK(s, queryVec, "cell", s.ivf("searchIvf").probe(queryVec, nprobe), k)
+    topK(s.df.filter(cellIn(s.df, s.ivf("searchIvf").probe(queryVec, nprobe))), queryVec, k)
   }
 
   /** Batch IVF search: many query vectors in ONE plan (the q73 shape).
@@ -916,17 +880,6 @@ class Collection private (
       .select(col("qid"), col("qv"), col("cell"))
     rankPerQuery(probed.join(s.df, Seq("cell")), k)
   }
-
-  /** Cosine top-k over only the given cells; the cell predicate becomes a
-    * PartitionFilter (directory pruning), not a row filter. */
-  def searchCells(queryVec: Array[Double], cellCol: String, cells: Seq[Long], k: Int = 5): DataFrame =
-    cellsTopK(snapshot(), queryVec, cellCol, cells, k)
-
-  /** The searchIvf/searchCells body: one snapshot's listing serves both
-    * the partition column's type and the pruned scan. */
-  private def cellsTopK(s: Snapshot, queryVec: Array[Double], cellCol: String,
-                        cells: Seq[Long], k: Int): DataFrame =
-    topK(s.df.filter(cellPredicate(s.df.schema(cellCol).dataType, cellCol, cells)), queryVec, k)
 
   /** S6: describe — entityCount, dimension, metric. The dimension reports
     * 0 until the first insert defines it. Both are counted once per
@@ -991,6 +944,10 @@ class Collection private (
 }
 
 object Collection {
+  /** Which old rows a row change removes (`gone`) and which it keeps
+    * (`kept`): complementary selections over one version's rows. */
+  private final case class Removal(gone: DataFrame => DataFrame, kept: DataFrame => DataFrame)
+
   /** Schema-on-write vector conformance shared by every ingest path
     * (batch insert, partitioned insert, streaming sink) — ONE owner, so
     * the collection's on-disk element type can't drift between paths.

@@ -342,11 +342,14 @@ object StreamingIngest {
     * mutations refused forever); this path routes every micro-batch
     * through `Collection.upsert` inside foreachBatch — same-id rows
     * replace, new ids append, and the collection keeps its full batch
-    * surface (delete/compact/clusterBy/buildIvf). Exactly-once via the
-    * applied-batch-id marker + key-idempotent upsert
+    * surface (delete/compact/clusterBy/buildIvf). A `buildIvf`'d
+    * collection stays indexed: each batch's rows take the cell of their
+    * nearest centroid, and the drift they cause shows in `ivfDrift`.
+    * Exactly-once via the applied-batch-id marker + key-idempotent upsert
     * (`Collection.applyStreamBatch`). The collection must already exist.
-    * At scale each batch pays one copy-on-write rewrite — right for CDC
-    * update streams; use streamingInsert for append-only firehoses.
+    * At scale each batch pays one copy-on-write rewrite (the whole flat
+    * collection, or only the cells it touches once indexed) — right for
+    * CDC update streams; use streamingInsert for append-only firehoses.
     */
   def streamingUpsert(docs: org.apache.spark.sql.DataFrame, textCol: String,
                       root: String, name: String, checkpoint: String)

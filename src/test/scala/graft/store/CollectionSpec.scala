@@ -115,15 +115,18 @@ class CollectionSpec extends SparkSpec {
   }
 
   test("partitioned cells: probe prunes partitions at the scan") {
-    import org.apache.spark.sql.functions._
     Collection.drop(root, "cells")
-    val c = Collection.open(spark, root, "cells")
-    c.insertPartitioned(seeded.withColumn("cell", col("id") % 2), "cell")
-    val q = c.searchCells(TextEmbed.embedScala("spark window"), "cell", Seq(0L), k = 2)
+    val c = Collection.create(spark, root, "cells", TextEmbed.DefaultDim, overwrite = true)
+    c.insert(seeded)
+    val model = c.buildIvf(nlist = 2, rounds = 2)
+    val qv = TextEmbed.embedScala("spark window")
+    val q = c.searchIvf(qv, k = 2, nprobe = 1)
     val scan = q.queryExecution.executedPlan.toString
     assert(scan.contains("PartitionFilters: [") && scan.contains("cell"), scan)
-    // only even ids live in cell 0
-    assert(q.select("id").as[Long].collect().forall(_ % 2 == 0))
+    // only the probed cell's rows answer
+    val probed = c.df.filter(col("cell") === model.probe(qv, 1).head).select("id").as[Long].collect()
+    val got = q.select("id").as[Long].collect()
+    assert(got.nonEmpty && got.forall(probed.contains), s"${got.toSeq} outside ${probed.toSeq}")
   }
 
   test("search plans as TakeOrderedAndProject (no full sort, no shuffle)") {
@@ -179,13 +182,45 @@ class CollectionSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       c.upsert(batch.union(batch.limit(1)))
     }
-    // a cell-partitioned collection refuses with a rebuild hint instead
-    // of failing inside the union (the batch has no cell column)
+    // an IVF-indexed collection takes the same upsert and stays indexed:
+    // the batch rows land in their cells and a full probe sees them
     Collection.drop(root, "cupsp")
-    val cp = Collection.open(spark, root, "cupsp")
-    cp.insertPartitioned(seeded.withColumn("cell", col("id") % 2), "cell")
-    val err = intercept[IllegalArgumentException] { cp.upsert(batch) }
-    assert(err.getMessage.contains("cell"))
+    val cp = Collection.create(spark, root, "cupsp", TextEmbed.DefaultDim, overwrite = true)
+    cp.insert(seeded)
+    cp.buildIvf(nlist = 2, rounds = 2)
+    assert(cp.upsert(batch) === ((1L, 1L)))
+    assert(cp.df.count() === 5)
+    val qv = TextEmbed.embedScala("a brand new row")
+    def ids(d: org.apache.spark.sql.DataFrame) = d.select("id").as[Long].collect().toSeq
+    assert(ids(cp.searchIvf(qv, k = 5, nprobe = 2)) === ids(cp.search(qv, k = 5)))
+  }
+
+  test("a layout rewrite of an indexed version keeps the rows, not the index's cell") {
+    Collection.drop(root, "crelay")
+    val c = Collection.create(spark, root, "crelay", TextEmbed.DefaultDim, overwrite = true)
+    c.insert(seeded)
+    c.buildIvf(nlist = 2, rounds = 2)
+    c.compact()
+    assert(c.df.columns.toSet === Set("id", "vector", "text"))
+    // the next batch matches the declared schema, and every row answers
+    val extra = TextEmbed.withEmbed(Seq((7L, "spark window late arrival")).toDF("id", "text"),
+      "text", "vector").select("id", "vector", "text")
+    c.insert(extra)
+    assert(c.df.count() === 5)
+    val qv = TextEmbed.embedScala("spark window aggregation engine")
+    val exact = c.df.select("id", "vector").as[(Long, Seq[Float])].collect().toSeq
+      .map { case (id, x) =>
+        val dot = x.indices.map(i => x(i) * qv(i)).sum
+        (id, dot / (math.sqrt(x.map(f => f.toDouble * f).sum) * math.sqrt(qv.map(d => d * d).sum)))
+      }.sortBy { case (id, sc) => (-sc, id) }.map(_._1)
+    assert(c.search(qv, k = 5).select("id").as[Long].collect().toSeq === exact)
+    // a user's own `cell` column on an unindexed collection is data: kept
+    Collection.drop(root, "cowncell")
+    val own = Collection.create(spark, root, "cowncell", TextEmbed.DefaultDim, overwrite = true)
+    own.insert(seeded.withColumn("cell", col("id") % 2))
+    own.clusterBy(1, "id")
+    assert(own.df.columns.contains("cell"))
+    assert(own.df.filter(col("cell") === 1L).count() === 2)
   }
 
   test("clusterBy gives each file a disjoint key range (zone-map layout)") {
@@ -523,7 +558,7 @@ class CollectionSpec extends SparkSpec {
     val qv = Array.tabulate(n)(d => if (d == 3) 1.0 else 0.0)
     assert(listings("searchIvf")(c.searchIvf(qv, k = 2, nprobe = 2).collect()) === 1)
     assert(listings("searchIvf-warm")(c.searchIvf(qv, k = 2, nprobe = 2).collect()) === 0)
-    assert(listings("searchCells")(c.searchCells(qv, "cell", Seq(0L, 3L), k = 2).collect()) === 0)
+    assert(listings("searchIvf-all")(c.searchIvf(qv, k = 2, nprobe = n).collect()) === 0)
   }
 
   test("describe and ivfDrift count a committed version once") {
@@ -572,17 +607,24 @@ class CollectionSpec extends SparkSpec {
     assert(topId(a, qv) === 10L)
   }
 
-  test("readers racing upserts: every search answers the exact top-k of one committed version") {
+  // flat: `search`; IVF_PQ: `searchIvf` at nprobe = nlist, which must be
+  // just as exact while every upsert keeps the index
+  for (indexed <- Seq(false, true))
+  test("readers racing upserts: every search answers the exact top-k of one committed version" +
+      (if (indexed) " (IVF_PQ, searchIvf at nprobe = nlist)" else "")) {
     import java.util.concurrent.Executors
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
     val dim = 16
     val rnd = new scala.util.Random(7)
     def gauss(): Seq[Double] = Seq.fill(dim)(rnd.nextGaussian())
-    Collection.drop(root, "cread")
-    val c = Collection.create(spark, root, "cread", dim, overwrite = true)
+    val name = if (indexed) "creadpq" else "cread"
+    Collection.drop(root, name)
+    val c = Collection.create(spark, root, name, dim, overwrite = true)
     c.setRetention(10) // every version stays readable for the expected lists
     c.insert((0L until 200L).map(i => (i, gauss(), s"doc $i")).toDF("id", "vector", "text"))
+    val nlist = 4
+    if (indexed) c.buildIvfPq(nlist, m = 4, pqK = 4, rounds = 2)
     val first = c.history().map(_.version).max
     val qv = gauss().toArray
     // upsert u moves 5 ids next to the query, each time closer than the
@@ -596,7 +638,9 @@ class CollectionSpec extends SparkSpec {
     val pool = Executors.newFixedThreadPool(4)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
-      def top5(): Seq[Long] = c.search(qv, k = 5).select("id").as[Long].collect().toSeq
+      def top5(): Seq[Long] =
+        (if (indexed) c.searchIvf(qv, k = 5, nprobe = nlist) else c.search(qv, k = 5))
+          .select("id").as[Long].collect().toSeq
       @volatile var writing = true
       val readers = (0 until 4).map(_ => Future {
         val seen = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]

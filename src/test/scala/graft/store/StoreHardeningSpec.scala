@@ -13,16 +13,15 @@ import org.apache.spark.sql.functions._
   *     on replay; now compacts deterministically)
   *   - drop / create(overwrite) clearing the in-version index (a
   *     recreated collection must never probe its predecessor's quantizer)
-  *   - insert / insertPartitioned refusing a layout they would hide rows
-  *     in (a flat file beside `cell=` dirs, `cell=` dirs beside flat files)
-  *   - insertPartitioned onto an IVF_PQ version committing a version the
-  *     IVF paths refuse until the next build (it used to append rows with
-  *     no codes that searchIvfPq never returned)
+  *   - insert into an IVF version keeping every row visible and indexed
+  *     (it used to append a flat file beside `cell=` dirs, which partition
+  *     discovery hid)
   *   - leftovers of a crashed index build (building dir, uncommitted
   *     version) never read and swept by the next commit
   *   - metric persistence across open() (was hard-coded "COSINE")
   *   - the IVF paths following the index of the CURRENT version through
-  *     the snapshot a handle holds across calls (refuse, answer, refuse)
+  *     the snapshot a handle holds across calls (refuse, answer, answer
+  *     after a row change, refuse after a layout rewrite)
   *   - searchIvfPq on a degenerate subspace whose codebook trains to
   *     fewer than pqK entries (the ADC table build crashed)
   */
@@ -167,7 +166,7 @@ class StoreHardeningSpec extends SparkSpec {
     c.buildIvfPq(nlist = 3, m = 2, pqK = 4, rounds = 2, pqRounds = 2)
     assert(c.searchIvf(qv, k = 3).count() === 3)
     assert(c.searchIvfPq(qv, k = 3).count() === 3)
-    c.upsertIvf(vecs(5).withColumn("id", col("id") + 1000))
+    c.upsert(vecs(5).withColumn("id", col("id") + 1000))
     assert(c.searchIvfPq(qv, k = 3).count() === 3)
     assert(c.df.count() === 45)
     assert(new java.io.File(root).listFiles().forall(!_.getName.startsWith("crashIdx.")),
@@ -177,48 +176,29 @@ class StoreHardeningSpec extends SparkSpec {
     assert(!Collection.list(spark, root).contains("crashIdx"))
   }
 
-  test("append paths refuse a layout they would hide rows in") {
+  test("insert into an IVF version keeps every row visible and indexed") {
     val ivf = Collection.create(spark, root, "hideIvf", dim = 8, overwrite = true)
     ivf.insert(vecs(30))
     ivf.buildIvf(nlist = 3, rounds = 2)
-    // a flat file beside `cell=` dirs is invisible to partition discovery
-    val e1 = intercept[IllegalArgumentException] {
-      ivf.insert(vecs(2).withColumn("id", col("id") + 100).withColumn("cell", lit(0L)))
+    ivf.insert(vecs(2).withColumn("id", col("id") + 100))
+    assert(ivf.df.count() === 32)
+    assert(ivf.df.select("id").distinct().count() === 32)
+    assert(ivf.df.filter(col("cell").isNull).isEmpty, "every row has its cell")
+    val qv = Array.tabulate(8)(d => if (d < 4) 5.0 else 1.0)
+    def ids(d: org.apache.spark.sql.DataFrame) = d.select("id").as[Long].collect().toSeq
+    val full = ids(ivf.searchIvf(qv, k = 40, nprobe = 3))
+    assert(full === ids(ivf.search(qv, k = 40)))
+    assert(full.contains(100L) && full.contains(101L))
+    // `cell` belongs to the index: a batch carrying one does not match
+    // the declared schema and writes nothing
+    val e = intercept[IllegalArgumentException] {
+      ivf.insert(vecs(2).withColumn("id", col("id") + 200).withColumn("cell", lit(0L)))
     }
-    assert(e1.getMessage.contains("upsertIvf") && e1.getMessage.contains("insertPartitioned"),
-      e1.getMessage)
-    assert(ivf.df.count() === 30)
-    // `cell=` dirs beside flat files hide the flat rows
-    val flat = Collection.create(spark, root, "hideFlat", dim = 8, overwrite = true)
-    flat.insert(vecs(30))
-    intercept[IllegalArgumentException] {
-      flat.insertPartitioned(vecs(2).withColumn("id", col("id") + 100)
-        .withColumn("cell", lit(0L)), "cell")
-    }
-    assert(flat.df.count() === 30)
+    assert(e.getMessage.contains("does not match"), e.getMessage)
+    assert(ivf.df.count() === 32)
   }
 
-  test("insertPartitioned onto an IVF_PQ version commits an unindexed version until the next build") {
-    val c = Collection.create(spark, root, "pqAppend", dim = 8, overwrite = true)
-    c.insert(vecs(30))
-    val model = c.buildIvfPq(nlist = 3, m = 2, pqK = 4)
-    val row = vecs(31).filter(col("id") === 30L).withColumn("id", lit(500L))
-    val v = row.select("vector").as[Seq[Float]].head().map(_.toDouble).toArray
-    c.insertPartitioned(row.withColumn("cell", lit(model.probe(v, 1).head)), "cell")
-    assert(c.df.count() === 31)
-    // the appended version carries no `_index/`: both IVF paths refuse
-    // instead of answering from codes that miss the new row
-    val e1 = intercept[IllegalArgumentException](c.searchIvf(v, k = 40, nprobe = 3))
-    assert(e1.getMessage.contains("buildIvf"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException](c.searchIvfPq(v, k = 40, nprobe = 3))
-    assert(e2.getMessage.contains("buildIvf"), e2.getMessage)
-    c.buildIvfPq(nlist = 3, m = 2, pqK = 4)
-    val ids = c.searchIvfPq(v, k = 40, nprobe = 3).select("id").as[Long].collect()
-    assert(ids.length === 31)
-    assert(ids.contains(500L))
-  }
-
-  test("the IVF paths follow the current version's index: refuse, answer after buildIvf, refuse after delete") {
+  test("the IVF paths follow the current version's index: refuse, answer after buildIvf and after delete, refuse after compact") {
     val c = Collection.create(spark, root, "ivfFollow", dim = 8, overwrite = true)
     c.insert(vecs(30))
     val qv = Array.tabulate(8)(d => if (d < 4) 5.0 else 1.0)
@@ -228,6 +208,9 @@ class StoreHardeningSpec extends SparkSpec {
     assert(c.searchIvf(qv, k = 3).count() === 3)
     assert(c.searchIvf(qv, k = 3).count() === 3)
     c.delete("id = 0")
+    val full = c.searchIvf(qv, k = 40, nprobe = 3).select("id").as[Long].collect()
+    assert(full.length === 29 && !full.contains(0L), "the delete's version answers")
+    c.compact() // a layout rewrite commits an unindexed version
     assert(refusal().contains("buildIvf"))
     assert(refusal().contains("buildIvf"), "the refusal repeats on every call")
     assert(c.df.count() === 29)

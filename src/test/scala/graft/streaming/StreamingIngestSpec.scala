@@ -225,6 +225,15 @@ class StreamingIngestSpec extends SparkSpec {
       // surface: no _spark_metadata, mutations allowed
       assert(c.delete("id = 7") === 1L)
       assert(c.df.count() === 5) // {0, 1, 2} ∪ {8, 9}
+      // an IVF index survives the stream: later micro-batches upsert into
+      // their cells, and a full probe answers exactly like `search`
+      c.buildIvf(nlist = 2, rounds = 2)
+      input.addData((1L, "doc one revised"), (3L, "doc three"))
+      q.processAllAvailable()
+      assert(c.df.count() === 6)
+      val qv = graft.functions.TextEmbed.embedScala("doc three")
+      def ids(d: org.apache.spark.sql.DataFrame) = d.select("id").as[Long].collect().toSeq
+      assert(ids(c.searchIvf(qv, k = 6, nprobe = 2)) === ids(c.search(qv, k = 6)))
     } finally q.stop()
   }
 

@@ -23,6 +23,40 @@ class IvfKMeansSpec extends SparkSpec {
     rows.toDF("id", "vector")
   }
 
+  /** The vector 10 × the unit vector of cluster `cl`: its cell's center. */
+  private def mkVec(cl: Int): Seq[Double] = { val v = Array.fill(dim)(0.0); v(cl) = 10.0; v.toSeq }
+
+  /** Every file under a version dir, by relative path, with its inode. */
+  private def inodes(dir: String): Map[String, AnyRef] = {
+    val base = java.nio.file.Paths.get(dir)
+    val files = java.nio.file.Files.walk(base)
+    try {
+      val it = files.iterator()
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => base.relativize(f).toString -> java.nio.file.Files.readAttributes(f,
+          classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey())
+        .toMap
+    } finally files.close()
+  }
+
+  /** A row change rewrote the cells in `touched` and hard-linked the rest:
+    * every data and code file outside those cells, and the quantizer and
+    * codebooks, is the parent version's file. */
+  private def onlyTouchedRewritten(parent: Map[String, AnyRef], child: Map[String, AnyRef],
+                                   touched: Set[Long]): Unit = {
+    val cellDir = "(?:^|.*/)cell=(-?\\d+)/.*".r
+    val carried = child.keySet.filter(f => f.endsWith(".parquet") && (f match {
+      case cellDir(c) => !touched(c.toLong)
+      case _ => f.startsWith("_index/")
+    }))
+    assert(carried.nonEmpty, "nothing was carried")
+    carried.foreach(f => assert(parent.get(f) === child.get(f), s"$f was rewritten"))
+    val rewritten = child.keySet.collect { case f @ cellDir(c) if !f.startsWith("_index/") && touched(c.toLong) => f }
+    assert(rewritten.nonEmpty && rewritten.forall(f => parent.get(f) !== child.get(f)),
+      s"touched cells ${touched.mkString(",")} were not rewritten")
+  }
+
   test("train recovers separated clusters; same input → same model") {
     val m1 = IvfKMeans.train(clustered, "id", "vector", nlist = 3, rounds = 3)
     val m2 = IvfKMeans.train(clustered, "id", "vector", nlist = 3, rounds = 3)
@@ -185,27 +219,28 @@ class IvfKMeansSpec extends SparkSpec {
     val qv = Array.fill(dim)(0.0); qv(1) = 10.0
     assert(c.searchIvf(qv, k = 1).count() === 1)
 
-    // a flat rewrite commits a version without `_index/`: every IVF path
-    // refuses it instead of probing (or merging into) a layout it no
-    // longer describes
-    c.delete("id = 0")
-    val one = Seq((100L, qv.toSeq, "new doc")).toDF("id", "vector", "text")
+    // a flat rewrite commits a version without `_index/` (and without the
+    // index's `cell`): every IVF path refuses it instead of probing a
+    // layout it no longer describes
+    c.compact()
+    assert(!c.df.columns.contains("cell"))
     val qs = Seq((0L, qv.toSeq)).toDF("qid", "qv")
     // (searchIvfPq names buildIvf too: its coarse quantizer is gone first)
     for (call <- Seq(() => c.searchIvf(qv, k = 1).collect(),
         () => c.searchIvfBatch(qs, k = 1).collect(),
-        () => c.searchIvfPq(qv, k = 1).collect(), () => c.upsertIvf(one))) {
+        () => c.searchIvfPq(qv, k = 1).collect())) {
       val e = intercept[IllegalArgumentException](call())
       assert(e.getMessage.contains("has no IVF index — run buildIvf"), e.getMessage)
     }
-    assert(c.df.count() === 29)
+    assert(c.df.count() === 30)
 
     c.buildIvf(nlist = 3, rounds = 2)
-    c.upsertIvf(one)
-    assert(c.df.count() === 30)
+    c.upsert(Seq((100L, qv.toSeq, "new doc")).toDF("id", "vector", "text"))
+    assert(c.df.count() === 31)
+    assert(c.searchIvf(qv, k = 1).count() === 1)
   }
 
-  test("upsertIvf: assigns to existing centroids, rewrites only touched cells, counts drift") {
+  test("upsert on an IVF version: assigns to existing centroids, rewrites only touched cells, counts drift") {
     Collection.drop(root, "cups")
     val c = Collection.create(spark, root, "cups", dim, overwrite = true)
     c.insert(clustered.withColumn("text", concat(lit("doc "), col("id"))))
@@ -213,14 +248,12 @@ class IvfKMeansSpec extends SparkSpec {
 
     // batch: id 100 is new (cluster 0), id 1 keeps its vector (replaced,
     // not moved), id 2 MOVES from cluster 2's cell to cluster 0's
-    val mkVec = (cl: Int) => { val v = Array.fill(dim)(0.0); v(cl) = 10.0; v.toSeq }
     val batch = Seq(
       (100L, mkVec(0), "new doc"),
       (1L, mkVec(1), "doc 1 updated"),
       (2L, mkVec(0), "doc 2 moved")
     ).toDF("id", "vector", "text")
-    val (replaced, inserted, moved) = c.upsertIvf(batch)
-    assert((replaced, inserted, moved) === (2L, 1L, 1L))
+    assert(c.upsert(batch) === ((2L, 1L)))
 
     // content is exact: 31 rows, unique ids, updated text visible, the
     // moved id's old copy is gone and its new cell is the probe target
@@ -245,12 +278,60 @@ class IvfKMeansSpec extends SparkSpec {
 
     // drift accumulates: 1 moved + 1 inserted over 31 rows
     assert(math.abs(c.ivfDrift - 2.0 / 31) < 1e-9)
+
+    // an in-place replacement touches only its own cell: the other cells'
+    // files and the quantizer are the parent version's (hard links), and
+    // the drift does not move
+    val parent = inodes(c.dataDir)
+    assert(c.upsert(Seq((4L, mkVec(1), "doc 4 updated")).toDF("id", "vector", "text")) === ((1L, 0L)))
+    onlyTouchedRewritten(parent, inodes(c.dataDir), Set(model.probe(mkVec(1).toArray, 1).head))
+    assert(c.df.count() === 31)
+    assert(math.abs(c.ivfDrift - 2.0 / 31) < 1e-9)
     // retrain resets the counter with the fresh layout
     c.buildIvf(nlist = 3, rounds = 3)
     assert(c.ivfDrift === 0.0)
   }
 
-  test("upsertIvf then searchIvf matches rebuild-then-searchIvf recall on sf0.001 embeddings") {
+  test("insert and delete on an IVF_PQ version keep the index: exact rows, full probe ≡ search, untouched cells linked") {
+    Collection.drop(root, "cpqrows")
+    val c = Collection.create(spark, root, "cpqrows", dim, overwrite = true)
+    c.insert(clustered.withColumn("text", concat(lit("doc "), col("id"))))
+    val model = c.buildIvfPq(nlist = 3, m = 2, pqK = 4, rounds = 3)
+    def cellOf(cl: Int): Long = model.probe(mkVec(cl).toArray, 1).head
+    def ids(d: org.apache.spark.sql.DataFrame): Seq[Long] = d.select("id").as[Long].collect().toSeq
+    // after each change: the exact rows, every IVF path over all of them
+    def exact(n: Int): Unit = {
+      assert(c.df.count() === n)
+      assert(c.df.select("id").distinct().count() === n)
+      for (cl <- 0 until 3) {
+        val qv = mkVec(cl).toArray
+        assert(ids(c.searchIvf(qv, k = n + 5, nprobe = 3)) === ids(c.search(qv, k = n + 5)))
+        assert(ids(c.searchIvfPq(qv, k = n + 5, nprobe = 3)).sorted === ids(c.df).sorted,
+          "the codes describe exactly the rows")
+      }
+    }
+
+    val v0 = inodes(c.dataDir)
+    c.insert(Seq((100L, mkVec(0), "new a"), (101L, mkVec(0), "new b")).toDF("id", "vector", "text"))
+    exact(32)
+    onlyTouchedRewritten(v0, inodes(c.dataDir), Set(cellOf(0)))
+    assert(math.abs(c.ivfDrift - 2.0 / 32) < 1e-9, "inserted rows count as drift")
+
+    val v1 = inodes(c.dataDir)
+    assert(c.delete("id in (1, 4, 7)") === 3) // cluster 1 only
+    exact(29)
+    onlyTouchedRewritten(v1, inodes(c.dataDir), Set(cellOf(1)))
+    assert(math.abs(c.ivfDrift - 2.0 / 29) < 1e-9, "a delete carries the drift forward")
+
+    // a delete of every row keeps a readable, indexed version
+    assert(c.delete("id >= 0") === 29)
+    exact(0)
+    c.insert(Seq((200L, mkVec(2), "after the purge")).toDF("id", "vector", "text"))
+    exact(1)
+    assert(ids(c.searchIvfPq(mkVec(2).toArray, k = 1, nprobe = 1)) === Seq(200L))
+  }
+
+  test("upsert then searchIvf matches rebuild-then-searchIvf recall on sf0.001 embeddings") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id").as("id"), col("embedding").as("vector"),
         col("label").cast("string").as("text"))
@@ -259,7 +340,7 @@ class IvfKMeansSpec extends SparkSpec {
     Collection.drop(root, "cup_inc"); Collection.drop(root, "cup_reb")
     val inc = Collection.create(spark, root, "cup_inc", 64, overwrite = true)
     inc.insert(initial); inc.buildIvf(nlist = 8, rounds = 2)
-    val (_, insertedInc, _) = inc.upsertIvf(late)
+    val (_, insertedInc) = inc.upsert(late)
     assert(insertedInc === late.count())
     val reb = Collection.create(spark, root, "cup_reb", 64, overwrite = true)
     reb.insert(emb); reb.buildIvf(nlist = 8, rounds = 2)
@@ -310,7 +391,7 @@ class IvfKMeansSpec extends SparkSpec {
     assert(mean >= 0.4, s"recall collapsed: $mean")
   }
 
-  test("upsertIvf maxDrift: crossing the threshold auto-retrains with the original params and recall recovers") {
+  test("upsert maxDrift: crossing the threshold auto-retrains with the original params and recall recovers") {
     Collection.drop(root, "cdrift")
     val c = Collection.create(spark, root, "cdrift", dim, overwrite = true)
     c.insert(clustered.withColumn("text", concat(lit("doc "), col("id"))))
@@ -320,7 +401,7 @@ class IvfKMeansSpec extends SparkSpec {
 
     // below the threshold: one moved row over 30 (3.3%) — no retrain
     val mk = (d: Int) => { val v = Array.fill(dim)(0.0); v(d) = 10.0; v.toSeq }
-    c.upsertIvf(Seq((0L, mk(1), "doc 0 moved")).toDF("id", "vector", "text"),
+    c.upsert(Seq((0L, mk(1), "doc 0 moved")).toDF("id", "vector", "text"),
       maxDrift = 0.2)
     assert(stamp === stamp0, "retrain must not fire below maxDrift")
     assert(c.ivfDrift > 0.0)
@@ -333,7 +414,7 @@ class IvfKMeansSpec extends SparkSpec {
     val nv = { val v = Array.fill(dim)(0.0); v(5) = 10.0; v(0) = 2.0; v.toSeq }
     val newCluster = (2L until 30L by 3L).map(i => (i, nv, s"doc $i re-homed"))
       .toDF("id", "vector", "text")
-    c.upsertIvf(newCluster, maxDrift = 0.2)
+    c.upsert(newCluster, maxDrift = 0.2)
     assert(stamp !== stamp0, "retrain must fire past maxDrift")
     assert(c.ivfDrift === 0.0, "retrain resets the drift counter")
 
@@ -413,7 +494,7 @@ class IvfKMeansSpec extends SparkSpec {
     // covers the new row immediately
     val (dupId, dupVec) = queries.head
     val one = Seq((9999L, dupVec.toSeq, "late row")).toDF("id", "vector", "text")
-    c.upsertIvf(one)
+    c.upsert(one)
     val full = c.searchIvfPq(dupVec, k = 501, nprobe = 8)
       .select(col("id"), col("adist")).as[(Long, Double)].collect().toMap
     assert(full.size === 501)
